@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** Canonical readers for the driver testdata (`TESTDATA.md`).
   *
   * One parquet file per table under `sfDir`. Schemas are fixed by the
@@ -105,4 +107,5 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalCheckpointFileManager.confKey, classOf[LocalCheckpointFileManager].getName)
 }

@@ -113,14 +113,14 @@ object PolicyEval {
       proj.queryExecution.analyzed.canonicalized)(proj.localCheckpoint())
     val rangeAggs = scores.indices.flatMap(i =>
       Seq(min(col(s"s_$i")).as(s"lo_$i"), max(col(s"s_$i")).as(s"hi_$i")))
-    val stackRng = scores.zipWithIndex
-      .map { case ((n, _), i) => s"'$n', lo_$i, hi_$i" }.mkString(", ")
+    // one row per policy: stack(P, name_0, c_0.., name_1, c_1.., ...),
+    // the names as literals, never spliced into SQL text
+    def melt(cols: Int => Seq[Column]): Column =
+      call_function("stack", lit(scores.size) +: scores.zipWithIndex.flatMap {
+        case ((n, _), i) => lit(n) +: cols(i) }: _*)
     val rng = base.agg(rangeAggs.head, rangeAggs.tail: _*)
-      .selectExpr(s"stack(${scores.size}, $stackRng) AS (policy, lo, hi)")
-    val stackS = scores.zipWithIndex
-      .map { case ((n, _), i) => s"'$n', s_$i" }.mkString(", ")
-    val melted = base.selectExpr(
-      s"stack(${scores.size}, $stackS) AS (policy, s)", "y")
+      .select(melt(i => Seq(col(s"lo_$i"), col(s"hi_$i"))).as(Seq("policy", "lo", "hi")))
+    val melted = base.select(melt(i => Seq(col(s"s_$i"))).as(Seq("policy", "s")), col("y"))
     histAuc(melted.join(broadcast(rng), "policy"), buckets)
   }
 

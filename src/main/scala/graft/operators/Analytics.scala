@@ -678,11 +678,10 @@ object Analytics {
     val uni = tfl.groupBy(col("term").as("w")).agg(sum(col("tf")).as("cw"))
     // n_tokens folds off the same index; n_bigrams = n_tokens − docs
     // (split yields ≥ 1 token per non-null row, so per-doc bigrams =
-    // tokens − 1; the lake contract has no null text — see termFreqs)
-    val totals = tfl.agg(sum(col("tf")).as("n_tokens"))
-      .select(col("n_tokens"),
-        (col("n_tokens") - Tables.countOf(spark, sfDir, "documents"))
-          .as("n_bigrams"))
+    // tokens − 1). The docs are counted off the index too, so a
+    // null-text document, which has no tokens, is not subtracted.
+    val totals = tfl.agg(sum(col("tf")).as("n_tokens"), countDistinct(col("doc_id")).as("n_docs"))
+      .select(col("n_tokens"), (col("n_tokens") - col("n_docs")).as("n_bigrams"))
     val bi = tokenPairs(spark, sfDir)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cab"))

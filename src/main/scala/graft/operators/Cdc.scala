@@ -222,8 +222,13 @@ object Cdc {
     * with no base AND no surviving current image (insert-free
     * changelog ending in a delete) matched neither full-outer side
     * before, so it is filtered the same way here. */
-  def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val both = decodedVersionedLog(spark, sfDir)
+  def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame =
+    snapshotDiffOf(decodedVersionedLog(spark, sfDir))
+
+  /** [[snapshotDiff]]'s core over a decoded changelog
+    * (`lineitemEnvelopeSchema` rows). */
+  def snapshotDiffOf(log: DataFrame): DataFrame = {
+    val both = log
       .groupBy(col("order_id"), col("line_no"))
       .agg(
         min_by(struct(col("part_id"), col("quantity"), col("price")),

@@ -148,6 +148,25 @@ class PolicyAndStoreSpec extends SparkSpec {
     assert(wide == melted, s"wide $wide vs melted $melted")
   }
 
+  test("wide-input bucketed AUC takes policy names verbatim, quotes included") {
+    import org.apache.spark.sql.functions._
+    val frame = spark.range(300).select(
+      ((col("id") * 37) % 101 / 101.0).as("a"),
+      ((col("id") * 53) % 97 / 97.0).as("b"),
+      (col("id") % 3 === 0).cast("int").as("y"))
+    val names = Seq("o'brien", "x', 0, 1), ('y")
+    val wide = PolicyEval.aucPerPolicyApproxWide(
+      frame, names.zip(Seq(col("a"), col("b"))), col("y"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
+    val melted = PolicyEval.aucPerPolicyApprox(
+      frame.select(lit(names(0)).as("policy"), col("a").as("s"), col("y"))
+        .union(frame.select(lit(names(1)).as("policy"), col("b").as("s"), col("y"))),
+      col("policy"), col("s"), col("y"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
+    assert(wide.keySet == names.toSet, wide.keySet)
+    assert(wide == melted, s"wide $wide vs melted $melted")
+  }
+
   test("lin_eps explores with frequency ε under its own seeding") {
     import org.apache.spark.sql.functions._
     // The exact seed expression + generator the ε-greedy scorer uses:

@@ -671,6 +671,26 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == expected, s"PMI diverges:\n$got\nvs\n$expected")
   }
 
+  test("bigram PMI counts bigrams over the documents that have text") {
+    val lake = java.nio.file.Files.createTempDirectory("pmi-lake").toString
+    val texts = Seq(Some("a b c a b"), None, Some("a b d"), Some("c a b"), Some("d"))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$lake/documents.parquet")
+    val got = Analytics.bigramPmi(spark, lake, k = 20, minCount = 1)
+      .collect().map(r => (r.getAs[String]("bigram"), r.getAs[Double]("pmi"))).toSeq
+    val docs = texts.flatten.map(_.split(" ").toSeq)
+    val nTokens = docs.map(_.length).sum.toDouble
+    val nBigrams = docs.map(_.length - 1).sum.toDouble // 7: the null-text doc has none
+    val uni = docs.flatten.groupBy(identity).map { case (w, g) => w -> g.size }
+    val expected = docs.flatMap(_.sliding(2).filter(_.length == 2))
+      .groupBy(identity).toSeq.map { case (Seq(a, b), g) =>
+        (s"$a $b", BigDecimal(math.log((g.size / nBigrams) /
+          ((uni(a) / nTokens) * (uni(b) / nTokens))))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.sortBy { case (bg, pmi) => (-pmi, bg) }
+    assert(got == expected, s"PMI diverges:\n$got\nvs\n$expected")
+  }
+
   test("feature MI: terms equal a naive recompute and sum to a non-negative MI") {
     val collected = Analytics.featureMi(spark, sf("0.001")).collect()
     val got = collected
