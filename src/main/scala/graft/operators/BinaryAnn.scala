@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,7 +14,8 @@ import graft.Tables
   * exact-cosine re-rank then touches only the bounded candidate set —
   * the standard two-stage compressed-first / exact-second pipeline,
   * the same discipline as the PQ family ([[Pq]]) at a 16× coarser but
-  * 4× smaller code point.
+  * 4× smaller code point. Both stages run [[Ann]]'s candidate join and
+  * rank tail — Hamming distance ascending, then exact cosine.
   */
 object BinaryAnn {
 
@@ -62,31 +62,17 @@ object BinaryAnn {
   def hammingTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                   k: Int = 5, candPerQuery: Int = 20): DataFrame = {
     val codes = packed(spark, sfDir)
-    val qCodes = codes.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("b_lo").as("q_lo"), col("b_hi").as("q_hi"))
-    val wHam = Window.partitionBy(col("qid"))
-      .orderBy(asc("hamming"), asc("vec_id"))
-    val cand = codes.join(broadcast(qCodes), col("vec_id") =!= col("qid"))
-      .withColumn("hamming",
-        hammingDist(col("b_lo"), col("b_hi"), col("q_lo"), col("q_hi")))
-      .withColumn("cand_rank", row_number().over(wHam))
-      .filter(col("cand_rank") <= candPerQuery)
+    val qCodes = Ann.queryFrame(codes, nQueries, "b_lo" -> "q_lo", "b_hi" -> "q_hi")
+    // stage 1: the shared rank tail by ASCENDING distance
+    val cand = Ann.topK(Ann.candidates(codes, qCodes).withColumn("hamming",
+        hammingDist(col("b_lo"), col("b_hi"), col("q_lo"), col("q_hi"))),
+        candPerQuery, asc("hamming"))
       .select(col("qid"), col("vec_id"), col("hamming"))
     // exact re-rank: only the candidate ids pull their float vectors
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.l2norm(col("embedding")).as("nrm"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        col("nrm").as("qnrm"))
-    val wCos = Window.partitionBy(col("qid"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    cand.join(e, "vec_id").join(broadcast(q), "qid")
-      .withColumn("cos_sim",
-        round(Similarity.dot(col("embedding"), col("qemb")) /
-          (col("nrm") * col("qnrm")), 4))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= k)
+    val e = Ann.normed(Tables.embeddings(spark, sfDir))
+    val q = Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm")
+    Ann.topK(cand.join(e, "vec_id").join(broadcast(q), "qid")
+        .withColumn("cos_sim", Similarity.cosine), k, desc("cos_sim"))
       .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"),
         col("hamming"), col("cos_sim"))
   }
@@ -97,7 +83,7 @@ object BinaryAnn {
   def hammingRecallVsBrute(spark: SparkSession, sfDir: String,
                            nQueries: Int = 10, k: Int = 5,
                            candPerQuery: Int = 20): DataFrame =
-    Pq.recallAgainst(
+    Ann.recall(
       hammingTopK(spark, sfDir, nQueries, k, candPerQuery),
       Similarity.bruteForceTopK(spark, sfDir, nQueries, k))
 }

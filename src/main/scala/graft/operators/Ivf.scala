@@ -12,20 +12,13 @@ import graft.Tables
   * nearest cells, so the scored candidate set is |corpus|·nProbe/k
   * instead of |corpus|.
   *
-  * Everything is DataFrame ops: assignment is a broadcast of the k×d
-  * centroid matrix (tiny) + argmin distance per row; centroid updates
-  * are `posexplode` → per-(cluster, dim) mean → collect k×d back
-  * (bounded by k·d, not corpus). Deterministic init (first k vectors
-  * by id) keeps runs comparable; float-mean drift across partitionings
-  * is possible in principle (documented) which is why correctness is
-  * asserted via the probe-all ≡ brute-force invariant and recall
-  * bounds, not bitwise equality.
+  * The quantizer is the shared Lloyd fit ([[Ann.fit]]) at m = 1;
+  * assignment is a broadcast of the k×d centroid matrix (tiny) + the
+  * native argmin per row, and probing, candidate join and rank tail are
+  * [[Ann]]'s. The cell layer also drives the curation operators here
+  * (semantic dedup, cell-balanced selection, outliers, labels).
   */
 object Ivf {
-
-  private def withNorm(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding"),
-      Similarity.l2norm(col("embedding")).as("nrm"))
 
   // Assignment and probing are the native codegen'd
   // [[graft.functions.NearestCentroids]] expression (ties → lowest
@@ -40,52 +33,16 @@ object Ivf {
     (emb: Column) =>
       graft.functions.nearestCentroids(emb, centroids.flatten, centroids.length, nProbe)
 
-  /** Lloyd iterations; returns the centroid matrix. The per-(cluster,
-    * dim) means aggregate as DECIMAL(28,12) sums over the float values
-    * (exact: a float has ≤ 9 significant decimal digits and the
-    * fixture magnitudes are O(1), so the decimal representation is
-    * lossless) divided by the count — associative-stable, so the
-    * FITTED CENTROIDS ARE IDENTICAL UNDER ANY PARTITIONING, unlike
-    * `avg(double)` whose partial-merge order floats with the task
-    * layout. That determinism is what lets every cell-layer consumer
+  /** The IVF coarse quantizer: the shared Lloyd fit ([[Ann.fit]]) at
+    * m = 1, so the k cells are the one-subspace codebook. Its
+    * decimal-exact means make the FITTED CENTROIDS IDENTICAL UNDER ANY
+    * PARTITIONING — what lets every cell-layer consumer
     * (q44/q117/q127/q128/q129) reproduce bit-for-bit across runs and
     * cluster sizes; spec-asserted by refitting under different
     * repartitionings. */
   def fitCentroids(spark: SparkSession, sfDir: String, k: Int,
-                   iters: Int): Array[Array[Double]] = {
-    import spark.implicits._
-    val e = Similarity.spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding")).cache()
-    // deterministic init: the k lowest vec_ids (a corpus smaller than k
-    // yields |corpus| cells — callers size probe counts off the FITTED
-    // length, not the requested k)
-    var centroids = e.orderBy("vec_id").limit(k)
-      .select("embedding").as[Array[Float]].collect()
-      .map(_.map(_.toDouble))
-    require(centroids.nonEmpty,
-      s"cannot fit an IVF quantizer on an empty embeddings table ($sfDir)")
-    var it = 0
-    while (it < iters) {
-      val assigned = e.withColumn("cluster", assignExpr(centroids)(col("embedding")))
-      val means = assigned
-        .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("cluster", "dim")
-        .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-          .cast("double") / count(lit(1))).as("m"))
-        .groupBy("cluster").agg(collect_list(struct(col("dim"), col("m"))).as("dm"))
-        .as[(Int, Seq[(Int, Double)])].collect()
-      val next = centroids.clone()
-      means.foreach { case (c, dm) =>
-        val arr = new Array[Double](dm.length)
-        dm.foreach { case (d, m) => arr(d) = m }
-        next(c) = arr
-      }
-      centroids = next
-      it += 1
-    }
-    e.unpersist()
-    centroids
-  }
+                   iters: Int): Array[Array[Double]] =
+    Ann.fit(Ann.corpus(spark, sfDir), 1, k, iters)(0)
 
   /** The materialized INDEX layer: an IVF index is built once and every
     * query probes it — the centroid matrix (k×d, catalog-bounded) is
@@ -94,12 +51,21 @@ object Ivf {
     * [[graft.ml.LinUCB.seededModels]]. */
   def fittedCentroids(spark: SparkSession, sfDir: String, k: Int,
                       iters: Int): Array[Array[Double]] =
-    centroidCache.getOrCompute(spark, (sfDir, k, iters)) {
-      fitCentroids(spark, sfDir, k, iters)
-    }
+    Ann.fitted(spark, "ivf", sfDir, k, iters)(
+      Array(fitCentroids(spark, sfDir, k, iters)))(0)
 
-  private val centroidCache =
-    new graft.SessionCache[(String, Int, Int), Array[Array[Double]]]()
+  /** The fitted centroids as a broadcastable `(key, centroid, cnrm)`
+    * frame: float-cast, like every dot_f32 operand, with the norm
+    * precomputed once per cell in dot_f32's ascending-index double
+    * accumulation — k times instead of once per row. */
+  private def centroidFrame(spark: SparkSession, centroids: Array[Array[Double]],
+                            key: String): DataFrame = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) =>
+      val cf = c.map(_.toFloat)
+      (i, cf, math.sqrt(cf.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble)))
+    }.toSeq.toDF(key, "centroid", "cnrm")
+  }
 
   /** Corpus clustering profile over the IVF cell layer — the
     * topic-bucketing diagnostic a curation pipeline runs before
@@ -112,21 +78,10 @@ object Ivf {
     * tie-break). Rows-only: the fitted centroids are not
     * SQL-expressible; per-cell invariants are spec-asserted. */
   def clusterProfile(spark: SparkSession, sfDir: String, kClusters: Int = 16,
-                     iters: Int = 2): DataFrame = {
-    import spark.implicits._
+                     iters: Int = Ann.DefaultIters): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
-    // centroid norm precomputed once per cell on the driver (ascending-
-    // index double accumulation over the float values — the same
-    // arithmetic dot_f32 would run, but k times instead of once per row)
-    val cdf = centroids.zipWithIndex.map { case (c, i) =>
-      val cf = c.map(_.toFloat)
-      var s = 0.0; var j = 0
-      while (j < cf.length) { s += cf(j).toDouble * cf(j).toDouble; j += 1 }
-      (i, cf, math.sqrt(s))
-    }.toSeq.toDF("cluster", "centroid", "cnrm")
-    val perLabel = Similarity.spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        Similarity.l2norm(col("embedding")).as("nrm"))
+    val cdf = centroidFrame(spark, centroids, "cluster")
+    val perLabel = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)), "label")
       .withColumn("cluster", assignExpr(centroids)(col("embedding")))
       .join(broadcast(cdf), "cluster")
       // per-row cos rounds to 9dp DECIMAL before the two summation
@@ -194,11 +149,9 @@ object Ivf {
     * cell assignment needs the fitted centroids; exact agreement with
     * a brute within-cell replication is spec-asserted. */
   def semanticKeep(spark: SparkSession, sfDir: String, threshold: Double = 0.4,
-                   kClusters: Int = 0, iters: Int = 2): DataFrame = {
-    val vecs = Similarity.spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"))
+                   kClusters: Int = 0, iters: Int = Ann.DefaultIters): DataFrame = {
     val k = semanticK(spark, sfDir, kClusters)
-    semanticKeepFrom(vecs, fittedCentroids(spark, sfDir, k, iters), threshold)
+    semanticKeepFrom(Ann.corpus(spark, sfDir), fittedCentroids(spark, sfDir, k, iters), threshold)
   }
 
   /** The MATERIALIZED [[semanticKeep]] survivor frame — (vec_id, cell),
@@ -233,7 +186,7 @@ object Ivf {
   private[graft] def semanticKeepFrom(vecs: DataFrame,
                                       centroids: Array[Array[Double]],
                                       threshold: Double): DataFrame = {
-    val e = withNorm(vecs.select(col("vec_id"), col("embedding")))
+    val e = Ann.normed(vecs)
       .withColumn("cell", assignExpr(centroids)(col("embedding")))
     val dominated = e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
@@ -261,13 +214,13 @@ object Ivf {
     * and are not selection candidates, matching the oracle's inner
     * join. */
   def cellBalancedKeep(spark: SparkSession, sfDir: String, perCell: Int = 8,
-                       kClusters: Int = 0, iters: Int = 2): DataFrame = {
+                       kClusters: Int = 0, iters: Int = Ann.DefaultIters): DataFrame = {
     val k = semanticK(spark, sfDir, kClusters)
     val centroids = fittedCentroids(spark, sfDir, k, iters)
     val cells = Similarity.spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id").as("doc_id"),
         assignExpr(centroids)(col("embedding")).as("cell"))
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(col("cell")).orderBy(desc("lm_score"), asc("doc_id"))
     TextOps.lmScore(spark, sfDir)
       .join(cells, Seq("doc_id"))
@@ -293,25 +246,17 @@ object Ivf {
     * the shuffle, and cell populations are target-cell-size-bounded
     * when k comes from [[deriveK]]. */
   def cellOutliers(spark: SparkSession, sfDir: String, frac: Double = 0.1,
-                   kClusters: Int = 16, iters: Int = 2): DataFrame = {
-    import spark.implicits._
+                   kClusters: Int = 16, iters: Int = Ann.DefaultIters): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
-    val cdf = centroids.zipWithIndex.map { case (c, i) =>
-      val cf = c.map(_.toFloat)
-      var s = 0.0; var j = 0
-      while (j < cf.length) { s += cf(j).toDouble * cf(j).toDouble; j += 1 }
-      (i, cf, math.sqrt(s))
-    }.toSeq.toDF("cell", "centroid", "cnrm")
+    val cdf = centroidFrame(spark, centroids, "cell")
     val pct = math.round(frac * 100).toInt
-    val rows = Similarity.spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"),
-        Similarity.l2norm(col("embedding")).as("nrm"))
+    val rows = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))
       .withColumn("cell", assignExpr(centroids)(col("embedding")))
       .join(broadcast(cdf), "cell")
       .select(col("vec_id"), col("cell"),
         round(Similarity.dot(col("embedding"), col("centroid")) /
           (col("nrm") * col("cnrm")), 4).as("cos_centroid"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cell"))
+    val w = Window.partitionBy(col("cell"))
     rows
       .withColumn("rk_cold", row_number()
         .over(w.orderBy(col("cos_centroid"), col("vec_id"))).cast("long"))
@@ -335,7 +280,7 @@ object Ivf {
     * frame is (cells × vocabulary)-bounded, never corpus-sized, and
     * the per-cell window runs over that bounded frame. */
   def cellTopTerms(spark: SparkSession, sfDir: String, perCell: Int = 3,
-                   kClusters: Int = 16, iters: Int = 2): DataFrame = {
+                   kClusters: Int = 16, iters: Int = Ann.DefaultIters): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
     val cells = Similarity.spread(Tables.embeddings(spark, sfDir))
@@ -346,7 +291,7 @@ object Ivf {
       .withColumn("tfd", col("tfidf").cast(DecimalType(18, 6)))
       .groupBy(col("cell"), col("term"))
       .agg(sum(col("tfd")).as("w_dec"), count(lit(1)).as("n_docs_term"))
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(col("cell")).orderBy(desc("w_dec"), asc("term"))
     agg
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -356,24 +301,19 @@ object Ivf {
         col("n_docs_term"), col("rnk"))
   }
 
-  /** ANN top-k probing `nProbe` of `k` cells. `nProbe == k` degenerates
-    * to exact brute force (spec-asserted invariant). */
+  /** q44: ANN top-k probing `nProbe` of `k` cells — exact cosine over
+    * the probed cells' vectors only, ranked by the shared tail.
+    * `nProbe == k` degenerates to exact brute force (spec-asserted
+    * invariant). */
   def topK(spark: SparkSession, sfDir: String, nQueries: Int = 10, topk: Int = 5,
-           kClusters: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
+           kClusters: Int = 16, nProbe: Int = 4,
+           iters: Int = Ann.DefaultIters): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
-    val e = withNorm(Similarity.spread(Tables.embeddings(spark, sfDir)))
+    val e = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))
       .withColumn("cluster", assignExpr(centroids)(col("embedding")))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        col("nrm").as("qnrm"))
-      .withColumn("probe", explode(nearestClusters(centroids, nProbe)(col("qemb"))))
-    val scored = e.join(broadcast(q),
-        col("cluster") === col("probe") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", round(
-        Similarity.dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topk)
-      .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"), col("cos_sim"))
+    val q = Ann.probed(
+      Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm"), centroids, nProbe)
+    Ann.ranked(Ann.candidates(e, q, col("cluster") === col("probe"))
+      .withColumn("cos_sim", Similarity.cosine), "cos_sim", topk)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -9,8 +8,9 @@ import graft.Tables
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Brute-force cosine top-k is the exact baseline; the
   * scale path buckets vectors with sign-random-projection LSH so each
-  * query only joins its bucket. Scoring is pure `zip_with`/`aggregate`
-  * column expressions — codegen-friendly, no UDF.
+  * query only joins its bucket. Both run [[Ann]]'s candidate join and
+  * rank tail with the native [[cosine]] score — codegen-friendly, no
+  * UDF.
   */
 object Similarity {
 
@@ -22,6 +22,12 @@ object Similarity {
   def dot(a: Column, b: Column): Column = graft.functions.dotF32(a, b)
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** The cosine score every exact family ranks by: `embedding` against
+    * `qemb`, over the precomputed norms, 4dp-rounded so the id
+    * tie-break makes the ranked set unique. */
+  private[operators] def cosine: Column =
+    round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4)
 
   /** Local-parallelism guard: the testdata ships as one small parquet
     * file → one input partition, which would serialize the whole
@@ -39,16 +45,9 @@ object Similarity {
     * broadcast — at 100 TB this is one pass over the corpus per query
     * batch. */
   def bruteForceTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"), col("cos_sim"))
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
+    val q = Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm")
+    Ann.ranked(Ann.candidates(e, q).withColumn("cos_sim", cosine), "cos_sim", k)
   }
 
   /** The MATERIALIZED exact-brute baseline the recall gates share
@@ -83,8 +82,7 @@ object Similarity {
     * turn cosine into dot product). Map-only; the query surface emits
     * the leading components rounded so the oracle compares exactly. */
   def normalized(spark: SparkSession, sfDir: String, dims: Int = 4): DataFrame = {
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
     val comps = (1 to dims).map(i =>
       round(col("embedding").getItem(i - 1).cast("double") / col("nrm"), 6)
         .as(s"n${i - 1}"))
@@ -103,19 +101,11 @@ object Similarity {
     * kNN classifier's did (q117 → q127). */
   def hardNegatives(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                     k: Int = 5): DataFrame = {
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("label"), col("embedding"),
-        l2norm(col("embedding")).as("nrm"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("label").as("q_label"),
-        col("embedding").as("qemb"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q),
-        col("vec_id") =!= col("qid") && col("label") =!= col("q_label"))
-      .withColumn("cos_sim",
-        round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)), "label")
+    val q = Ann.queryFrame(e, nQueries,
+      "label" -> "q_label", "embedding" -> "qemb", "nrm" -> "qnrm")
+    Ann.topK(Ann.candidates(e, q, col("label") =!= col("q_label"))
+        .withColumn("cos_sim", cosine), k, desc("cos_sim"))
       .select(col("qid"), col("q_label"), col("vec_id").as("neg_id"),
         col("label").as("neg_label"), col("rank"), col("cos_sim"))
   }
@@ -178,10 +168,6 @@ object Similarity {
         round(sqrt(col("sbb")), 6).as("norm_mean_b"))
   }
 
-  /** ANN via LSH buckets: join query→bucket→candidates, exact cosine
-    * inside the bucket, top-k. Approximate (recall < 1); the shuffle key
-    * is the bucket id so no pair of non-colliding vectors is ever
-    * materialized. */
   /** Scalar int8 quantization of the embedding column — the 4× memory
     * shrink that lets an ANN index at 100 TB stay in executor RAM:
     * per-dimension (min, max) over the corpus, then
@@ -288,7 +274,7 @@ object Similarity {
     * asserted in the spec. The vote layer is identical in all modes. */
   def knnClassify(spark: SparkSession, sfDir: String, k: Int = 10,
                   holdout: Int = 5, kClusters: Int = 0, nProbe: Int = -1,
-                  iters: Int = 2): DataFrame = {
+                  iters: Int = Ann.DefaultIters): DataFrame = {
     // every driver SF sits at deriveK's 16-cell floor, so the derived
     // default is bit-identical to the old fixed 16 below the ceiling
     // (and shares the ivf_centroids_semantic layer's cache entry above)
@@ -304,34 +290,25 @@ object Similarity {
       if (nProbe <= 0)
         deriveNProbe(Tables.countOf(spark, sfDir, "embeddings"), centroids.length)
       else math.min(nProbe, centroids.length)
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        l2norm(col("embedding")).as("nrm"))
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)), "label")
     val labeled = e.filter(col("vec_id") % holdout =!= 0)
       .withColumn("cell", Ivf.assignExpr(centroids)(col("embedding")))
-    val q = e.filter(col("vec_id") % holdout === 0)
+    val q = Ann.probed(e.filter(col("vec_id") % holdout === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        col("nrm").as("qnrm"), col("label").as("true_label"))
-      .withColumn("probe",
-        explode(Ivf.nearestClusters(centroids, probes)(col("qemb"))))
-    val scored = labeled.join(q,
+        col("nrm").as("qnrm"), col("label").as("true_label")), centroids, probes)
+    // holdout and labeled side both scale with the corpus: a keyed
+    // cell equi-join, not the broadcast candidate join
+    val neighbors = Ann.topK(labeled.join(q,
         col("cell") === col("probe") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
-    val byQ = Window.partitionBy(col("qid")).orderBy(desc("cos_sim"), asc("vec_id"))
-    val neighbors = scored.withColumn("rank", row_number().over(byQ))
-      .filter(col("rank") <= k)
-    val byVotes = Window.partitionBy(col("qid"))
-      .orderBy(desc("votes"), asc("label"))
-    neighbors.groupBy(col("qid"), col("true_label"), col("label"))
+      .withColumn("cos_sim", cosine), k, desc("cos_sim"))
+    val votes = neighbors.groupBy(col("qid"), col("true_label"), col("label"))
       // sim_sum, not a rounded mean: the 4dp cosines sum EXACTLY as
       // DECIMAL (a mean like 0.25425 sits on a rounding boundary where
       // engines disagree; the decimal sum has no boundary to disagree on)
       .agg(count(lit(1)).as("votes"),
         sum(col("cos_sim").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
           .cast("double").as("sim_sum"))
-      .withColumn("vrank", row_number().over(byVotes))
-      .filter(col("vrank") === 1)
+    Ann.topK(votes, 1, desc("votes"), tie = asc("label"))
       .select(col("qid").as("vec_id"), col("label").as("predicted_label"),
         col("votes"), col("sim_sum"), col("true_label"),
         (col("label") === col("true_label")).as("correct"))
@@ -355,13 +332,12 @@ object Similarity {
                 k: Int = 10, poolSize: Int = 100,
                 lambda: Double = 0.7): DataFrame = {
     import spark.implicits._
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
     val q = e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qemb"), col("nrm").as("qnrm"))
     // distributed pass: pool = top-poolSize by relevance (one corpus scan)
     val pool = e.filter(col("vec_id") =!= queryId).crossJoin(broadcast(q))
-      .withColumn("rel", round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
+      .withColumn("rel", cosine)
       .orderBy(desc("rel"), asc("vec_id")).limit(poolSize)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("rel"))
       .collect()
@@ -398,14 +374,6 @@ object Similarity {
       .toDF("qid", "rank", "vec_id", "rel")
   }
 
-  /** SRP-LSH top-k: bucket on the ENGINE-PORTABLE sign-random-projection
-    * signature ([[graft.functions.PortableSrpSig]] — integer-arithmetic
-    * hyperplane weights), so a DuckDB oracle rebuilds the buckets and
-    * hence the exact bucket-restricted result set; [[srpBucket]]
-    * (xxhash-weighted) remains for callers that don't need an external
-    * oracle. Same plan either way: one map-side signature pass, a
-    * bucket equi-join against the broadcast query side, per-query top-k
-    * window. */
   /** Broadcast ceiling for the decontamination eval side: above this
     * many eval vectors the broadcast (≤ ~8192 × 64 floats ≈ 2 MiB at
     * the testdata dim; ~32 MiB at dim 1024) stops being "free to every
@@ -542,20 +510,22 @@ object Similarity {
     new graft.SessionCache[(String, Double), DataFrame](
       onEvict = graft.SessionCache.unpersistCheckpoint)
 
+  /** SRP-LSH top-k: bucket on the ENGINE-PORTABLE sign-random-projection
+    * signature ([[graft.functions.PortableSrpSig]] — integer-arithmetic
+    * hyperplane weights), so a DuckDB oracle rebuilds the buckets and
+    * hence the exact bucket-restricted result set; [[srpBucket]]
+    * (xxhash-weighted) remains for callers that don't need an external
+    * oracle. Same plan either way: one map-side signature pass, a
+    * bucket equi-join against the broadcast query side ([[Ann]]'s
+    * candidate join), per-query top-k tail. Approximate (recall < 1):
+    * no pair of non-colliding vectors is ever scored. */
   def lshTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
               nPlanes: Int = 8): DataFrame = {
-    val e = spread(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
+    val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
       .withColumn("bucket", graft.functions.srpSigPortable(col("embedding"), nPlanes))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    val scored = e.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", round(dot(col("embedding"), col("qemb")) / (col("nrm") * col("qnrm")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"), col("cos_sim"))
+    val q = Ann.queryFrame(e, nQueries,
+      "embedding" -> "qemb", "nrm" -> "qnrm", "bucket" -> "qbucket")
+    Ann.ranked(Ann.candidates(e, q, col("bucket") === col("qbucket"))
+      .withColumn("cos_sim", cosine), "cos_sim", k)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,12 +23,12 @@ import graft.Tables
   * hash-checks: quantization is round-half-up integer arithmetic and
   * the score folds in index order, so DuckDB replays it exactly.
   *
-  * The quantization arithmetic exists ONCE: [[encodeCodes]] (fit →
-  * codes) and [[scoreReconstructedDot]] (codes → reconstructed dot)
-  * are the only definitions, shared by the flat scan (q169), the
-  * IVF-pruned scan (q173), and the encoded layer — the
-  * "pruned ≡ flat arithmetic" invariant the spec pins holds by
-  * construction, not by keeping two SQL strings in sync.
+  * SQ8 is a codec on [[Ann]]'s shared path: the quantization
+  * arithmetic exists ONCE as typed Columns — [[encode]] (fit → codes)
+  * and [[reconstructedDot]] (codes → reconstructed dot) — shared by
+  * the flat scan (q169), the IVF-pruned scan (q173), and the encoded
+  * layers, so the "pruned ≡ flat arithmetic" invariant the spec pins
+  * holds by construction.
   */
 object Sq {
 
@@ -53,100 +52,62 @@ object Sq {
       (dims.map(_.getDouble(1)).toSeq, dims.map(_.getDouble(2)).toSeq)
     }
 
-  /** THE encode definition:
+  /** THE encode definition, per dimension j of `v`:
     * `round((v - min_j) / (max_j - min_j) * 255)` (half-up on
-    * non-negative values: engine-portable) per dimension of `vecCol`;
-    * constant dimensions encode as 0. Expects `mns`/`mxs` bounds
-    * array columns in scope. */
-  private def encodeCodes(vecCol: String): Column = expr(
-    s"transform($vecCol, (v, j) -> CASE " +
-      "WHEN element_at(mxs, j + 1) > element_at(mns, j + 1) " +
-      "THEN CAST(round((CAST(v AS DOUBLE) - element_at(mns, j + 1)) " +
-      "/ (element_at(mxs, j + 1) - element_at(mns, j + 1)) * 255, 0) AS INT) " +
-      "ELSE 0 END)")
+    * non-negative values: engine-portable); constant dimensions encode
+    * as 0. */
+  private def encode(mn: Seq[Double], mx: Seq[Double])(vec: Column): Column =
+    transform(vec, (v, j) => {
+      val (lo, hi) = (element_at(typedLit(mn), j + 1), element_at(typedLit(mx), j + 1))
+      when(hi > lo, round((v.cast("double") - lo) / (hi - lo) * Levels, 0).cast("int"))
+        .otherwise(0)
+    })
 
   /** THE asymmetric-distance definition: reconstruct each candidate's
-    * codes map-side (`mn_j + c * (mx_j - mn_j) / 255`; constant
+    * `codes` map-side (`mn_j + c * (mx_j - mn_j) / 255`; constant
     * dimensions reconstruct to their min), then fold the inner product
-    * against the exact query IN INDEX ORDER (the oracle's list_sum
-    * over an i-ordered list is the same fold), 4dp-rounded into
-    * `sq_ip`. Candidates need (vec_id, qid, qemb, codes); bounds
-    * splice in as literals here so callers never carry them. */
-  private def scoreReconstructedDot(cand: DataFrame, mn: Seq[Double],
-                                    mx: Seq[Double]): DataFrame =
-    cand.select(col("vec_id"), col("qid"), col("qemb"), col("codes"),
-        typedLit(mn).as("mns"), typedLit(mx).as("mxs"))
-      .withColumn("rv", expr(
-        "transform(codes, (c, j) -> CASE " +
-          "WHEN element_at(mxs, j + 1) > element_at(mns, j + 1) " +
-          "THEN element_at(mns, j + 1) + CAST(c AS DOUBLE) " +
-          "* (element_at(mxs, j + 1) - element_at(mns, j + 1)) / 255 " +
-          "ELSE element_at(mns, j + 1) END)"))
-      .withColumn("sq_ip", round(expr(
-        "aggregate(zip_with(rv, qemb, (r, qv) -> r * CAST(qv AS DOUBLE)), " +
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"), 4))
-
-  /** Shared serving tail: per-query dense rank on (score desc, vec_id
-    * asc), top k, the (qid, nbr_id, rank, sq_ip) surface. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(desc("sq_ip"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"),
-        col("sq_ip"))
+    * against the exact query `qemb` IN INDEX ORDER from 0.0 (the
+    * oracle's list_sum over an i-ordered list is the same fold),
+    * 4dp-rounded. */
+  private def reconstructedDot(mn: Seq[Double], mx: Seq[Double]): Column = {
+    val rv = transform(col("codes"), (c, j) => {
+      val (lo, hi) = (element_at(typedLit(mn), j + 1), element_at(typedLit(mx), j + 1))
+      when(hi > lo, lo + c.cast("double") * (hi - lo) / Levels).otherwise(lo)
+    })
+    round(aggregate(zip_with(rv, col("qemb"), (r, qv) => r * qv.cast("double")),
+      lit(0.0), (acc, x) => acc + x), 4)
   }
 
-  /** (vec_id, codes) — the encoded corpus, via [[encodeCodes]].
-    *
-    * Materialized once per (session, sfDir) — a localCheckpoint in the
-    * LRU-bounded layer cache, evicted eagerly like the other
-    * DataFrame-valued layers. This is what makes the online serving
-    * stream ([[graft.streaming.AnnServeStream]]) pay only the scan per
-    * micro-batch: without it every batch re-ran the encode projection
-    * over a full corpus pass (that index-build-vs-serve split is the
-    * whole point of an encoded index — FAISS builds QT_8bit codes once
-    * too). The checkpoint holds 1 int/dim/row — the compressed
-    * footprint the format exists to have. */
-  def encoded(spark: SparkSession, sfDir: String): DataFrame =
-    encodedCache.getOrCompute(spark, sfDir) {
+  /** Shared serving tail over an encoded layer: the candidate join
+    * (cell-pruned by `on`), scored by [[reconstructedDot]] into `sq_ip`
+    * and ranked into the (qid, nbr_id, rank, sq_ip) surface. */
+  private def scan(spark: SparkSession, sfDir: String, enc: DataFrame, q: DataFrame,
+                   k: Int, on: Column = lit(true)): DataFrame = {
+    val (mn, mx) = fittedBounds(spark, sfDir)
+    Ann.ranked(Ann.candidates(enc, q, on).withColumn("sq_ip", reconstructedDot(mn, mx)),
+      "sq_ip", k)
+  }
+
+  private def encodeLayer(spark: SparkSession, sfDir: String, kClusters: Int): DataFrame =
+    Ann.encodedLayer(spark, sfDir, "sq8", kClusters, spread = false) { e =>
       val (mn, mx) = fittedBounds(spark, sfDir)
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"),
-          typedLit(mn).as("mns"), typedLit(mx).as("mxs"))
-        .withColumn("codes", encodeCodes("embedding"))
-        .select(col("vec_id"), col("codes"))
-        .localCheckpoint()
+      e.withColumn("codes", encode(mn, mx)(col("embedding")))
     }
 
-  private val encodedCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+  /** (vec_id, codes) — the encoded corpus, via [[encode]]: the
+    * [[Ann.encodedLayer]] that makes the online serving stream
+    * ([[graft.streaming.AnnServeStream]]) pay only the scan per
+    * micro-batch. The checkpoint holds 1 int/dim/row — the compressed
+    * footprint the format exists to have. */
+  def encoded(spark: SparkSession, sfDir: String): DataFrame = encodeLayer(spark, sfDir, 0)
 
   /** (vec_id, cluster, codes) — the IVF-SQ8 index: the encoded corpus
     * plus its coarse-quantizer cell, the FAISS `IVF…,SQ8` on-disk
-    * shape. One corpus pass assigns cell and codes together (cheaper
-    * at build than joining [[encoded]] to an assignment frame — that
-    * join would shuffle the corpus where this is one map-side
-    * projection), checkpointed per (session, sfDir, kClusters) so the
-    * warm serving path (q173, repeated probes) pays ONLY the probed
-    * cells' scan — the index-build/serve split the flat scan lacks. */
+    * shape, assigned in the same corpus pass (joining [[encoded]] to an
+    * assignment frame would shuffle the corpus) so the warm serving
+    * path (q173, repeated probes) pays ONLY the probed cells' scan. */
   def ivfEncoded(spark: SparkSession, sfDir: String,
-                 kClusters: Int = 16): DataFrame =
-    ivfEncodedCache.getOrCompute(spark, (sfDir, kClusters)) {
-      val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, 2)
-      val (mn, mx) = fittedBounds(spark, sfDir)
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"),
-          typedLit(mn).as("mns"), typedLit(mx).as("mxs"))
-        .withColumn("cluster", Ivf.assignExpr(centroids)(col("embedding")))
-        .withColumn("codes", encodeCodes("embedding"))
-        .select(col("vec_id"), col("cluster"), col("codes"))
-        .localCheckpoint()
-    }
-
-  private val ivfEncodedCache =
-    new graft.SessionCache[(String, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
+                 kClusters: Int = 16): DataFrame = encodeLayer(spark, sfDir, kClusters)
 
   /** q169: asymmetric SQ8 top-k — exact query vectors against the
     * reconstructed corpus, ranked by the 4dp-rounded inner product
@@ -154,10 +115,7 @@ object Sq {
   def sqTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
              k: Int = 5): DataFrame =
     sqTopKFor(spark, sfDir,
-      Tables.embeddings(spark, sfDir)
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb")),
-      k)
+      Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries, "embedding" -> "qemb"), k)
 
   /** [[sqTopK]] over an ARBITRARY `(qid, qemb)` query frame — the one
     * scoring definition both the q169 batch surface and the online
@@ -165,19 +123,15 @@ object Sq {
     * the two cannot drift. The query side must stay bounded (it
     * broadcasts); the corpus side streams through once per call. */
   def sqTopKFor(spark: SparkSession, sfDir: String, q: DataFrame,
-                k: Int = 5): DataFrame = {
-    val (mn, mx) = fittedBounds(spark, sfDir)
-    val cand = encoded(spark, sfDir)
-      .join(broadcast(q), col("vec_id") =!= col("qid"))
-    rankTopK(scoreReconstructedDot(cand, mn, mx), k)
-  }
+                k: Int = 5): DataFrame =
+    scan(spark, sfDir, encoded(spark, sfDir), q, k)
 
   /** q170: recall\@k of the SQ8 scan against exact brute force — the
     * measured-not-assumed gate every quantization family in the engine
     * carries (q136/q143/q144/q159's discipline). */
   def sqRecallVsBrute(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                       topk: Int = 5): DataFrame =
-    Pq.recallAgainst(sqTopK(spark, sfDir, nQueries, topk),
+    Ann.recall(sqTopK(spark, sfDir, nQueries, topk),
       Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
 
   /** q173: IVF-SQ8 — the FAISS `IVF…,SQ8` index shape: the coarse IVF
@@ -191,7 +145,7 @@ object Sq {
     * pass, checkpointed — repeated serving pays probes only); the
     * probe side stays a bounded broadcast (nQueries × nProbe rows)
     * with NO driver collect — probes explode distributively since SQ8
-    * needs no per-query LUT. Scoring is [[scoreReconstructedDot]] —
+    * needs no per-query LUT. Scoring is [[reconstructedDot]] —
     * the same definition the flat scan executes — so the pruned scan
     * hash-agrees with the flat scan wherever their candidate sets
     * overlap. `nProbe` defaults to the grid-measured
@@ -199,21 +153,12 @@ object Sq {
   def ivfSqTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
                 k: Int = 5, kClusters: Int = 16,
                 nProbe: Int = Pq.DeployedNProbe): DataFrame = {
-    val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, 2)
-    val (mn, mx) = fittedBounds(spark, sfDir)
-    // bounded probe frame: nQueries × nProbe rows, broadcast — a corpus
-    // row lives in exactly one cell, so it matches ≤ 1 probe row per
-    // query and no (qid, vec_id) dedup is needed
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < nQueries)
-      .withColumn("probes",
-        Ivf.nearestClusters(centroids, nProbe)(col("embedding")))
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        explode(col("probes")).as("probe"))
-    val cand = ivfEncoded(spark, sfDir, kClusters)
-      .join(broadcast(q), col("cluster") === col("probe") &&
-        col("vec_id") =!= col("qid"))
-    rankTopK(scoreReconstructedDot(cand, mn, mx), k)
+    val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, Ann.DefaultIters)
+    // bounded probe frame: nQueries × nProbe rows, broadcast
+    val q = Ann.probed(Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries,
+      "embedding" -> "qemb"), centroids, nProbe)
+    scan(spark, sfDir, ivfEncoded(spark, sfDir, kClusters), q, k,
+      col("cluster") === col("probe"))
   }
 
   /** q174: recall\@k of the IVF-SQ8 scan against exact brute force —
@@ -223,7 +168,7 @@ object Sq {
                          nQueries: Int = 10, topk: Int = 5,
                          kClusters: Int = 16,
                          nProbe: Int = Pq.DeployedNProbe): DataFrame =
-    Pq.recallAgainst(
+    Ann.recall(
       ivfSqTopK(spark, sfDir, nQueries, topk, kClusters, nProbe),
       Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
 }

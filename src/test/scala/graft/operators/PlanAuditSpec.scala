@@ -142,11 +142,11 @@ class PlanAuditSpec extends SparkSpec {
     // audit the BUILD plan via the shared encode helper — the layer
     // path localCheckpoints this exact frame
     val books = Pq.fittedCodebooks(spark, sf())
-    val df = Pq.withCodes(
+    val df = Ann.withCodes(
       Similarity.spread(graft.Tables.embeddings(spark, sf()))
         .select(org.apache.spark.sql.functions.col("vec_id"),
           org.apache.spark.sql.functions.col("embedding")),
-      books, books.head.head.length)
+      books)
     val p = plan(df)
     assert(p.contains("nearest_centroids"), s"native argmin encode missing:\n$p")
     assert(!p.contains("ScalaUDF"), s"UDF in the encode path:\n$p")

@@ -90,10 +90,23 @@ class PqSpec extends SparkSpec {
 
   test("codebook fit is bit-identical under repartitioning") {
     val vecs = Tables_embeddings()
-    val a = Pq.fitCodebooksFrom(frame(vecs), 4, 8, 2)
-    val b = Pq.fitCodebooksFrom(frame(vecs).repartition(7), 4, 8, 2)
+    val a = Ann.fit(frame(vecs), 4, 8, 2)
+    val b = Ann.fit(frame(vecs).repartition(7), 4, 8, 2)
     assert(java.util.Arrays.deepEquals(
       a.asInstanceOf[Array[AnyRef]], b.asInstanceOf[Array[AnyRef]]))
+  }
+
+  test("IVF centroid fit is the m = 1 case of the in-memory Lloyd replay") {
+    // the IVF quantizer and the PQ codebooks share one Lloyd fit: at
+    // m = 1 the single subspace is the whole vector, so the session
+    // cell layer must equal the independent replay bit-for-bit
+    val vecs = graft.Tables.embeddings(spark, sf("0.001"))
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq
+    val engine = Ivf.fittedCentroids(spark, sf("0.001"), 16, 2)
+    val replay = Replay.fit(vecs, 1, 16, 2)(0)
+    assert(java.util.Arrays.deepEquals(
+      engine.asInstanceOf[Array[AnyRef]], replay.asInstanceOf[Array[AnyRef]]))
   }
 
   test("fit + encode + ADC agree with the in-memory replay on a random corpus") {
@@ -102,12 +115,12 @@ class PqSpec extends SparkSpec {
       id -> Array.fill(16)(rnd.nextFloat() * 2f - 1f)
     }
     val (m, k, iters, topk) = (4, 8, 2, 5)
-    val books = Pq.fitCodebooksFrom(frame(vecs), m, k, iters)
+    val books = Ann.fit(frame(vecs), m, k, iters)
     val replayBooks = Replay.fit(vecs, m, k, iters)
     assert(java.util.Arrays.deepEquals(
       books.asInstanceOf[Array[AnyRef]], replayBooks.asInstanceOf[Array[AnyRef]]))
     val queries = vecs.filter(_._1 < 3)
-    val enc = Pq.withCodes(frame(vecs), books, 16 / m)
+    val enc = Ann.withCodes(frame(vecs), books)
       .select(col("vec_id"), col("codes"))
     val engine = Pq.adcTopKFrom(enc, queries, books, topk)
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -122,9 +135,9 @@ class PqSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val atoms = Array.fill(8)(Array.fill(8)((rnd.nextInt(2049) - 1024).toFloat / 1024f))
     val vecs = (0L until 40L).map(id => id -> atoms((id % 8).toInt))
-    val books = Pq.fitCodebooksFrom(frame(vecs), 2, 8, 2)
+    val books = Ann.fit(frame(vecs), 2, 8, 2)
     val queries = vecs.filter(_._1 < 2)
-    val enc = Pq.withCodes(frame(vecs), books, 4)
+    val enc = Ann.withCodes(frame(vecs), books)
     val engine = Pq.adcTopKFrom(enc.select(col("vec_id"), col("codes")),
         queries, books, 3)
       .as[(Long, Long, Long, Double)].collect()

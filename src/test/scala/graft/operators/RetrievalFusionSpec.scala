@@ -34,16 +34,11 @@ class RetrievalFusionSpec extends SparkSpec {
     }
   }
 
-  test("deployedAnnTopK binds the grid's measured point: raw codes inside " +
-    "the nProbe range the q167 sweep cleared") {
+  test("DeployedNProbe stays inside the q167-cleared range") {
     // the grid measured recall flat over nProbe 1-4 and regressing at 8;
     // the deployment constant must stay inside the cleared range
     assert(Pq.DeployedNProbe >= 1 && Pq.DeployedNProbe <= 4,
       s"DeployedNProbe ${Pq.DeployedNProbe} outside the measured-safe range")
-    val dep = Pq.deployedAnnTopK(spark, sf()).collect().map(_.toSeq).toSet
-    val raw = Pq.ivfAdcTopK(spark, sf(), nProbe = Pq.DeployedNProbe)
-      .collect().map(_.toSeq).toSet
-    assert(dep == raw, "deployed entry point drifted from the raw-codes chain")
   }
 
   test("SQ8: bounds exact, reconstruction within a half-step, recall strong") {
