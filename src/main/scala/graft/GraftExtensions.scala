@@ -17,9 +17,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * SQL-callable in any session built with the config — no imperative
   * `registerAll` call needed, and the registration survives session
   * cloning. Deliberately the ONLY planner-level hook this engine
-  * installs: SURVEY.md §4.2 documents that no custom optimizer Rule or
-  * Strategy is warranted — Catalyst's built-ins cover every plan shape
-  * the reference needs, so the extension surface is functions only.
+  * installs that plans anything: SURVEY.md §4.2 documents that no
+  * custom optimizer Rule or Strategy is warranted — Catalyst's
+  * built-ins cover every plan shape the reference needs, so the
+  * extension surface is functions only. (The layer store, [[Layers]],
+  * parks its per-session entries in a strategy that plans nothing.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -480,14 +480,14 @@ object SparkEntry {
 
   /** Materialized layers shared across queries — built once per
     * session and then probed (the index/model discipline of
-    * [[SessionCache]]). Bench builds these BEFORE the timed query
-    * loop and reports their build cost in a separate `layers` map, so
-    * per-query numbers are plan signals rather than
-    * whichever-query-ran-first accounting: without this, the cold IVF
-    * k-means fit lands on q117 (alphabetically first consumer) and
-    * q44/q127/q128/q129 ride its cache, moving every number whenever
-    * query order changes. Keys here must build exactly the cache
-    * entries the queries probe. */
+    * [[Layers]]). Bench builds these BEFORE the timed query loop and
+    * reports each one's own build cost ([[Bench.layerPhase]]) in a
+    * separate `layers` map, so per-query numbers are plan signals
+    * rather than whichever-query-ran-first accounting: without this,
+    * the cold IVF k-means fit lands on q117 (alphabetically first
+    * consumer) and q44/q127/q128/q129 ride its cache, moving every
+    * number whenever query order changes. Keys here must build exactly
+    * the layer entries the queries probe. */
   def layers: Map[String, (SparkSession, String) => Unit] = Map(
     // IVF centroid fit at the fixed query k (q44/q117/q127/q128)
     "ivf_centroids_k16" -> ((s, d) => { Ivf.fittedCentroids(s, d, 16, 2); () }),
@@ -519,8 +519,7 @@ object SparkEntry {
     "sq8_encoded" -> ((s, d) => { operators.Sq.encoded(s, d); () }),
     // the shingle table + DF-capped postings behind the whole
     // inverted-index family (near-pair build, q83, q112, q79 grams,
-    // MinHash sigs) — alphabetical layer order builds these under
-    // the dedup_clusters entry; listed so eviction rebuilds are warm
+    // MinHash sigs)
     "shingled_docs" -> ((s, d) => { Dedup.materializedShingled(s, d); () }),
     "capped_postings" ->
       ((s, d) => { Dedup.materializedCappedPostings(s, d); () }),
@@ -535,7 +534,7 @@ object SparkEntry {
     "cdc_decoded_log" -> ((s, d) => { operators.Cdc.decodedVersionedLog(s, d); () }),
     // quality-LR design matrix: the tokenization pass behind both the
     // IRLS fit and the q111 scoring surface, checkpointed once (narrow
-    // d+2-column frame; builds before the weights layer alphabetically)
+    // d+2-column frame)
     "quality_features" -> ((s, d) => { graft.ml.QualityLR.materializedFeatures(s, d); () }),
     // quality-LR weights (q111) and LinUCB sufficient stats (q30/q31/q41)
     "quality_lr_weights" -> ((s, d) => { graft.ml.QualityLR.fittedWeights(s, d); () }),
@@ -549,9 +548,7 @@ object SparkEntry {
     // duplicated-span table (q133 reads it, q134 strips through it)
     "dup_spans" -> ((s, d) => { operators.Dedup.materializedDupSpans(s, d); () }),
     // verified near-dup pairs at 0.5 — read by q20, q156 and the
-    // dedup_clusters build (alphabetical layer order builds clusters
-    // first, so the pair cost lands in that entry; this one is then a
-    // cache hit priming q20/q156)
+    // dedup_clusters build
     "near_pairs" -> ((s, d) => { operators.Dedup.materializedNearPairs(s, d); () }),
     // semantic-dedup survivors at the corpus-derived k (q129 and the
     // q145/q146/q153/q172/q175 chains): within-cell dominance paid once
@@ -594,8 +591,7 @@ object SparkEntry {
       ((s, d) => { graft.features.Features.materializedTfidf(s, d); () }),
     // raw (doc_id, term, tf) index — the one tokenize pass behind
     // tfidf, the BM25 probes (q149/q158/q161) and the heavy-hitter
-    // verification (q91/q100); usually a cache hit here because the
-    // tfidf build above derives from it
+    // verification (q91/q100)
     "term_freqs" ->
       ((s, d) => { graft.features.Features.materializedTermFreqs(s, d); () }),
     // SVD-embedding envelopes (q35/q77): subspace iteration + capture

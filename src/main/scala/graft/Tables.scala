@@ -31,14 +31,12 @@ object Tables {
     * parameters (SimHash banding scheme, SRP band width, IVF k, kNN
     * nProbe, TF-IDF doc total) each re-ran this count per invocation —
     * a repeated Spark job for a value that is fixed per (session,
-    * sfDir) under the warehouse snapshot assumption [[SessionCache]]
+    * sfDir) under the warehouse snapshot assumption [[Layers]]
     * already documents for every derived layer. A miss is a parquet
-    * row-group metadata read (cheap); the cache makes the repeats
+    * row-group metadata read (cheap); the layer makes the repeats
     * free. */
-  private val countCache = new SessionCache[(String, String), java.lang.Long]()
   def countOf(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrCompute(spark, (sfDir, name))(
-      java.lang.Long.valueOf(read(spark, sfDir, name).count())).longValue()
+    Layers.value(spark, "table_count", (sfDir, name))(read(spark, sfDir, name).count())
 
   def region(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "nation")

@@ -122,12 +122,7 @@ object Features {
     * inverted-index build every term-statistics consumer probes
     * (narrow (doc_id, term, tf) rows, text never retained). */
   def materializedTermFreqs(spark: SparkSession, sfDir: String): DataFrame =
-    termFreqsCache.getOrCompute(spark, sfDir) {
-      termFreqs(spark, sfDir).localCheckpoint()
-    }
-
-  private val termFreqsCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "term_freqs", sfDir)(termFreqs(spark, sfDir))
 
   /** Per-(doc, term) TF-IDF with sklearn-style smooth idf
     * (`ln((1+N)/(1+df)) + 1`), which is what the reference's TextWiser
@@ -150,18 +145,13 @@ object Features {
     * per (session, sfDir) and re-entered as a checkpointed frame — the
     * q34/q35/q77 pipelines all read the same postings. (Previously each
     * reader carried an ad-hoc `.cache()`, which pinned the corpus-sized
-    * frame for the session lifetime outside the [[graft.SessionCache]]
+    * frame for the session lifetime outside the [[graft.Layers]]
     * eviction discipline and deduplicated across call sites only via
     * Spark's plan-equality cache match — one silent plan divergence
     * away from a doubled resident copy.) The layer is LRU-bounded and
     * releases its executor blocks on eviction. */
   def materializedTfidf(spark: SparkSession, sfDir: String): DataFrame =
-    tfidfCache.getOrCompute(spark, sfDir) {
-      tfidf(spark, sfDir).localCheckpoint()
-    }
-
-  private val tfidfCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "tfidf_postings", sfDir)(tfidf(spark, sfDir))
 
   /** Top-scoring term per document (deterministic tie-break) — the
     * oracle-checkable face of the TF-IDF pipeline. */
@@ -486,19 +476,9 @@ object Features {
                                 vecs: DataFrame, v: Int, k: Int,
                                 captureFloor: Double,
                                 space: String): DataFrame =
-    envelopeCache.getOrCompute(spark, (sfDir, space)) {
+    graft.Layers.value(spark, s"svd_envelope_$space", sfDir) {
       buildEnvelope(spark, sfDir, vecs, v, k, captureFloor)
     }
-
-  /** Per-(session, sfDir, space) materialization of the envelope —
-    * everything in the build (subspace iteration, the capture action,
-    * the basis-residual check) is expensive and deterministic, and the
-    * result is tiny (one row per doc: the exact energy + five flags),
-    * so it lives in the LRU-bounded layer cache like the other
-    * materialized layers, not behind a per-call `.cache()` pinned for
-    * the session lifetime. */
-  private val envelopeCache = new graft.SessionCache[(String, String), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** The lazy per-doc projection plan the envelope materializes —
     * exposed separately so the plan audit can assert on the BUILD
@@ -566,7 +546,7 @@ object Features {
     // the envelope frame is materialized above; the intermediate scored
     // checkpoint's blocks can be released now instead of at layer
     // eviction (only `out` lives in the envelope layer)
-    graft.SessionCache.unpersistCheckpoint(scored)
+    graft.Layers.release(scored)
     out
   }
 

@@ -137,12 +137,9 @@ object LinUCB {
 
   private def seededArms(spark: SparkSession,
                          sfDir: String): Array[(Model, Array[Double])] =
-    armCache.getOrCompute(spark, sfDir) {
+    graft.Layers.value(spark, "linucb_models", sfDir) {
       seedColumnarWithChol(spark, sfDir).collect()
     }
-
-  private val armCache =
-    new graft.SessionCache[String, Array[(Model, Array[Double])]]()
 
   /** Serving-side score for one (context, model) pair:
     * `x·θ + α·√(xᵀA⁻¹x)`, `θ = A⁻¹b` (`eda_recommender.py:78-92`). */

@@ -82,15 +82,15 @@ object PolicyEval {
     // range pass and the bin pass then both scan ~17 bytes/row instead
     // of re-scoring (guide §1.2/§5 — don't compute things twice; cut
     // the lineage where an intermediate is reused). The checkpoint is
-    // keyed on the projection's canonicalized plan in a bounded
-    // SessionCache: repeat invocations in a long-lived session reuse
+    // keyed on the projection's canonicalized plan in the bounded
+    // layer store: repeat invocations in a long-lived session reuse
     // one persisted copy, and LRU eviction releases the blocks eagerly
     // instead of leaving them to the ContextCleaner. NOTE the method
     // is therefore EAGER at plan-construction time (the checkpoint
     // runs the scoring subtree once, here).
     val proj = df.select(policy.as("policy"), score.as("s"), label.as("y"))
-    val base = aucBaseCache.getOrCompute(df.sparkSession,
-      proj.queryExecution.analyzed.canonicalized)(proj.localCheckpoint())
+    val base = graft.Layers.frame(df.sparkSession, "policy_auc_base",
+      proj.queryExecution.analyzed.canonicalized)(proj)
     val rng = base.groupBy(col("policy"))
       .agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
     histAuc(base.join(broadcast(rng), "policy"), buckets)
@@ -109,8 +109,8 @@ object PolicyEval {
                              label: Column, buckets: Int = 4096): DataFrame = {
     val sCols = scores.zipWithIndex.map { case ((_, c), i) => c.as(s"s_$i") }
     val proj = df.select(sCols :+ label.as("y"): _*)
-    val base = aucBaseCache.getOrCompute(df.sparkSession,
-      proj.queryExecution.analyzed.canonicalized)(proj.localCheckpoint())
+    val base = graft.Layers.frame(df.sparkSession, "policy_auc_base",
+      proj.queryExecution.analyzed.canonicalized)(proj)
     val rangeAggs = scores.indices.flatMap(i =>
       Seq(min(col(s"s_$i")).as(s"lo_$i"), max(col(s"s_$i")).as(s"hi_$i")))
     // one row per policy: stack(P, name_0, c_0.., name_1, c_1.., ...),
@@ -141,16 +141,6 @@ object PolicyEval {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     finishAuc(cum)
   }
-
-  /** Checkpointed (policy, s, y) projections behind
-    * [[aucPerPolicyApprox]], keyed by canonicalized input plan —
-    * build-once per distinct scoring frame, blocks released on LRU
-    * eviction / session stop (the SessionCache discipline; previously
-    * each invocation checkpointed anew and pinned blocks until the
-    * ContextCleaner noticed). */
-  private val aucBaseCache = new graft.SessionCache[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** The interaction log with engine-portable keys: arm = p_brand,
     * label = "was returned", plus a deterministic pseudo-random score
@@ -377,12 +367,7 @@ object PolicyEval {
     * (group_id, y, policy, rn) row per ranked interaction — the
     * `lm_scores` discipline applied to the policy benchmark. */
   private[graft] def rankedScores(spark: SparkSession, sfDir: String): DataFrame =
-    rankedCache.getOrCompute(spark, sfDir) {
-      rankedScoresUncached(spark, sfDir).localCheckpoint()
-    }
-
-  private val rankedCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "policy_ranked", sfDir)(rankedScoresUncached(spark, sfDir))
 
   private def rankedScoresUncached(spark: SparkSession, sfDir: String): DataFrame = {
     val fb = graft.Tables.lineitem(spark, sfDir)

@@ -55,12 +55,7 @@ object QualityLR {
     * (d+2)-column design matrix only — doc_id, five doubles, y — so
     * the resident layer is O(n·d) doubles, not the corpus text. */
   def materializedFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    featCache.getOrCompute(spark, sfDir) {
-      features(spark, sfDir).localCheckpoint()
-    }
-
-  private val featCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "quality_features", sfDir)(features(spark, sfDir))
 
   private def xCols = (0 until Dim).map(i => col(s"x$i"))
 
@@ -145,11 +140,9 @@ object QualityLR {
     * over the checkpointed feature layer so the fit and the q111
     * scoring surface share one tokenization pass per session. */
   def fittedWeights(spark: SparkSession, sfDir: String): Array[Double] =
-    weightCache.getOrCompute(spark, sfDir) {
+    graft.Layers.value(spark, "quality_lr_weights", sfDir) {
       train(materializedFeatures(spark, sfDir))
     }
-
-  private val weightCache = new graft.SessionCache[String, Array[Double]]()
 
   /** q111 surface: every document scored with the calibrated quality
     * probability — map-only column math over the broadcast weights (the

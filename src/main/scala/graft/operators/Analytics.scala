@@ -456,13 +456,10 @@ object Analytics {
     // partition count) — repeat callers reuse one checkpoint instead of
     // re-materializing the pipeline each time
     val nParts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    abcCache.getOrCompute(spark, (sfDir, nParts)) {
+    graft.Layers.value(spark, "revenue_abc", (sfDir, nParts)) {
       buildRevenueAbc(spark, sfDir, nParts)
     }
   }
-
-  private val abcCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private def buildRevenueAbc(spark: SparkSession, sfDir: String,
                               nParts: Int): DataFrame = {

@@ -89,12 +89,23 @@ object Ann {
     books
   }
 
-  private val models = new graft.SessionCache[(String, String, Int, Int), Books]()
+  /** The `SparkEntry.layers` name of a codec layer: `codec` is a family
+    * (`pq`, `sq8`) with an optional `_variant` (`pq_residual`), `kind`
+    * is `codebooks` or `encoded`, and a cell-assigned layer
+    * (`kClusters > 0`) adds `_ivf` — e.g. `pq_codebooks_residual`,
+    * `pq_ivf_encoded_residual`. */
+  private def layerName(codec: String, kind: String, kClusters: Int): String = {
+    val (family, variant) = codec.span(_ != '_')
+    s"$family${if (kClusters > 0) "_ivf" else ""}_$kind$variant"
+  }
 
-  /** A fitted model memoized per (session, codec, sfDir, k, iters). */
+  /** A fitted model memoized per (session, codec, sfDir, k, iters); the
+    * IVF fit's layer is named by its k (`ivf_centroids_k16`). */
   private[operators] def fitted(spark: SparkSession, codec: String, sfDir: String,
-                                k: Int, iters: Int)(fit: => Books): Books =
-    models.getOrCompute(spark, (codec, sfDir, k, iters))(fit)
+                                k: Int, iters: Int)(fit: => Books): Books = {
+    val name = if (codec == "ivf") s"ivf_centroids_k$k" else layerName(codec, "codebooks", 0)
+    graft.Layers.value(spark, name, (sfDir, k, iters))(fit)
+  }
 
   /** Per-row code assignment: one argmin per subspace over the sliced
     * `embedding` (squared-L2, ties → lowest code: the oracle's
@@ -104,9 +115,6 @@ object Ann {
     df.withColumn("codes", array(books.indices.map(s =>
       Ivf.assignExpr(books(s))(slice(col("embedding"), s * sub + 1, sub))): _*))
   }
-
-  private val layers = new graft.SessionCache[(String, String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** THE build-once encoded index layer: one pass over the corpus that
     * assigns each vector its coarse cell (`kClusters > 0`: the session
@@ -119,14 +127,14 @@ object Ann {
   private[operators] def encodedLayer(spark: SparkSession, sfDir: String, codec: String,
                                       kClusters: Int = 0, spread: Boolean = true)(
       encode: DataFrame => DataFrame): DataFrame =
-    layers.getOrCompute(spark, (codec, sfDir, kClusters)) {
+    graft.Layers.frame(spark, layerName(codec, "encoded", kClusters), (sfDir, kClusters)) {
       val e =
         if (spread) corpus(spark, sfDir)
         else Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
       val cells = if (kClusters <= 0) e else e.withColumn("cluster", Ivf.assignExpr(
         Ivf.fittedCentroids(spark, sfDir, kClusters, DefaultIters))(col("embedding")))
       val keep = if (kClusters <= 0) Seq("vec_id", "codes") else Seq("vec_id", "cluster", "codes")
-      encode(cells).select(keep.map(col): _*).localCheckpoint()
+      encode(cells).select(keep.map(col): _*)
     }
 
   /** The bounded serving batch: the `nQueries` lowest vec_ids of `e`,

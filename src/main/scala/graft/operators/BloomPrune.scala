@@ -51,7 +51,7 @@ object BloomPrune {
     * collide into each other's bitmap (a false sharing there would
     * wrongly drop fact rows — the exact join only repairs false
     * POSITIVES, never false negatives). Like every session layer
-    * ([[graft.SessionCache]]), the memo assumes the data under a plan
+    * ([[graft.Layers]]), the memo assumes the data under a plan
     * is immutable for the session — an in-place refresh of the dim's
     * files mid-session requires a new session to avoid a stale
     * bitmap, the standard warehouse snapshot assumption. */
@@ -61,7 +61,7 @@ object BloomPrune {
                  fpp: Double = 0.01): DataFrame = {
     val cacheKey = (dim.queryExecution.analyzed.canonicalized,
       dimKey, expectedItems, fpp)
-    val bytes = bloomCache.getOrCompute(dim.sparkSession, cacheKey) {
+    val bytes = graft.Layers.value(dim.sparkSession, "bloom_filter", cacheKey) {
       val expected =
         if (expectedItems > 0) expectedItems else math.max(dim.count(), 1L)
       val bf = dim.stat.bloomFilter(dimKey, expected, fpp)
@@ -74,10 +74,6 @@ object BloomPrune {
       GraftShims.expression(col(factKey).cast("long"))))
     fact.filter(mightContain)
   }
-
-  private val bloomCache = new graft.SessionCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long, Double),
-    Array[Byte]]()
 
   /** Monthly revenue from URGENT-priority orders: bloom on the filtered
     * order keys prunes ~4/5 of lineitem before the join shuffle. */

@@ -176,15 +176,11 @@ object Cdc {
     * history, latest-image compaction) read THIS layer, so the envelope
     * synthesis + JSON round-trip runs once, not once per consumer. */
   def decodedVersionedLog(spark: SparkSession, sfDir: String): DataFrame =
-    logCache.getOrCompute(spark, sfDir) {
+    graft.Layers.frame(spark, "cdc_decoded_log", sfDir) {
       versionedEnvelope(spark, sfDir)
         .select(from_json(col("value"), lineitemEnvelopeSchema).as("p"))
         .select(col("p.*"))
-        .localCheckpoint()
     }
-
-  private val logCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** SCD-2 history from the changelog: order each key's versions by
     * lsn, and close every version with its successor's lsn

@@ -56,12 +56,7 @@ object Curation {
     * exactly the "cleaned corpus" artifact a real pipeline writes
     * between its strip and curation stages. */
   private def gatedCleaned(spark: SparkSession, sfDir: String): DataFrame =
-    gatedCache.getOrCompute(spark, sfDir) {
-      gatedCleanedUncached(spark, sfDir).localCheckpoint()
-    }
-
-  private val gatedCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "gated_clean_docs", sfDir)(gatedCleanedUncached(spark, sfDir))
 
   /** Package-visible layer warmer (Bench builds the cache entry the
     * chains probe, so the strip+gate cost is layer-accounted). */

@@ -49,12 +49,7 @@ object Dedup {
     * narrow checkpoint scan — the postings-materialization step every
     * production dedup pipeline runs first. */
   def materializedShingled(spark: SparkSession, sfDir: String): DataFrame =
-    shingledCache.getOrCompute(spark, sfDir) {
-      shingled(spark, sfDir).localCheckpoint()
-    }
-
-  private val shingledCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "shingled_docs", sfDir)(shingled(spark, sfDir))
 
   /** The MATERIALIZED DF-capped posting list — (doc_id, s) at `maxDf`,
     * checkpointed once per (session, sfDir, maxDf): the candidate
@@ -64,15 +59,11 @@ object Dedup {
     * df-count + semi-join chain. */
   def materializedCappedPostings(spark: SparkSession, sfDir: String,
                                  maxDf: Long = DefaultMaxDf): DataFrame =
-    cappedCache.getOrCompute(spark, (sfDir, maxDf)) {
+    graft.Layers.frame(spark, "capped_postings", (sfDir, maxDf)) {
       cappedPostings(
         materializedShingled(spark, sfDir)
           .select(col("doc_id"), explode(col("shingles")).as("s")), maxDf)
-        .localCheckpoint()
     }
-
-  private val cappedCache = new graft.SessionCache[(String, Long), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** [[shingled]] over an arbitrary documents frame (`doc_id`, `text`) —
     * spec-visible so the dedup family is testable on planted corpora. */
@@ -211,13 +202,9 @@ object Dedup {
     * tiny relative to the corpus at any scale. */
   def materializedNearPairs(spark: SparkSession, sfDir: String,
                             threshold: Double = 0.5): DataFrame =
-    nearPairsCache.getOrCompute(spark, (sfDir, threshold)) {
-      jaccardPairs(spark, sfDir, threshold).localCheckpoint()
+    graft.Layers.frame(spark, "near_pairs", (sfDir, threshold)) {
+      jaccardPairs(spark, sfDir, threshold)
     }
-
-  private val nearPairsCache =
-    new graft.SessionCache[(String, Double), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** q156: the cross-source duplicate-flow matrix — for every
     * unordered source pair, how many verified near-dup pairs
@@ -380,7 +367,7 @@ object Dedup {
   /** MinHash signature per doc: all map-side expression work — zero
     * shuffle until banding. */
   def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    minhashSigCache.getOrCompute(spark, sfDir) {
+    graft.Layers.frame(spark, "minhash_sigs", sfDir) {
       // checkpointed: q21's banding plan references the signature frame
       // four times (two band sides, two verification sides) and q166
       // reads it twice more — each reference re-ran the 64-slot MinHash
@@ -388,11 +375,7 @@ object Dedup {
       materializedShingled(spark, sfDir)
         .withColumn("sig", graft.functions.minhashSig(col("shingles"), NumHashes))
         .select(col("doc_id"), col("shingles"), col("sig"))
-        .localCheckpoint()
     }
-
-  private val minhashSigCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** LSH banding → candidate pairs → exact-Jaccard verification. */
   def minhashLsh(spark: SparkSession, sfDir: String, threshold: Double): DataFrame = {
@@ -553,12 +536,9 @@ object Dedup {
     * identical edge set; before this each re-paid the sha2 group pass
     * over the corpus. */
   def materializedExactEdges(spark: SparkSession, sfDir: String): DataFrame =
-    exactEdgesCache.getOrCompute(spark, sfDir) {
-      exactEdgesFrom(Tables.documents(spark, sfDir)).localCheckpoint()
+    graft.Layers.frame(spark, "exact_edges", sfDir) {
+      exactEdgesFrom(Tables.documents(spark, sfDir))
     }
-
-  private val exactEdgesCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private[graft] def exactEdgesFrom(docs: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"), sha2(col("text"), 256).as("th"))
@@ -581,12 +561,9 @@ object Dedup {
     * their plans contain ZERO shingle explodes (plan-audited). */
   def materializedClusters(spark: SparkSession, sfDir: String,
                            threshold: Double = 0.5): DataFrame =
-    clusterCache.getOrCompute(spark, (sfDir, threshold)) {
-      nearDupClusters(spark, sfDir, threshold).localCheckpoint()
+    graft.Layers.frame(spark, "dedup_clusters", (sfDir, threshold)) {
+      nearDupClusters(spark, sfDir, threshold)
     }
-
-  private val clusterCache = new graft.SessionCache[(String, Double), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** Component labels for the edge-endpoint set only (every doc that
     * appears in some near-dup pair or exact-duplicate group); singletons
@@ -861,13 +838,13 @@ object Dedup {
     // two identical encode subtrees). Checkpoint the narrow
     // (vec_id, band, bkey) frame once: the LSH index is built once and
     // probed from both sides, the aucPerPolicyApprox precedent. Keyed
-    // by canonicalized plan in a bounded SessionCache so repeat
+    // by canonicalized plan in the bounded layer store so repeat
     // invocations reuse one persisted index and eviction releases the
     // blocks eagerly (previously each call checkpointed anew with no
     // unpersist hook).
     val bkRaw = srpBandKeys(e, pp, bands)
-    val bk = srpIndexCache.getOrCompute(spark,
-      bkRaw.queryExecution.analyzed.canonicalized)(bkRaw.localCheckpoint())
+    val bk = graft.Layers.frame(spark, "srp_index",
+      bkRaw.queryExecution.analyzed.canonicalized)(bkRaw)
     val cand = bk.as("x").join(bk.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.vec_id") < col("y.vec_id"))
@@ -883,13 +860,6 @@ object Dedup {
       .filter(col("cos_sim") >= threshold)
       .select(col("vec_i"), col("vec_j"), col("cos_sim"))
   }
-
-  /** Checkpointed SRP banding indexes keyed by canonicalized build
-    * plan — build-once per (corpus, geometry), blocks released on LRU
-    * eviction / session stop. */
-  private val srpIndexCache = new graft.SessionCache[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** The SRP banding frame `(vec_id, band, bkey)` BEFORE the
     * checkpoint cut — package-visible so the plan audit can pin the
@@ -951,12 +921,9 @@ object Dedup {
     * `dup_spans` layer key, separately from both consumers. */
   def materializedDupSpans(spark: SparkSession, sfDir: String,
                            k: Int = DupSpanGram): DataFrame =
-    spanCache.getOrCompute(spark, (sfDir, k)) {
-      dupSpansFrom(Tables.documents(spark, sfDir), k).localCheckpoint()
+    graft.Layers.frame(spark, "dup_spans", (sfDir, k)) {
+      dupSpansFrom(Tables.documents(spark, sfDir), k)
     }
-
-  private val spanCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** [[dupSpans]] over an explicit corpus frame (`doc_id`, `text`) —
     * the planted-corpus spec entry point. */

@@ -72,20 +72,17 @@ object Dsir {
     * collapsed to per-(doc_id, source, bucket) counts. One text
     * explode, one (doc_id, b)-keyed aggregation whose map-side combine
     * collapses repeated grams before the shuffle; localCheckpointed
-    * under the [[graft.SessionCache]] layer discipline (a narrow
+    * under the [[graft.Layers]] discipline (a narrow
     * 4-column frame, corpus-sized like the dedup-label and TF-IDF
     * posting layers). */
   def materializedGramCounts(spark: SparkSession, sfDir: String,
                              buckets: Int = DefaultBuckets): DataFrame =
-    gramCache.getOrCompute(spark, (sfDir, buckets)) {
+    graft.Layers.frame(spark, "dsir_gram_counts", (sfDir, buckets)) {
       docBucketCounts(
         Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("source"), col("text")),
-        buckets).localCheckpoint()
+        buckets)
     }
-
-  private val gramCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private def docBucketCounts(docs: DataFrame, buckets: Int): DataFrame =
     hashedGrams(docs, buckets)

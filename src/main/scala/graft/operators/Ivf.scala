@@ -163,13 +163,9 @@ object Ivf {
     * dedup. */
   def materializedSemanticKeep(spark: SparkSession, sfDir: String,
                                threshold: Double = 0.4): DataFrame =
-    semKeepCache.getOrCompute(spark, (sfDir, threshold)) {
-      semanticKeep(spark, sfDir, threshold).localCheckpoint()
+    graft.Layers.frame(spark, "semantic_keep", (sfDir, threshold)) {
+      semanticKeep(spark, sfDir, threshold)
     }
-
-  private val semKeepCache =
-    new graft.SessionCache[(String, Double), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** The k [[semanticKeep]] will fit for `sfDir` — `kClusters` wins if
     * positive, else [[deriveK]] of the corpus count (a columnar

@@ -61,13 +61,9 @@ object Similarity {
     * artifact, not the scan operator. */
   def materializedBruteTopK(spark: SparkSession, sfDir: String,
                             nQueries: Int = 10, k: Int = 5): DataFrame =
-    bruteCache.getOrCompute(spark, (sfDir, nQueries, k)) {
-      bruteForceTopK(spark, sfDir, nQueries, k).localCheckpoint()
+    graft.Layers.frame(spark, "ann_brute_topk", (sfDir, nQueries, k)) {
+      bruteForceTopK(spark, sfDir, nQueries, k)
     }
-
-  private val bruteCache =
-    new graft.SessionCache[(String, Int, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** Sign-random-projection bucket id: `nPlanes` pseudo-random hyperplanes
     * with weights derived arithmetically from (plane, dim) — fully
@@ -502,13 +498,9 @@ object Similarity {
     * decontamination gate. */
   def materializedEmbeddingDecontam(spark: SparkSession, sfDir: String,
                                     tau: Double = 0.6): DataFrame =
-    embDecontamCache.getOrCompute(spark, (sfDir, tau)) {
-      embeddingDecontam(spark, sfDir, tau).localCheckpoint()
+    graft.Layers.frame(spark, "embedding_decontam", (sfDir, tau)) {
+      embeddingDecontam(spark, sfDir, tau)
     }
-
-  private val embDecontamCache =
-    new graft.SessionCache[(String, Double), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** SRP-LSH top-k: bucket on the ENGINE-PORTABLE sign-random-projection
     * signature ([[graft.functions.PortableSrpSig]] — integer-arithmetic

@@ -34,15 +34,12 @@ object Sq {
 
   val Levels = 255
 
-  private val boundsCache =
-    new graft.SessionCache[String, (Seq[Double], Seq[Double])]()
-
   /** Per-dimension (min, max) over the corpus — the whole SQ8 "model".
     * One shuffle of d-keyed partials, a d-row collect, cached per
     * (session, sfDir). */
   def fittedBounds(spark: SparkSession,
                    sfDir: String): (Seq[Double], Seq[Double]) =
-    boundsCache.getOrCompute(spark, sfDir) {
+    graft.Layers.value(spark, "sq8_bounds", sfDir) {
       val dims = Tables.embeddings(spark, sfDir)
         .select(posexplode(col("embedding")).as(Seq("i", "v")))
         .groupBy(col("i"))

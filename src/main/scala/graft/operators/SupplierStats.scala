@@ -125,13 +125,10 @@ object SupplierStats {
     // construction runs two small eager jobs (max id, per-bucket maxes)
     // — memoize the finished frame so repeat callers (q14 + q15 share
     // it) don't re-run them
-    tagCache.getOrCompute(spark, (sfDir, buckets)) {
+    graft.Layers.value(spark, "late_tags", (sfDir, buckets)) {
       buildTagLate(spark, sfDir, buckets)
     }
   }
-
-  private val tagCache = new graft.SessionCache[(String, Int), DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   private def buildTagLate(spark: SparkSession, sfDir: String,
                            buckets: Int): DataFrame = {

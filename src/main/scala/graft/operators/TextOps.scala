@@ -257,13 +257,9 @@ object TextOps {
     * corpus shingle explode + eval-gram join. */
   def materializedDecontamHits(spark: SparkSession, sfDir: String,
                                nEvalDocs: Int = 5): DataFrame =
-    decontamHitsCache.getOrCompute(spark, (sfDir, nEvalDocs)) {
-      decontamination(spark, sfDir, nEvalDocs).localCheckpoint()
+    graft.Layers.frame(spark, "decontam_hits", (sfDir, nEvalDocs)) {
+      decontamination(spark, sfDir, nEvalDocs)
     }
-
-  private val decontamHitsCache =
-    new graft.SessionCache[(String, Int), DataFrame](
-      onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** Corpus token accounting per language — the budget report a packing
     * / mixture-weighting step starts from: document count, whitespace
@@ -328,14 +324,10 @@ object TextOps {
     * broadcast side, so consumers pay only their own map-side filter. */
   private[graft] def materializedMixtureRates(spark: SparkSession,
                                               sfDir: String): DataFrame =
-    mixtureRatesCache.getOrCompute(spark, sfDir) {
+    graft.Layers.frame(spark, "mixture_rates", sfDir) {
       mixtureWeights(spark, sfDir)
         .select(col("lang"), least(lit(1.0), col("oversample")).as("rate"))
-        .localCheckpoint()
     }
-
-  private val mixtureRatesCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** Per-document mean unigram surprisal — the cheap stand-in for
     * perplexity filtering (CCNet-style): score each token by
@@ -370,12 +362,7 @@ object TextOps {
     * blend read the identical scores; before this each re-paid the
     * tokenize + vocab join pass. */
   def materializedSurprisal(spark: SparkSession, sfDir: String): DataFrame =
-    surprisalCache.getOrCompute(spark, sfDir) {
-      unigramSurprisal(spark, sfDir).localCheckpoint()
-    }
-
-  private val surprisalCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "surprisal_scores", sfDir)(unigramSurprisal(spark, sfDir))
 
   /** CONTAINMENT (asymmetric Jaccard) near-dup join: `|A∩B| / |A|` —
     * the direction-sensitive overlap that catches a document EMBEDDED
@@ -480,12 +467,7 @@ object TextOps {
     * computed once per (session, sfDir): q94 and q164's percentile
     * blend read the identical scores. */
   def materializedEntropy(spark: SparkSession, sfDir: String): DataFrame =
-    entropyCache.getOrCompute(spark, sfDir) {
-      tokenEntropy(spark, sfDir).localCheckpoint()
-    }
-
-  private val entropyCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "entropy_scores", sfDir)(tokenEntropy(spark, sfDir))
 
   def tokenEntropy(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -590,7 +572,7 @@ object TextOps {
     * loop — both spec-pinned to identical sequential-greedy output. */
   def learnedMerges(spark: SparkSession, sfDir: String,
                     merges: Int): Array[(Long, String, String, String, Long)] =
-    mergeCache.getOrCompute(spark, (sfDir, merges)) {
+    graft.Layers.value(spark, "bpe_merges", (sfDir, merges)) {
       import spark.implicits._
       val wordFreq = Tables.documents(spark, sfDir)
         .select(explode(split(col("text"), " ")).as("word"))
@@ -692,9 +674,6 @@ object TextOps {
     }
     out.toSeq
   }
-
-  private val mergeCache =
-    new graft.SessionCache[(String, Int), Array[(Long, String, String, String, Long)]]()
 
   /** [[bpeLearn]] over an arbitrary `(word, n)` frequency frame —
     * spec-visible for planted-corpus verification. */
@@ -820,12 +799,12 @@ object TextOps {
         // checkpoint's blocks release eagerly (a 32k-merge fit would
         // otherwise pin ~2k dead vocabulary frames until context end)
         words = words.withColumn("toks", col0).localCheckpoint()
-        if (prevCkpt != null) graft.SessionCache.unpersistCheckpoint(prevCkpt)
+        if (prevCkpt != null) graft.Layers.release(prevCkpt)
         prevCkpt = words
       }
     }
     // the merge table is driver-side now — the last checkpoint is dead
-    if (prevCkpt != null) graft.SessionCache.unpersistCheckpoint(prevCkpt)
+    if (prevCkpt != null) graft.Layers.release(prevCkpt)
     (out.toSeq, jobs)
   }
 
@@ -866,7 +845,7 @@ object TextOps {
       // checkpoint, so their plans and oracles are untouched.
       if ((i + 1) % BpeApplyBatch == 0) {
         vocab = vocab.localCheckpoint()
-        if (prevCkpt != null) graft.SessionCache.unpersistCheckpoint(prevCkpt)
+        if (prevCkpt != null) graft.Layers.release(prevCkpt)
         prevCkpt = vocab
       }
     }
@@ -953,13 +932,10 @@ object TextOps {
     * scores TWICE, once for thresholds and once to bucket, and q153
     * through it) re-ran the corpus bigram pass per reference. */
   def materializedLmScores(spark: SparkSession, sfDir: String): DataFrame =
-    lmScoresCache.getOrCompute(spark, sfDir) {
+    graft.Layers.frame(spark, "lm_scores", sfDir) {
       lmScoreWith(Tables.documents(spark, sfDir),
-        materializedLmModel(spark, sfDir)).localCheckpoint()
+        materializedLmModel(spark, sfDir))
     }
-
-  private val lmScoresCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
 
   /** [[lmScore]] over an explicit corpus frame (`doc_id`, `text`) —
     * the planted-corpus entry point the spec drives with degenerate
@@ -1037,21 +1013,15 @@ object TextOps {
     * train tokenize pass; the two scoring tables are then checkpointed
     * themselves and the intermediate released. */
   def materializedLmModel(spark: SparkSession, sfDir: String): LmModel =
-    lmModelCache.getOrCompute(spark, sfDir) {
+    graft.Layers.value(spark, "lm_model", sfDir) {
       val train = lmTrainOf(Tables.documents(spark, sfDir))
       val cu = lmUnigrams(train).localCheckpoint()
       val nTrain = lmTokenTotal(cu)
       val m = LmModel(lmSeen(train, cu).localCheckpoint(),
         lmBack(cu, nTrain).localCheckpoint(), nTrain)
-      graft.SessionCache.unpersistCheckpoint(cu)
+      graft.Layers.release(cu)
       m
     }
-
-  private val lmModelCache = new graft.SessionCache[String, LmModel](
-    onEvict = m => {
-      graft.SessionCache.unpersistCheckpoint(m.seen)
-      graft.SessionCache.unpersistCheckpoint(m.back)
-    })
 
   private def lmScoreWith(docs: DataFrame, m: LmModel): DataFrame =
     lmBigrams(docs)
@@ -1272,12 +1242,7 @@ object TextOps {
     * it (q150 itself and q153's tail-drop gate); before this each
     * re-paid the per-source threshold windows and the doc join. */
   def materializedPplBuckets(spark: SparkSession, sfDir: String): DataFrame =
-    pplBucketsCache.getOrCompute(spark, sfDir) {
-      perplexityBuckets(spark, sfDir).localCheckpoint()
-    }
-
-  private val pplBucketsCache = new graft.SessionCache[String, DataFrame](
-    onEvict = graft.SessionCache.unpersistCheckpoint)
+    graft.Layers.frame(spark, "ppl_buckets", sfDir)(perplexityBuckets(spark, sfDir))
 
   /** Strictly-before counts over a (value, c) frequency frame in the
     * given order, WITHOUT a single-partition window: the q108

@@ -276,18 +276,11 @@ object ScaleBench {
     // reading as 18x for a linear-cost query). Layer times go into the
     // artifact (r13 verdict: separated layer times ARE the evidence
     // that the shared builds scale, not just the queries over them).
-    val layerTimes = graft.SparkEntry.layers.toSeq.sortBy(_._1).map { case (name, build) =>
-      val ts = Seq(baseDir, outDir).map { d =>
-        val t0 = System.nanoTime()
-        try build(spark, d)
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] layer $name ($d) FAILED: ${e.getMessage}") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[scale] layer $name ($d) $dt%.2f s")
-        dt
-      }
-      (name, ts.head, ts.last)
-    }
+    // (each layer's own time, failures logged by the phase)
+    val Seq(baseLayers, scaledLayers) =
+      Seq(baseDir, outDir).map(d => graft.Bench.layerPhase(spark, d)._1.toMap)
+    val layerTimes = baseLayers.keySet.intersect(scaledLayers.keySet).toSeq.sorted
+      .map(n => (n, baseLayers(n), scaledLayers(n)))
     // Output cardinality at each scale (untimed .count() with its
     // pruned plan — NOT the timed noop write): makes per-row cost
     // mechanical in the artifact. A wall ratio above k on a query whose

@@ -416,7 +416,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("envelope queries: native projection, no UDF, q41's only window is policy-bounded") {
     // r12 checked forms. q35/q77 now read a MATERIALIZED envelope
-    // layer (the SessionCache discipline), so their query-facing plan
+    // layer (the Layers discipline), so their query-facing plan
     // is the checkpointed LogicalRDD face; the BUILD pipeline is
     // audited directly through Features.envelopeProjection — still
     // zero UDFs, still mat_vec_project.

@@ -7,6 +7,8 @@ rows sorted by all columns, exact value equality).
 Usage: python3 tools/parity_check.py <sfDir> <verifyOutDir>
 """
 import json
+import multiprocessing
+import os
 import sys
 
 import duckdb
@@ -22,11 +24,71 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> int:
-    import os
-    con = duckdb.connect()
+def mem_available_bytes() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("no MemAvailable in /proc/meminfo")
+
+
+def connect(sf_dir: str, out_dir: str, mem: int):
+    # Bounded memory, spilling under the output dir: an oracle that needs
+    # more than the host has fails with DuckDB's out-of-memory error. Half
+    # of MemAvailable leaves room for the pandas frames each compare
+    # materializes.
+    con = duckdb.connect(config={
+        "memory_limit": f"{mem // 2 // 2**20}MB",
+        "temp_directory": os.path.join(out_dir, ".duckdb_tmp")})
+    # no progress bar: it would prefix the next report line
+    con.execute("SET enable_progress_bar = false")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(con, out_dir: str, name: str, sql: str) -> tuple:
+    """One oracle vs its Spark output: (failed, report lines)."""
+    try:
+        expect = canon(con.sql(sql).df())
+        got = canon(con.sql(
+            f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
+    except Exception as e:
+        return True, f"FAIL {name}: {e}"
+    if list(expect.columns) != list(got.columns):
+        return True, f"FAIL {name}: columns {list(got.columns)} vs oracle {list(expect.columns)}"
+    warn = ""
+    if expect.dtypes.tolist() != got.dtypes.tolist():
+        warn = f"WARN {name}: dtypes {got.dtypes.tolist()} vs {expect.dtypes.tolist()}\n"
+    if len(expect) != len(got):
+        return True, f"{warn}FAIL {name}: rows {len(got)} vs oracle {len(expect)}"
+    if not expect.equals(got):
+        neq = (expect != got) & ~(expect.isna() & got.isna())
+        bad = neq.any(axis=1)
+        return True, (f"{warn}FAIL {name}: {int(bad.sum())}/{len(expect)} rows differ; first:\n"
+                f"{pd.concat([expect[bad].head(2), got[bad].head(2)])}")
+    return False, f"{warn}ok   {name} ({len(expect)} rows)"
+
+
+def oracle_worker(conn, sf_dir: str, out_dir: str, mem: int) -> None:
+    con = connect(sf_dir, out_dir, mem)
+    for name, sql in iter(conn.recv, None):
+        conn.send(compare(con, out_dir, name, sql))
+
+
+def resident_bytes(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:  # the worker exited meanwhile
+        pass
+    return 0
+
+
+def main(sf_dir: str, out_dir: str) -> int:
+    con = duckdb.connect()
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     # manifest first: a query Verify recorded as crashed fails ONCE, up
     # front, and is skipped by the oracle loop (no double count, and a
@@ -45,40 +107,49 @@ def main(sf_dir: str, out_dir: str) -> int:
         # no manifest (old Verify binary / partial run): fall back to
         # listing whatever output directories exist
         expected = set(oracle) | {n for n in os.listdir(out_dir)
-                                  if os.path.isdir(os.path.join(out_dir, n))}
+                                  if os.path.isdir(os.path.join(out_dir, n))
+                                  and not n.startswith(".")}
     failures = 0
     for name in sorted(crashed):
         print(f"FAIL {name}: Verify recorded a crash for this query")
         failures += 1
+    # The oracles run in a worker process. DuckDB's memory_limit does not
+    # bound every allocation (q167's list arithmetic grew past 16 GB
+    # resident under a 6 GB limit at sf0.1), so a worker resident above
+    # 3/4 of MemAvailable is stopped before the host runs out; a worker
+    # stopped or dead mid-oracle is that oracle's FAIL, and a fresh one
+    # takes the next.
+    ctx = multiprocessing.get_context("spawn")
+    mem = mem_available_bytes()
+    cap = mem * 3 // 4
+    worker = None
     for name, sql in sorted(oracle.items()):
         if name in crashed:
             continue
+        if worker is None:
+            conn, child = ctx.Pipe()
+            worker = ctx.Process(target=oracle_worker, args=(child, sf_dir, out_dir, mem))
+            worker.start()
+            child.close()
+        conn.send((name, sql))
+        over = False
+        while not over and not conn.poll(0.2) and worker.is_alive():
+            over = resident_bytes(worker.pid) > cap
+        if over:
+            worker.kill()
         try:
-            expect = canon(con.sql(sql).df())
-            got = canon(con.sql(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
-        except Exception as e:
-            print(f"FAIL {name}: {e}")
-            failures += 1
-            continue
-        if list(expect.columns) != list(got.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs oracle {list(expect.columns)}")
-            failures += 1
-            continue
-        if expect.dtypes.tolist() != got.dtypes.tolist():
-            print(f"WARN {name}: dtypes {got.dtypes.tolist()} vs {expect.dtypes.tolist()}")
-        if len(expect) != len(got):
-            print(f"FAIL {name}: rows {len(got)} vs oracle {len(expect)}")
-            failures += 1
-            continue
-        if not expect.equals(got):
-            neq = (expect != got) & ~(expect.isna() & got.isna())
-            bad = neq.any(axis=1)
-            print(f"FAIL {name}: {int(bad.sum())}/{len(expect)} rows differ; first:")
-            print(pd.concat([expect[bad].head(2), got[bad].head(2)]))
-            failures += 1
-            continue
-        print(f"ok   {name} ({len(expect)} rows)")
+            failed, report = conn.recv()
+        except EOFError:
+            worker.join()
+            why = (f"out of memory: over {cap // 2**20} MB resident" if over
+                   else f"oracle process died (exit code {worker.exitcode})")
+            failed, report = True, f"FAIL {name}: {why}"
+            worker = None
+        print(report, flush=True)
+        failures += failed
+    if worker is not None:
+        conn.send(None)
+        worker.join()
     # rows-only entries (no oracle): report row counts, and FAIL any
     # query declared in the manifest whose output directory is missing
     # (a crashed rows-only query must not look green by absence).
