@@ -1,32 +1,64 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
+/** The one timing harness: query selection, the untimed warmup and the
+  * timed action every main uses ([[select]], [[warm]], [[time]]), and
+  * the full-catalog bench main. Re-measure a few queries at any lake
+  * with `SPARK_GRAFT_SF_DIR=<lake> SPARK_GRAFT_ONLY=q1,q2 runMain
+  * graft.Bench`: the layer phase builds the layers they read first, so
+  * the query times are warm. */
 object Bench {
+  /** The named queries with their builders, in the given order (a name
+    * may be a comma-separated list); every query, sorted by name, when
+    * none is named. Throws on a name [[SparkEntry.queries]] lacks. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    val want = names.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val unknown = want.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (want.isEmpty) all.toSeq.sortBy(_._1) else want.distinct.map(n => n -> all(n))
+  }
+
+  /** Seconds to build `df` and write its full output to the noop sink.
+    * Every output column is computed: a `count()` lets Catalyst prune
+    * whole aggregates and projections out of the timed plan. */
+  def time(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    df.write.mode("overwrite").format("noop").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Untimed full scan of every table of the lake at `dir`, so JVM and
+    * codegen spin-up, parquet footers and the OS page cache are not
+    * charged to the first timed query. A lake may lack optional tables;
+    * those are skipped. */
+  def warm(spark: SparkSession, dir: String): Unit =
+    Tables.names.foreach { n =>
+      try time(Tables.read(spark, dir, n)): Unit
+      catch { case NonFatal(_) => () }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Comma-separated query names for a targeted re-measure; unset =
+    // the full catalog. Checked before any work: a misspelled name fails.
+    val selected = select(sys.env.get("SPARK_GRAFT_ONLY").toSeq).sortBy(_._1)
     // Provenance mark BEFORE any work: host contention has repeatedly
     // dilated identical binaries 3-4× (rounds 2/9/12/14 all needed
     // out-of-band adjudication); the steal-time delta recorded by
     // HostMeter settles those disputes inside the artifact itself.
     val meterStart = HostMeter.mark()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // GraftSession carries the shared configs (nanosAsLong for the
     // events reader, UTC session timezone, AQE) so Bench times the same
     // query semantics Verify checks.
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JVM/codegen spin-up, parquet footer reads, and the
-    // OS page cache for the input files are session costs, not query
-    // costs — prime them all so the first timed queries aren't charged
-    // for cold I/O the later ones don't pay. The warmup query runs in a
-    // session of its own, so any layer it builds is built again, and
-    // timed, in the layer phase.
-    try {
-      Tables.names.foreach { n =>
-        try Tables.read(spark, sfDir, n).foreach(_ => ()) // full scan, untimed
-        catch { case _: Throwable => () }
-      }
-      SparkEntry.queries.head._2(spark.newSession(), sfDir).count()
-    } catch { case _: Throwable => () }
+    warm(spark, sfDir)
+    // One untimed query too, for the query path's own spin-up. It runs
+    // in a session of its own, so any layer it builds is built again,
+    // and timed, in the layer phase.
+    try time(SparkEntry.queries.head._2(spark.newSession(), sfDir)): Unit
+    catch { case NonFatal(_) => () }
     // Materialized-layer builds, timed SEPARATELY from queries: the IVF
     // fit, dedup cluster labels, decoded CDC log, and model seeds are
     // session-level builds every consumer shares. Charging them to
@@ -36,39 +68,29 @@ object Bench {
     // errors list like query failures.
     val (layerTimes, layerFailed) = layerPhase(spark, sfDir)
     var failed = layerFailed.map(n => s"layer:$n").toList
-    // Optional comma-separated query-name filter for local iteration
-    // (SPARK_GRAFT_ONLY=q35_text_embedding,q77_...); unset = full sweep.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          failed ::= name
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $dt%8.2f s" + (if (ok) "" else "  (FAILED)"))
-      (name, dt, ok)
+    val results = selected.flatMap { case (name, fn) =>
+      try {
+        val dt = time(fn(spark, sfDir))
+        System.err.println(f"[bench] $name%-28s $dt%8.2f s")
+        Some(name -> dt)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        failed ::= name
+        None
+      }
     }
     // Failed queries appear ONLY in the errors list: their time-to-failure
     // is not a query duration, and including it (positive or negative)
     // would make totals incomparable across runs with different failure
     // sets and confuse consumers of the queries map.
-    val qs = results.collect { case (k, v, true) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val ls = layerTimes.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // "value" stays query-only so totals remain comparable with prior
     // rounds' semantics; layer cost is its own headline field.
-    val total = results.collect { case (_, v, true) => v }.sum
+    val total = results.map(_._2).sum
     val layerTotal = layerTimes.map(_._2).sum
     // steal_sec/steal_pct/contended + load1 bounds — the machine-
     // checkable provenance block every timing artifact now carries
@@ -105,7 +127,7 @@ object Bench {
     def r2(v: Double): String = BigDecimal(v)
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val LineBudget = 1750
-    val shortNames = results.map { case (k, _, _) => k.takeWhile(_ != '_') }
+    val shortNames = results.map(_._1.takeWhile(_ != '_'))
     val collide = shortNames.diff(shortNames.distinct).toSet
     val fullRef = if (wrote) s""","full":"$out"""" else ""
     def envelope(qsShort: String, omitted: Seq[Double]): String = {
@@ -114,8 +136,7 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","layers_sec":${r3(layerTotal)},""" +
         s"""$provJson,"queries":$qsShort$other,"errors":$errs,"sf":"$sfDir"$fullRef}"""
     }
-    val bySlowest = results.collect { case (k, v, true) => (k, v) }
-      .sortBy { case (k, v) => (-v, k) }
+    val bySlowest = results.sortBy { case (k, v) => (-v, k) }
     val entries = bySlowest.map { case (k, v) =>
       val sk = k.takeWhile(_ != '_')
       ("\"" + (if (collide(sk)) k else sk) + "\":" + r2(v), v)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * producer/api.py:35-63`, `TableApp.kt:173-196`).
   *
   * {{{
-  * val spark = GraftSession.builder("local[*]").getOrCreate()
+  * val spark = GraftSession.local().getOrCreate()
   * Graft.open(spark, "/root/testdata/sf0.01")
   * spark.sql("SELECT simhash60(word_shingles(text, 3)) FROM documents")
   * }}}

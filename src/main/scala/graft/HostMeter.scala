@@ -17,7 +17,7 @@ package graft
   * accounting (`/proc/pressure/cpu`, the PSI `some total=` counter —
   * cumulative microseconds at least one runnable task waited for a
   * CPU). External load makes OUR tasks stall, and PSI counts exactly
-  * those stalls regardless of who caused them; a healthy local[32]
+  * those stalls regardless of who caused them; a healthy 32-core
   * battery on 32 CPUs stalls only on its own brief over-subscription
   * bursts (measured r16: 0.3% of wall across the full 174-query sf0.1
   * battery, 1.2% on a cold warmup burst), while a co-tenant doubling

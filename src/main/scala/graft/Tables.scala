@@ -96,6 +96,14 @@ object Tables {
 
 /** Session factory with the configs every entry point needs. */
 object GraftSession {
+  /** The builder every main starts from: `local[n]` with one shuffle
+    * partition per core, where n is `SPARK_GRAFT_CPUS`, else the host's
+    * CPU count. */
+  def local(): SparkSession.Builder = {
+    val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(HostMeter.nCpus())
+    builder(s"local[$n]", n)
+  }
+
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

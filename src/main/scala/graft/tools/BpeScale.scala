@@ -28,7 +28,7 @@ object BpeScale {
     val merges = if (args.nonEmpty) args(0).toInt else 32768
     val dir = if (args.length > 1) args(1) else "target/scale-sf10"
     val meter0 = graft.HostMeter.mark()
-    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // 1. lake fit + fertility shift

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{avg, col}
 
 /** nProbe sensitivity audit at an arbitrary lake — the follow-through
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions.{avg, col}
   * if the big-lake curve disagrees with the grid's.
   *
   * Usage: `runMain graft.tools.NprobeAudit <lakeDir> [nProbe,...]`
-  * (default probes 2,4,8). Timing is the TimeOne noop-sink discipline:
-  * cold then warm per point, shared layers (centroids, codes,
-  * codebooks) built once by the cold pass, HostMeter provenance for
-  * the whole audit. */
+  * (default probes 2,4,8). Each point is timed cold then warm through
+  * [[graft.Bench.time]] after one [[graft.Bench.warm]] of the lake: the
+  * cold pass builds the shared layers (centroids, codes, codebooks),
+  * and HostMeter provenance covers the whole audit. */
 object NprobeAudit {
 
   def main(args: Array[String]): Unit = {
@@ -25,30 +26,19 @@ object NprobeAudit {
       if (args.length > 1) args(1).split(",").map(_.trim.toInt).toSeq
       else Seq(2, 4, 8)
     val meter0 = graft.HostMeter.mark()
-    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def meanRecall(df: org.apache.spark.sql.DataFrame): Double =
+    graft.Bench.warm(spark, dir)
+    def coldWarm(df: => DataFrame): (Double, Double) = (graft.Bench.time(df), graft.Bench.time(df))
+    def meanRecall(df: DataFrame): Double =
       df.agg(avg(col("recall"))).head().getDouble(0)
 
     probes.foreach { p =>
-      val sqCold = time(graft.operators.Sq
-        .ivfSqTopK(spark, dir, nProbe = p)
-        .write.mode("overwrite").format("noop").save())
-      val sqWarm = time(graft.operators.Sq
-        .ivfSqTopK(spark, dir, nProbe = p)
-        .write.mode("overwrite").format("noop").save())
+      val (sqCold, sqWarm) = coldWarm(graft.operators.Sq.ivfSqTopK(spark, dir, nProbe = p))
       val sqRec = meanRecall(
         graft.operators.Sq.ivfSqRecallVsBrute(spark, dir, nProbe = p))
-      val pqCold = time(graft.operators.Pq
-        .ivfAdcTopK(spark, dir, nProbe = p)
-        .write.mode("overwrite").format("noop").save())
-      val pqWarm = time(graft.operators.Pq
-        .ivfAdcTopK(spark, dir, nProbe = p)
-        .write.mode("overwrite").format("noop").save())
+      val (pqCold, pqWarm) = coldWarm(graft.operators.Pq.ivfAdcTopK(spark, dir, nProbe = p))
       val pqRec = meanRecall(
         graft.operators.Pq.ivfAdcRecallVsBrute(spark, dir, nProbe = p))
       println(f"[nprobe] p=$p%-2d ivf_sq8 cold $sqCold%6.2f s warm $sqWarm%6.2f s recall $sqRec%.4f" +

@@ -221,20 +221,14 @@ object ScaleBench {
     val k = if (args.nonEmpty) args(0).toInt else 10
     // optional second arg: comma-separated query subset — the 100x run
     // measures the headline pipelines, not all 49 audit queries
-    val selected: Seq[String] = if (args.length > 1) {
-      val want = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val unknown = want.filterNot(graft.SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-      want
-    } else AuditQueries
+    val selected = graft.Bench.select(if (args.length > 1) Seq(args(1)) else AuditQueries)
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // k=10 keeps the historical sf1 label (and reuses its lake); other
     // factors label by the equivalent driver scale factor when exact
     // (k=100 over sf0.1 -> sf10), else by the raw factor
     val label = if (k % 10 == 0) s"sf${k / 10}" else s"${k}x"
     val outDir = s"target/scale-$label"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // a marker written only AFTER a full successful generate pins the
     // replication factor to the data: a stale lake from a different k,
@@ -252,22 +246,8 @@ object ScaleBench {
     // provenance covers the TIMED region (warmup + layers + queries),
     // not the one-off lake generation above
     val meterStart = graft.HostMeter.mark()
-    def time(dir: String, name: String): Double = {
-      val t0 = System.nanoTime()
-      // noop-format write: materializes EVERY column of every row
-      // through the sink boundary. A `.count()` here let the optimizer
-      // prune final map-only projections (q111/q116-class queries), so
-      // the 10x ratios under-measured exactly the stages the audit
-      // exists to check.
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     // warmup both lakes (page cache, codegen)
-    graft.Tables.names.foreach { n =>
-      graft.Tables.read(spark, baseDir, n).foreach(_ => ())
-      graft.Tables.read(spark, outDir, n).foreach(_ => ())
-    }
+    Seq(baseDir, outDir).foreach(graft.Bench.warm(spark, _))
     // warm the shared materialized layers for BOTH lakes, untimed —
     // same discipline as Bench: without this, whichever audit query
     // runs first at each scale carries that scale's layer builds and
@@ -289,9 +269,9 @@ object ScaleBench {
     // mostly fixed cost — and needs no out-of-band adjudication.
     def rowsOf(dir: String, name: String): Long =
       graft.SparkEntry.queries(name)(spark, dir).count()
-    val rows = selected.map { q =>
-      val base = time(baseDir, q)
-      val scaled = time(outDir, q)
+    val rows = selected.map { case (q, fn) =>
+      val base = graft.Bench.time(fn(spark, baseDir))
+      val scaled = graft.Bench.time(fn(spark, outDir))
       val ratio = scaled / math.max(base, 1e-9)
       val baseRows = rowsOf(baseDir, q)
       val scaledRows = rowsOf(outDir, q)

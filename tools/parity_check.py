@@ -10,6 +10,7 @@ import json
 import multiprocessing
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -48,32 +49,41 @@ def connect(sf_dir: str, out_dir: str, mem: int):
 
 
 def compare(con, out_dir: str, name: str, sql: str) -> tuple:
-    """One oracle vs its Spark output: (failed, report lines)."""
+    """One oracle vs its Spark output: (failed, warning lines, outcome)."""
     try:
         expect = canon(con.sql(sql).df())
         got = canon(con.sql(
             f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
     except Exception as e:
-        return True, f"FAIL {name}: {e}"
+        return True, "", str(e)
     if list(expect.columns) != list(got.columns):
-        return True, f"FAIL {name}: columns {list(got.columns)} vs oracle {list(expect.columns)}"
+        return True, "", f"columns {list(got.columns)} vs oracle {list(expect.columns)}"
     warn = ""
     if expect.dtypes.tolist() != got.dtypes.tolist():
         warn = f"WARN {name}: dtypes {got.dtypes.tolist()} vs {expect.dtypes.tolist()}\n"
     if len(expect) != len(got):
-        return True, f"{warn}FAIL {name}: rows {len(got)} vs oracle {len(expect)}"
+        return True, warn, f"rows {len(got)} vs oracle {len(expect)}"
     if not expect.equals(got):
         neq = (expect != got) & ~(expect.isna() & got.isna())
         bad = neq.any(axis=1)
-        return True, (f"{warn}FAIL {name}: {int(bad.sum())}/{len(expect)} rows differ; first:\n"
-                f"{pd.concat([expect[bad].head(2), got[bad].head(2)])}")
-    return False, f"{warn}ok   {name} ({len(expect)} rows)"
+        return True, warn, (f"{int(bad.sum())}/{len(expect)} rows differ; first:\n"
+                            f"{pd.concat([expect[bad].head(2), got[bad].head(2)])}")
+    return False, warn, f"{len(expect)} rows"
+
+
+def report(name: str, failed: bool, warn: str, outcome: str, secs: float) -> str:
+    """The oracle's `ok`/`FAIL` line, with the seconds its compare took."""
+    if failed:
+        return f"{warn}FAIL {name} ({secs:.2f} s): {outcome}"
+    return f"{warn}ok   {name} ({outcome}, {secs:.2f} s)"
 
 
 def oracle_worker(conn, sf_dir: str, out_dir: str, mem: int) -> None:
     con = connect(sf_dir, out_dir, mem)
     for name, sql in iter(conn.recv, None):
-        conn.send(compare(con, out_dir, name, sql))
+        t0 = time.monotonic()
+        failed, warn, outcome = compare(con, out_dir, name, sql)
+        conn.send((failed, report(name, failed, warn, outcome, time.monotonic() - t0)))
 
 
 def resident_bytes(pid: int) -> int:
@@ -132,20 +142,21 @@ def main(sf_dir: str, out_dir: str) -> int:
             worker.start()
             child.close()
         conn.send((name, sql))
+        t0 = time.monotonic()
         over = False
         while not over and not conn.poll(0.2) and worker.is_alive():
             over = resident_bytes(worker.pid) > cap
         if over:
             worker.kill()
         try:
-            failed, report = conn.recv()
+            failed, line = conn.recv()
         except EOFError:
             worker.join()
             why = (f"out of memory: over {cap // 2**20} MB resident" if over
                    else f"oracle process died (exit code {worker.exitcode})")
-            failed, report = True, f"FAIL {name}: {why}"
+            failed, line = True, report(name, True, "", why, time.monotonic() - t0)
             worker = None
-        print(report, flush=True)
+        print(line, flush=True)
         failures += failed
     if worker is not None:
         conn.send(None)
