@@ -1,12 +1,13 @@
 package graft
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
-/** The one timing harness: query selection, the untimed warmup and the
-  * timed action every main uses ([[select]], [[warm]], [[time]]), and
-  * the full-catalog bench main. Re-measure a few queries at any lake
-  * with `SPARK_GRAFT_SF_DIR=<lake> SPARK_GRAFT_ONLY=q1,q2 runMain
-  * graft.Bench`: the layer phase builds the layers they read first, so
-  * the query times are warm. */
+/** The one timing harness: query selection ([[select]], which Verify
+  * and the tools share), the untimed warmup and the timed action
+  * ([[warm]], [[time]]), and the bench main. Re-measure a few queries
+  * at any lake (a [[graft.tools.ScaleLake]] replica too) with
+  * `SPARK_GRAFT_SF_DIR=<lake> SPARK_GRAFT_ONLY=q1,q2 runMain
+  * graft.Bench`: the layer phase builds and times every layer first,
+  * so the query times are warm. */
 object Bench {
   /** The named queries with their builders, in the given order (a name
     * may be a comma-separated list); every query, sorted by name, when

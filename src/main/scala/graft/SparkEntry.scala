@@ -602,27 +602,6 @@ object SparkEntry {
       ((s, d) => { graft.features.Features.textEmbeddingHashedCheckedQuery(s, d); () }),
   )
 
-  /** Expected minimum output rows for rows-only queries (those with no
-    * `oracleSql` entry). The gate (tools/parity_check.py) fails a
-    * rows-only output smaller than its declared minimum; a query listed
-    * here with 0 is allowed to be legitimately empty (e.g. a filter that
-    * matches nothing at a small scale factor). Queries absent from this
-    * map default to minimum 1 — emptiness is treated as breakage unless
-    * declared otherwise. */
-  def minRows: Map[String, Long] = Map(
-    // EMPTY since r12: every query now carries an oracle. The
-    // graduation trail — q21/q22/q25/q29 to full hash oracles; the IVF
-    // family q44/q127/q128/q129 once the decimal-exact centroid fit
-    // made the k-means externally recomputable; q84/q85/q100 to
-    // envelope-flag oracles r10; q120/q122 to full hash oracles r10;
-    // q30/q31 (decimal-exact seed + Cholesky replay, see luStats),
-    // q111 (unrolled IRLS, see lrChain) and q131/q132 (unrolled BPE
-    // merge loop, see bpeChain) r11; q114 (generation envelope) and
-    // finally q35/q77/q41 (projection / policy-benchmark envelopes)
-    // r12. The map stays as the declared mechanism should a future
-    // operator genuinely defeat even an envelope oracle.
-  )
-
   // Shared SQL fragments (kept in one place so Spark and DuckDB stay in
   // lock-step on the money arithmetic: per-row DECIMAL(18,4) revenue,
   // decimal-exact sums — see graft.functions.ExactNum).
@@ -1017,9 +996,10 @@ object SparkEntry {
   // deterministic — top pair by (freq DESC, w1 asc, w2 asc), then
   // left-to-right non-overlapping re-tokenization — so DuckDB replays
   // all 10 merge iterations over the distinct-word table the same way
-  // the q44 unroll replays Lloyd iterations. The space-lookaround
-  // regexp_replace the engine applies (TextOps.bpeLearnFrom) is
-  // equivalent to a left-to-right fold over the token list, which
+  // the q44 unroll replays Lloyd iterations. The greedy merge the
+  // engine applies (TextOps.bpeFitLocal's token scan, bpeApply's
+  // space-lookaround regexp_replace) is equivalent to a left-to-right
+  // fold over the token list, which
   // list_reduce expresses exactly; tokens ride as single-element
   // lists so the accumulator and element types stay aligned.
   private def bpeFold(prev: String, m: String) =

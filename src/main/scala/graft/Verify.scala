@@ -25,23 +25,18 @@ object Verify {
   /** The `oracle_sql.json` + `manifest.json` pair the dump emits for
     * `tools/parity_check.py`. The manifest lists every dumped query
     * plus any that crashed, so the gate can fail on MISSING outputs
-    * instead of silently skipping a broken rows-only query; `min_rows`
-    * declares minimum output sizes for rows-only queries (a
-    * declared-may-be-empty query is not a failure). */
+    * instead of silently skipping a broken rows-only query. */
   private[graft] def writeArtifacts(outDir: String,
                                     oracles: Iterable[(String, String)],
                                     queryNames: Iterable[String],
-                                    failed: Iterable[String],
-                                    minRows: Map[String, Long]): Unit = {
+                                    failed: Iterable[String]): Unit = {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracles.map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
         .mkString("{", ",", "}"))
     val manifest = queryNames.toSeq.sorted.map(jsonQuote).mkString("[", ",", "]")
     val failedJson = failed.toSeq.sorted.map(jsonQuote).mkString("[", ",", "]")
-    val minRowsJson = minRows.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonQuote(k)}:$v" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      s"""{"queries":$manifest,"failed":$failedJson,"min_rows":$minRowsJson}""")
+      s"""{"queries":$manifest,"failed":$failedJson}""")
   }
 
   /** A fixture pin: oracles whose SQL hard-codes a property of the
@@ -160,7 +155,7 @@ object Verify {
     }
     val oracles = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
     writeArtifacts(outDir, oracles -- droppedOracles(spark, sfDir, oracles.keySet), names,
-      failed, SparkEntry.minRows.filter { case (k, _) => names(k) })
+      failed)
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
     }

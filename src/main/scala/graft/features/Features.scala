@@ -416,15 +416,6 @@ object Features {
                           dim: Int = 256): DataFrame =
     svdProject(spark, tfidfHashedVectors(spark, sfDir, dim), dim, k)
 
-  /** Flat query surface for the hashed embedding. */
-  def textEmbeddingHashedQuery(spark: SparkSession, sfDir: String): DataFrame =
-    textEmbeddingHashed(spark, sfDir).select(
-      col("doc_id"),
-      element_at(col("embedding"), 1).as("e0"),
-      element_at(col("embedding"), 2).as("e1"),
-      element_at(col("embedding"), 3).as("e2"),
-      element_at(col("embedding"), 4).as("e3"))
-
   // --- Envelope (checked) query surfaces for the SVD embeddings ---
   //
   // The embedding VALUES are solver-bound (the fitted subspace is only

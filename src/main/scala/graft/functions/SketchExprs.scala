@@ -2,40 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Sketch signatures (MinHash, SimHash, sign-random-projection) as
-  * native expressions.
-  *
-  * These replace declarative forms built from nested higher-order
-  * functions (`transform(sequence(0,63), i -> array_min(transform(...,
-  * s -> xxhash64(s, i))))`), which Spark evaluates interpreted, one
-  * lambda call per (element × hash). A signature over a 100-token
-  * document costs 64×100 interpreted evals that way; here it is one
-  * `eval` call per row with tight JVM loops inside. `CodegenFallback`
-  * is deliberate: the per-row work (thousands of hash mixes) dwarfs the
-  * row-transition overhead codegen would save, and the hash loop
-  * itself is already compiled Java.
-  *
-  * Hash parity: uses Spark's own [[XXH64]] with the exact chaining the
-  * `xxhash64(...)` SQL function applies (seed 42, each argument's hash
-  * seeds the next), so results are bit-identical to the declarative
-  * form — asserted by ScalaTest cross-checks.
-  */
-object SketchHash {
-  val Seed = 42L
-
-  /** xxhash64(s) for one UTF8String, as the SQL function computes it. */
-  def hashString(s: UTF8String, seed: Long = Seed): Long =
-    XXH64.hashUTF8String(s, seed)
-
-  /** xxhash64(s, i) where i is an INT: chain int hash after string. */
-  def hashStringInt(stringHash: Long, i: Int): Long =
-    XXH64.hashInt(i, stringHash)
-}
+// Sketch signatures (MinHash, SimHash, sign-random-projection) as
+// native expressions.
+//
+// These replace declarative forms built from nested higher-order
+// functions (`transform(sequence(0,63), i -> array_min(transform(...,
+// s -> hash(s, i))))`), which Spark evaluates interpreted, one lambda
+// call per (element × hash). A signature over a 100-token document
+// costs 64×100 interpreted evals that way; here it is one `eval` call
+// per row with tight JVM loops inside. `CodegenFallback` is deliberate:
+// the per-row work (thousands of hash mixes) dwarfs the row-transition
+// overhead codegen would save, and the hash loop itself is already
+// compiled Java. Every hash is engine-portable (md5 or integer
+// arithmetic), so the DuckDB oracles rebuild each signature
+// bit-for-bit.
 
 /** ENGINE-PORTABLE string hashing for the sketch signatures, the
   * string-input analog of [[PortableSrpSig]]'s integer-arithmetic
@@ -222,72 +206,16 @@ object SimHash60 {
   val Bits = 60
 }
 
-/** Sign-random-projection LSH bucket id: `srp_bucket(embedding, p)` —
-  * bit p of the bucket is the sign of the projection onto pseudo-random
-  * hyperplane p, whose weights are derived arithmetically from
-  * xxhash64 of (plane, dim) — deterministic, no RNG state to ship.
-  * Weight parity with the declarative form
-  * `(pmod(xxhash64(p*1024+i), 2000001) - 1e6) / 1e6` is exact.
-  */
-case class SrpBucket(child: Expression, numPlanes: Int)
-    extends UnaryExpression with CodegenFallback {
-  // One bit per plane packed into a single long: >64 planes would wrap
-  // the `1L << p` shift mod 64 and silently alias bucket ids.
-  require(numPlanes >= 1 && numPlanes <= 64,
-    s"srp_bucket needs 1 <= numPlanes <= 64, got $numPlanes")
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"srp_bucket requires array<float>, got ${t.simpleString}")
-  }
-
-  // Weight matrix is a pure function of (plane, dim): materialize once
-  // per executor at first use, not per row. 1024 dims is the cap the
-  // hash-index scheme encodes.
-  @transient private lazy val weights: Array[Array[Double]] =
-    Array.tabulate(numPlanes, SrpBucket.MaxDims) { (p, i) =>
-      val h = XXH64.hashInt(p * 1024 + i, SketchHash.Seed)
-      (java.lang.Math.floorMod(h, 2000001L) - 1000000L).toDouble / 1000000.0
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), SrpBucket.MaxDims)
-    var bucket = 0L
-    var p = 0
-    while (p < numPlanes) {
-      val w = weights(p)
-      var proj = 0.0
-      var i = 0
-      while (i < n) {
-        proj += arr.getFloat(i).toDouble * w(i)
-        i += 1
-      }
-      if (proj >= 0) bucket |= (1L << p)
-      p += 1
-    }
-    bucket
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SrpBucket =
-    copy(child = newChild)
-  override def prettyName: String = "srp_bucket"
-}
-
-object SrpBucket {
-  val MaxDims = 1024
-}
-
-/** ENGINE-PORTABLE sign-random-projection signature: like [[SrpBucket]]
-  * but the hyperplane weights come from pure integer arithmetic —
+/** ENGINE-PORTABLE sign-random-projection signature:
+  * `srp_sig_portable(embedding, p)` — bit p is the sign of the
+  * projection onto pseudo-random hyperplane p, whose weights come from
+  * pure integer arithmetic —
   * `w(p,i) = (((p·1024 + i) · 2654435761) mod 2000001 − 1000000) / 10⁶`
   * — so an external SQL engine can recompute the signature bit-for-bit
-  * (the [[SrpBucket]] weights come from Spark's xxhash64, which DuckDB
-  * cannot evaluate). This is what lets the bucketed embedding near-dup
-  * join keep a hash-checked oracle: both engines derive the same
-  * buckets, so the bucket-restricted result sets are comparable.
+  * (Spark's xxhash64 cannot be evaluated in DuckDB). This is what
+  * lets the bucketed embedding near-dup join keep a hash-checked
+  * oracle: both engines derive the same buckets, so the
+  * bucket-restricted result sets are comparable.
   *
   * The signature packs one sign bit per plane (bit p = 1 iff the
   * projection onto plane p is ≥ 0, accumulated left-to-right in double —
@@ -308,6 +236,8 @@ object SrpBucket {
 case class PortableSrpSig(child: Expression, numPlanes: Int,
                           planeOffset: Int = 0)
     extends UnaryExpression with CodegenFallback {
+  // One bit per plane packed into a single long: >64 planes would wrap
+  // the `1L << p` shift mod 64 and silently alias signatures.
   require(numPlanes >= 1 && numPlanes <= 64,
     s"srp_sig_portable needs 1 <= numPlanes <= 64, got $numPlanes")
   require(planeOffset >= 0, s"srp_sig_portable needs planeOffset >= 0, got $planeOffset")
@@ -319,14 +249,16 @@ case class PortableSrpSig(child: Expression, numPlanes: Int,
       s"srp_sig_portable requires array<float>, got ${t.simpleString}")
   }
 
+  // Weight matrix is a pure function of (plane, dim): materialize once
+  // per executor at first use, not per row.
   @transient private lazy val weights: Array[Array[Double]] =
-    Array.tabulate(numPlanes, SrpBucket.MaxDims) { (p, i) =>
+    Array.tabulate(numPlanes, PortableSrpSig.MaxDims) { (p, i) =>
       PortableSrpSig.weight(planeOffset + p, i)
     }
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), SrpBucket.MaxDims)
+    val n = math.min(arr.numElements(), PortableSrpSig.MaxDims)
     var sig = 0L
     var p = 0
     while (p < numPlanes) {
@@ -349,6 +281,10 @@ case class PortableSrpSig(child: Expression, numPlanes: Int,
 }
 
 object PortableSrpSig {
+  /** Dimensions a signature reads: the weight index `p·1024 + i`
+    * encodes dim i below 1024. */
+  val MaxDims = 1024
+
   /** The portable weight formula — kept callable so specs can assert
     * the SQL-side reconstruction matches. Knuth multiplier stride mod a
     * prime-ish modulus: uniform-ish in [-1, 1], zero state to ship. */

@@ -24,9 +24,6 @@ package object functions {
   /** 60-bit engine-portable SimHash of an `array<string>`. */
   def simhash60(c: Column): Column = wrap(SimHash60(ex(c)))
 
-  /** Sign-random-projection LSH bucket of an `array<float>`. */
-  def srpBucket(c: Column, planes: Int): Column = wrap(SrpBucket(ex(c), planes))
-
   /** Engine-portable SRP signature (integer-arithmetic weights — an
     * external SQL engine can recompute it; see [[PortableSrpSig]]). */
   def srpSigPortable(c: Column, planes: Int, planeOffset: Int = 0): Column =
@@ -136,7 +133,6 @@ package object functions {
     "dot_f32" -> (exprs => DotProductF32(exprs.head, exprs(1))),
     "simhash60" -> (exprs => SimHash60(exprs.head)),
     "minhash_sig" -> (exprs => MinHashSig(exprs.head, intArg(exprs(1)))),
-    "srp_bucket" -> (exprs => SrpBucket(exprs.head, intArg(exprs(1)))),
     "srp_sig_portable" -> (exprs => PortableSrpSig(exprs.head, intArg(exprs(1)),
       if (exprs.length > 2) intArg(exprs(2)) else 0)),
     "word_shingles" -> (exprs => WordShingles(exprs.head, intArg(exprs(1)))),

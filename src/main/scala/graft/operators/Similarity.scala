@@ -65,15 +65,6 @@ object Similarity {
       bruteForceTopK(spark, sfDir, nQueries, k)
     }
 
-  /** Sign-random-projection bucket id: `nPlanes` pseudo-random hyperplanes
-    * with weights derived arithmetically from (plane, dim) — fully
-    * deterministic, no RNG state to ship. Vectors whose sign pattern
-    * agrees land in the same bucket. Native expression
-    * ([[graft.functions.SrpBucket]]); one pass over the vector for all
-    * planes. */
-  def srpBucket(emb: Column, nPlanes: Int): Column =
-    graft.functions.srpBucket(emb, nPlanes)
-
   /** L2 normalization — the standard pre-ANN transform (unit vectors
     * turn cosine into dot product). Map-only; the query surface emits
     * the leading components rounded so the oracle compares exactly. */
@@ -426,51 +417,6 @@ object Similarity {
         (col("max_eval_cos") >= tau).as("contaminated"))
   }
 
-  /** The sharding escape hatch [[embeddingDecontamFrom]]'s guard names:
-    * an eval set ABOVE the broadcast ceiling is split into
-    * ⌈|eval|/shardSize⌉ deterministic hash-shards, each run through the
-    * same exact broadcast-argmax pass, and the per-shard argmaxes
-    * re-reduced per corpus vector. Exactness is preserved — max over a
-    * partition of the eval set IS the global max, and the nearest-id
-    * tie-break (max cos, then lowest eid) re-applies identically at the
-    * reduce — while each broadcast stays ≤ shardSize vectors. Cost is
-    * one corpus pass per shard: linear in |eval|·|corpus| like the
-    * single-pass form, just paged; for eval sets so large that
-    * nShards·|corpus| passes dominate, route through the IVF index
-    * instead ([[knnClassify]]'s cell-restricted discipline). */
-  def embeddingDecontamShardedFrom(corpus: DataFrame, evalDf: DataFrame,
-                                   tau: Double = 0.6,
-                                   shardSize: Long = DecontamMaxEvalVectors)
-      : DataFrame = {
-    require(shardSize >= 1 && shardSize <= DecontamMaxEvalVectors,
-      s"shardSize must be in [1, $DecontamMaxEvalVectors], got $shardSize")
-    val nEval = evalDf.count()
-    val nShards = math.max(1L, (nEval + shardSize - 1) / shardSize).toInt
-    val c = corpus
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val perShard = (0 until nShards).map { s =>
-      val shard = evalDf
-        .filter(pmod(xxhash64(col("vec_id")), lit(nShards.toLong)) === s)
-        .select(col("vec_id").as("eid"), col("embedding").as("eemb"),
-          l2norm(col("embedding")).as("enrm"))
-      c.join(broadcast(shard))
-        .withColumn("cos_eval", round(
-          dot(col("embedding"), col("eemb")) / (col("nrm") * col("enrm")), 4))
-        .groupBy(col("vec_id"))
-        .agg(max(col("cos_eval")).as("max_eval_cos"),
-          max_by(col("eid"), struct(col("cos_eval"), -col("eid")))
-            .as("nearest_eval_id"))
-    }
-    perShard.reduce(_ unionByName _)
-      .groupBy(col("vec_id"))
-      .agg(max(col("max_eval_cos")).as("max_eval_cos"),
-        max_by(col("nearest_eval_id"),
-          struct(col("max_eval_cos"), -col("nearest_eval_id")))
-          .as("nearest_eval_id"))
-      .select(col("vec_id"), col("nearest_eval_id"), col("max_eval_cos"),
-        (col("max_eval_cos") >= tau).as("contaminated"))
-  }
-
   /** q142 fixture adapter for [[embeddingDecontamFrom]]: with no
     * external benchmark shipped in the testdata, the deterministic
     * `vec_id % 50 == 0` slice of the embeddings table stands in for
@@ -505,12 +451,11 @@ object Similarity {
   /** SRP-LSH top-k: bucket on the ENGINE-PORTABLE sign-random-projection
     * signature ([[graft.functions.PortableSrpSig]] — integer-arithmetic
     * hyperplane weights), so a DuckDB oracle rebuilds the buckets and
-    * hence the exact bucket-restricted result set; [[srpBucket]]
-    * (xxhash-weighted) remains for callers that don't need an external
-    * oracle. Same plan either way: one map-side signature pass, a
-    * bucket equi-join against the broadcast query side ([[Ann]]'s
-    * candidate join), per-query top-k tail. Approximate (recall < 1):
-    * no pair of non-colliding vectors is ever scored. */
+    * hence the exact bucket-restricted result set. The plan: one
+    * map-side signature pass, a bucket equi-join against the broadcast
+    * query side ([[Ann]]'s candidate join), per-query top-k tail.
+    * Approximate (recall < 1): no pair of non-colliding vectors is
+    * ever scored. */
   def lshTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
               nPlanes: Int = 8): DataFrame = {
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))

@@ -511,47 +511,33 @@ object TextOps {
       .orderBy(desc("freq"), asc("pair")).limit(k)
 
   /** BPE vocabulary learning — the merge LOOP [[bpePairCounts]]'s
-    * docstring defers to a driver harness, run distributed: `merges`
-    * iterations of (count weighted adjacent pairs over the
-    * word-frequency table) → (argmax with freq-desc, pair-asc
-    * tie-break) → (apply the merge to every word). The classic
-    * tokenizer-training shape (Sennrich et al. 2016): all heavy work
-    * is VOCABULARY-bounded — words live as one row per DISTINCT word
-    * with its corpus frequency, so a 100 TB corpus trains on a
-    * ~10 M-row table after one corpus-wide counting pass.
-    *
-    * The merge step needs BPE's greedy left-to-right semantics
-    * ("a a a a a" + pair (a,a) → "aa aa a"). Words are stored
-    * space-joined (`"h e l l o"`, padded), and the merge is
-    * `regexp_replace` with non-consuming space lookarounds —
-    * `(?<= )\Ql\E \Qr\E(?= )` — exactly the reference implementation's
-    * `(?<!\S)l r(?!\S)` re.sub (Sennrich et al.'s learn_bpe): matches
-    * consume only the pair text, so occurrences sharing a boundary
-    * space ("x y x y") all merge in one pass, and identical-token runs
-    * split the way a greedy scan does. Tokens are regex-quoted, so
-    * punctuation in the corpus can't inject syntax. Each iteration is
-    * one map-side-combined count aggregation + a 1-row collect + one
-    * map; the mutating frame is localCheckpointed every few rounds so
-    * the plan doesn't deepen linearly in `merges`. Rows-only (an
-    * iterated argmax chain needs aggregates inside recursion, which
-    * SQL engines reject); spec-verified against an independent
-    * token-array driver BPE on planted words and the real fixture. */
+    * docstring defers to a driver harness: `merges` iterations of
+    * (count weighted adjacent pairs over the word-frequency table) →
+    * (argmax with freq-desc, pair-asc tie-break) → (apply the merge
+    * to every word). The classic tokenizer-training shape (Sennrich et
+    * al. 2016): all heavy work is VOCABULARY-bounded — one corpus-wide
+    * distributed word count, then the merge loop runs in memory over
+    * one row per DISTINCT word with its corpus frequency
+    * ([[learnedMerges]], [[bpeFitLocal]]). The merge step has BPE's
+    * greedy left-to-right semantics ("a a a a a" + pair (a,a) →
+    * "aa aa a"). Rows-only (an iterated argmax chain needs aggregates
+    * inside recursion, which SQL engines reject); spec-verified
+    * against an independent token-array driver BPE on planted words
+    * and the real fixture. */
   def bpeLearn(spark: SparkSession, sfDir: String, merges: Int = 10): DataFrame = {
     import spark.implicits._
     learnedMerges(spark, sfDir, merges)
       .toSeq.toDF("rank", "left", "right", "merged", "freq")
   }
 
-  /** Vocabulary ceiling for the IN-MEMORY merge fit: a distinct-word
-    * frequency table at or below this row count is collected to the
-    * driver and the merge loop runs locally ([[bpeFitLocal]]) — the
-    * industry-standard tokenizer-training shape (Sennrich's learn_bpe,
-    * HF tokenizers, SentencePiece all fit in memory over a distributed
-    * word count), giving a CONSTANT Spark-job count at any `merges`.
-    * 2M words × ~short strings is a few hundred MB of driver heap;
-    * corpora whose vocabulary exceeds the ceiling fall back to the
-    * distributed batched loop ([[bpeLearnMerges]]), which is exact but
-    * pays ~0.9 counting jobs per merge on chain-heavy natural text. */
+  /** Vocabulary ceiling for the in-memory merge fit: the
+    * distinct-word frequency table is collected to the driver and the
+    * merge loop runs locally ([[bpeFitLocal]]) — the industry-standard
+    * tokenizer-training shape (Sennrich's learn_bpe, HF tokenizers,
+    * SentencePiece all fit in memory over a distributed word count),
+    * giving a CONSTANT Spark-job count at any `merges`. 2M words ×
+    * ~short strings is a few hundred MB of driver heap; a corpus whose
+    * vocabulary exceeds the ceiling is refused. */
   val BpeMaxLocalVocab: Int = 2 * 1024 * 1024
 
   /** Merge-chain batch size for [[bpeApply]]: how many regexp merges
@@ -566,10 +552,9 @@ object TextOps {
     * (session, sfDir, merges), shared by [[bpeLearn]] (the query
     * surface) and [[bpeApply]] (the tokenizer), same discipline as the
     * IVF centroid fit. The value is merges×5 driver scalars. The fit
-    * itself: one distributed word-count pass, then the in-memory loop
-    * when the vocabulary is [[BpeMaxLocalVocab]]-bounded (one collect,
-    * job count independent of `merges`), else the distributed batched
-    * loop — both spec-pinned to identical sequential-greedy output. */
+    * itself: one distributed word-count pass, one collect of the
+    * [[BpeMaxLocalVocab]]-bounded vocabulary, then the in-memory loop
+    * ([[bpeFitLocal]]) — a job count independent of `merges`. */
   def learnedMerges(spark: SparkSession, sfDir: String,
                     merges: Int): Array[(Long, String, String, String, Long)] =
     graft.Layers.value(spark, "bpe_merges", (sfDir, merges)) {
@@ -578,13 +563,13 @@ object TextOps {
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      // one job decides the path: the limit caps the collect at
-      // ceiling+1 rows, so an over-ceiling vocabulary can never pull
-      // more than the ceiling onto the driver
+      // the limit caps the collect at ceiling+1 rows, so an
+      // over-ceiling vocabulary never comes whole onto the driver
       val local = wordFreq.limit(BpeMaxLocalVocab + 1)
         .as[(String, Long)].collect()
-      if (local.length <= BpeMaxLocalVocab) bpeFitLocal(local, merges).toArray
-      else bpeLearnMerges(wordFreq, merges)._1.toArray
+      require(local.length <= BpeMaxLocalVocab,
+        s"BPE vocabulary exceeds the in-memory fit ceiling of $BpeMaxLocalVocab distinct words")
+      bpeFitLocal(local, merges).toArray
     }
 
   /** Exact in-memory BPE fit over a collected word-frequency table:
@@ -592,10 +577,10 @@ object TextOps {
     * itself in-memory) with the standard incremental bookkeeping — a
     * lazy-deletion priority queue over pair counts plus a pair→words
     * index, so each merge touches only the words containing its pair
-    * instead of recounting the table. Identical output to the
-    * distributed paths: greedy left-to-right application, (freq desc,
-    * left asc, right asc) tie-break (spec-verified against the
-    * independent token-array reference at merges >= 100). */
+    * instead of recounting the table. Greedy left-to-right
+    * application, (freq desc, left asc, right asc) tie-break
+    * (spec-verified against the independent token-array reference at
+    * merges >= 100). */
   private[graft] def bpeFitLocal(freqs: Seq[(String, Long)],
                                  merges: Int): Seq[(Long, String, String, String, Long)] = {
     import scala.collection.mutable
@@ -675,139 +660,6 @@ object TextOps {
     out.toSeq
   }
 
-  /** [[bpeLearn]] over an arbitrary `(word, n)` frequency frame —
-    * spec-visible for planted-corpus verification. */
-  private[graft] def bpeLearnFrom(wordFreq: DataFrame, merges: Int): DataFrame = {
-    val spark = wordFreq.sparkSession
-    import spark.implicits._
-    bpeLearnMerges(wordFreq, merges)._1
-      .toDF("rank", "left", "right", "merged", "freq")
-  }
-
-  /** The BPE fit loop, BATCHED: one distributed pair-count job can
-    * commit several merges when doing so provably reproduces the
-    * sequential greedy argmax — the fix for the one-full-Spark-job-per-
-    * merge latency wall (a 32k-merge fit would otherwise launch 32k
-    * sequential jobs). Per iteration the top `batch`+1 pairs arrive in
-    * one TakeOrdered job and a maximal RANK-PREFIX is accepted under
-    * three driver-side checks, then trimmed to strict dominance:
-    *
-    *   1. pairwise token-disjoint — no accepted pair shares w1/w2/the
-    *      merged string with an earlier accepted pair, so each accepted
-    *      pair's own count is invariant under the earlier applies;
-    *   2. no self-pairs past the first slot and no merged string that
-    *      collides with an already-existing token string — the two
-    *      cases where a merge can ADD occurrences to a surviving pair;
-    *   3. every accepted pair's freq strictly exceeds the first
-    *      rejected candidate's (trailing ties are trimmed).
-    *
-    * Exactness argument: any pair CREATED by an accepted merge has
-    * count bounded by some old pair that shares a token with an
-    * accepted pair — which, because the accepted set is a prefix of
-    * the ranked list and is token-disjoint, is itself non-accepted and
-    * hence has freq <= the first rejected candidate's < every kept
-    * pair's (check 3, strictly — so no tie-break can reorder). Old
-    * pairs only lose occurrences (check 2 excludes the collision
-    * cases), and every pair ranked above an accepted p_i is an earlier
-    * accepted pair, already applied. So at each inner step the
-    * sequential argmax over the evolving counts IS the next accepted
-    * pair, and the batched result equals merge-by-merge Sennrich BPE
-    * (spec-verified against an independent driver implementation at
-    * merges >= 100). Returns the merge table plus the number of Spark
-    * counting jobs the fit launched. */
-  private[graft] def bpeLearnMerges(wordFreq: DataFrame, merges: Int,
-                                    batch: Int = 16)
-      : (Seq[(Long, String, String, String, Long)], Int) = {
-    require(batch >= 1, "batch must be >= 1")
-    // " h e l l o " — space-joined chars, padded so every adjacent
-    // pair (including edges) matches the " l r " search pattern
-    var words = wordFreq.select(col("n"),
-      concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" ")).as("toks"))
-    // the previous iteration's checkpoint, released once the next one
-    // materializes — only frames THIS loop checkpointed, never the
-    // caller's (possibly layer-cached) input
-    var prevCkpt: DataFrame = null
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    // every multi-char token string minted so far (initial tokens are
-    // single chars, so this is the full collision surface for check 2)
-    val minted = scala.collection.mutable.Set.empty[String]
-    var jobs = 0
-    var exhausted = false
-    while (out.length < merges && !exhausted) {
-      val want = math.min(batch, merges - out.length)
-      val top = words
-        // fully-merged single-token words have no pairs left —
-        // sequence(1, 0) would DESCEND ([1,0]) and index out of bounds
-        .filter(size(split(trim(col("toks")), " ")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(split(trim(toks), ' ')) - 1), " +
-            "j -> struct(element_at(split(trim(toks), ' '), j) AS w1, " +
-            "element_at(split(trim(toks), ' '), j + 1) AS w2))")).as("p"))
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .agg(sum(col("n")).as("freq"))
-        .orderBy(desc("freq"), asc("w1"), asc("w2"))
-        .limit(want + 1).collect()
-      jobs += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val cand = top.take(want)
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, Long)]
-        var i = 0
-        var stop = false
-        while (i < cand.length && !stop) {
-          val (w1, w2, f) = cand(i)
-          val merged = w1 + w2
-          val selfPair = w1 == w2
-          val conflict = used(w1) || used(w2) || used(merged) ||
-            minted(merged)
-          if (i == 0) {
-            accepted += ((w1, w2, f))
-            // a self-pair merge can create runs-leftover pairs bounded
-            // only by ITS OWN freq — safe alone, never mid-batch
-            if (selfPair || minted(merged)) stop = true
-            else { used += w1; used += w2; used += merged }
-          } else if (conflict || selfPair) stop = true
-          else {
-            accepted += ((w1, w2, f))
-            used += w1; used += w2; used += merged
-          }
-          if (!stop) i += 1
-        }
-        // check 3: freq of the first candidate NOT accepted (everything
-        // outside the accepted prefix is bounded by it); trailing
-        // accepted pairs tied with it are trimmed — except the head,
-        // which is the plain sequential argmax and always exact
-        val cutIdx = accepted.length
-        val cutF = if (cutIdx < top.length) top(cutIdx).getLong(2) else 0L
-        val kept = accepted.head +: accepted.tail.takeWhile(_._3 > cutF)
-        var col0 = col("toks")
-        kept.foreach { case (w1, w2, f) =>
-          out += ((out.length + 1L, w1, w2, w1 + w2, f))
-          minted += (w1 + w2)
-          val pat = "(?<= )" + java.util.regex.Pattern.quote(w1) + " " +
-            java.util.regex.Pattern.quote(w2) + "(?= )"
-          val rep = java.util.regex.Matcher.quoteReplacement(w1 + w2)
-          // replacements chain IN RANK ORDER inside one map stage —
-          // the same corpus-wide apply order as merge-by-merge
-          col0 = regexp_replace(col0, lit(pat), lit(rep))
-        }
-        // one checkpoint per iteration: the plan would otherwise deepen
-        // by up to `batch` nested replaces every round; the superseded
-        // checkpoint's blocks release eagerly (a 32k-merge fit would
-        // otherwise pin ~2k dead vocabulary frames until context end)
-        words = words.withColumn("toks", col0).localCheckpoint()
-        if (prevCkpt != null) graft.Layers.release(prevCkpt)
-        prevCkpt = words
-      }
-    }
-    // the merge table is driver-side now — the last checkpoint is dead
-    if (prevCkpt != null) graft.Layers.release(prevCkpt)
-    (out.toSeq, jobs)
-  }
-
   /** Tokenizer APPLICATION under the [[bpeLearn]]-learned vocabulary —
     * the per-document accounting a pipeline runs after training a
     * tokenizer: apply the learned merges to every word, count the
@@ -831,6 +683,12 @@ object TextOps {
     // superseded batch checkpoints release eagerly; the LAST one must
     // stay persisted — the returned frame's lineage truncates to it
     var prevCkpt: DataFrame = null
+    // words are stored space-joined and padded (" h e l l o "); each
+    // merge is a regexp_replace with non-consuming space lookarounds,
+    // the reference's `(?<!\S)l r(?!\S)` re.sub: matches consume only
+    // the pair text, so identical-token runs split the way a greedy
+    // left-to-right scan does ("a a a a a" + (a,a) → "aa aa a").
+    // Tokens are regex-quoted, so corpus punctuation injects no syntax.
     learned.zipWithIndex.foreach { case ((_, w1, w2, _, _), i) =>
       val pat = "(?<= )" + java.util.regex.Pattern.quote(w1) + " " +
         java.util.regex.Pattern.quote(w2) + "(?= )"
@@ -971,8 +829,8 @@ object TextOps {
 
   // Guard size>=2 before the transform: for a single-token doc
   // sequence(1, 0) descends to [1, 0] and element_at(arr, 0) throws.
-  // Mirrors the oracle's WHERE len(t) >= 2 (and tokenPairs/
-  // bpeLearnFrom, which guard the same way).
+  // Mirrors the oracle's WHERE len(t) >= 2 (and tokenPairs, which
+  // guards the same way).
   private def lmBigrams(docs: DataFrame): DataFrame =
     docs.filter(size(split(col("text"), " ")) >= 2)
       .select(col("doc_id"), split(col("text"), " ").as("t"))

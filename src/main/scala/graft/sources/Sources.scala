@@ -10,9 +10,7 @@ import org.apache.spark.sql.types._
   * FileSource format that skips the header and silently drops
   * malformed lines (`recsys-trainer/.../FileSourceFactory.kt:30-107`).
   * Spark's csv reader covers both: explicit schema (never inferred),
-  * `header=true`, `mode=DROPMALFORMED`. The same reader binds to
-  * `readStream` for the streaming analog (bounded directory → file
-  * stream).
+  * `header=true`, `mode=DROPMALFORMED`.
   */
 object Sources {
 
@@ -32,14 +30,6 @@ object Sources {
       .option("header", "true")
       .option("mode", "DROPMALFORMED")
       .csv(path)
-
-  /** Streaming variant over a directory (file-arrival micro-batches). */
-  def csvOrdersStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(orderCsvSchema)
-      .option("header", "true")
-      .option("mode", "DROPMALFORMED")
-      .csv(dir)
 
   // --- Additional columnar/text formats ---
   // The engine is format-agnostic past the DataFrameReader boundary:

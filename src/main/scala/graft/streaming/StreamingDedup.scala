@@ -27,15 +27,6 @@ object StreamingDedup {
     df.withWatermark(eventTimeCol, delay)
       .dropDuplicates(keyCols)
 
-  /** Variant whose state expires per (key, event-time) — use when the
-    * same business key may legitimately recur outside the horizon and
-    * only transport-level re-deliveries (same key AND time) should
-    * drop. */
-  def exactRedelivery(df: DataFrame, eventTimeCol: String, delay: String,
-                      keyCols: String*): DataFrame =
-    df.withWatermark(eventTimeCol, delay)
-      .dropDuplicates(keyCols :+ eventTimeCol)
-
   /** The dedicated API (Spark 3.5+): same first-arrival semantics, but
     * the engine evicts a key's state as soon as the watermark passes
     * `its event time + delay` even though the event-time column is NOT

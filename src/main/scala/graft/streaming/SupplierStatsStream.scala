@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.SupplierStats
@@ -114,37 +113,6 @@ object SupplierStatsStream {
       SupplierStats.aggCore(
         orders.withWatermark("bid_time", watermarkDelay),
         col("bid_time"), col("supplier"), col("price"), width))
-
-  /** Kafka source wiring (S12 analog): value bytes from the orders topic,
-    * earliest offsets, as the reference's Flink consumer configures
-    * (`orders-stats-flink/.../kafka/Connectors.kt:18-42`). Requires the
-    * spark-sql-kafka connector on the runtime classpath; the transform
-    * itself is engine-tested via MemoryStream. */
-  def fromKafka(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
-    parseOrders(
-      spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load())
-
-  /** Kafka sink wiring (S13 analog): key=supplier, JSON value, with the
-    * reference's producer batching options
-    * (`Connectors.kt:54-60`: lz4, 64 KB batches, linger 100 ms). */
-  def toKafka(stats: DataFrame, bootstrap: String, topic: String,
-              checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stats.selectExpr("supplier AS key", "to_json(struct(*)) AS value")
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-      .option("kafka.compression.type", "lz4")
-      .option("kafka.batch.size", "65536")
-      .option("kafka.linger.ms", "100")
-      .option("checkpointLocation", checkpoint)
-      // the reference's 5 s cadence (REFRESH_SECONDS, api.py:12-16; the
-      // T12 polling micro-batch analog)
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .outputMode(OutputMode.Append)
 
   // --- Late-data side-output emulation (T6) ---
   // Spark drops watermark-late rows silently inside the stateful agg and

@@ -1,18 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the named queries (all
-  * if none named) — the `.explain("formatted")` iteration loop. */
+  * if none named; a name may be a comma-separated list) — the
+  * `.explain("formatted")` iteration loop. A misspelled name exits
+  * non-zero before Spark starts. */
 object Plans {
   def main(args: Array[String]): Unit = {
+    val selected = graft.Bench.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+    selected.foreach { case (n, fn) =>
       println(s"\n===== $n =====")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

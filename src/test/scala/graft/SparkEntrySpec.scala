@@ -17,12 +17,9 @@ class SparkEntrySpec extends AnyFunSuite {
     * genuinely defeat even an envelope oracle. */
   private val declaredNoOracle = Set.empty[String]
 
-  test("every oracle and minRows key names a real query") {
-    val qs = SparkEntry.queries.keySet
-    val badOracle = SparkEntry.oracleSql.keySet -- qs
+  test("every oracle key names a real query") {
+    val badOracle = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(badOracle.isEmpty, s"oracles for unknown queries: $badOracle")
-    val badMin = SparkEntry.minRows.keySet -- qs
-    assert(badMin.isEmpty, s"minRows for unknown queries: $badMin")
   }
 
   test("the rows-only set is exactly the declared no-oracle list") {

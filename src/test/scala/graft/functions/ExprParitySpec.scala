@@ -57,20 +57,6 @@ class ExprParitySpec extends SparkSpec {
     assert(both.filter($"fast" =!= $"slow").count() == 0)
   }
 
-  test("srpBucket == declarative plane-sign form") {
-    val e = spark.read.parquet(sf() + "/embeddings.parquet")
-    val planes = 4
-    val slow = (0 until planes).map { p =>
-      val proj = expr(
-        "aggregate(zip_with(embedding, transform(sequence(0, size(embedding)-1), " +
-          s"i -> (CAST(pmod(xxhash64($p * 1024 + i), 2000001) AS DOUBLE) - 1000000.0) / 1000000.0), " +
-          "(x, wgt) -> CAST(x AS DOUBLE) * wgt), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-      when(proj >= 0, lit(1L)).otherwise(lit(0L)) * lit(1L << p)
-    }.reduce(_ + _)
-    val both = e.select(srpBucket($"embedding", planes).as("fast"), slow.as("slow"))
-    assert(both.filter($"fast" =!= $"slow").count() == 0)
-  }
-
   test("wordShingles == array_distinct(transform(slice(concat_ws)))") {
     val both = spark.read.parquet(sf() + "/documents.parquet")
       .select(wordShingles(col("text"), 3).as("fast"),
@@ -116,15 +102,16 @@ class ExprParitySpec extends SparkSpec {
     assert(r(2)._3 == null, "all-null array → null simhash (not 0L: empty docs must not collide at hamming 0)")
   }
 
-  test("srpBucket rejects numPlanes outside 1..64 (bit-packing bound)") {
-    intercept[IllegalArgumentException] { SrpBucket(null, 65) }
-    intercept[IllegalArgumentException] { SrpBucket(null, 0) }
+  test("srpSigPortable rejects numPlanes outside 1..64 and planeOffset < 0") {
+    intercept[IllegalArgumentException] { PortableSrpSig(null, 65) }
+    intercept[IllegalArgumentException] { PortableSrpSig(null, 0) }
+    intercept[IllegalArgumentException] { PortableSrpSig(null, 8, -1) }
     intercept[IllegalArgumentException] { MinHashSig(null, 0) }
     // SQL path goes through the same constructor
     registerAll(spark)
     Seq(Seq(1.0f, 2.0f)).toDF("v").createOrReplaceTempView("srp_guard")
     val e = intercept[Exception] {
-      spark.sql("SELECT srp_bucket(v, 128) FROM srp_guard").collect()
+      spark.sql("SELECT srp_sig_portable(v, 128) FROM srp_guard").collect()
     }
     assert(e.getMessage.contains("numPlanes") || e.getMessage.contains("64"))
   }
@@ -167,9 +154,10 @@ class ExprParitySpec extends SparkSpec {
     assert(r1.length == 5 && r1.forall(r => r.getAs[Seq[Long]]("sig").length == 8))
     assert(r1.forall(r => r.getAs[Long]("pf") >= 0L && r.getAs[Long]("pf") < 1000000007L))
     val r2 = spark.sql(
-      """SELECT dot_f32(embedding, embedding) AS d2, srp_bucket(embedding, 4) AS b
+      """SELECT dot_f32(embedding, embedding) AS d2, srp_sig_portable(embedding, 4) AS b
         |FROM emb_sql""".stripMargin).collect()
     assert(r2.length == 5 && r2.forall(_.getAs[Double]("d2") > 0.0))
+    assert(r2.forall(r => r.getAs[Long]("b") >= 0L && r.getAs[Long]("b") < 16L))
   }
 
   test("srpSigPortable == declarative integer-weight plane-sign form, incl. SQL name") {

@@ -55,22 +55,6 @@ class DecontamSpec extends SparkSpec {
     assert(ex.getMessage.contains("DecontamMaxEvalVectors"))
   }
 
-  test("sharded decontam equals the single-broadcast pass exactly") {
-    val e = graft.Tables.embeddings(spark, sf())
-      .select(col("vec_id"), col("embedding"))
-    val corpus = e.filter(col("vec_id") % 50 =!= 0)
-    val eval = e.filter(col("vec_id") % 50 === 0)
-    val whole = Similarity.embeddingDecontamFrom(corpus, eval)
-      .orderBy("vec_id").collect().toSeq
-    // shardSize 3 forces 4 hash-shards over the 10-vector eval side —
-    // per-shard argmaxes must re-reduce to the identical global verdict
-    // (same max cos, same lowest-eid tie-break, same flag)
-    val sharded = Similarity.embeddingDecontamShardedFrom(
-        corpus, eval, shardSize = 3L)
-      .orderBy("vec_id").collect().toSeq
-    assert(sharded == whole)
-  }
-
   test("fixture adapter still matches its own derived slices") {
     val e = graft.Tables.embeddings(spark, sf())
       .select(col("vec_id"), col("embedding"))

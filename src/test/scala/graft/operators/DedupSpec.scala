@@ -277,7 +277,7 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.deriveSrpPlanes(Dedup.SrpOracleMaxVectors) == 6)
     // one plane per doubling past the ceiling
     assert(Dedup.deriveSrpPlanes(Dedup.SrpOracleMaxVectors + 1) == 7)
-    assert(Dedup.deriveSrpPlanes(50000) == 9)   // the 10x ScaleBench lake
+    assert(Dedup.deriveSrpPlanes(50000) == 9)   // the 10x ScaleLake lake
     assert(Dedup.deriveSrpPlanes(1000000) == 13)
     // width cap: key size stops growing even for absurd corpora
     assert(Dedup.deriveSrpPlanes(Long.MaxValue / 2) == 14)

@@ -470,16 +470,8 @@ class PipelineOpsSpec extends SparkSpec {
       .groupBy(identity).map { case (w, g) => w -> g.size.toLong }
 
   test("BPE learn matches an independent token-array driver BPE") {
-    // planted corpus exercising shared-boundary and identical-run
-    // merges (the semantics that distinguish greedy BPE from plain
-    // string replace)
-    val planted = Seq(("aaaaa", 3L), ("banana", 2L), ("abab", 5L), ("bandana", 1L))
-    val gotPlanted = TextOps.bpeLearnFrom(
-        planted.toDF("word", "n"), merges = 6)
-      .as[(Long, String, String, String, Long)].collect().toSeq
-    assert(gotPlanted == naiveBpe(planted.toMap, 6),
-      s"planted diverged:\n$gotPlanted\nvs\n${naiveBpe(planted.toMap, 6)}")
-    // real fixture, 10 merges
+    // real fixture, 10 merges (the planted shared-boundary and
+    // identical-run corpus is checked against the fitter below)
     val fixtureFreqs = fixtureWordFreqs()
     val got = TextOps.bpeLearn(spark, sf("0.001"), merges = 10)
       .as[(Long, String, String, String, Long)].collect().toSeq
@@ -498,27 +490,10 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == expect, s"in-memory fit diverged from sequential at " +
       s"${got.zip(expect).indexWhere { case (a, b) => a != b }}")
     assert(got.length == expect.length && got.length >= 60)
-    // planted corpus: shared boundaries + identical runs
+    // planted corpus: shared boundaries + identical runs (the semantics
+    // that distinguish greedy BPE from plain string replace)
     val planted = Seq(("aaaaa", 3L), ("banana", 2L), ("abab", 5L), ("bandana", 1L))
     assert(TextOps.bpeFitLocal(planted, 6) == naiveBpe(planted.toMap, 6))
-  }
-
-  test("BPE batched distributed fit: exact, strictly fewer jobs than merges") {
-    // the over-ceiling fallback: commits a provably-exact prefix of the
-    // top pairs per counting job. Chain-dependent merges (an→can→scan,
-    // tied freqs inside one word) can NEVER batch without changing the
-    // sequential result, so the win on natural text is modest — the
-    // contract is exactness plus jobs < merges, with the in-memory fit
-    // as the real scale path for bounded vocabularies
-    val fixtureFreqs = fixtureWordFreqs()
-    val (got, jobs) = TextOps.bpeLearnMerges(
-      fixtureFreqs.toSeq.toDF("word", "n"), merges = 100)
-    val expect = naiveBpe(fixtureFreqs, 100)
-    assert(got == expect, s"batched fit diverged from sequential at " +
-      s"${got.zip(expect).indexWhere { case (a, b) => a != b }}")
-    assert(got.length == expect.length && got.length >= 60)
-    assert(jobs < got.length,
-      s"batching never committed >1 merge: $jobs jobs for ${got.length} merges")
   }
 
   test("BPE apply matches a driver-side apply of the learned merges") {
