@@ -6,19 +6,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[warm]], [[time]]), and the bench main. Re-measure a few queries
   * at any lake (a [[graft.tools.ScaleLake]] replica too) with
   * `SPARK_GRAFT_SF_DIR=<lake> SPARK_GRAFT_ONLY=q1,q2 runMain
-  * graft.Bench`: the layer phase builds and times every layer first,
-  * so the query times are warm. */
+  * graft.Bench`: the layer phase first builds and times the layers
+  * those queries read ([[warmQueries]]), so the query times are warm. */
 object Bench {
   /** The named queries with their builders, in the given order (a name
     * may be a comma-separated list); every query, sorted by name, when
     * none is named. Throws on a name [[SparkEntry.queries]] lacks. */
   def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
     val all = SparkEntry.queries
-    val want = names.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val want = wanted(names)
     val unknown = want.filterNot(all.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     if (want.isEmpty) all.toSeq.sortBy(_._1) else want.distinct.map(n => n -> all(n))
   }
+
+  private def wanted(names: Seq[String]): Seq[String] =
+    names.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   /** Seconds to build `df` and write its full output to the noop sink.
     * Every output column is computed: a `count()` lets Catalyst prune
@@ -43,7 +46,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Comma-separated query names for a targeted re-measure; unset =
     // the full catalog. Checked before any work: a misspelled name fails.
-    val selected = select(sys.env.get("SPARK_GRAFT_ONLY").toSeq).sortBy(_._1)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").toSeq
+    val selected = select(only).sortBy(_._1)
     // Provenance mark BEFORE any work: host contention has repeatedly
     // dilated identical binaries 3-4× (rounds 2/9/12/14 all needed
     // out-of-band adjudication); the steal-time delta recorded by
@@ -55,11 +59,7 @@ object Bench {
     val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     warm(spark, sfDir)
-    // One untimed query too, for the query path's own spin-up. It runs
-    // in a session of its own, so any layer it builds is built again,
-    // and timed, in the layer phase.
-    try time(SparkEntry.queries.head._2(spark.newSession(), sfDir)): Unit
-    catch { case NonFatal(_) => () }
+    val layerNames = warmQueries(spark.newSession(), sfDir, only)
     // Materialized-layer builds, timed SEPARATELY from queries: the IVF
     // fit, dedup cluster labels, decoded CDC log, and model seeds are
     // session-level builds every consumer shares. Charging them to
@@ -67,7 +67,7 @@ object Bench {
     // numbers order-dependent (r9: q117 carried the k-means fit, q44
     // "improved" 4x by riding its cache). Layer failures surface in the
     // errors list like query failures.
-    val (layerTimes, layerFailed) = layerPhase(spark, sfDir)
+    val (layerTimes, layerFailed) = layerPhase(spark, sfDir, layerNames)
     var failed = layerFailed.map(n => s"layer:$n").toList
     val results = selected.flatMap { case (name, fn) =>
       try {
@@ -154,6 +154,25 @@ object Bench {
     spark.stop()
   }
 
+  /** The untimed query warmup, for the query path's own spin-up, and
+    * the layers the layer phase builds. It runs the named queries (a
+    * name may be a comma-separated list) once each in `scratch`, a
+    * throwaway session, so any layer they build is built again, and
+    * timed, in the layer phase; and returns, sorted, the
+    * [[SparkEntry.layers]] their builders recorded
+    * ([[Layers.recording]]). With no query named it runs the first
+    * query only and returns every layer. */
+  def warmQueries(scratch: SparkSession, sfDir: String, names: Seq[String]): Seq[String] = {
+    val all = wanted(names).isEmpty
+    val run = if (all) Seq(SparkEntry.queries.head) else select(names)
+    val (_, builds) = Layers.recording(run.foreach { case (_, fn) =>
+      try time(fn(scratch, sfDir)): Unit
+      catch { case NonFatal(_) => () }
+    })
+    if (all) SparkEntry.layers.keys.toSeq.sorted
+    else builds.map(_.name).filter(SparkEntry.layers.contains).distinct.sorted
+  }
+
   /** The layer phase: builds the `names` entries of
     * [[SparkEntry.layers]] in order and returns each built layer's OWN
     * seconds, sorted by name, with the names that failed. A store build
@@ -181,7 +200,8 @@ object Bench {
     val phase = (System.nanoTime() - phase0) / 1e9
     val times = own.toSeq.sortBy(_._1)
     times.foreach { case (n, dt) => System.err.println(f"[bench] layer $n%-28s $dt%8.2f s") }
-    System.err.println(f"[bench] layer phase $phase%.2f s wall, ${times.map(_._2).sum}%.2f s summed")
+    System.err.println(f"[bench] layer phase $phase%.2f s wall, ${times.map(_._2).sum}%.2f s summed" +
+      names.mkString(" (", ", ", ")"))
     (times, failed)
   }
 }

@@ -52,7 +52,7 @@ object SparkEntry {
     "q18_json_extract_agg" -> ((s, d) => ScalarFuncs.jsonExtractAgg(s, d)),
     // --- dedup family ---
     "q19_dedup_exact" -> ((s, d) => Dedup.exact(s, d)),
-    "q20_jaccard_pairs" -> ((s, d) => Dedup.materializedNearPairs(s, d, 0.5)),
+    "q20_jaccard_pairs" -> ((s, d) => Dedup.materializedNearPairs(s, d)),
     "q21_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d, 0.5)),
     "q22_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(s, d)),
     "q23_embedding_pairs" -> ((s, d) => Dedup.embeddingPairsBucketed(s, d, 0.4)),
@@ -490,11 +490,12 @@ object SparkEntry {
     * the layer entries the queries probe. */
   def layers: Map[String, (SparkSession, String) => Unit] = Map(
     // IVF centroid fit at the fixed query k (q44/q117/q127/q128)
-    "ivf_centroids_k16" -> ((s, d) => { Ivf.fittedCentroids(s, d, 16, 2); () }),
+    "ivf_centroids_k16" ->
+      ((s, d) => { Ivf.fittedCentroids(s, d, operators.Ann.Cells, operators.Ann.DefaultIters); () }),
     // IVF fit at semanticKeep's corpus-derived k (q129) — a cache hit
     // (~0 s) whenever the derived k is 16 too
     "ivf_centroids_semantic" ->
-      ((s, d) => { Ivf.fittedCentroids(s, d, Ivf.semanticK(s, d), 2); () }),
+      ((s, d) => { Ivf.fittedCentroids(s, d, Ivf.semanticK(s, d), operators.Ann.DefaultIters); () }),
     // PQ codebooks at the fixed 8×16 geometry (q135/q136)
     "pq_codebooks" -> ((s, d) => { operators.Pq.fittedCodebooks(s, d); () }),
     // residual-PQ codebooks over the k16 cell layer (q141)
@@ -544,7 +545,7 @@ object SparkEntry {
     // paid once
     "policy_ranked" -> ((s, d) => { graft.ml.PolicyEval.rankedScores(s, d); () }),
     // learned BPE merge table (q131/q132)
-    "bpe_merges" -> ((s, d) => { TextOps.learnedMerges(s, d, 10); () }),
+    "bpe_merges" -> ((s, d) => { TextOps.learnedMerges(s, d, TextOps.BpeMerges); () }),
     // duplicated-span table (q133 reads it, q134 strips through it)
     "dup_spans" -> ((s, d) => { operators.Dedup.materializedDupSpans(s, d); () }),
     // verified near-dup pairs at 0.5 — read by q20, q156 and the

@@ -104,7 +104,10 @@ object GraftSession {
     builder(s"local[$n]", n)
   }
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** The shared configs on `master` with `shufflePartitions` shuffle
+    * partitions; both are the caller's, so partitions follow the cores
+    * it runs on. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -168,18 +168,17 @@ object Features {
     * the `maxVocab` highest-document-frequency terms (ties → term asc),
     * selected with a distributed top-k (TakeOrdered — never a global
     * sort materialization) so the driver vocabulary collect is
-    * `maxVocab`-bounded BY CONSTRUCTION at any corpus
+    * bounded BY CONSTRUCTION (2048 terms) at any corpus
     * size — out-of-vocabulary tail terms simply contribute no
     * coordinates, the standard truncated-vocabulary TF-IDF semantics.
-    * (The synthetic corpus vocabulary is far below the default cap, so
+    * (The synthetic corpus vocabulary is far below the cap, so
     * the cap is invisible at test scale.) The open-vocabulary scale
     * twin remains [[textEmbeddingHashed]] (q77), which needs no
     * vocabulary at all. */
-  private def tfidfVectors(spark: SparkSession, sfDir: String,
-                           maxVocab: Int = 2048): (DataFrame, Int) = {
+  private def tfidfVectors(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
     val scores = materializedTfidf(spark, sfDir)
     val vocab = scores.groupBy("term").agg(count(lit(1)).as("df"))
-      .orderBy(desc("df"), asc("term")).limit(maxVocab)
+      .orderBy(desc("df"), asc("term")).limit(2048)
       .select("term").collect().map(_.getString(0)).sorted
     val v = vocab.length
     // vocab index as a broadcast dimension join, then the native
@@ -377,8 +376,11 @@ object Features {
       element_at(col("embedding"), 3).as("e2"),
       element_at(col("embedding"), 4).as("e3"))
 
+  /** The fixed dimension of the feature-hashed TF-IDF space. */
+  val HashDim = 256
+
   /** F14, OPEN-VOCABULARY form: feature-hashed TF-IDF vectors of fixed
-    * dimension `dim` — `bucket = pmod(xxhash64(term), dim)` with a ±1
+    * dimension [[HashDim]] — `bucket = pmod(xxhash64(term), dim)` with a ±1
     * sign hash so colliding terms cancel in expectation (the standard
     * hashing-trick construction). No driver-side vocabulary exists at
     * any point: where [[tfidfVectors]] collects the distinct-term list
@@ -388,10 +390,9 @@ object Features {
     * configuration. Per-bucket sums run in DECIMAL(28,6) (tfidf is
     * already rounded to 6 dp) so the hashed vectors are exact and
     * partitioning-independent. */
-  private[graft] def tfidfHashedVectors(spark: SparkSession, sfDir: String,
-                                        dim: Int = 256): DataFrame = {
+  private[graft] def tfidfHashedVectors(spark: SparkSession, sfDir: String): DataFrame = {
     val scores = materializedTfidf(spark, sfDir)
-    val bucket = pmod(xxhash64(col("term")), lit(dim)).cast("int")
+    val bucket = pmod(xxhash64(col("term")), lit(HashDim)).cast("int")
     val sign = when(pmod(xxhash64(col("term"), lit(1)), lit(2)) === 0, 1.0)
       .otherwise(-1.0)
     scores
@@ -403,7 +404,7 @@ object Features {
       .groupBy(col("doc_id"))
       .agg(collect_list(col("bucket")).as("buckets"), collect_list(col("v")).as("vals"))
       .select(col("doc_id"),
-        graft.functions.scatterDense(col("buckets"), col("vals"), dim).as("vec"))
+        graft.functions.scatterDense(col("buckets"), col("vals"), HashDim).as("vec"))
   }
 
   /** [[textEmbedding]] over the feature-hashed space: the same SVD
@@ -412,9 +413,8 @@ object Features {
     * an unbounded vocabulary. Near-dup preservation is spec-asserted
     * (identical texts ⇒ identical embeddings; high-Jaccard pairs stay
     * high-cosine vs the random-pair background). */
-  def textEmbeddingHashed(spark: SparkSession, sfDir: String, k: Int = 10,
-                          dim: Int = 256): DataFrame =
-    svdProject(spark, tfidfHashedVectors(spark, sfDir, dim), dim, k)
+  def textEmbeddingHashed(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame =
+    svdProject(spark, tfidfHashedVectors(spark, sfDir), HashDim, k)
 
   // --- Envelope (checked) query surfaces for the SVD embeddings ---
   //
@@ -556,11 +556,9 @@ object Features {
     * (capture measured 0.813–0.837 across the three SFs; same 0.50
     * floor — a random rank-10 basis in the 256-dim hashed space
     * captures ~0.04). */
-  def textEmbeddingHashedCheckedQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dim = 256
-    embeddingEnvelope(spark, sfDir, tfidfHashedVectors(spark, sfDir, dim),
-      dim, k = 10, captureFloor = 0.50, space = "hashed")
-  }
+  def textEmbeddingHashedCheckedQuery(spark: SparkSession, sfDir: String): DataFrame =
+    embeddingEnvelope(spark, sfDir, tfidfHashedVectors(spark, sfDir),
+      HashDim, k = 10, captureFloor = 0.50, space = "hashed")
 
   /** F15: context assembly — fixed-order feature vector from the joined
     * feature frames (user one-hots + time context), the exact shape the

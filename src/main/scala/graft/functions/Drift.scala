@@ -35,10 +35,10 @@ object Drift {
     * when a population is binned over its own [min, max] the clamp is
     * a no-op. Denominator clamped so a constant column maps to bin 0
     * rather than dividing by zero (the int8-quantize discipline). */
-  def binOf(value: Column, lo: Column, hi: Column, bins: Int = Bins): Column =
+  def binOf(value: Column, lo: Column, hi: Column): Column =
     greatest(
-      least(floor((value - lo) * bins / greatest(hi - lo, lit(1e-12))),
-        lit(bins - 1)),
+      least(floor((value - lo) * Bins / greatest(hi - lo, lit(1e-12))),
+        lit(Bins - 1)),
       lit(0)).cast("int")
 
   /** One PSI term `(pa − pb)·ln(pa/pb)`, rounded to 9dp DECIMAL before

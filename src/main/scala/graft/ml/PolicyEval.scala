@@ -16,9 +16,15 @@ import org.apache.spark.sql.functions._
   * pass over the distinct scores per policy ([[aucPerPolicy]]) — fine
   * when scores are discrete, degenerate when they are near-unique; the
   * scale path is [[aucPerPolicyApprox]], which buckets scores into a
-  * fixed histogram so no ordered pass ever exceeds `buckets` rows.
+  * fixed histogram so no ordered pass ever exceeds [[AucBuckets]] rows.
   */
 object PolicyEval {
+
+  /** Histogram cells per policy of the approximate AUC. */
+  val AucBuckets = 4096
+
+  /** The rank cutoff of the precision, recall and NDCG reports. */
+  val RankK = 3
 
   /** Tie-corrected AUC of `score` against binary `label`, plus CTR.
     *
@@ -59,19 +65,19 @@ object PolicyEval {
       round(sum(col("pos")) / sum(col("cnt")), 6).as("ctr"),
       sum(col("cnt")).as("n"))
 
-  /** The 100 TB AUC: scores are histogrammed into `buckets` fixed-width
+  /** The 100 TB AUC: scores are histogrammed into [[AucBuckets]] fixed-width
     * cells between the per-policy min and max (two map-side-combined
-    * aggregations — no pass ever orders more than `buckets` rows per
+    * aggregations — no pass ever orders more than [[AucBuckets]] rows per
     * policy, vs |distinct scores| for [[aucPerPolicy]]). Each cell is
     * treated as one Mann-Whitney tie group, i.e. pairs that land in the
     * same cell count ½ — the approximation error is bounded by the
     * in-cell pair fraction `Σ_b pos_b·neg_b / (P·N)`, which shrinks
-    * linearly in `buckets` for any non-atomic score distribution
+    * linearly in the cell count for any non-atomic score distribution
     * (spec-checked ≤ 0.01 against the exact statistic at sf0.01). The
-    * ordered window runs over ≤ `buckets` rows per policy — bounded by
+    * ordered window runs over ≤ [[AucBuckets]] rows per policy — bounded by
     * construction, independent of data size. */
   def aucPerPolicyApprox(df: DataFrame, policy: Column, score: Column,
-                         label: Column, buckets: Int = 4096): DataFrame = {
+                         label: Column): DataFrame = {
     // The histogram needs the per-policy (min, max) BEFORE it can bin,
     // so the melted frame is read twice — and without a materialization
     // both reads re-execute the upstream scoring subtree (for q41 that
@@ -93,7 +99,7 @@ object PolicyEval {
       proj.queryExecution.analyzed.canonicalized)(proj)
     val rng = base.groupBy(col("policy"))
       .agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-    histAuc(base.join(broadcast(rng), "policy"), buckets)
+    histAuc(base.join(broadcast(rng), "policy"))
   }
 
   /** The WIDE-input twin of [[aucPerPolicyApprox]] for callers whose
@@ -106,7 +112,7 @@ object PolicyEval {
     * same per-policy (lo, hi) and the same [[histAuc]] tail
     * (spec-pinned equal on a shared frame). */
   def aucPerPolicyApproxWide(df: DataFrame, scores: Seq[(String, Column)],
-                             label: Column, buckets: Int = 4096): DataFrame = {
+                             label: Column): DataFrame = {
     val sCols = scores.zipWithIndex.map { case ((_, c), i) => c.as(s"s_$i") }
     val proj = df.select(sCols :+ label.as("y"): _*)
     val base = graft.Layers.frame(df.sparkSession, "policy_auc_base",
@@ -121,19 +127,19 @@ object PolicyEval {
     val rng = base.agg(rangeAggs.head, rangeAggs.tail: _*)
       .select(melt(i => Seq(col(s"lo_$i"), col(s"hi_$i"))).as(Seq("policy", "lo", "hi")))
     val melted = base.select(melt(i => Seq(col(s"s_$i"))).as(Seq("policy", "s")), col("y"))
-    histAuc(melted.join(broadcast(rng), "policy"), buckets)
+    histAuc(melted.join(broadcast(rng), "policy"))
   }
 
   /** Shared histogram Mann-Whitney tail over `(policy, s, y, lo, hi)`
     * rows — ONE definition of the bucket arithmetic for the melted and
     * wide AUC entry points. */
-  private def histAuc(withRange: DataFrame, buckets: Int): DataFrame = {
+  private def histAuc(withRange: DataFrame): DataFrame = {
     val binned = withRange
       .withColumn("bkt",
         when(col("hi") <= col("lo"), lit(0)) // degenerate: all scores equal
           .otherwise(least(
-            floor((col("s") - col("lo")) / (col("hi") - col("lo")) * buckets),
-            lit(buckets - 1))).cast("int"))
+            floor((col("s") - col("lo")) / (col("hi") - col("lo")) * AucBuckets),
+            lit(AucBuckets - 1))).cast("int"))
       .groupBy(col("policy"), col("bkt"))
       .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos"))
     val cum = binned.withColumn("c",
@@ -400,13 +406,13 @@ object PolicyEval {
         "stack(2, 'popularity', rn_pop, 'random', rn_rnd) AS (policy, rn)")
   }
 
-  def rankingMetrics(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
+  def rankingMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val perGroup = rankedScores(spark, sfDir)
       .groupBy(col("policy"), col("group_id"))
-      .agg(sum(when(col("rn") <= k, col("y")).otherwise(0.0)).as("hits"),
+      .agg(sum(when(col("rn") <= RankK, col("y")).otherwise(0.0)).as("hits"),
         sum(col("y")).as("tot"))
     perGroup.groupBy(col("policy")).agg(
-      round(sum(col("hits")) / (lit(k) * count(lit(1))), 6).as(s"p_at_$k"),
+      round(sum(col("hits")) / (lit(RankK) * count(lit(1))), 6).as(s"p_at_$RankK"),
       round(sum(col("hits")) / sum(col("tot")), 6).as("r_micro"),
       round(
         sum(when(col("tot") > 0, round(col("hits") / col("tot"), 12)
@@ -422,13 +428,12 @@ object PolicyEval {
     * and the per-group NDCG ratio is re-rounded before the cross-group
     * decimal mean — the same trick as [[rankingMetrics]]' macro recall.
     */
-  def ndcgMetrics(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    require(k == 3, "oracle is written for k=3")
+  def ndcgMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 12)
     val perGroup = rankedScores(spark, sfDir)
       .groupBy(col("policy"), col("group_id"))
       .agg(
-        sum(when(col("rn") <= k,
+        sum(when(col("rn") <= RankK,
           round(col("y") / log2(col("rn") + 1), 12).cast(dec))
           .otherwise(lit(0).cast(dec))).as("dcg"),
         sum(col("y")).as("tot"))
@@ -452,7 +457,7 @@ object PolicyEval {
 
   /** ClustersTS fitted artifact: `(productId, cl_mean, cl_sd)` — the
     * reference's sixth benchmark policy (`evaluate.py:88-90`): arms are
-    * k-means-clustered on their mean context vector, and each cluster
+    * k-means-clustered (4 clusters, 10 Lloyd rounds) on their mean context vector, and each cluster
     * carries one Beta(1+succ, 1+fail) reward posterior, sampled per
     * interaction through the Gaussian approximation `N(μ, σ²)` with the
     * posterior's own mean/sd (a documented divergence: mabwiser draws
@@ -471,8 +476,7 @@ object PolicyEval {
     * table (catalog-sized, never corpus-sized), and the per-arm
     * `(cl_mean, cl_sd)` result re-enters the plan as a broadcast. */
   private[ml] def clustersTs(spark: SparkSession,
-                             models: Array[LinUCB.Model],
-                             k: Int = 4, iters: Int = 10): DataFrame = {
+                             models: Array[LinUCB.Model]): DataFrame = {
     import spark.implicits._
     val byArm = models.sortBy(_.productId) // deterministic init + ties
     val centroids = byArm.map { m =>
@@ -480,8 +484,9 @@ object PolicyEval {
       val n = math.max(m.n, 1L).toDouble
       Array.tabulate(m.d)(j => if (j == 0) (a(0) - 1.0) / n else a(j) / n)
     }
-    val assign = kMeansLocal(centroids, math.min(k, byArm.length), iters)
-    val succ = new Array[Double](math.min(k, byArm.length))
+    val k = math.min(4, byArm.length)
+    val assign = kMeansLocal(centroids, k, 10)
+    val succ = new Array[Double](k)
     val cnt = new Array[Double](succ.length)
     byArm.indices.foreach { i =>
       succ(assign(i)) += byArm(i).b(0) // b[0] = Σ reward (bias slot)

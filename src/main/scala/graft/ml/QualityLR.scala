@@ -32,6 +32,11 @@ object QualityLR {
 
   val Dim = 5
 
+  /** IRLS Newton steps from β = 0, and the ridge added to the Hessian's
+    * diagonal (the q111 oracle replays both). */
+  val Iters = 4
+  val Ridge = 1e-3
+
   /** Fixed design matrix over the quality stats: bias, log-length,
     * mean token length (scaled), stopword ratio, type-token ratio —
     * one row per document with the heuristic gate as the weak label. */
@@ -69,8 +74,7 @@ object QualityLR {
     * iterations share one compiled aggregate — was measured SLOWER at
     * this dimensionality: the per-step broadcast exchange costs more
     * than the recompile it saves. Literals stay.) */
-  private def newtonStep(feats: DataFrame, beta: Array[Double],
-                         ridge: Double): Array[Double] = {
+  private def newtonStep(feats: DataFrame, beta: Array[Double]): Array[Double] = {
     val dec = DecimalType(38, 12)
     val p = lit(1.0) / (lit(1.0) + exp(-dot(beta)))
     val w = p * (lit(1.0) - p)
@@ -89,7 +93,7 @@ object QualityLR {
       h(j * Dim + i) = v
     }
     var i = 0
-    while (i < Dim) { h(i * Dim + i) += ridge; i += 1 }
+    while (i < Dim) { h(i * Dim + i) += Ridge; i += 1 }
     val hInv = LinAlg.invertRowMajor(h, Dim)
     val g = (0 until Dim).map(i => row.getAs[Double](s"g_$i")).toArray
     val next = beta.clone()
@@ -102,7 +106,7 @@ object QualityLR {
     next
   }
 
-  /** IRLS training: `iters` Newton steps from β = 0, one corpus pass
+  /** IRLS training: [[Iters]] Newton steps from β = 0, one corpus pass
     * each. Deterministic by the decimal-term construction. The feature
     * frame is pinned (MEMORY_AND_DISK) for the duration of the loop —
     * the MLlib discipline for iterative optimizers: the text-processing
@@ -120,13 +124,12 @@ object QualityLR {
     * compound, which is what lets an external engine (the q111 DuckDB
     * oracle) replay the whole fit to an identical β. Semantically the
     * quantization is ~1e-8 relative on O(10..80) weights — noise. */
-  def train(feats: DataFrame, iters: Int = 4,
-            ridge: Double = 1e-3): Array[Double] = {
+  def train(feats: DataFrame): Array[Double] = {
     val pinned = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       var beta = new Array[Double](Dim)
       var it = 0
-      while (it < iters) { beta = newtonStep(pinned, beta, ridge).map(round6); it += 1 }
+      while (it < Iters) { beta = newtonStep(pinned, beta).map(round6); it += 1 }
       beta
     } finally pinned.unpersist(blocking = false): Unit
   }

@@ -33,14 +33,21 @@ object Analytics {
     pmod(pmod(k, lit(M)) * lit(2654435761L), lit(M))
   }
 
-  /** Native `session_window` (gap 30 min) per user over events — the
+  /** The inactivity gap that closes a user session: the batch session
+    * windows, the hand-rolled [[Relational.sessionize]] and the
+    * streaming [[graft.streaming.EventStreams.sessionAgg]] all split on
+    * it. */
+  val SessionGapMinutes = 30
+  val SessionGap = s"$SessionGapMinutes minutes"
+
+  /** Native `session_window` (gap [[SessionGap]]) per user over events — the
     * declarative form of the hand-rolled sessionization in
     * [[Relational.sessionize]]; both derive the same sessions. The
     * window close is `last event + gap`, matching Spark's streaming
     * session semantics so the same plan runs under `readStream`. */
   def sessionWindows(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .groupBy(session_window(col("ts"), SessionGap), col("user_id"))
       .agg(count(lit(1)).cast("long").as("n_events"),
         round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2)
           .as("session_value"))
@@ -145,7 +152,7 @@ object Analytics {
       .otherwise("test")
   }
 
-  /** Deterministic per-group reservoir: the k events per type with the
+  /** Deterministic per-group reservoir: the 5 events per type with the
     * smallest Knuth-multiplicative hash of `event_id` (ties broken by
     * id). Unlike `TABLESAMPLE`/`rand()`, re-running or re-partitioning
     * can never change the sample — the "reservoir" is a pure function
@@ -153,8 +160,8 @@ object Analytics {
     * hash falls in the smallest `preKeep` fraction ever reach the
     * per-group window, so the ranked data is a sliver of the fact
     * table; the spec asserts the filter is invisible to the result
-    * (it keeps ≫ k rows per group at any tested sf). */
-  def groupSample(spark: SparkSession, sfDir: String, k: Int = 5,
+    * (it keeps ≫ 5 rows per group at any tested sf). */
+  def groupSample(spark: SparkSession, sfDir: String,
                   preKeep: Double = 0.05): DataFrame = {
     val M = 1048576L
     val h = arithHash(col("event_id"))
@@ -165,7 +172,7 @@ object Analytics {
       .withColumn("h", h)
       .filter(col("h") < lit((M * preKeep).toLong))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= 5)
       .select(col("event_type"), col("rk").cast("long").as("rk"),
         col("event_id"), col("user_id"))
   }
@@ -409,11 +416,12 @@ object Analytics {
         col("n_active"))
   }
 
-  /** Per-user event-type trigram mining (behavioral patterns): two
+  /** Per-user event-type trigram mining (behavioral patterns), the 20
+    * most frequent trigrams: two
     * leads over the per-user order, one groupBy over the 5³ trigram
     * space — the same single keyed window as [[transitionMatrix]],
     * pattern length notwithstanding. */
-  def eventTrigrams(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame = {
+  def eventTrigrams(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
     Tables.events(spark, sfDir)
@@ -425,7 +433,7 @@ object Analytics {
       .groupBy(col("t1"), col("t2"), col("t3"))
       .agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("t1"), asc("t2"), asc("t3"))
-      .limit(k)
+      .limit(20)
   }
 
   /** ABC / Pareto classification of parts by revenue: cumulative
@@ -591,9 +599,7 @@ object Analytics {
     * cannot diverge. Shape: one min/max aggregation broadcast
     * back, one (type, side, bin) counting aggregation, one type-level
     * fold — all map-side-combined, no window, no per-row state. */
-  def valueDrift(spark: SparkSession, sfDir: String,
-                 bins: Int = graft.functions.Drift.Bins,
-                 eps: Double = graft.functions.Drift.Eps): DataFrame = {
+  def valueDrift(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Drift
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("value"),
@@ -601,7 +607,7 @@ object Analytics {
     val rng = ev.groupBy(col("event_type"))
       .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
     val binned = ev.join(broadcast(rng), "event_type")
-      .withColumn("bin", Drift.binOf(col("value"), col("lo"), col("hi"), bins))
+      .withColumn("bin", Drift.binOf(col("value"), col("lo"), col("hi")))
       .groupBy(col("event_type"), col("side"), col("bin"))
       .agg(count(lit(1)).as("n"))
     // per-type totals come from a WINDOW over the already-aggregated
@@ -615,8 +621,8 @@ object Analytics {
         sum(when(col("side") === "b", col("n")).otherwise(0L)).as("nb"))
       .withColumn("ta", sum(col("na")).over(byType))
       .withColumn("tb", sum(col("nb")).over(byType))
-      .withColumn("pa", greatest(col("na").cast("double") / col("ta"), lit(eps)))
-      .withColumn("pb", greatest(col("nb").cast("double") / col("tb"), lit(eps)))
+      .withColumn("pa", greatest(col("na").cast("double") / col("ta"), lit(Drift.Eps)))
+      .withColumn("pb", greatest(col("nb").cast("double") / col("tb"), lit(Drift.Eps)))
     shares
       .withColumn("term", Drift.psiTerm(col("pa"), col("pb")))
       .groupBy(col("event_type"))

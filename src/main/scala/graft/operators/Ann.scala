@@ -34,6 +34,16 @@ object Ann {
     * and every added iteration doubles the oracles' unrolled CTE chain. */
   val DefaultIters = 2
 
+  /** The serving batch of every ANN query and recall gate: the
+    * [[NQueries]] lowest vec_ids, each asking for its [[TopK]] nearest
+    * neighbours. */
+  val NQueries = 10
+  val TopK = 5
+
+  /** Cells of the fixed-k IVF layer (`ivf_centroids_k16`) that the
+    * probing, profiling and IVF-PQ/SQ8 families share. */
+  val Cells = 16
+
   /** The `(vec_id, embedding)` corpus every fit and encode reads,
     * spread over the session's cores ([[Similarity.spread]]). */
   private[operators] def corpus(spark: SparkSession, sfDir: String): DataFrame =

@@ -48,21 +48,21 @@ object BinaryAnn {
     * Hamming distance over the packed codes and keeps the top
     * `candPerQuery` ids; stage 2 re-ranks ONLY those candidates by
     * exact cosine (same 4dp rounding + id tie-break as q24's brute
-    * baseline) and emits the top `k` with both distances, so the
+    * baseline) and emits the top [[Ann.TopK]] with both distances, so the
     * output exposes what the cheap stage saw and what the exact stage
     * decided.
     *
     * Scale shape: the Hamming scan joins the corpus CODES (16 B/row)
-    * against a broadcast `nQueries`-row query frame — two XORs and two
+    * against a broadcast [[Ann.NQueries]]-row query frame — two XORs and two
     * popcounts per pair, never a float vector in flight; the per-query
     * window runs on (qid, hamming, vec_id) triples. The re-rank side
     * is `nQueries × candPerQuery` rows joined back to the float table
     * on vec_id — a broadcast-able sliver at any corpus size. Recall is
     * governed by `candPerQuery` exactly as nProbe governs IVF. */
-  def hammingTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                  k: Int = 5, candPerQuery: Int = 20): DataFrame = {
+  def hammingTopK(spark: SparkSession, sfDir: String,
+                  candPerQuery: Int = 20): DataFrame = {
     val codes = packed(spark, sfDir)
-    val qCodes = Ann.queryFrame(codes, nQueries, "b_lo" -> "q_lo", "b_hi" -> "q_hi")
+    val qCodes = Ann.queryFrame(codes, Ann.NQueries, "b_lo" -> "q_lo", "b_hi" -> "q_hi")
     // stage 1: the shared rank tail by ASCENDING distance
     val cand = Ann.topK(Ann.candidates(codes, qCodes).withColumn("hamming",
         hammingDist(col("b_lo"), col("b_hi"), col("q_lo"), col("q_hi"))),
@@ -70,9 +70,9 @@ object BinaryAnn {
       .select(col("qid"), col("vec_id"), col("hamming"))
     // exact re-rank: only the candidate ids pull their float vectors
     val e = Ann.normed(Tables.embeddings(spark, sfDir))
-    val q = Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm")
+    val q = Ann.queryFrame(e, Ann.NQueries, "embedding" -> "qemb", "nrm" -> "qnrm")
     Ann.topK(cand.join(e, "vec_id").join(broadcast(q), "qid")
-        .withColumn("cos_sim", Similarity.cosine), k, desc("cos_sim"))
+        .withColumn("cos_sim", Similarity.cosine), Ann.TopK, desc("cos_sim"))
       .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"),
         col("hamming"), col("cos_sim"))
   }
@@ -81,9 +81,8 @@ object BinaryAnn {
     * q136/q143/q144 gate pattern applied to the sign-quantized codes:
     * measured, not assumed, and tunable via `candPerQuery`. */
   def hammingRecallVsBrute(spark: SparkSession, sfDir: String,
-                           nQueries: Int = 10, k: Int = 5,
                            candPerQuery: Int = 20): DataFrame =
     Ann.recall(
-      hammingTopK(spark, sfDir, nQueries, k, candPerQuery),
-      Similarity.bruteForceTopK(spark, sfDir, nQueries, k))
+      hammingTopK(spark, sfDir, candPerQuery),
+      Similarity.bruteForceTopK(spark, sfDir))
 }

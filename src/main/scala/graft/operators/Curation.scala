@@ -128,15 +128,14 @@ object Curation {
     * q142's map-side partial-max fan-out — one row per corpus vector
     * reaches the final doc-keyed joins. Survivors carry
     * `max_eval_cos` so downstream audits can re-check the margin. */
-  def trainingSetDecontaminated(spark: SparkSession, sfDir: String,
-                                nEvalDocs: Int = 5): DataFrame = {
-    val ngramHits = TextOps.materializedDecontamHits(spark, sfDir, nEvalDocs)
+  def trainingSetDecontaminated(spark: SparkSession, sfDir: String): DataFrame = {
+    val ngramHits = TextOps.materializedDecontamHits(spark, sfDir)
       .select(col("doc_id"))
     val semanticVerdicts = Similarity.materializedEmbeddingDecontam(spark, sfDir)
       .select(col("vec_id").as("doc_id"), col("max_eval_cos"),
         col("contaminated"))
     trainingSet(spark, sfDir)
-      .filter(col("doc_id") >= nEvalDocs)
+      .filter(col("doc_id") >= TextOps.EvalDocs)
       .join(ngramHits, Seq("doc_id"), "left_anti")
       .join(semanticVerdicts, Seq("doc_id"))
       .filter(!col("contaminated"))
@@ -186,15 +185,14 @@ object Curation {
     * q79 hit list by contamination density, the q142 verdicts one row
     * per corpus vector); the report is then one (source) aggregation
     * with map-side combine — sources-bounded output. */
-  def contaminationReport(spark: SparkSession, sfDir: String,
-                          nEvalDocs: Int = 5): DataFrame = {
-    val lex = TextOps.materializedDecontamHits(spark, sfDir, nEvalDocs)
+  def contaminationReport(spark: SparkSession, sfDir: String): DataFrame = {
+    val lex = TextOps.materializedDecontamHits(spark, sfDir)
       .select(col("doc_id"), lit(1L).as("lex"))
     val sem = Similarity.materializedEmbeddingDecontam(spark, sfDir)
       .select(col("vec_id").as("doc_id"), col("contaminated"))
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"))
-      .filter(col("doc_id") >= nEvalDocs)
+      .filter(col("doc_id") >= TextOps.EvalDocs)
       .join(lex, Seq("doc_id"), "left")
       .join(sem, Seq("doc_id"))
       .groupBy(col("source"))
@@ -253,8 +251,7 @@ object Curation {
     * Scale shape: six doc-keyed equi-joins against frames the chain
     * already materializes, one sources-bounded aggregate — no new
     * corpus-shaped shuffle beyond what q146 itself pays. */
-  def curationFunnel(spark: SparkSession, sfDir: String,
-                     nEvalDocs: Int = 5): DataFrame = {
+  def curationFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     val gated = gatedCleaned(spark, sfDir)
       .select(col("doc_id"), lit(true).as("in_gate"))
@@ -265,7 +262,7 @@ object Curation {
       .select(col("vec_id").as("doc_id"), lit(true).as("in_sem"))
     val sampled = TextOps.mixtureSample(spark, sfDir)
       .select(col("doc_id"), lit(true).as("in_mix"))
-    val lexHit = TextOps.materializedDecontamHits(spark, sfDir, nEvalDocs)
+    val lexHit = TextOps.materializedDecontamHits(spark, sfDir)
       .select(col("doc_id"), lit(true).as("lex_hit"))
     val semVerdict = Similarity.materializedEmbeddingDecontam(spark, sfDir)
       .select(col("vec_id").as("doc_id"), col("contaminated"))
@@ -283,7 +280,7 @@ object Curation {
       .withColumn("s2", col("s1") && coalesce(col("in_canon"), lit(false)))
       .withColumn("s3", col("s2") && coalesce(col("in_sem"), lit(false)))
       .withColumn("s4", col("s3") && coalesce(col("in_mix"), lit(false)))
-      .withColumn("s5", col("s4") && col("doc_id") >= nEvalDocs &&
+      .withColumn("s5", col("s4") && col("doc_id") >= TextOps.EvalDocs &&
         !coalesce(col("lex_hit"), lit(false)) &&
         coalesce(!col("contaminated"), lit(false)))
       .groupBy(col("source"))
@@ -311,10 +308,9 @@ object Curation {
     * ARE q171's and the funnel's ARE q172's by construction (their
     * per-source doc counts agree, so the funnel's copy drops).
     * Scale shape: a join of two sources-bounded aggregates — free. */
-  def datasheetV3(spark: SparkSession, sfDir: String,
-                  nEvalDocs: Int = 5): DataFrame =
+  def datasheetV3(spark: SparkSession, sfDir: String): DataFrame =
     datasetCard(spark, sfDir).join(
-      curationFunnel(spark, sfDir, nEvalDocs).drop("n_docs"),
+      curationFunnel(spark, sfDir).drop("n_docs"),
       Seq("source"))
 
   def datasetCard(spark: SparkSession, sfDir: String): DataFrame = {

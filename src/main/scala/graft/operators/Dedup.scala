@@ -51,18 +51,17 @@ object Dedup {
   def materializedShingled(spark: SparkSession, sfDir: String): DataFrame =
     graft.Layers.frame(spark, "shingled_docs", sfDir)(shingled(spark, sfDir))
 
-  /** The MATERIALIZED DF-capped posting list — (doc_id, s) at `maxDf`,
-    * checkpointed once per (session, sfDir, maxDf): the candidate
+  /** The MATERIALIZED DF-capped posting list — (doc_id, s) at
+    * [[DefaultMaxDf]], checkpointed once per (session, sfDir): the candidate
     * self-join reads it twice and the prefilter stats once more, and
     * three operators (near-pair build, q83, q112) share the identical
     * postings — before this each reference re-ran the explode +
     * df-count + semi-join chain. */
-  def materializedCappedPostings(spark: SparkSession, sfDir: String,
-                                 maxDf: Long = DefaultMaxDf): DataFrame =
-    graft.Layers.frame(spark, "capped_postings", (sfDir, maxDf)) {
+  def materializedCappedPostings(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "capped_postings", sfDir) {
       cappedPostings(
         materializedShingled(spark, sfDir)
-          .select(col("doc_id"), explode(col("shingles")).as("s")), maxDf)
+          .select(col("doc_id"), explode(col("shingles")).as("s")), DefaultMaxDf)
     }
 
   /** [[shingled]] over an arbitrary documents frame (`doc_id`, `text`) —
@@ -81,7 +80,7 @@ object Dedup {
     * still scores the full shingle sets, so every reported Jaccard is
     * exact. The real miss mode: a pair whose EVERY shared shingle has
     * df > cap generates no candidate at all — i.e. a duplicate cluster
-    * with more than `maxDf` members becomes invisible to SIMILARITY
+    * with more than cap members becomes invisible to SIMILARITY
     * candidate generation, which is precisely the mass-replicated
     * boilerplate a crawl dedup must catch. [[exactEdgesFrom]] closes
     * the identical-copy half of that hole (exact-duplicate groups are
@@ -91,6 +90,10 @@ object Dedup {
     * is a semantic no-op there while bounding fan-out at 100 TB. The
     * DuckDB oracles apply the identical cap. */
   val DefaultMaxDf = 64L
+
+  /** The Jaccard threshold of the near-dup pair layer and every report
+    * and cluster build over it. */
+  val NearDupThreshold = 0.5
 
   /** Expected per-band bucket occupancy ceiling the derived SRP band
     * width targets: one more plane per band whenever doubling the
@@ -186,10 +189,9 @@ object Dedup {
     * shuffle, and the array-carrying verification join is bounded by
     * near-dup density, not candidate volume.
     */
-  def jaccardPairs(spark: SparkSession, sfDir: String, threshold: Double,
-                   maxDf: Long = DefaultMaxDf): DataFrame =
+  def jaccardPairs(spark: SparkSession, sfDir: String, threshold: Double): DataFrame =
     jaccardPairsCore(materializedShingled(spark, sfDir),
-      materializedCappedPostings(spark, sfDir, maxDf), threshold)
+      materializedCappedPostings(spark, sfDir), threshold)
 
   /** The MATERIALIZED verified near-dup pair layer (`near_pairs`):
     * [[jaccardPairs]] at `threshold` computed once per (session,
@@ -201,14 +203,14 @@ object Dedup {
     * pair frame is near-dup-density-bounded, so the checkpoint is
     * tiny relative to the corpus at any scale. */
   def materializedNearPairs(spark: SparkSession, sfDir: String,
-                            threshold: Double = 0.5): DataFrame =
+                            threshold: Double = NearDupThreshold): DataFrame =
     graft.Layers.frame(spark, "near_pairs", (sfDir, threshold)) {
       jaccardPairs(spark, sfDir, threshold)
     }
 
   /** q156: the cross-source duplicate-flow matrix — for every
     * unordered source pair, how many verified near-dup pairs
-    * ([[jaccardPairs]] at `threshold`) and exact-duplicate star edges
+    * ([[jaccardPairs]] at [[NearDupThreshold]]) and exact-duplicate star edges
     * ([[exactEdgesFrom]], group-min → member) connect them. The
     * provenance diagnostic a curation team reads before dropping or
     * reweighting a source: a hot off-diagonal cell means one source
@@ -223,8 +225,7 @@ object Dedup {
     * equi-joins against the narrow (doc_id, source) projection, and
     * the matrix aggregation is sources²-bounded with map-side
     * combine. */
-  def dupFlowMatrix(spark: SparkSession, sfDir: String,
-                    threshold: Double = 0.5): DataFrame = {
+  def dupFlowMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val src = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     def matrix(pairs: DataFrame, as: String): DataFrame = pairs
       .join(src.toDF("doc_i", "src_i"), "doc_i")
@@ -233,7 +234,7 @@ object Dedup {
         greatest(col("src_i"), col("src_j")).as("source_b"))
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as(as))
-    matrix(materializedNearPairs(spark, sfDir, threshold)
+    matrix(materializedNearPairs(spark, sfDir)
         .select(col("doc_i"), col("doc_j")), "n_near")
       .join(matrix(materializedExactEdges(spark, sfDir)
         .select(col("doc_i"), col("doc_j")), "n_exact"),
@@ -260,7 +261,6 @@ object Dedup {
     * function of the key), so no corpus-sized assignment frame ever
     * joins or shuffles. The matrix aggregation is splits²-bounded. */
   def splitLeakage(spark: SparkSession, sfDir: String,
-                   threshold: Double = 0.5,
                    trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
     // fractions are parameters (defaulting to splitAssign's own
     // defaults) so a pipeline running a non-default split can audit THE
@@ -273,7 +273,7 @@ object Dedup {
         greatest(splitOf(col("doc_i")), splitOf(col("doc_j"))).as("split_b"))
       .groupBy(col("split_a"), col("split_b"))
       .agg(count(lit(1)).as(as))
-    matrix(materializedNearPairs(spark, sfDir, threshold)
+    matrix(materializedNearPairs(spark, sfDir)
         .select(col("doc_i"), col("doc_j")), "n_near")
       .join(matrix(materializedExactEdges(spark, sfDir)
         .select(col("doc_i"), col("doc_j")), "n_exact"),
@@ -300,11 +300,10 @@ object Dedup {
     * work as q21 (zero shuffle until the doc-keyed join), each join
     * pulls one 64-slot array, and the agreement count is a native
     * zip_with/aggregate fold — O(64) per pair, no explode. */
-  def minhashEstimateGate(spark: SparkSession, sfDir: String,
-                          threshold: Double = 0.5): DataFrame = {
+  def minhashEstimateGate(spark: SparkSession, sfDir: String): DataFrame = {
     val sigs = minhashSignatures(spark, sfDir).select(col("doc_id"), col("sig"))
     val est = round(col("n_agree").cast("double") / NumHashes, 4)
-    materializedNearPairs(spark, sfDir, threshold)
+    materializedNearPairs(spark, sfDir)
       .select(col("doc_i"), col("doc_j"), col("jaccard"))
       .join(sigs.toDF("doc_i", "sig_i"), "doc_i")
       .join(sigs.toDF("doc_j", "sig_j"), "doc_j")
@@ -438,18 +437,16 @@ object Dedup {
   private[operators] val SimHashMankuTables: Seq[Seq[(Int, Int)]] =
     (0 until 6).combinations(3).map(_.map(b => (10 * b, 10)).toSeq).toSeq
 
-  def simhashPairs(spark: SparkSession, sfDir: String, maxHamming: Int = 3): DataFrame = {
+  /** Document pairs within hamming distance 3 of each other's simhash. */
+  def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
     // Scheme derivation — the deriveSrpPlanes discipline for the
     // hamming family: both schemes have FULL recall at hamming ≤ 3
     // (banding is exact, so the filtered output is identical either
     // way — the oracle needs no guard), the choice is purely a bucket-
-    // occupancy cost decision. Callers asking for a radius past the
-    // pigeonhole guarantee stay on the classic scheme and accept the
-    // documented probabilistic recall.
-    val useManku = maxHamming <= 3 &&
-      Tables.countOf(spark, sfDir, "documents") > SimHashClassicMaxDocs
+    // occupancy cost decision.
+    val useManku = Tables.countOf(spark, sfDir, "documents") > SimHashClassicMaxDocs
     simhashPairsScheme(simhashSignatures(spark, sfDir),
-      if (useManku) SimHashMankuTables else SimHashClassicTables, maxHamming)
+      if (useManku) SimHashMankuTables else SimHashClassicTables, 3)
   }
 
   /** Banded candidate join + exact hamming verify over an explicit
@@ -495,7 +492,7 @@ object Dedup {
     * the canonical representative, which is what a keep-one dedup pass
     * keys on. */
   def nearDupClusters(spark: SparkSession, sfDir: String,
-                      threshold: Double = 0.5, maxRounds: Int = 20): DataFrame = {
+                      threshold: Double = NearDupThreshold): DataFrame = {
     // the lake path reads the near_pairs layer (one pair build per
     // session, shared with q20/q156); the spec-generic planted-corpus
     // path below keeps building its own pairs
@@ -504,17 +501,16 @@ object Dedup {
       .select(col("doc_i"), col("doc_j"))
       .unionByName(materializedExactEdges(spark, sfDir))
     docs.select(col("doc_id"))
-      .join(propagateLabels(edges, maxRounds), Seq("doc_id"), "left")
+      .join(propagateLabels(edges), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
   }
 
   /** [[nearDupClusters]] over an arbitrary documents frame — spec-visible
     * so the DF-cap ∪ exact-edge interplay is testable on planted
     * mass-duplicated corpora. */
-  private[graft] def nearDupClustersFrom(docs: DataFrame, threshold: Double,
-                                         maxRounds: Int = 20): DataFrame =
+  private[graft] def nearDupClustersFrom(docs: DataFrame, threshold: Double): DataFrame =
     docs.select(col("doc_id"))
-      .join(edgeLabelsFrom(docs, threshold, maxRounds), Seq("doc_id"), "left")
+      .join(edgeLabelsFrom(docs, threshold), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
 
   /** Star edges connecting each EXACT-duplicate group (identical text):
@@ -560,7 +556,7 @@ object Dedup {
     * ([[clusterKeep]], [[TextOps.corpusFilter]]) build on this frame, so
     * their plans contain ZERO shingle explodes (plan-audited). */
   def materializedClusters(spark: SparkSession, sfDir: String,
-                           threshold: Double = 0.5): DataFrame =
+                           threshold: Double = NearDupThreshold): DataFrame =
     graft.Layers.frame(spark, "dedup_clusters", (sfDir, threshold)) {
       nearDupClusters(spark, sfDir, threshold)
     }
@@ -573,13 +569,11 @@ object Dedup {
     * UNION the exact-duplicate star edges ([[exactEdgesFrom]]) so
     * mass-replicated identical docs cluster even when every shingle is
     * DF-capped. */
-  private def edgeLabelsFrom(docs: DataFrame, threshold: Double,
-                             maxRounds: Int): DataFrame =
+  private def edgeLabelsFrom(docs: DataFrame, threshold: Double): DataFrame =
     propagateLabels(
       jaccardPairsFrom(shingledFrom(docs), threshold, DefaultMaxDf)
         .select(col("doc_i"), col("doc_j"))
-        .unionByName(exactEdgesFrom(docs)),
-      maxRounds)
+        .unionByName(exactEdgesFrom(docs)))
 
   /** Connected-component labels for an arbitrary undirected edge list
     * `(doc_i, doc_j)`: per round, each node takes the min label among
@@ -658,29 +652,26 @@ object Dedup {
     * path now reads the session's `exact_edges` LAYER instead of
     * re-hashing the text column twice per invocation — two fewer
     * corpus-payload scans per run. Without the bypass, an incoming
-    * copy of a boilerplate group with more than `maxDf` members shares
+    * copy of a boilerplate group with more than [[DefaultMaxDf]] members shares
     * only capped shingles, generates no similarity candidate, and
     * would survive as "new" — and the mass-replicated identical page
     * is exactly what a nightly crawl dedup must reject. The residual
     * miss stays the NEAR-identical all-boilerplate document
     * ([[DefaultMaxDf]]). */
-  def incrementalNew(spark: SparkSession, sfDir: String,
-                     splitId: Long = 250, threshold: Double = 0.5,
-                     maxDf: Long = DefaultMaxDf): DataFrame =
+  def incrementalNew(spark: SparkSession, sfDir: String): DataFrame =
     incrementalNewCore(Tables.documents(spark, sfDir),
       materializedShingled(spark, sfDir),
-      materializedCappedPostings(spark, sfDir, maxDf),
-      materializedExactEdges(spark, sfDir), splitId, threshold)
+      materializedCappedPostings(spark, sfDir),
+      materializedExactEdges(spark, sfDir), 250L, NearDupThreshold)
 
   /** [[incrementalNew]] over an arbitrary `(doc_id, text, n_chars)`
     * frame — spec-visible so the exact-dup bypass and the DF-cap
     * interplay are testable on planted mass-duplicated corpora. */
   private[graft] def incrementalNewFrom(docs: DataFrame, splitId: Long,
-                                        threshold: Double,
-                                        maxDf: Long = DefaultMaxDf): DataFrame = {
+                                        threshold: Double): DataFrame = {
     val sh = shingledFrom(docs)
     val tok = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-    incrementalNewCore(docs, sh, cappedPostings(tok, maxDf),
+    incrementalNewCore(docs, sh, cappedPostings(tok, DefaultMaxDf),
       exactEdgesFrom(docs), splitId, threshold)
   }
 
@@ -734,7 +725,7 @@ object Dedup {
     * and fall to the HAVING filter — identical output to counting the
     * edge-node label set alone, without re-running the clustering. */
   def clusterKeep(spark: SparkSession, sfDir: String,
-                  threshold: Double = 0.5): DataFrame =
+                  threshold: Double = NearDupThreshold): DataFrame =
     materializedClusters(spark, sfDir, threshold)
       .groupBy(col("cluster_id").as("keep_id"))
       .agg(count(lit(1)).as("n_docs"))
@@ -750,8 +741,7 @@ object Dedup {
     * on the first token, and run `levenshtein` only inside blocks — so
     * the pair space is Σ|block|², never |names|², and row multiplicity
     * rides along as counts instead of exploding the join. */
-  def fuzzyNamePairs(spark: SparkSession, sfDir: String,
-                     maxDist: Int = 3): DataFrame = {
+  def fuzzyNamePairs(spark: SparkSession, sfDir: String): DataFrame = {
     val names = Tables.part(spark, sfDir)
       .groupBy(col("p_name")).agg(count(lit(1)).as("n_parts"))
       .withColumn("blk", split(col("p_name"), " ")(0))
@@ -762,7 +752,7 @@ object Dedup {
     a.join(b, "blk")
       .filter(col("name_a") < col("name_b"))
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
-      .filter(col("dist") <= maxDist)
+      .filter(col("dist") <= 3)
       .select(col("name_a"), col("name_b"), col("dist").cast("long").as("dist"),
         col("n_parts_a"), col("n_parts_b"))
   }
@@ -819,7 +809,7 @@ object Dedup {
     * signature at the default width, spec-pinned, but not limited to
     * 64 total planes). */
   def embeddingPairsBucketed(spark: SparkSession, sfDir: String, threshold: Double,
-                             planesPerBand: Int = 0, bands: Int = 8): DataFrame = {
+                             planesPerBand: Int = 0): DataFrame = {
     val raw = Tables.embeddings(spark, sfDir)
     val base = Similarity.spread(raw)
     // Derive from the session-cached RAW table count (one metadata-read
@@ -842,7 +832,7 @@ object Dedup {
     // invocations reuse one persisted index and eviction releases the
     // blocks eagerly (previously each call checkpointed anew with no
     // unpersist hook).
-    val bkRaw = srpBandKeys(e, pp, bands)
+    val bkRaw = srpBandKeys(e, pp, 8)
     val bk = graft.Layers.frame(spark, "srp_index",
       bkRaw.queryExecution.analyzed.canonicalized)(bkRaw)
     val cand = bk.as("x").join(bk.as("y"),
@@ -908,28 +898,24 @@ object Dedup {
     * must co-locate to count them. The islands merge is a per-document
     * window — millions of independent keys, no global sort. Output
     * rows are bounded by true duplication density, not corpus size. */
-  def dupSpans(spark: SparkSession, sfDir: String,
-               k: Int = DupSpanGram): DataFrame =
-    materializedDupSpans(spark, sfDir, k)
+  def dupSpans(spark: SparkSession, sfDir: String): DataFrame =
+    materializedDupSpans(spark, sfDir)
 
   /** The MATERIALIZED span layer: [[dupSpansFrom]] computed once per
-    * (session, sfDir, k) and re-entered as a checkpointed frame — the
+    * (session, sfDir) and re-entered as a checkpointed frame — the
     * [[materializedClusters]] discipline. In a real pipeline the span
     * table is written once and every consumer reads it: the finder
     * (q133) and the stripper (q134) otherwise each re-run the full
     * gram pass in the same session. Bench reports the build under the
     * `dup_spans` layer key, separately from both consumers. */
-  def materializedDupSpans(spark: SparkSession, sfDir: String,
-                           k: Int = DupSpanGram): DataFrame =
-    graft.Layers.frame(spark, "dup_spans", (sfDir, k)) {
-      dupSpansFrom(Tables.documents(spark, sfDir), k)
-    }
+  def materializedDupSpans(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "dup_spans", sfDir)(dupSpansFrom(Tables.documents(spark, sfDir)))
 
   /** [[dupSpans]] over an explicit corpus frame (`doc_id`, `text`) —
     * the planted-corpus spec entry point. */
-  def dupSpansFrom(docs: DataFrame, k: Int = DupSpanGram): DataFrame = {
-    require(k >= 2, s"window must span at least 2 tokens, got $k")
+  def dupSpansFrom(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val k = DupSpanGram
     val pos = docs
       .filter(size(split(col("text"), " ")) >= k)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -977,18 +963,15 @@ object Dedup {
     * so neither case is forced into the other's failure mode), and the
     * token filter runs entirely inside codegen — no positional
     * explode, no second corpus shuffle beyond [[dupSpans]]'s own. */
-  def stripDupSpans(spark: SparkSession, sfDir: String,
-                    k: Int = DupSpanGram): DataFrame =
-    stripCore(Tables.documents(spark, sfDir),
-      materializedDupSpans(spark, sfDir, k), k)
+  def stripDupSpans(spark: SparkSession, sfDir: String): DataFrame =
+    stripCore(Tables.documents(spark, sfDir), materializedDupSpans(spark, sfDir))
 
   /** [[stripDupSpans]] over an explicit corpus frame — spec entry
     * (recomputes the span table inline instead of reading the layer). */
-  def stripDupSpansFrom(docs: DataFrame, k: Int = DupSpanGram): DataFrame =
-    stripCore(docs, dupSpansFrom(docs, k), k)
+  def stripDupSpansFrom(docs: DataFrame): DataFrame =
+    stripCore(docs, dupSpansFrom(docs))
 
-  private def stripCore(docs: DataFrame, spanTable: DataFrame,
-                        k: Int): DataFrame = {
+  private def stripCore(docs: DataFrame, spanTable: DataFrame): DataFrame = {
     val spans = spanTable
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("start_pos"), col("end_pos"))).as("spans"))

@@ -54,7 +54,7 @@ object Dsir {
     *
     * Routed through the [[materializedGramCounts]] layer: the gram
     * explode (the expensive text pass — ~2 rows per token before the
-    * per-doc collapse) runs ONCE per (session, sfDir, buckets) and
+    * per-doc collapse) runs ONCE per (session, sfDir) and
     * both consumers — the λ-table distribution collect and the scoring
     * join — read the collapsed (doc_id, source, b, cnt) frame. Before
     * the layer, the explode executed twice (once under the collect,
@@ -62,11 +62,8 @@ object Dsir {
     * row per gram INSTANCE; now it carries one row per distinct
     * (doc, bucket) pair, which the fixed bucket space caps at
     * min(doc_grams, buckets) per document. */
-  def importanceWeights(spark: SparkSession, sfDir: String,
-                        target: String = DefaultTarget,
-                        buckets: Int = DefaultBuckets): DataFrame =
-    weightsFromCounts(materializedGramCounts(spark, sfDir, buckets),
-      target, buckets)
+  def importanceWeights(spark: SparkSession, sfDir: String): DataFrame =
+    weightsFromCounts(materializedGramCounts(spark, sfDir), DefaultTarget, DefaultBuckets)
 
   /** The shared gram-count layer: hashed unigram+bigram features
     * collapsed to per-(doc_id, source, bucket) counts. One text
@@ -75,13 +72,12 @@ object Dsir {
     * under the [[graft.Layers]] discipline (a narrow
     * 4-column frame, corpus-sized like the dedup-label and TF-IDF
     * posting layers). */
-  def materializedGramCounts(spark: SparkSession, sfDir: String,
-                             buckets: Int = DefaultBuckets): DataFrame =
-    graft.Layers.frame(spark, "dsir_gram_counts", (sfDir, buckets)) {
+  def materializedGramCounts(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "dsir_gram_counts", sfDir) {
       docBucketCounts(
         Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("source"), col("text")),
-        buckets)
+        DefaultBuckets)
     }
 
   private def docBucketCounts(docs: DataFrame, buckets: Int): DataFrame =

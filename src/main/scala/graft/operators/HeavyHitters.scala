@@ -44,6 +44,9 @@ object HeavyHitters {
     }
   }
 
+  /** Count-min sketch width of the heavy-token reports. */
+  val CmsWidth = 1024
+
   /** Count-min point estimates for the heavy tokens, next to their
     * exact counts: one sketch pass over the token stream (a single
     * 4×width long array crossing the wire per partition), then the
@@ -54,12 +57,12 @@ object HeavyHitters {
     * the CM guarantees: estimate ≥ exact always, bounded overestimate,
     * and partitioning-invariance of the sketch. */
   def heavyTokenEstimates(spark: SparkSession, sfDir: String,
-                          k: Int = 50, width: Int = 1024): DataFrame = {
+                          width: Int = CmsWidth): DataFrame = {
     def toks = Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("t"))
     val sketch = toks.agg(graft.functions.Cms.sketchAgg(col("t"), width)
       .as("sketch"))
-    heavyTokens(spark, sfDir, k)
+    heavyTokens(spark, sfDir)
       .crossJoin(broadcast(sketch))
       .select(col("token"), col("cnt").as("exact_cnt"),
         graft.functions.Cms.estimate(col("sketch"), col("token"), width)
@@ -71,39 +74,37 @@ object HeavyHitters {
     * token count ride the SAME raw-token scan (they were two separate
     * full explodes — guide §1.2, don't run the stream twice for two
     * aggregates that combine). */
-  private def sketchAndTotal(spark: SparkSession, sfDir: String,
-                             width: Int): DataFrame =
+  private def sketchAndTotal(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("t"))
-      .agg(graft.functions.Cms.sketchAgg(col("t"), width).as("sketch"),
+      .agg(graft.functions.Cms.sketchAgg(col("t"), CmsWidth).as("sketch"),
         count(lit(1)).as("n_tokens"))
 
   /** Oracle-checkable twin of [[heavyTokenEstimates]]: the CMS point
     * estimates are engine-specific (xxhash64 buckets), but the
     * guarantees they carry are exact booleans over the EXACT counts —
     * `never_under` (a count-min estimate can only overestimate) and
-    * `within_bound` (est ≤ exact + c·N/width; c = 10 keeps the per-row
+    * `within_bound` (est ≤ exact + c·N/[[CmsWidth]]; c = 10 keeps the per-row
     * Markov violation odds at ≤ 10⁻⁴ over the 4 sketch rows, and the
     * sketch is deterministic per corpus so the flag is stable). The
     * heavy-token row set itself is deterministic (MG candidates +
     * exact verification), so DuckDB recomputes rows and exact counts
     * and asserts the flags TRUE. */
-  def heavyTokenChecked(spark: SparkSession, sfDir: String,
-                        k: Int = 50, width: Int = 1024): DataFrame = {
+  def heavyTokenChecked(spark: SparkSession, sfDir: String): DataFrame = {
     // one raw-token pass for sketch AND total (was two), the exact
     // heavy set from [[heavyTokens]] (itself MG pass + index probes)
-    heavyTokens(spark, sfDir, k)
-      .crossJoin(broadcast(sketchAndTotal(spark, sfDir, width)))
+    heavyTokens(spark, sfDir)
+      .crossJoin(broadcast(sketchAndTotal(spark, sfDir)))
       .withColumn("cms_est",
-        graft.functions.Cms.estimate(col("sketch"), col("token"), width))
+        graft.functions.Cms.estimate(col("sketch"), col("token"), CmsWidth))
       .select(col("token"), col("cnt").as("exact_cnt"),
         (col("cms_est") >= col("cnt")).as("never_under"),
         (col("cms_est") <= col("cnt") +
-          lit(10.0) * col("n_tokens") / width).as("within_bound"))
+          lit(10.0) * col("n_tokens") / CmsWidth).as("within_bound"))
   }
 
   /** KMV key-overlap estimate between two tables' key sets WITHOUT
-    * joining them ([[graft.functions.Kmv]]): one map-side bottom-k
+    * joining them ([[graft.functions.Kmv]]): one map-side bottom-k (k = 1024)
     * sketch pass per side (k·8 bytes each through the shuffle,
     * whatever the table size), then the θ-intersection fold on the two
     * k-value arrays at the driver. The pre-join cardinality probe a
@@ -117,8 +118,9 @@ object HeavyHitters {
     * and every column bit-for-bit (integer Jaccard basis points and
     * floor(x+0.5) rounding keep the arithmetic engine-exact; IEEE
     * doubles agree given the same expression order). */
-  def keyOverlap(spark: SparkSession, sfDir: String, k: Int = 1024): DataFrame = {
+  def keyOverlap(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    val k = 1024
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration

@@ -77,9 +77,8 @@ object Ivf {
     * majority label without a window (count-desc, label-asc
     * tie-break). Rows-only: the fitted centroids are not
     * SQL-expressible; per-cell invariants are spec-asserted. */
-  def clusterProfile(spark: SparkSession, sfDir: String, kClusters: Int = 16,
-                     iters: Int = Ann.DefaultIters): DataFrame = {
-    val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
+  def clusterProfile(spark: SparkSession, sfDir: String): DataFrame = {
+    val centroids = fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     val cdf = centroidFrame(spark, centroids, "cluster")
     val perLabel = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)), "label")
       .withColumn("cluster", assignExpr(centroids)(col("embedding")))
@@ -155,17 +154,14 @@ object Ivf {
   }
 
   /** The MATERIALIZED [[semanticKeep]] survivor frame — (vec_id, cell),
-    * computed once per (session, sfDir, threshold) at the
+    * computed once per (session, sfDir) at the default threshold and the
     * corpus-derived k. Six consumers read the identical survivor set
     * (q129 itself, the q145/q146/q153 curation chains, the q172/q175
     * funnel); before this layer each re-paid the within-cell dominance
     * self-join. The `dedup_clusters` discipline applied to semantic
     * dedup. */
-  def materializedSemanticKeep(spark: SparkSession, sfDir: String,
-                               threshold: Double = 0.4): DataFrame =
-    graft.Layers.frame(spark, "semantic_keep", (sfDir, threshold)) {
-      semanticKeep(spark, sfDir, threshold)
-    }
+  def materializedSemanticKeep(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "semantic_keep", sfDir)(semanticKeep(spark, sfDir))
 
   /** The k [[semanticKeep]] will fit for `sfDir` — `kClusters` wins if
     * positive, else [[deriveK]] of the corpus count (a columnar
@@ -209,10 +205,8 @@ object Ivf {
     * Documents without a scorable bigram (sub-2-token) have no LM score
     * and are not selection candidates, matching the oracle's inner
     * join. */
-  def cellBalancedKeep(spark: SparkSession, sfDir: String, perCell: Int = 8,
-                       kClusters: Int = 0, iters: Int = Ann.DefaultIters): DataFrame = {
-    val k = semanticK(spark, sfDir, kClusters)
-    val centroids = fittedCentroids(spark, sfDir, k, iters)
+  def cellBalancedKeep(spark: SparkSession, sfDir: String, perCell: Int = 8): DataFrame = {
+    val centroids = fittedCentroids(spark, sfDir, semanticK(spark, sfDir), Ann.DefaultIters)
     val cells = Similarity.spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id").as("doc_id"),
         assignExpr(centroids)(col("embedding")).as("cell"))
@@ -241,9 +235,8 @@ object Ivf {
     * (vec_id, cell, cos) ONLY — embeddings are projected away before
     * the shuffle, and cell populations are target-cell-size-bounded
     * when k comes from [[deriveK]]. */
-  def cellOutliers(spark: SparkSession, sfDir: String, frac: Double = 0.1,
-                   kClusters: Int = 16, iters: Int = Ann.DefaultIters): DataFrame = {
-    val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
+  def cellOutliers(spark: SparkSession, sfDir: String, frac: Double = 0.1): DataFrame = {
+    val centroids = fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     val cdf = centroidFrame(spark, centroids, "cell")
     val pct = math.round(frac * 100).toInt
     val rows = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))
@@ -263,7 +256,7 @@ object Ivf {
         col("rk_cold"), col("n_cell"), col("k_cut"))
   }
 
-  /** q157: cluster labeling — the `perCell` most distinctive terms of
+  /** q157: cluster labeling — the 3 most distinctive terms of
     * every semantic cell, by summed per-document TF-IDF weight (ties →
     * term asc). The human-readable face of the IVF layer: a curation
     * review reads these labels to decide which cells to upweight,
@@ -275,10 +268,9 @@ object Ivf {
     * (cell, term) aggregation with map-side combine — the ranked
     * frame is (cells × vocabulary)-bounded, never corpus-sized, and
     * the per-cell window runs over that bounded frame. */
-  def cellTopTerms(spark: SparkSession, sfDir: String, perCell: Int = 3,
-                   kClusters: Int = 16, iters: Int = Ann.DefaultIters): DataFrame = {
+  def cellTopTerms(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
+    val centroids = fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     val cells = Similarity.spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id").as("doc_id"),
         assignExpr(centroids)(col("embedding")).as("cell"))
@@ -291,7 +283,7 @@ object Ivf {
       .partitionBy(col("cell")).orderBy(desc("w_dec"), asc("term"))
     agg
       .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= perCell)
+      .filter(col("rnk") <= 3)
       .select(col("cell"), col("term"),
         round(col("w_dec").cast("double"), 6).as("weight"),
         col("n_docs_term"), col("rnk"))
@@ -301,8 +293,8 @@ object Ivf {
     * the probed cells' vectors only, ranked by the shared tail.
     * `nProbe == k` degenerates to exact brute force (spec-asserted
     * invariant). */
-  def topK(spark: SparkSession, sfDir: String, nQueries: Int = 10, topk: Int = 5,
-           kClusters: Int = 16, nProbe: Int = 4,
+  def topK(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
+           topk: Int = Ann.TopK, kClusters: Int = Ann.Cells, nProbe: Int = 4,
            iters: Int = Ann.DefaultIters): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
     val e = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))

@@ -114,12 +114,12 @@ object Multimodal {
   def mediaFeatures(spark: SparkSession, sfDir: String): DataFrame =
     decode(mediaTable(spark, sfDir)).toDF()
 
-  /** Resize stage: recompute target dimensions (fit inside maxW×maxH,
+  /** Resize stage: recompute target dimensions (fit inside 640×360,
     * aspect preserved, integer arithmetic) and pass the payload through
     * untouched — a real pipeline would transcode inside [[decode]]'s
     * mapPartitions. The metadata math is real and oracle-checkable. */
-  def resizeMeta(spark: SparkSession, sfDir: String,
-                 maxW: Int = 640, maxH: Int = 360): DataFrame = {
+  def resizeMeta(spark: SparkSession, sfDir: String): DataFrame = {
+    val (maxW, maxH) = (640, 360)
     val m = mediaTable(spark, sfDir).toDF()
     // scale = min(maxW/w, maxH/h, 1) as exact rational arithmetic:
     // out_w = floor(w * min-scale) via integer compare of cross products

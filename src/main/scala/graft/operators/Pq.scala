@@ -73,13 +73,11 @@ object Pq {
     Ann.fitted(spark, "pq", sfDir, DefaultCodes, Ann.DefaultIters)(
       Ann.fit(Ann.corpus(spark, sfDir), DefaultSubspaces, DefaultCodes, Ann.DefaultIters))
 
-  /** The residual-codebook layer: fitted once per (session, sfDir,
-    * kClusters) over the residuals of the SAME session IVF fit q44/q137
-    * probe. */
-  def fittedResidualCodebooks(spark: SparkSession, sfDir: String,
-                              kClusters: Int = 16): Books =
-    Ann.fitted(spark, "pq_residual", sfDir, kClusters, Ann.DefaultIters) {
-      val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, Ann.DefaultIters)
+  /** The residual-codebook layer: fitted once per (session, sfDir)
+    * over the residuals of the SAME session IVF fit q44/q137 probe. */
+  def fittedResidualCodebooks(spark: SparkSession, sfDir: String): Books =
+    Ann.fitted(spark, "pq_residual", sfDir, Ann.Cells, Ann.DefaultIters) {
+      val centroids = Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
       Ann.fit(residuals(Ann.corpus(spark, sfDir)
           .withColumn("cluster", Ivf.assignExpr(centroids)(col("embedding"))), centroids),
         DefaultSubspaces, DefaultCodes, Ann.DefaultIters)
@@ -106,18 +104,17 @@ object Pq {
   /** (vec_id, cluster, codes) — the IVF-PQ index over RAW-vector codes
     * (the q137/q143 deployment shape and the q167 grid's `raw`
     * variant): coarse cell + fine codes assigned in ONE corpus pass. */
-  def ivfEncodedRaw(spark: SparkSession, sfDir: String, kClusters: Int = 16): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "pq", kClusters)(
+  def ivfEncodedRaw(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.encodedLayer(spark, sfDir, "pq", Ann.Cells)(
       Ann.withCodes(_, fittedCodebooks(spark, sfDir)))
 
   /** (vec_id, cluster, codes) — the FULL-IVFADC index over CELL-RESIDUAL
     * codes (q141/q144 and the grid's `residual` variant). */
-  def ivfEncodedResidual(spark: SparkSession, sfDir: String,
-                         kClusters: Int = 16): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "pq_residual", kClusters) { cells =>
+  def ivfEncodedResidual(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.encodedLayer(spark, sfDir, "pq_residual", Ann.Cells) { cells =>
       Ann.withCodes(
-        residuals(cells, Ivf.fittedCentroids(spark, sfDir, kClusters, Ann.DefaultIters)),
-        fittedResidualCodebooks(spark, sfDir, kClusters))
+        residuals(cells, Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)),
+        fittedResidualCodebooks(spark, sfDir))
     }
 
   /** One query's ADC lookup table — flat m·k doubles, s-major, each
@@ -161,8 +158,8 @@ object Pq {
     * tables is config-bounded — collected from the raw table: values
     * are partitioning-free, so the spread shuffle would buy nothing on
     * a bounded filter. */
-  def adcTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-              topk: Int = 5): DataFrame = {
+  def adcTopK(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
+              topk: Int = Ann.TopK): DataFrame = {
     import spark.implicits._
     val queries = Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries, "embedding" -> "qemb")
       .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
@@ -170,7 +167,7 @@ object Pq {
   }
 
   /** THE IVF-ADC path, once per `residual` variant over ONE collected
-    * query batch: the scored candidates of every probe budget in
+    * query batch of [[Ann.NQueries]] vectors: the scored candidates of every probe budget in
     * `budgets`, keyed (n_probe, qid) — a one-budget caller ranks per
     * qid alone, n_probe being constant. Each query's probe list is taken
     * at the largest budget — [[graft.functions.NearestCentroids]]
@@ -182,17 +179,17 @@ object Pq {
     * 0.0 for raw ones. The probe filter is the broadcast equi-condition
     * `cluster === probe` against the build-once index layer — no
     * shuffle, no join fan-out beyond the pruned candidates. */
-  private def ivfAdc(spark: SparkSession, sfDir: String, nQueries: Int, kClusters: Int,
-                     budgets: Seq[Int], residual: Boolean*): Seq[DataFrame] = {
+  private def ivfAdc(spark: SparkSession, sfDir: String, budgets: Seq[Int],
+                     residual: Boolean*): Seq[DataFrame] = {
     import spark.implicits._
-    val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, Ann.DefaultIters)
+    val centroids = Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     // nQueries rows, config-bounded: the serving-batch collect
-    val batch = Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries, "embedding" -> "qemb")
+    val batch = Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries, "embedding" -> "qemb")
       .withColumn("probes", Ivf.nearestClusters(centroids, budgets.max)(col("qemb")))
       .as[(Long, Array[Float], Array[Int])].collect().sortBy(_._1).toSeq
     residual.map { res =>
       val books =
-        if (res) fittedResidualCodebooks(spark, sfDir, kClusters) else fittedCodebooks(spark, sfDir)
+        if (res) fittedResidualCodebooks(spark, sfDir) else fittedCodebooks(spark, sfDir)
       val rows = batch.flatMap { case (qid, qv, probes) =>
         val lut = lutFor(qv, books)
         probes.toSeq.zipWithIndex.map { case (p, r) =>
@@ -206,7 +203,7 @@ object Pq {
           rows.collect { case (r, qid, p, cd, lut) if r < np => (np, qid, p, cd, lut) })
         .toDF("n_probe", "qid", "probe", "celldot", "lut")
       val enc =
-        if (res) ivfEncodedResidual(spark, sfDir, kClusters) else ivfEncodedRaw(spark, sfDir, kClusters)
+        if (res) ivfEncodedResidual(spark, sfDir) else ivfEncodedRaw(spark, sfDir)
       Ann.candidates(enc, q, col("cluster") === col("probe"))
         .withColumn("adc_ip", adcScore(books.head.length))
     }
@@ -227,11 +224,9 @@ object Pq {
     * unchanged). q143 measures the recall this configuration actually
     * delivers, which is the honest gate either way. This is the entry
     * point a serving tier binds to, at [[DeployedNProbe]]. */
-  def ivfAdcTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                 topk: Int = 5, kClusters: Int = 16,
+  def ivfAdcTopK(spark: SparkSession, sfDir: String,
                  nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.ranked(ivfAdc(spark, sfDir, nQueries, kClusters, Seq(nProbe), false).head,
-      "adc_ip", topk)
+    Ann.ranked(ivfAdc(spark, sfDir, Seq(nProbe), false).head, "adc_ip", Ann.TopK)
 
   /** q141: FULL IVFADC (Jégou et al. §IV-A) — PQ over the CELL
     * RESIDUALS r = x − c_cell(x) instead of the raw vectors. Residuals
@@ -247,18 +242,16 @@ object Pq {
     * (query, probed cell) and the second is the standard ADC fold over
     * the residual codebooks (global, cell-independent, so ONE m·k LUT
     * per query serves every probe). */
-  def ivfAdcResidualTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                         topk: Int = 5, kClusters: Int = 16,
+  def ivfAdcResidualTopK(spark: SparkSession, sfDir: String,
                          nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.ranked(ivfAdc(spark, sfDir, nQueries, kClusters, Seq(nProbe), true).head,
-      "adc_ip", topk)
+    Ann.ranked(ivfAdc(spark, sfDir, Seq(nProbe), true).head, "adc_ip", Ann.TopK)
 
   /** q136: recall\@k of the PQ index against the exact brute-force
     * baseline — the eval harness every compressed-index deployment
     * runs before flipping traffic. Both sides reuse their query
     * operators unchanged, so this measures exactly what q135 serves. */
-  def recallVsBrute(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                    topk: Int = 5): DataFrame =
+  def recallVsBrute(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
+                    topk: Int = Ann.TopK): DataFrame =
     Ann.recall(adcTopK(spark, sfDir, nQueries, topk),
       Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
 
@@ -266,19 +259,13 @@ object Pq {
     * against exact brute force. Together with [[residualRecallVsBrute]]
     * this makes the raw-vs-residual recall comparison a pair of
     * hash-checked queries rather than a fixture assertion. */
-  def ivfAdcRecallVsBrute(spark: SparkSession, sfDir: String,
-                          nQueries: Int = 10, topk: Int = 5,
-                          kClusters: Int = 16, nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.recall(ivfAdcTopK(spark, sfDir, nQueries, topk, kClusters, nProbe),
-      Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
+  def ivfAdcRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.recall(ivfAdcTopK(spark, sfDir), Similarity.materializedBruteTopK(spark, sfDir))
 
   /** q144: recall\@k of the FULL residual IVFADC pipeline (q141) against
     * exact brute force — the residual twin of the q136/q143 gates. */
-  def residualRecallVsBrute(spark: SparkSession, sfDir: String,
-                            nQueries: Int = 10, topk: Int = 5,
-                            kClusters: Int = 16, nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.recall(ivfAdcResidualTopK(spark, sfDir, nQueries, topk, kClusters, nProbe),
-      Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
+  def residualRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.recall(ivfAdcResidualTopK(spark, sfDir), Similarity.materializedBruteTopK(spark, sfDir))
 
   /** q167: the raw-vs-residual recall comparison swept over the nProbe
     * operating range — one row per (variant, n_probe, query). q143/q144
@@ -293,13 +280,11 @@ object Pq {
     * groups by it, against the shared materialized brute baseline.
     * Every grid cell is the single-point operator's output by
     * construction: q137/q141 are this path at one budget. */
-  def recallGrid(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                 topk: Int = 5, kClusters: Int = 16,
-                 probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val brute = Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk)
-    Seq("raw", "residual").zip(ivfAdc(spark, sfDir, nQueries, kClusters, probes, false, true))
+  def recallGrid(spark: SparkSession, sfDir: String): DataFrame = {
+    val brute = Similarity.materializedBruteTopK(spark, sfDir)
+    Seq("raw", "residual").zip(ivfAdc(spark, sfDir, Seq(1, 2, 4, 8), false, true))
       .map { case (variant, scored) =>
-        val ann = Ann.topK(scored, topk, desc("adc_ip"), Seq("n_probe", "qid"))
+        val ann = Ann.topK(scored, Ann.TopK, desc("adc_ip"), Seq("n_probe", "qid"))
           .select(col("n_probe"), col("qid"), col("vec_id").as("nbr_id"))
         Ann.recall(ann, brute, "n_probe")
           .select(lit(variant).as("variant"), col("n_probe"), col("qid"), col("recall"))

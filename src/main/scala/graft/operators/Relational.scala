@@ -200,7 +200,7 @@ object Relational {
     // stays in the session (strict `>` below) — the same semantics as
     // Spark's native session_window (q54), which merges windows whose
     // ranges touch (spec-pinned with a planted exact-gap event).
-    val gapUs = 30L * 60 * 1000000 // 30 min
+    val gapUs = Analytics.SessionGapMinutes * 60L * 1000000
     Tables.events(spark, sfDir)
       .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
       .withColumn("is_break",

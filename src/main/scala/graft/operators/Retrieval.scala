@@ -37,10 +37,9 @@ object Retrieval {
     * global window (ranks are assigned after the k-row cut). Per-term
     * scores round to 9dp-decimal before the per-doc sum
     * (order-independent fold). */
-  def bm25TopK(spark: SparkSession, sfDir: String,
-               terms: Seq[String] = QueryTerms, k: Int = 10): DataFrame = {
+  def bm25TopK(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
     val tf = graft.features.Features.materializedTermFreqs(spark, sfDir)
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(QueryTerms: _*))
       .select(col("doc_id"), col("term").as("t"), col("tf"))
     bm25Ranked(docLengths(spark, sfDir), tf, k, excludeDocId = None)
   }
@@ -97,7 +96,7 @@ object Retrieval {
 
   /** q161: more-like-this — query-by-document BM25 (the Lucene/ES
     * `more_like_this` contract): the query's term set is DERIVED from
-    * the probe document (its `mTerms` top TF-IDF terms, the shared q34
+    * the probe document (its 3 top TF-IDF terms, the shared q34
     * postings layer, 6dp round + term tie-break), then scored with the
     * exact q149 BM25 core against the full corpus minus the probe doc.
     *
@@ -107,18 +106,15 @@ object Retrieval {
     * semi-filter on the term-frequency index — same postings bound as q149
     * with the literal probe, so corpus cost is independent of how the
     * terms were chosen. */
-  def moreLikeThis(spark: SparkSession, sfDir: String,
-                   queryDoc: Long = MltQueryDoc, mTerms: Int = 3,
-                   k: Int = 10): DataFrame = {
+  def moreLikeThis(spark: SparkSession, sfDir: String): DataFrame = {
     val qterms = graft.features.Features.materializedTfidf(spark, sfDir)
-      .filter(col("doc_id") === queryDoc)
-      .orderBy(col("tfidf").desc, col("term").asc).limit(mTerms)
+      .filter(col("doc_id") === MltQueryDoc)
+      .orderBy(col("tfidf").desc, col("term").asc).limit(3)
       .select(col("term").as("t"))
     val tf = graft.features.Features.materializedTermFreqs(spark, sfDir)
       .join(broadcast(qterms), col("term") === col("t"))
       .select(col("doc_id"), col("t"), col("tf"))
-    bm25Ranked(docLengths(spark, sfDir), tf, k,
-      excludeDocId = Some(queryDoc))
+    bm25Ranked(docLengths(spark, sfDir), tf, 10, excludeDocId = Some(MltQueryDoc))
   }
 
   /** RRF smoothing constant — the k=60 of Cormack et al. 2009. */
@@ -129,13 +125,12 @@ object Retrieval {
     * ranks contribute 0. Pure k-row-frame algebra — a full-outer join
     * of two ≤kEach-row inputs, then one take-ordered cut — so the cost
     * lives entirely in the upstream retrieval stages. */
-  def rrfFuse(lex: DataFrame, sem: DataFrame, k: Int,
-              kRrf: Int = RrfK): DataFrame = {
+  def rrfFuse(lex: DataFrame, sem: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fused = lex.join(sem, Seq("doc_id"), "full_outer")
       .withColumn("rrf_score", round(
-        coalesce(lit(1.0) / (lit(kRrf) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(kRrf) + col("sem_rank")), lit(0.0)), 6))
+        coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(RrfK) + col("sem_rank")), lit(0.0)), 6))
     fused.orderBy(col("rrf_score").desc, col("doc_id")).limit(k)
       .withColumn("rank", row_number()
         .over(Window.orderBy(col("rrf_score").desc, col("doc_id"))).cast("long"))
@@ -148,18 +143,18 @@ object Retrieval {
     * vector 0, the doc_id = vec_id fixture pairing) by reciprocal-rank
     * fusion, the standard hybrid-search shape every modern retrieval
     * stack ships (lexical + vector + RRF). Each side contributes its
-    * top `kEach`; fusion itself is k-row algebra ([[rrfFuse]]), so the
+    * top 20; fusion itself is k-row algebra ([[rrfFuse]]), so the
     * operator's scale profile is exactly max(q149, q24) — and on a
     * real deployment the semantic side swaps to any of the bounded ANN
     * stages (IVF q44, ADC q135, Hamming q159) without touching the
     * fusion. */
-  def hybridTopK(spark: SparkSession, sfDir: String, kEach: Int = 20,
-                 k: Int = 10): DataFrame = {
+  def hybridTopK(spark: SparkSession, sfDir: String): DataFrame = {
+    val kEach = 20
     val lex = bm25TopK(spark, sfDir, k = kEach)
       .select(col("doc_id"), col("rank").as("lex_rank"))
     val sem = Similarity.bruteForceTopK(spark, sfDir, nQueries = 1, k = kEach)
       .select(col("nbr_id").as("doc_id"), col("rank").as("sem_rank"))
-    rrfFuse(lex, sem, k)
+    rrfFuse(lex, sem, 10)
   }
 
   /** q154's fixed probe phrase. */
@@ -180,18 +175,16 @@ object Retrieval {
     * is one doc-keyed aggregation. At |phrase| = m that is m−1
     * narrow joins, the inverted-index plan, never a per-document
     * scan-and-regex. */
-  def phraseSearch(spark: SparkSession, sfDir: String,
-                   phrase: Seq[String] = Phrase): DataFrame = {
-    require(phrase.nonEmpty, "empty phrase")
+  def phraseSearch(spark: SparkSession, sfDir: String): DataFrame = {
     val tok = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos0", "t")))
-      .filter(col("t").isin(phrase: _*))
+      .filter(col("t").isin(Phrase: _*))
       // 1-based positions, matching the oracle's range(1, len+1) walk
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("t"))
-    val first = tok.filter(col("t") === phrase.head)
+    val first = tok.filter(col("t") === Phrase.head)
       .select(col("doc_id"), col("pos"))
-    val matches = phrase.zipWithIndex.tail.foldLeft(first) {
+    val matches = Phrase.zipWithIndex.tail.foldLeft(first) {
       case (cur, (w, i)) =>
         cur.join(
           tok.filter(col("t") === w)

@@ -44,7 +44,8 @@ object Similarity {
     * The corpus side stays partitioned; only the (tiny) query side is
     * broadcast — at 100 TB this is one pass over the corpus per query
     * batch. */
-  def bruteForceTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def bruteForceTopK(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
+                     k: Int = Ann.TopK): DataFrame = {
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
     val q = Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm")
     Ann.ranked(Ann.candidates(e, q).withColumn("cos_sim", cosine), "cos_sim", k)
@@ -60,17 +61,17 @@ object Similarity {
     * computation: this cache is the eval harness's ground-truth
     * artifact, not the scan operator. */
   def materializedBruteTopK(spark: SparkSession, sfDir: String,
-                            nQueries: Int = 10, k: Int = 5): DataFrame =
+                            nQueries: Int = Ann.NQueries, k: Int = Ann.TopK): DataFrame =
     graft.Layers.frame(spark, "ann_brute_topk", (sfDir, nQueries, k)) {
       bruteForceTopK(spark, sfDir, nQueries, k)
     }
 
   /** L2 normalization — the standard pre-ANN transform (unit vectors
     * turn cosine into dot product). Map-only; the query surface emits
-    * the leading components rounded so the oracle compares exactly. */
-  def normalized(spark: SparkSession, sfDir: String, dims: Int = 4): DataFrame = {
+    * the first 4 components rounded so the oracle compares exactly. */
+  def normalized(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
-    val comps = (1 to dims).map(i =>
+    val comps = (1 to 4).map(i =>
       round(col("embedding").getItem(i - 1).cast("double") / col("nrm"), 6)
         .as(s"n${i - 1}"))
     e.select(col("vec_id") +: comps: _*)
@@ -86,13 +87,12 @@ object Similarity {
     * filter prunes pairs BEFORE the dot product, and on a deployment
     * the scan stage swaps to any bounded ANN family exactly as the
     * kNN classifier's did (q117 → q127). */
-  def hardNegatives(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                    k: Int = 5): DataFrame = {
+  def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)), "label")
-    val q = Ann.queryFrame(e, nQueries,
+    val q = Ann.queryFrame(e, Ann.NQueries,
       "label" -> "q_label", "embedding" -> "qemb", "nrm" -> "qnrm")
     Ann.topK(Ann.candidates(e, q, col("label") =!= col("q_label"))
-        .withColumn("cos_sim", cosine), k, desc("cos_sim"))
+        .withColumn("cos_sim", cosine), Ann.TopK, desc("cos_sim"))
       .select(col("qid"), col("q_label"), col("vec_id").as("neg_id"),
         col("label").as("neg_label"), col("rank"), col("cos_sim"))
   }
@@ -237,7 +237,7 @@ object Similarity {
     * cells, and scoring is an EQUI-join on the cell id — a partitioned
     * hash join keyed on the cell, never a nested-loop over a broadcast
     * of corpus/holdout. BOTH index knobs derive from the corpus by
-    * default: `kClusters <= 0` resolves via [[Ivf.semanticK]]
+    * default: the cell count is [[Ivf.semanticK]]
     * (= [[Ivf.deriveK]], the SemDeDup-family discipline — cells of
     * ~[[Ivf.DefaultTargetCellSize]] mean size, 16-cell floor), because
     * the HOLDOUT query side scales WITH the corpus: at a fixed 16
@@ -255,22 +255,21 @@ object Similarity {
     * DuckDB brute-force oracle hash-green; above the ceiling it
     * resolves to [[DefaultScaleNProbe]], so a caller who never tuned
     * anything gets the sub-quadratic path once probe-all's
-    * |corpus|·|holdout| scoring would dominate. With `nProbe <
-    * kClusters` (q127's pinned configuration) the scored pairs shrink
-    * to ~|corpus|·nProbe/kClusters, with prediction agreement vs brute
+    * |corpus|·|holdout| scoring would dominate. With `nProbe` below
+    * the cell count k (q127's pinned configuration) the scored pairs shrink
+    * to ~|corpus|·nProbe/k, with prediction agreement vs brute
     * asserted in the spec. The vote layer is identical in all modes. */
   def knnClassify(spark: SparkSession, sfDir: String, k: Int = 10,
-                  holdout: Int = 5, kClusters: Int = 0, nProbe: Int = -1,
-                  iters: Int = Ann.DefaultIters): DataFrame = {
+                  holdout: Int = 5, nProbe: Int = -1): DataFrame = {
     // every driver SF sits at deriveK's 16-cell floor, so the derived
     // default is bit-identical to the old fixed 16 below the ceiling
     // (and shares the ivf_centroids_semantic layer's cache entry above)
-    val kc = Ivf.semanticK(spark, sfDir, kClusters)
-    val centroids = Ivf.fittedCentroids(spark, sfDir, kc, iters)
+    val centroids = Ivf.fittedCentroids(spark, sfDir, Ivf.semanticK(spark, sfDir),
+      Ann.DefaultIters)
     // default derives from corpus size ([[deriveNProbe]], the
     // [[Ivf.deriveK]] discipline): probe-all below the exactness
-    // ceiling — the fitted cell count, so both a non-default kClusters
-    // and a corpus smaller than kClusters keep the documented
+    // ceiling — the fitted cell count, so a corpus smaller than the
+    // derived k keeps the documented
     // probe-all-is-exact contract — and the audited sub-quadratic
     // nProbe above it, without the caller having to opt in at scale
     val probes =
@@ -303,29 +302,29 @@ object Similarity {
 
   /** MMR (maximal-marginal-relevance) diversity re-ranking — the
     * retrieval-side step after ANN: from a candidate pool of the
-    * query's `poolSize` nearest vectors, greedily pick `k` maximizing
-    * `λ·sim(q,c) − (1−λ)·max_{s∈picked} sim(c,s)` so the result covers
+    * query's 100 nearest vectors, greedily pick `k` maximizing
+    * `λ·sim(q,c) − (1−λ)·max_{s∈picked} sim(c,s)`, λ = 0.7, so the result covers
     * the neighborhood instead of returning k near-duplicates of the
     * top hit. Architecture mirrors the IVF probe layer: the POOL
-    * selection is the distributed pass (brute/IVF top-`poolSize` —
+    * selection is the distributed pass (brute/IVF top-100 —
     * corpus partitioned, query broadcast), the greedy fold runs on the
-    * collected pool (poolSize×d doubles — sink-sized, bounded by
+    * collected pool (100×d doubles — sink-sized, bounded by
     * configuration like the IVF centroid table, never corpus-sized).
     * Deterministic: 4dp-rounded cosines with id tie-breaks at both the
     * pool cut and each greedy step. Spec: first pick is the nearest
     * neighbor; the MMR set's mean pairwise similarity is below the
     * plain top-k's. */
   def mmrRerank(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                k: Int = 10, poolSize: Int = 100,
-                lambda: Double = 0.7): DataFrame = {
+                k: Int = 10): DataFrame = {
     import spark.implicits._
+    val lambda = 0.7
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
     val q = e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qemb"), col("nrm").as("qnrm"))
-    // distributed pass: pool = top-poolSize by relevance (one corpus scan)
+    // distributed pass: pool = top-100 by relevance (one corpus scan)
     val pool = e.filter(col("vec_id") =!= queryId).crossJoin(broadcast(q))
       .withColumn("rel", cosine)
-      .orderBy(desc("rel"), asc("vec_id")).limit(poolSize)
+      .orderBy(desc("rel"), asc("vec_id")).limit(100)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("rel"))
       .collect()
     // sink-sized greedy fold over the bounded pool
@@ -425,28 +424,24 @@ object Similarity {
     * [[DecontamMaxEvalVectors]] guard). The derivation lives ONLY in
     * this adapter; production callers pass their actual holdout to
     * [[embeddingDecontamFrom]]. */
-  def embeddingDecontam(spark: SparkSession, sfDir: String,
-                        tau: Double = 0.6): DataFrame = {
+  def embeddingDecontam(spark: SparkSession, sfDir: String): DataFrame = {
     val e = spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("embedding"))
     embeddingDecontamFrom(
       e.filter(col("vec_id") % 50 =!= 0),
-      e.filter(col("vec_id") % 50 === 0), tau)
+      e.filter(col("vec_id") % 50 === 0))
   }
 
   /** The MATERIALIZED q142 verdict frame — one row per corpus vector,
-    * computed once per (session, sfDir, tau) and re-entered as a
+    * computed once per (session, sfDir) and re-entered as a
     * checkpointed frame. FIVE consumers read the identical verdicts
     * (q142 itself, q146's semantic gate, q155's report, the q172/q175
     * funnel columns); before this layer each re-paid the
     * corpus × eval broadcast-argmax pass AND the eval-side count
     * action. The `lm_scores` discipline applied to the semantic
     * decontamination gate. */
-  def materializedEmbeddingDecontam(spark: SparkSession, sfDir: String,
-                                    tau: Double = 0.6): DataFrame =
-    graft.Layers.frame(spark, "embedding_decontam", (sfDir, tau)) {
-      embeddingDecontam(spark, sfDir, tau)
-    }
+  def materializedEmbeddingDecontam(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "embedding_decontam", sfDir)(embeddingDecontam(spark, sfDir))
 
   /** SRP-LSH top-k: bucket on the ENGINE-PORTABLE sign-random-projection
     * signature ([[graft.functions.PortableSrpSig]] — integer-arithmetic
@@ -455,14 +450,13 @@ object Similarity {
     * map-side signature pass, a bucket equi-join against the broadcast
     * query side ([[Ann]]'s candidate join), per-query top-k tail.
     * Approximate (recall < 1): no pair of non-colliding vectors is
-    * ever scored. */
-  def lshTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
-              nPlanes: Int = 8): DataFrame = {
+    * ever scored. Buckets are 8-plane signatures. */
+  def lshTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
-      .withColumn("bucket", graft.functions.srpSigPortable(col("embedding"), nPlanes))
-    val q = Ann.queryFrame(e, nQueries,
+      .withColumn("bucket", graft.functions.srpSigPortable(col("embedding"), 8))
+    val q = Ann.queryFrame(e, Ann.NQueries,
       "embedding" -> "qemb", "nrm" -> "qnrm", "bucket" -> "qbucket")
     Ann.ranked(Ann.candidates(e, q, col("bucket") === col("qbucket"))
-      .withColumn("cos_sim", cosine), "cos_sim", k)
+      .withColumn("cos_sim", cosine), "cos_sim", Ann.TopK)
   }
 }

@@ -40,9 +40,9 @@ object SkewJoin {
     * salt is internal plumbing — the result is bit-identical to the
     * plain join (that IS the oracle), which is the property that lets
     * this rewrite be dropped onto any hot-key join without touching
-    * downstream logic. */
+    * downstream logic. 8 salts. */
   def saltedSupplierRevenue(spark: org.apache.spark.sql.SparkSession,
-                            sfDir: String, salts: Int = 8): DataFrame = {
+                            sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val fact = graft.Tables.lineitem(spark, sfDir).select(
       col("l_suppkey").as("suppkey"),
@@ -50,7 +50,7 @@ object SkewJoin {
         .cast(DecimalType(18, 4)).as("rev"))
     val dim = graft.Tables.supplier(spark, sfDir)
       .select(col("s_suppkey").as("suppkey"), col("s_name"))
-    salted(fact, dim, "suppkey", salts)
+    salted(fact, dim, "suppkey", 8)
       .groupBy(col("s_name"))
       .agg(count(lit(1)).as("n_items"),
         round(sum(col("rev")).cast("double"), 2).as("revenue"))

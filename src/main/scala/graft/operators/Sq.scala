@@ -103,16 +103,15 @@ object Sq {
     * shape, assigned in the same corpus pass (joining [[encoded]] to an
     * assignment frame would shuffle the corpus) so the warm serving
     * path (q173, repeated probes) pays ONLY the probed cells' scan. */
-  def ivfEncoded(spark: SparkSession, sfDir: String,
-                 kClusters: Int = 16): DataFrame = encodeLayer(spark, sfDir, kClusters)
+  def ivfEncoded(spark: SparkSession, sfDir: String): DataFrame =
+    encodeLayer(spark, sfDir, Ann.Cells)
 
   /** q169: asymmetric SQ8 top-k — exact query vectors against the
     * reconstructed corpus, ranked by the 4dp-rounded inner product
     * with a vec_id tie-break (the q24/q135 serving shape). */
-  def sqTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-             k: Int = 5): DataFrame =
+  def sqTopK(spark: SparkSession, sfDir: String): DataFrame =
     sqTopKFor(spark, sfDir,
-      Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries, "embedding" -> "qemb"), k)
+      Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries, "embedding" -> "qemb"))
 
   /** [[sqTopK]] over an ARBITRARY `(qid, qemb)` query frame — the one
     * scoring definition both the q169 batch surface and the online
@@ -120,16 +119,14 @@ object Sq {
     * the two cannot drift. The query side must stay bounded (it
     * broadcasts); the corpus side streams through once per call. */
   def sqTopKFor(spark: SparkSession, sfDir: String, q: DataFrame,
-                k: Int = 5): DataFrame =
+                k: Int = Ann.TopK): DataFrame =
     scan(spark, sfDir, encoded(spark, sfDir), q, k)
 
   /** q170: recall\@k of the SQ8 scan against exact brute force — the
     * measured-not-assumed gate every quantization family in the engine
     * carries (q136/q143/q144/q159's discipline). */
-  def sqRecallVsBrute(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                      topk: Int = 5): DataFrame =
-    Ann.recall(sqTopK(spark, sfDir, nQueries, topk),
-      Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
+  def sqRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.recall(sqTopK(spark, sfDir), Similarity.materializedBruteTopK(spark, sfDir))
 
   /** q173: IVF-SQ8 — the FAISS `IVF…,SQ8` index shape: the coarse IVF
     * quantizer prunes candidates to the query's `nProbe` cells while
@@ -145,27 +142,19 @@ object Sq {
     * needs no per-query LUT. Scoring is [[reconstructedDot]] —
     * the same definition the flat scan executes — so the pruned scan
     * hash-agrees with the flat scan wherever their candidate sets
-    * overlap. `nProbe` defaults to the grid-measured
-    * [[Pq.DeployedNProbe]]. */
-  def ivfSqTopK(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-                k: Int = 5, kClusters: Int = 16,
-                nProbe: Int = Pq.DeployedNProbe): DataFrame = {
-    val centroids = Ivf.fittedCentroids(spark, sfDir, kClusters, Ann.DefaultIters)
+    * overlap. It probes the grid-measured [[Pq.DeployedNProbe]]. */
+  def ivfSqTopK(spark: SparkSession, sfDir: String): DataFrame = {
+    val centroids = Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     // bounded probe frame: nQueries × nProbe rows, broadcast
-    val q = Ann.probed(Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries,
-      "embedding" -> "qemb"), centroids, nProbe)
-    scan(spark, sfDir, ivfEncoded(spark, sfDir, kClusters), q, k,
+    val q = Ann.probed(Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries,
+      "embedding" -> "qemb"), centroids, Pq.DeployedNProbe)
+    scan(spark, sfDir, ivfEncoded(spark, sfDir), q, Ann.TopK,
       col("cluster") === col("probe"))
   }
 
   /** q174: recall\@k of the IVF-SQ8 scan against exact brute force —
     * the gate that prices what the cell pruning costs in recall, the
     * same discipline as q143/q144 price IVF-PQ's. */
-  def ivfSqRecallVsBrute(spark: SparkSession, sfDir: String,
-                         nQueries: Int = 10, topk: Int = 5,
-                         kClusters: Int = 16,
-                         nProbe: Int = Pq.DeployedNProbe): DataFrame =
-    Ann.recall(
-      ivfSqTopK(spark, sfDir, nQueries, topk, kClusters, nProbe),
-      Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
+  def ivfSqRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.recall(ivfSqTopK(spark, sfDir), Similarity.materializedBruteTopK(spark, sfDir))
 }

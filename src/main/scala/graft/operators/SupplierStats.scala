@@ -21,23 +21,35 @@ import graft.Tables
   */
 object SupplierStats {
 
+  /** The flagship job's two fixed durations (`StreamsApp.kt:43-44`): a
+    * 5 s tumbling window and a 5 s grace. The stream's watermark delay
+    * is the grace (T5: one bound for both out-of-orderness and allowed
+    * lateness). Every other unit is derived from these two. */
+  val WindowSeconds = 5
+  val GraceSeconds = 5
+
+  /** [[WindowSeconds]] and [[GraceSeconds]] as Spark interval strings. */
+  val WindowInterval = s"$WindowSeconds seconds"
+  val GraceInterval = s"$GraceSeconds seconds"
+
+  private val windowUs = WindowSeconds * 1000000L
+  private val graceUs = GraceSeconds * 1000000L
+
   /** A5/A6/A7 + T4: tumbling window stats. Window bounds are formatted
     * "yyyy-MM-dd HH:mm:ss" strings exactly like the reference's output
     * (`SupplierStatsFunction.kt:24-25`), totals rounded to 2dp
     * (`TableApp.kt:194`).
     */
-  def tumble(df: DataFrame, eventTime: Column, key: Column, price: Column,
-             width: String = "5 seconds"): DataFrame =
-    format(aggCore(df, eventTime, key, price, width))
+  def tumble(df: DataFrame, eventTime: Column, key: Column, price: Column): DataFrame =
+    format(aggCore(df, eventTime, key, price))
 
   /** The shared aggregation core: one declarative transform used by BOTH
     * the batch query and the Structured Streaming query
     * ([[graft.streaming.SupplierStatsStream]]) — the literal "same query,
     * different engine mode" agreement the reference builds by hand across
     * three engines. */
-  def aggCore(df: DataFrame, eventTime: Column, key: Column, price: Column,
-              width: String): DataFrame =
-    df.groupBy(window(eventTime, width).as("w"), key.as("supplier"))
+  def aggCore(df: DataFrame, eventTime: Column, key: Column, price: Column): DataFrame =
+    df.groupBy(window(eventTime, WindowInterval).as("w"), key.as("supplier"))
       .agg(
         round(sum(price.cast(DecimalType(18, 2))).cast("double"), 2).as("total_price"),
         count(lit(1)).as("cnt"))
@@ -53,8 +65,8 @@ object SupplierStats {
   /** Batch query over the events table: event_type stands in for the
     * supplier key (FIXTURES.md §6), 5 s tumble mirroring the reference's
     * window size (`StreamsApp.kt:43`). */
-  def tumbleEvents(spark: SparkSession, sfDir: String, width: String = "5 seconds"): DataFrame =
-    tumble(Tables.events(spark, sfDir), col("ts"), col("event_type"), col("value"), width)
+  def tumbleEvents(spark: SparkSession, sfDir: String): DataFrame =
+    tumble(Tables.events(spark, sfDir), col("ts"), col("event_type"), col("value"))
 
   /** T12 as a first-class window shape: the reference's dashboard
     * re-queries a 5-minute lookback every refresh — an overlapping
@@ -62,10 +74,10 @@ object SupplierStats {
     * `window(ts, width, slide)` assigns each event to width/slide
     * overlapping windows (here 10 min / 5 min → 2). Same agg core as
     * the tumbling flagship. */
-  def slidingEvents(spark: SparkSession, sfDir: String,
-                    width: String = "10 minutes", slide: String = "5 minutes"): DataFrame = {
+  def slidingEvents(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    ev.groupBy(window(col("ts"), width, slide).as("w"), col("event_type").as("supplier"))
+    ev.groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"),
+        col("event_type").as("supplier"))
       .agg(
         round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2).as("total_price"),
         count(lit(1)).as("cnt"))
@@ -81,9 +93,6 @@ object SupplierStats {
   // (`orders-stats-streams/.../LateRecordProcessor.kt:24-79`;
   // `orders-stats-flink/.../LateDataRouter.kt:19-40`). Spark has no side
   // outputs, so the engine tags first and forks two filtered sinks (P5).
-
-  private val windowUs = 5000000L // 5 s window (StreamsApp.kt:43)
-  private val graceUs = 5000000L  // 5 s grace  (StreamsApp.kt:44)
 
   /** Window close boundary for a record: ((ts div size)+1)*size, computed
     * with exact long arithmetic (ts - ts mod size + size); a double

@@ -12,6 +12,11 @@ import graft.Tables
   */
 object TextOps {
 
+  /** The eval benchmark every decontamination gate checks against: the
+    * documents with `doc_id` below this (a stand-in for an external
+    * eval suite). */
+  val EvalDocs = 5
+
   /** The q27 quality gate's stop list — ONE definition, shared with the
     * streaming ingest monitor so the two gates cannot drift. */
   private[graft] val StopWords: Seq[String] =
@@ -230,20 +235,19 @@ object TextOps {
   /** Benchmark DECONTAMINATION — the eval-set overlap check every
     * training corpus needs: flag corpus documents sharing any word
     * n-gram with a (small) benchmark set, with the shared-gram count as
-    * evidence. Here the "benchmark" is the first `nEvalDocs` documents
-    * (a stand-in for an external eval suite). Shape: the benchmark's
+    * evidence. Here the "benchmark" is the first [[EvalDocs]] documents.
+    * Shape: the benchmark's
     * distinct grams BROADCAST against the exploded corpus grams — a
     * corpus-scale semi-join keyed on the gram, never a pair join; at
     * 100 TB the corpus side streams map-only through the broadcast
     * filter. Shingles are per-doc distinct ([[Dedup.shingled]]), so
     * `count(*)` after the join IS the distinct shared-gram count. */
-  def decontamination(spark: SparkSession, sfDir: String,
-                      nEvalDocs: Int = 5): DataFrame = {
+  def decontamination(spark: SparkSession, sfDir: String): DataFrame = {
     val grams = Dedup.materializedShingled(spark, sfDir)
       .select(col("doc_id"), explode(col("shingles")).as("g"))
-    val evalGrams = grams.filter(col("doc_id") < nEvalDocs)
+    val evalGrams = grams.filter(col("doc_id") < EvalDocs)
       .select(col("g")).distinct()
-    grams.filter(col("doc_id") >= nEvalDocs)
+    grams.filter(col("doc_id") >= EvalDocs)
       .join(broadcast(evalGrams), "g")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared_grams"))
@@ -251,15 +255,12 @@ object TextOps {
 
   /** The MATERIALIZED q79 hit list — contamination-density-bounded
     * (doc_id, n_shared_grams), computed once per
-    * (session, sfDir, nEvalDocs). Five consumers read the identical
+    * (session, sfDir). Five consumers read the identical
     * list (q79 itself, q146's lexical anti-join, q155's report, the
     * q172/q175 funnel columns); before this layer each re-paid the full
     * corpus shingle explode + eval-gram join. */
-  def materializedDecontamHits(spark: SparkSession, sfDir: String,
-                               nEvalDocs: Int = 5): DataFrame =
-    graft.Layers.frame(spark, "decontam_hits", (sfDir, nEvalDocs)) {
-      decontamination(spark, sfDir, nEvalDocs)
-    }
+  def materializedDecontamHits(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "decontam_hits", sfDir)(decontamination(spark, sfDir))
 
   /** Corpus token accounting per language — the budget report a packing
     * / mixture-weighting step starts from: document count, whitespace
@@ -380,11 +381,9 @@ object TextOps {
     * shingle is capped is missed (see [[Dedup.DefaultMaxDf]] for the
     * documented miss mode; the exact-duplicate case is covered by
     * [[Dedup.exact]]). */
-  def containmentPairs(spark: SparkSession, sfDir: String,
-                       threshold: Double = 0.9,
-                       maxDf: Long = Dedup.DefaultMaxDf): DataFrame =
+  def containmentPairs(spark: SparkSession, sfDir: String, threshold: Double): DataFrame =
     containmentPairsCore(Dedup.materializedShingled(spark, sfDir),
-      Dedup.materializedCappedPostings(spark, sfDir, maxDf), threshold)
+      Dedup.materializedCappedPostings(spark, sfDir), threshold)
 
   /** [[containmentPairs]] over an arbitrary `(doc_id, shingles)` frame —
     * spec-visible so the DF-cap + direction-aware prefilter are
@@ -510,6 +509,9 @@ object TextOps {
       .groupBy(col("pair")).agg(sum(col("n")).as("freq"))
       .orderBy(desc("freq"), asc("pair")).limit(k)
 
+  /** Merges of the BPE queries (q131/q132/q160) and the `bpe_merges` layer. */
+  val BpeMerges = 10
+
   /** BPE vocabulary learning — the merge LOOP [[bpePairCounts]]'s
     * docstring defers to a driver harness: `merges` iterations of
     * (count weighted adjacent pairs over the word-frequency table) →
@@ -524,7 +526,7 @@ object TextOps {
     * inside recursion, which SQL engines reject); spec-verified
     * against an independent token-array driver BPE on planted words
     * and the real fixture. */
-  def bpeLearn(spark: SparkSession, sfDir: String, merges: Int = 10): DataFrame = {
+  def bpeLearn(spark: SparkSession, sfDir: String, merges: Int = BpeMerges): DataFrame = {
     import spark.implicits._
     learnedMerges(spark, sfDir, merges)
       .toSeq.toDF("rank", "left", "right", "merged", "freq")
@@ -672,7 +674,7 @@ object TextOps {
     * occurrence. Rows-only (depends on the learned merge chain);
     * spec asserts exact agreement with a driver-side apply plus the
     * compression invariant n_subwords ≤ n_chars. */
-  def bpeApply(spark: SparkSession, sfDir: String, merges: Int = 10): DataFrame = {
+  def bpeApply(spark: SparkSession, sfDir: String, merges: Int = BpeMerges): DataFrame = {
     val learned = learnedMerges(spark, sfDir, merges)
     val docs = Tables.documents(spark, sfDir)
     var vocab = docs
@@ -735,7 +737,7 @@ object TextOps {
     * languages-bounded key. Integer sums are exact under any
     * partitioning; only the final two ratios round. */
   def tokenizerFertility(spark: SparkSession, sfDir: String,
-                         merges: Int = 10): DataFrame = {
+                         merges: Int = BpeMerges): DataFrame = {
     val perDoc = bpeApply(spark, sfDir, merges)
       .select(col("doc_id"), col("n_words"), col("n_subwords"))
     val docs = Tables.documents(spark, sfDir)

@@ -57,11 +57,11 @@ object AvroSerde {
     }.toDF("key", "value")
   }
 
-  /** Decode binary Avro payloads back to typed rows (the from_avro
-    * analog). */
-  def decodeOrders(df: DataFrame, valueCol: String = "value"): Dataset[OrderRow] = {
+  /** Decode binary Avro payloads in the `value` column back to typed
+    * rows (the from_avro analog). */
+  def decodeOrders(df: DataFrame): Dataset[OrderRow] = {
     import df.sparkSession.implicits._
-    df.select(col(valueCol)).as[Array[Byte]].mapPartitions { payloads =>
+    df.select(col("value")).as[Array[Byte]].mapPartitions { payloads =>
       val schema = new Schema.Parser().parse(orderSchemaJson)
       val reader = new GenericDatumReader[GenericRecord](schema)
       payloads.map { bytes =>
@@ -149,14 +149,14 @@ object AvroSerde {
     }.toDF("key", "value")
   }
 
-  /** Decode registry-framed payloads: validate the magic byte, read the
+  /** Decode registry-framed payloads in the `value` column: validate the magic byte, read the
     * big-endian schema id, resolve the WRITER schema from the registry
     * stub, decode. Readers are cached per (partition, schema id) — the
     * same amortization a real registry deserializer applies. */
-  def decodeOrdersFramed(df: DataFrame, registry: SchemaRegistryStub = orderRegistry,
-                         valueCol: String = "value"): Dataset[OrderRow] = {
+  def decodeOrdersFramed(df: DataFrame,
+                         registry: SchemaRegistryStub = orderRegistry): Dataset[OrderRow] = {
     import df.sparkSession.implicits._
-    df.select(col(valueCol)).as[Array[Byte]].mapPartitions { payloads =>
+    df.select(col("value")).as[Array[Byte]].mapPartitions { payloads =>
       val readers = scala.collection.mutable.Map.empty[Int, GenericDatumReader[GenericRecord]]
       payloads.map { bytes =>
         val (id, body) = unframe(bytes)

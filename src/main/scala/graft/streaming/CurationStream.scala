@@ -62,7 +62,7 @@ object CurationStream {
     docs.withColumn("fp", sha2(col("text"), 256))
 
   /** Stage 1: one row per content fingerprint, state expiring past the
-    * watermark on `ts`. Input carries at least
+    * watermark on `ts` ([[IngestMonitorStream.WatermarkDelay]]). Input carries at least
     * (source, ts, text, n_chars). Which copy survives is the
     * `keep` rule: [[KeepRule.FirstArrival]] uses the dedicated
     * [[StreamingDedup.withinWatermark]] form (the engine evicts each
@@ -70,12 +70,11 @@ object CurationStream {
     * keeping dedup state rate-bounded instead of corpus-bounded);
     * [[KeepRule.TsLeast]] matches the batch keep rule for every
     * in-horizon competitor at one watermark delay of latency. */
-  def dedupedDocs(docs: DataFrame, watermark: String = "1 minute",
-                  keep: KeepRule = KeepRule.FirstArrival): DataFrame =
+  def dedupedDocs(docs: DataFrame, keep: KeepRule = KeepRule.FirstArrival): DataFrame =
     keep match {
       case KeepRule.FirstArrival =>
         StreamingDedup.withinWatermark(
-          fingerprinted(docs), "ts", watermark, "fp")
+          fingerprinted(docs), "ts", IngestMonitorStream.WatermarkDelay, "fp")
       case KeepRule.TsLeast =>
         val spark = docs.sparkSession
         import spark.implicits._
@@ -84,15 +83,14 @@ object CurationStream {
             .select(col("fp"), col("source"), col("ts"), col("text"),
               col("n_chars").cast("long").as("n_chars"))
             .as[StreamingDedup.FpDoc],
-          "ts", watermark).toDF()
+          "ts", IngestMonitorStream.WatermarkDelay).toDF()
     }
 
   /** Stages 1+2: the curated per-document stream — deduped docs that
     * pass the q27 gate, with the token count the downstream trainer
     * bills by. Append-mode, stateless past the dedup. */
-  def curatedStream(docs: DataFrame, watermark: String = "1 minute",
-                    keep: KeepRule = KeepRule.FirstArrival): DataFrame =
-    dedupedDocs(docs, watermark, keep)
+  def curatedStream(docs: DataFrame, keep: KeepRule = KeepRule.FirstArrival): DataFrame =
+    dedupedDocs(docs, keep)
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
       .withColumn("n_stop", graft.operators.TextOps.stopHits)
       .filter(graft.operators.TextOps.qualityGate)
@@ -102,13 +100,11 @@ object CurationStream {
     * deduped stream — (window, source) doc/token volumes and gate
     * pass rate, re-deliveries removed before they can inflate either
     * the volume or the pass rate. */
-  def curationMonitorStream(docs: DataFrame, watermark: String = "1 minute",
-                            width: String = "1 minute"): DataFrame =
+  def curationMonitorStream(docs: DataFrame): DataFrame =
     IngestMonitorStream.ingestCore(
       IngestMonitorStream.docMetrics(
-        dedupedDocs(docs, watermark)
-          .select(col("source"), col("ts"), col("text"), col("n_chars"))),
-      width)
+        dedupedDocs(docs)
+          .select(col("source"), col("ts"), col("text"), col("n_chars"))))
 
   /** Batch twin of [[dedupedDocs]]: first arrival = the (ts, source,
     * text)-least row per fingerprint. Deterministic on any engine —
@@ -143,10 +139,9 @@ object CurationStream {
       .select(col("fp"), col("source"), col("ts"), col("n_tokens"))
 
   /** Batch twin of [[curationMonitorStream]]. */
-  def batchMonitor(docs: DataFrame, width: String = "1 minute"): DataFrame =
+  def batchMonitor(docs: DataFrame): DataFrame =
     IngestMonitorStream.ingestCore(
       IngestMonitorStream.docMetrics(
         batchDeduped(docs)
-          .select(col("source"), col("ts"), col("text"), col("n_chars"))),
-      width)
+          .select(col("source"), col("ts"), col("text"), col("n_chars"))))
 }

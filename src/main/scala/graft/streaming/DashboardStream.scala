@@ -20,16 +20,14 @@ import org.apache.spark.sql.types.DecimalType
 object DashboardStream {
 
   /** events stream (event_id, ts, user_id, value) ⋈ static customers →
-    * tumbling revenue by market segment. */
-  def revenueBySegment(events: DataFrame, customers: DataFrame,
-                       width: String = "1 minute",
-                       watermarkDelay: String = "30 seconds"): DataFrame =
+    * 1-minute tumbling revenue by market segment, 30 s watermark. */
+  def revenueBySegment(events: DataFrame, customers: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "30 seconds")
       .join(broadcast(customers.select(col("c_custkey"), col("c_mktsegment"))),
         events("user_id") === col("c_custkey"), "left")
       .groupBy(
-        window(col("ts"), width).as("w"),
+        window(col("ts"), "1 minute").as("w"),
         coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
       .agg(
         round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2).as("revenue"),

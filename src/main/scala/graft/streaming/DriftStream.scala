@@ -29,9 +29,6 @@ import graft.functions.Drift
   */
 object DriftStream {
 
-  val Bins: Int = Drift.Bins
-  val Eps: Double = Drift.Eps
-
   /** Reference distribution from a batch snapshot: per event type, the
     * value range (bin edges) and each bin's share. Types×bins rows —
     * broadcastable at any corpus scale. */
@@ -39,7 +36,7 @@ object DriftStream {
     referenceShares(Tables.events(spark, sfDir).select(col("event_type"), col("value")))
 
   /** [[referenceShares]] over any `(event_type, value)` snapshot frame.
-    * Emits ALL `Bins` bins per type — bins the snapshot never hit carry
+    * Emits ALL [[Drift.Bins]] bins per type — bins the snapshot never hit carry
     * ε mass. Without the fill, live data landing in an unseen bin would
     * silently drop out of the monitor's denominator.
     *
@@ -67,8 +64,8 @@ object DriftStream {
         val byBin = rs.map(r => r.getAs[Int]("bin") -> r.getAs[Long]("n")).toMap
         val lo = rs.head.getAs[Double]("lo")
         val hi = rs.head.getAs[Double]("hi")
-        (0 until Bins).map { b =>
-          (et, lo, hi, b, math.max(byBin.getOrElse(b, 0L) / total, Eps))
+        (0 until Drift.Bins).map { b =>
+          (et, lo, hi, b, math.max(byBin.getOrElse(b, 0L) / total, Drift.Eps))
         }
       }
     rows.toDF("event_type", "lo", "hi", "bin", "p_ref")
@@ -79,23 +76,22 @@ object DriftStream {
   def binOf(value: Column, lo: Column, hi: Column): Column =
     Drift.binOf(value, lo, hi)
 
-  /** The STREAMING side: watermarked tumbling-window bin counts — a
+  /** The STREAMING side: watermarked 1-hour tumbling-window bin counts
+    * with a 10-minute watermark — a
     * single-level windowed aggregation (Append emits each closed
     * window once), left-joined map-side against the broadcast
     * reference edges. Event types the reference never saw keep their
     * rows with `bin = -1` (the stream-static LEFT join is what keeps
     * a brand-new type — itself a drift signal — from being silently
     * discarded). `events` needs (ts timestamp, event_type, value). */
-  def windowedBinCounts(events: DataFrame, reference: DataFrame,
-                        window: String = "1 hour",
-                        watermarkDelay: String = "10 minutes"): DataFrame = {
+  def windowedBinCounts(events: DataFrame, reference: DataFrame): DataFrame = {
     val edges = reference.select("event_type", "lo", "hi").distinct()
-    events.withWatermark("ts", watermarkDelay)
+    events.withWatermark("ts", "10 minutes")
       .join(broadcast(edges), Seq("event_type"), "left")
       .withColumn("bin",
         when(col("lo").isNull, lit(-1))
           .otherwise(Drift.binOf(col("value"), col("lo"), col("hi"))))
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window).as("w"),
+      .groupBy(window(col("ts"), "1 hour").as("w"),
         col("event_type"), col("bin"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("event_type"),
@@ -134,7 +130,7 @@ object DriftStream {
       .drop("o_ws", "o_et", "o_bin")
       .withColumn("p_cur",
         greatest(coalesce(col("n"), lit(0L)).cast("double") /
-          sum(coalesce(col("n"), lit(0L))).over(byWt).cast("double"), lit(Eps)))
+          sum(coalesce(col("n"), lit(0L))).over(byWt).cast("double"), lit(Drift.Eps)))
       .withColumn("term", Drift.psiTerm(col("p_cur"), col("p_ref")))
       .groupBy(col("window_start"), col("event_type"))
       .agg(round(sum(col("term")).cast("double"), 6).as("psi"),

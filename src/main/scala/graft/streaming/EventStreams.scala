@@ -14,16 +14,18 @@ import org.apache.spark.sql.types.DecimalType
   */
 object EventStreams {
 
+  /** Watermark delay of the session and interval-join streams. */
+  val WatermarkDelay = "10 seconds"
+
   /** Streaming session windows (gap-merged) per user. Append mode emits
     * a session exactly once, when the watermark passes `last event +
     * gap` — Spark's session state store merges overlapping windows
     * per key as events arrive, the same incremental shape Flink keeps
     * in keyed window state. Expects columns `user_id, ts (timestamp),
     * value`. */
-  def sessionAgg(events: DataFrame, gap: String = "30 minutes",
-                 watermarkDelay: String = "10 seconds"): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+  def sessionAgg(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(session_window(col("ts"), graft.operators.Analytics.SessionGap), col("user_id"))
       .agg(count(lit(1)).cast("long").as("n_events"),
         round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 2)
           .as("session_value"))
@@ -103,10 +105,9 @@ object EventStreams {
     * property that makes the join runnable indefinitely. Expects
     * columns `p_event_id, p_user, p_ts` / `v_event_id, v_user, v_ts,
     * v_value`. */
-  def purchasesWithRecentViews(purchases: DataFrame, views: DataFrame,
-                               watermarkDelay: String = "10 seconds"): DataFrame =
-    purchases.withWatermark("p_ts", watermarkDelay)
-      .join(views.withWatermark("v_ts", watermarkDelay),
+  def purchasesWithRecentViews(purchases: DataFrame, views: DataFrame): DataFrame =
+    purchases.withWatermark("p_ts", WatermarkDelay)
+      .join(views.withWatermark("v_ts", WatermarkDelay),
         expr("p_user = v_user AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts <= p_ts"))
       .select(col("p_event_id").as("event_id"), col("p_user").as("user_id"),
         col("v_event_id").as("view_id"), col("v_value").as("view_value"))

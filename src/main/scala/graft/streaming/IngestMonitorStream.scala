@@ -38,13 +38,18 @@ object IngestMonitorStream {
       .withColumn("passes", graft.operators.TextOps.qualityGate)
       .select(col("source"), col("ts"), col("n_tokens"), col("passes"))
 
+  /** The monitors' tumbling window and the live monitors' watermark
+    * delay (the curation stream's dedup horizon too). */
+  val WindowInterval = "1 minute"
+  val WatermarkDelay = "1 minute"
+
   /** The shared windowed aggregation: (window, source) → doc count,
     * token volume, gate pass count + rate. Works unchanged on a static
     * frame (q140) and a watermarked stream (same physical aggregation
     * Structured Streaming runs incrementally). */
-  def ingestCore(metrics: DataFrame, width: String = "1 minute"): DataFrame =
+  def ingestCore(metrics: DataFrame): DataFrame =
     metrics
-      .groupBy(window(col("ts"), width).as("w"), col("source"))
+      .groupBy(window(col("ts"), WindowInterval).as("w"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
         sum(when(col("passes"), 1L).otherwise(0L)).as("n_passed"))
@@ -61,21 +66,19 @@ object IngestMonitorStream {
   val EpochBase: Long = 1704067200L
 
   /** q140: the batch monitor over the documents table. */
-  def batchMonitor(spark: SparkSession, sfDir: String,
-                   width: String = "1 minute"): DataFrame =
+  def batchMonitor(spark: SparkSession, sfDir: String): DataFrame =
     ingestCore(docMetrics(
       Tables.documents(spark, sfDir)
         .withColumn("ts", timestamp_seconds(lit(EpochBase) + col("doc_id")))
-        .select(col("source"), col("ts"), col("text"), col("n_chars"))), width)
+        .select(col("source"), col("ts"), col("text"), col("n_chars"))))
 
   /** The streaming twin: watermarked append-mode aggregation over a
     * live (source, ts, text, n_chars) stream. Late documents beyond
     * the watermark drop (at-most-once per window emission — the
     * supplier-stats Append discipline); spec asserts closed windows
     * equal [[ingestCore]] on the same rows. */
-  def monitorStream(docs: DataFrame, watermark: String = "1 minute",
-                    width: String = "1 minute"): DataFrame =
-    ingestCore(docMetrics(docs).withWatermark("ts", watermark), width)
+  def monitorStream(docs: DataFrame): DataFrame =
+    ingestCore(docMetrics(docs).withWatermark("ts", WatermarkDelay))
 
   /** Convenience column for spec corpora that carry raw text only. */
   def charCount(text: Column): Column = length(text).cast("long")

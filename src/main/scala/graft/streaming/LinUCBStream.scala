@@ -21,6 +21,10 @@ import graft.ml.LinUCB.{invertRowMajor, outerAccum, Feedback, Model}
   */
 object LinUCBStream {
 
+  /** The trainer's model-emission cadence in ms; the event-time
+    * trainer's watermark delay too. */
+  val EmitEveryMs = 5000L
+
   /** Keyed training state: A (d×d row-major, starts at I), b, count,
     * plus the arm's absolute next-emission deadline (processing-time
     * ms; 0 = not yet scheduled). */
@@ -176,24 +180,23 @@ object LinUCBStream {
     * `spark.sql.streaming.stateStore.providerClass =
     * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
     * (runtime-settable; exercised by the replay spec). */
-  def trainEventTime(feedback: Dataset[TimedFeedback], dim: Int,
-                     delayMs: Long = 5000L): Dataset[Model] = {
+  def trainEventTime(feedback: Dataset[TimedFeedback], dim: Int): Dataset[Model] = {
     import feedback.sparkSession.implicits._
-    // ONE knob: the watermark delay derives from the same delayMs as
-    // the emission deadlines — two independently-passed parameters
-    // silently disagreeing (watermark 60 s, deadlines +5 s) would clamp
-    // every deadline to watermark+1 and emit on every trigger.
-    feedback.withWatermark("ts", s"$delayMs milliseconds")
+    // ONE knob: the watermark delay is the emission cadence that sets
+    // the deadlines — the two disagreeing (watermark 60 s, deadlines
+    // +5 s) would clamp every deadline to watermark+1 and emit on every
+    // trigger.
+    feedback.withWatermark("ts", s"$EmitEveryMs milliseconds")
       .groupByKey(_.productId)
       .flatMapGroupsWithState[ArmState, Model](
         OutputMode.Update(), GroupStateTimeout.EventTimeTimeout())(
-        updateArmEventTime(dim, delayMs))
+        updateArmEventTime(dim, EmitEveryMs))
   }
 
   /** Wire the stateful trainer onto a feedback stream. Output mode for
     * the query must be Update (state-emitting operator). */
   def train(feedback: Dataset[Feedback], dim: Int,
-            emitEveryMs: Long = 5000L): Dataset[Model] = {
+            emitEveryMs: Long = EmitEveryMs): Dataset[Model] = {
     import feedback.sparkSession.implicits._
     val timeout =
       if (emitEveryMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
@@ -223,7 +226,7 @@ object LinUCBStream {
     * stream overwrite arms as live data arrives; the store's
     * latest-per-arm merge makes the two paths compose. */
   def trainWithBootstrap(history: Dataset[Feedback], live: Dataset[Feedback],
-                         dim: Int, emitEveryMs: Long = 5000L): Dataset[Model] = {
+                         dim: Int, emitEveryMs: Long = EmitEveryMs): Dataset[Model] = {
     import live.sparkSession.implicits._
     val timeout =
       if (emitEveryMs > 0) GroupStateTimeout.ProcessingTimeTimeout()

@@ -16,7 +16,7 @@ import graft.operators.SupplierStats
   * Spark shape (SURVEY.md §3.2): source → parse `bid_time`
   * ("yyyy-MM-dd HH:mm:ss", `ProducerApp.kt:76-83`) → `withWatermark` (the
   * reference's bounded out-of-orderness, 5 s,
-  * `SupplierWatermarkStrategy.kt:14-16`) → the SAME `aggCore` transform
+  * `SupplierWatermarkStrategy.kt:14-16`; [[SupplierStats.GraceSeconds]]) → the SAME `aggCore` transform
   * the batch query uses → formatted window bounds. `OutputMode.Append`
   * emits once per closed window (the Streams/suppress analog);
   * `OutputMode.Update` re-emits on late updates within the watermark
@@ -67,13 +67,13 @@ object SupplierStatsStream {
     StructField("item", StringType),
     StructField("supplier", StringType)))
 
-  /** Parse the wire form: JSON bytes/strings → typed columns with
+  /** Parse the wire form in the `value` column: JSON bytes/strings → typed columns with
     * event-time extraction and the reference's fallback semantics
     * (unparseable `bid_time` → processing time,
     * `BidTimeTimestampExtractor.kt:23-27`; missing supplier → UNKNOWN,
     * price → 0.0, `StreamsApp.kt:132-135`). */
-  def parseOrders(raw: DataFrame, valueCol: String = "value"): DataFrame =
-    raw.select(from_json(col(valueCol).cast("string"), orderSchema).as("o"))
+  def parseOrders(raw: DataFrame): DataFrame =
+    raw.select(from_json(col("value").cast("string"), orderSchema).as("o"))
       .select(
         col("o.order_id").as("order_id"),
         // try_to_timestamp: under ANSI mode (Spark 4 default) a plain
@@ -92,11 +92,8 @@ object SupplierStatsStream {
     * semantics. Works on batch and streaming frames alike
     * (`mapPartitions` under the hood, one reader per partition per
     * schema id). */
-  def parseAvroFramedOrders(raw: DataFrame,
-                            registry: graft.sources.AvroSerde.SchemaRegistryStub =
-                              graft.sources.AvroSerde.orderRegistry,
-                            valueCol: String = "value"): DataFrame =
-    graft.sources.AvroSerde.decodeOrdersFramed(raw, registry, valueCol).toDF()
+  def parseAvroFramedOrders(raw: DataFrame): DataFrame =
+    graft.sources.AvroSerde.decodeOrdersFramed(raw).toDF()
       .select(
         col("order_id"),
         coalesce(try_to_timestamp(col("bid_time"), lit("yyyy-MM-dd HH:mm:ss")),
@@ -105,14 +102,13 @@ object SupplierStatsStream {
         col("item"),
         coalesce(col("supplier"), lit("UNKNOWN")).as("supplier"))
 
-  /** The streaming query: watermark + the shared batch/stream agg core. */
-  def stats(orders: DataFrame,
-            watermarkDelay: String = "5 seconds",
-            width: String = "5 seconds"): DataFrame =
+  /** The streaming query: the grace as watermark delay + the shared
+    * batch/stream agg core. */
+  def stats(orders: DataFrame): DataFrame =
     SupplierStats.format(
       SupplierStats.aggCore(
-        orders.withWatermark("bid_time", watermarkDelay),
-        col("bid_time"), col("supplier"), col("price"), width))
+        orders.withWatermark("bid_time", SupplierStats.GraceInterval),
+        col("bid_time"), col("supplier"), col("price")))
 
   // --- Late-data side-output emulation (T6) ---
   // Spark drops watermark-late rows silently inside the stateful agg and
@@ -132,20 +128,19 @@ object SupplierStatsStream {
     @volatile var maxSeenUs: Long = Long.MinValue
   }
 
-  /** foreachBatch body: tag `late` against stream time observed so far,
-    * route valid rows through `onValid`, late rows (enriched with
+  /** foreachBatch body: tag `late` against stream time observed so far
+    * ([[SupplierStats.lateFlag]], the batch query's rule), route valid
+    * rows through `onValid`, late rows (enriched with
     * `late=true` like the reference's skipped topic,
     * `DataStreamApp.kt:112-129`) through `onLate`, then advance the
     * tracker. */
-  def forkBatch(tracker: StreamTimeTracker,
-                windowUs: Long = 5000000L, graceUs: Long = 5000000L)(
+  def forkBatch(tracker: StreamTimeTracker)(
       onValid: DataFrame => Unit, onLate: DataFrame => Unit)(
       batch: DataFrame, batchId: Long): Unit = {
     val withTs = batch.withColumn("ts_us", unix_micros(col("bid_time")))
     val cutoff = tracker.maxSeenUs
     val tagged = withTs.withColumn("late",
-      lit(cutoff) > (col("ts_us") - pmod(col("ts_us"), lit(windowUs)) +
-        lit(windowUs) + lit(graceUs)))
+      SupplierStats.lateFlag(col("ts_us"), lit(cutoff)))
     tagged.cache()
     try {
       onValid(tagged.filter(!col("late")).drop("late", "ts_us"))

@@ -51,6 +51,18 @@ class HarnessSpec extends SparkSpec {
     assert(e.getMessage.contains("q01_pricing_sumary"))
   }
 
+  test("a targeted bench builds exactly the layers its queries record") {
+    val named = Seq("q131_bpe_learn", "q142_embedding_decontam")
+    val derived = Bench.warmQueries(spark.newSession(), sf(), Seq(named.mkString(",")))
+    val fresh = spark.newSession()
+    val (_, builds) = Layers.recording(named.foreach(q => SparkEntry.queries(q)(fresh, sf())))
+    val recorded = builds.map(_.name).filter(SparkEntry.layers.contains).distinct.sorted
+    assert(derived == recorded)
+    assert(derived == Seq("bpe_merges", "embedding_decontam"))
+    assert(Bench.warmQueries(spark.newSession(), sf(), Nil) ==
+      SparkEntry.layers.keys.toSeq.sorted)
+  }
+
   test("no fixture pin is violated on the sf0.001 lake") {
     assert(Verify.droppedOracles(spark, sf(), SparkEntry.oracleSql.keySet).isEmpty)
   }

@@ -163,7 +163,7 @@ class PqSpec extends SparkSpec {
     // the composition invariant (the IVF family's probe-all ≡ brute
     // rule, one level up): with every cell probed the candidate set is
     // the full corpus, so cell pruning must change NOTHING
-    val all = Pq.ivfAdcTopK(spark, sf("0.001"), kClusters = 16, nProbe = 16)
+    val all = Pq.ivfAdcTopK(spark, sf("0.001"), nProbe = 16)
       .as[(Long, Long, Long, Double)].collect().toSet
     val plain = Pq.adcTopK(spark, sf("0.001"))
       .as[(Long, Long, Long, Double)].collect().toSet
