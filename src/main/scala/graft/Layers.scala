@@ -29,7 +29,13 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *    static map holds a session or a layer), so a dropped session's
   *    layers become garbage with it and the ContextCleaner releases
   *    their blocks; one listener per SparkContext drops every entry
-  *    when the context stops.
+  *    when the context stops. One exception: AQE's stage pools
+  *    (`QueryStageCreator`, `ResultQueryStageExecution`,
+  *    `shuffle-exchange`) copy the caller's active session into every
+  *    thread they create, so a dropped session, and with it its layer
+  *    store, stays reachable until those threads idle out, about 60 s
+  *    later. That is why `LayersSpec` turns AQE off in its session: it
+  *    tests the store's own lifetime alone.
   *
   * CONTRACT: a layer is valid while RESIDENT. Consumers re-enter
   * through the layer getter (e.g. `Dedup.materializedClusters`) — an

@@ -64,8 +64,7 @@ object SparkEntry {
     "q27_quality_score" -> ((s, d) => TextOps.qualityScore(s, d)),
     "q28_lang_id" -> ((s, d) => TextOps.langId(s, d)),
     // fingerprint VALUES are engine-specific; the dup-partition
-    // contract they exist for is hash-checked (raw values stay on
-    // TextOps.fingerprints)
+    // contract they exist for is hash-checked
     "q29_fingerprints" -> ((s, d) => TextOps.fingerprintsChecked(s, d)),
     // --- LinUCB bandit (hash-checked since r11: the decimal-exact
     // seed layer makes A and b externally recomputable, and the
@@ -172,7 +171,6 @@ object SparkEntry {
     "q83_containment" -> ((s, d) => TextOps.containmentPairs(s, d, 0.8)),
     // HLL sketch estimates are engine-specific, but their error
     // envelope vs the exact counts is an exact boolean — hash-checked
-    // (the sketch-only scale path stays dashboardMetricsApprox)
     "q84_approx_distinct" -> ((s, d) => Relational.dashboardMetricsChecked(s, d)),
     // GK-sketch percentiles: rank-window contract hash-checked the
     // same way (sketch-only path stays valuePercentilesApprox)
@@ -545,7 +543,7 @@ object SparkEntry {
     // paid once
     "policy_ranked" -> ((s, d) => { graft.ml.PolicyEval.rankedScores(s, d); () }),
     // learned BPE merge table (q131/q132)
-    "bpe_merges" -> ((s, d) => { TextOps.learnedMerges(s, d, TextOps.BpeMerges); () }),
+    "bpe_merges" -> ((s, d) => { TextOps.learnedMerges(s, d); () }),
     // duplicated-span table (q133 reads it, q134 strips through it)
     "dup_spans" -> ((s, d) => { operators.Dedup.materializedDupSpans(s, d); () }),
     // verified near-dup pairs at 0.5 — read by q20, q156 and the

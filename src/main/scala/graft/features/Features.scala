@@ -213,10 +213,13 @@ object Features {
     * costs the driver O(V·k), never O(V²). Right-singular-vector
     * signs are canonicalized (first nonzero coordinate positive) so
     * the embedding is deterministic across runs. */
-  def textEmbedding(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
+  def textEmbedding(spark: SparkSession, sfDir: String): DataFrame = {
     val (vecs, v) = tfidfVectors(spark, sfDir)
-    svdProject(spark, vecs, v, k)
+    svdProject(spark, vecs, v, EmbeddingDims)
   }
+
+  /** The SVD embeddings' dimension (both vector spaces). */
+  val EmbeddingDims = 10
 
   /** Shared truncated-SVD projection: randomized subspace iteration on
     * the `vec` column (dimension `v`), Rayleigh–Ritz on the driver
@@ -413,8 +416,8 @@ object Features {
     * an unbounded vocabulary. Near-dup preservation is spec-asserted
     * (identical texts ⇒ identical embeddings; high-Jaccard pairs stay
     * high-cosine vs the random-pair background). */
-  def textEmbeddingHashed(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame =
-    svdProject(spark, tfidfHashedVectors(spark, sfDir), HashDim, k)
+  def textEmbeddingHashed(spark: SparkSession, sfDir: String): DataFrame =
+    svdProject(spark, tfidfHashedVectors(spark, sfDir), HashDim, EmbeddingDims)
 
   // --- Envelope (checked) query surfaces for the SVD embeddings ---
   //
@@ -548,7 +551,7 @@ object Features {
     * ~k/V ≈ 0.32 of the energy at best). */
   def textEmbeddingCheckedQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val (vecs, v) = tfidfVectors(spark, sfDir)
-    embeddingEnvelope(spark, sfDir, vecs, v, k = 10, captureFloor = 0.50,
+    embeddingEnvelope(spark, sfDir, vecs, v, EmbeddingDims, captureFloor = 0.50,
       space = "dense")
   }
 
@@ -558,7 +561,7 @@ object Features {
     * captures ~0.04). */
   def textEmbeddingHashedCheckedQuery(spark: SparkSession, sfDir: String): DataFrame =
     embeddingEnvelope(spark, sfDir, tfidfHashedVectors(spark, sfDir),
-      HashDim, k = 10, captureFloor = 0.50, space = "hashed")
+      HashDim, EmbeddingDims, captureFloor = 0.50, space = "hashed")
 
   /** F15: context assembly — fixed-order feature vector from the joined
     * feature frames (user one-hots + time context), the exact shape the

@@ -226,6 +226,11 @@ object LinUCB {
     mean + nu * noise
   }
 
+  /** The exploration weight and the arms kept per context wherever
+    * the engine serves: q31 and [[graft.streaming.LinUCBServeStream]]. */
+  val ServeAlpha = 0.5
+  val ServeK = 3
+
   /** J5/O2: score every arm for every context and keep top-k — the
     * serving path as one plan: contexts ⋈ broadcast(models) → score →
     * per-context top-k via row_number (no global sort). */
@@ -363,6 +368,6 @@ object LinUCB {
         (col("id") % 7).cast("double") / lit(7.0),
         (col("id") % 3).cast("double") / lit(30.0),
         lit(0.05)).as("x"))
-    topK(contexts, models, alpha = 0.5, k = 3)(spark)
+    topK(contexts, models, ServeAlpha, ServeK)(spark)
   }
 }

@@ -128,27 +128,28 @@ object Analytics {
     * partitioning, every rerun assigns each document the identical
     * split, which is what makes downstream metrics comparable across
     * reprocessings. A 100 TB corpus streams through this map-only
-    * projection; the split fractions land within sampling error of the
-    * configured rates by hash uniformity (spec-asserted). */
-  def splitAssign(spark: SparkSession, sfDir: String,
-                  trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
+    * projection; the split fractions land within sampling error of
+    * 80/10/10 by hash uniformity (spec-asserted). */
+  def splitAssign(spark: SparkSession, sfDir: String): DataFrame = {
     val u = arithHash(col("doc_id")) / lit(1048576.0)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), round(u, 6).as("u"),
-        splitOf(col("doc_id"), trainFrac, valFrac).as("split"))
+        splitOf(col("doc_id")).as("split"))
   }
+
+  /** The train and validation shares of the q81 split (test takes the rest). */
+  private val TrainFrac = 0.8
+  private val ValFrac = 0.1
 
   /** The q81 split as a pure COLUMN of the key — the one definition
     * [[splitAssign]] materializes per document and consumers like
     * [[Dedup.splitLeakage]] evaluate map-side on whatever key column
     * they hold, instead of shuffling a corpus-sized assignment frame
     * through a join. */
-  private[operators] def splitOf(key: org.apache.spark.sql.Column,
-                                 trainFrac: Double = 0.8,
-                                 valFrac: Double = 0.1): org.apache.spark.sql.Column = {
+  private[operators] def splitOf(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val u = arithHash(key) / lit(1048576.0)
-    when(u < trainFrac, "train")
-      .when(u < trainFrac + valFrac, "val")
+    when(u < TrainFrac, "train")
+      .when(u < TrainFrac + ValFrac, "val")
       .otherwise("test")
   }
 
@@ -157,12 +158,11 @@ object Analytics {
     * id). Unlike `TABLESAMPLE`/`rand()`, re-running or re-partitioning
     * can never change the sample — the "reservoir" is a pure function
     * of the keys. The scale path is the pre-filter: only rows whose
-    * hash falls in the smallest `preKeep` fraction ever reach the
-    * per-group window, so the ranked data is a sliver of the fact
-    * table; the spec asserts the filter is invisible to the result
-    * (it keeps ≫ 5 rows per group at any tested sf). */
-  def groupSample(spark: SparkSession, sfDir: String,
-                  preKeep: Double = 0.05): DataFrame = {
+    * hash falls in the smallest 5% ever reach the per-group window, so
+    * the ranked data is a sliver of the fact table; the spec asserts
+    * the filter is invisible to the result (it keeps ≫ 5 rows per
+    * group at any tested sf). */
+  def groupSample(spark: SparkSession, sfDir: String): DataFrame = {
     val M = 1048576L
     val h = arithHash(col("event_id"))
     val w = Window.partitionBy(col("event_type"))
@@ -170,7 +170,7 @@ object Analytics {
     Tables.events(spark, sfDir)
       .select(col("event_type"), col("event_id"), col("user_id"))
       .withColumn("h", h)
-      .filter(col("h") < lit((M * preKeep).toLong))
+      .filter(col("h") < lit((M * 0.05).toLong))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("event_type"), col("rk").cast("long").as("rk"),
@@ -190,7 +190,7 @@ object Analytics {
     * unique. Shape: map-only scoring + `TakeOrderedAndProject` (per-
     * partition top-k, k-row merge on the driver — no global sort, no
     * shuffle of the corpus). */
-  def weightedSample(spark: SparkSession, sfDir: String, k: Int = 50): DataFrame = {
+  def weightedSample(spark: SparkSession, sfDir: String): DataFrame = {
     // offset 7919 = an independent stream from the split/stratify draws
     val h = arithHash(col("doc_id"), offset = 7919L)
     val u = (h.cast("double") + lit(0.5)) / lit(1048576.0)
@@ -199,7 +199,7 @@ object Analytics {
         round(-log(u) / greatest(col("n_chars"), lit(1L)).cast("double"), 9)
           .as("key"))
       .orderBy(col("key"), col("doc_id"))
-      .limit(k)
+      .limit(50)
   }
 
   /** Explicit GROUPING SETS — the third member of the grouping-sets
@@ -631,9 +631,6 @@ object Analytics {
       .withColumn("drifted", col("psi") > Drift.Threshold)
   }
 
-  /** Corpus bigram frequency, top 20 (count desc, bigram asc): the
-    * explode → groupBy shape whose shuffle carries (bigram, partial
-    * count) — map-side combine keeps it narrow at corpus scale. */
   /** The ONE adjacent-token pair fan-out, shared by [[topBigrams]] and
     * [[bigramPmi]]: tokenize ONCE per row (the lambda would otherwise
     * re-split per reference — Catalyst does not CSE inside higher-order
@@ -649,13 +646,16 @@ object Analytics {
         .as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
 
-  def topBigrams(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame =
+  /** Corpus bigram frequency, top 20 (count desc, bigram asc): the
+    * explode → groupBy shape whose shuffle carries (bigram, partial
+    * count) — map-side combine keeps it narrow at corpus scale. */
+  def topBigrams(spark: SparkSession, sfDir: String): DataFrame =
     tokenPairs(spark, sfDir)
       .select(concat_ws(" ", col("w1"), col("w2")).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("bigram"))
-      .limit(k)
+      .limit(20)
 
   /** Collocation mining via pointwise mutual information — the step
     * past raw bigram counts ([[topBigrams]]): score each bigram by
@@ -666,10 +666,10 @@ object Analytics {
     * broadcast twice into the bigram frame, totals as a 1-row
     * broadcast. The PMI expression keeps ONE division/association
     * order, mirrored exactly in the oracle, and ranks on the 6dp-
-    * rounded score with a bigram tie-break. `minCount` suppresses the
-    * unstable low-frequency tail (classic collocation practice). */
-  def bigramPmi(spark: SparkSession, sfDir: String, k: Int = 20,
-                minCount: Int = 5): DataFrame = {
+    * rounded score with a bigram tie-break; the top 20 are kept. A
+    * floor of 5 occurrences suppresses the unstable low-frequency tail
+    * (classic collocation practice). */
+  def bigramPmi(spark: SparkSession, sfDir: String): DataFrame = {
     // Unigram counts derive EXACTLY from the session's shared
     // term-frequency index (`cw = Σ tf` over the term's postings — the
     // q91/q100 discipline): the query's former private tokenize +
@@ -688,7 +688,7 @@ object Analytics {
     val bi = tokenPairs(spark, sfDir)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cab"))
-      .filter(col("cab") >= minCount)
+      .filter(col("cab") >= 5)
     bi.join(broadcast(uni.withColumnRenamed("w", "w1")
         .withColumnRenamed("cw", "ca")), "w1")
       .join(broadcast(uni.withColumnRenamed("w", "w2")
@@ -701,7 +701,7 @@ object Analytics {
       .select(concat_ws(" ", col("w1"), col("w2")).as("bigram"),
         col("cab"), col("ca"), col("cb"), col("pmi"))
       .orderBy(desc("pmi"), asc("bigram"))
-      .limit(k)
+      .limit(20)
   }
 
   /** Categorical mutual information — the feature-selection statistic

@@ -44,9 +44,12 @@ object BinaryAnn {
   private def hammingDist(aLo: Column, aHi: Column, bLo: Column, bHi: Column): Column =
     (bit_count(aLo.bitwiseXOR(bLo)) + bit_count(aHi.bitwiseXOR(bHi))).cast("long")
 
+  /** Hamming candidates per query that q159's exact stage re-ranks. */
+  val CandPerQuery = 20
+
   /** q159: two-stage binary ANN. Stage 1 ranks the corpus per query by
-    * Hamming distance over the packed codes and keeps the top
-    * `candPerQuery` ids; stage 2 re-ranks ONLY those candidates by
+    * Hamming distance over the packed codes and keeps the
+    * [[CandPerQuery]] nearest ids; stage 2 re-ranks ONLY those candidates by
     * exact cosine (same 4dp rounding + id tie-break as q24's brute
     * baseline) and emits the top [[Ann.TopK]] with both distances, so the
     * output exposes what the cheap stage saw and what the exact stage
@@ -56,17 +59,16 @@ object BinaryAnn {
     * against a broadcast [[Ann.NQueries]]-row query frame — two XORs and two
     * popcounts per pair, never a float vector in flight; the per-query
     * window runs on (qid, hamming, vec_id) triples. The re-rank side
-    * is `nQueries × candPerQuery` rows joined back to the float table
+    * is `nQueries × CandPerQuery` rows joined back to the float table
     * on vec_id — a broadcast-able sliver at any corpus size. Recall is
-    * governed by `candPerQuery` exactly as nProbe governs IVF. */
-  def hammingTopK(spark: SparkSession, sfDir: String,
-                  candPerQuery: Int = 20): DataFrame = {
+    * governed by [[CandPerQuery]] exactly as nProbe governs IVF. */
+  def hammingTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val codes = packed(spark, sfDir)
     val qCodes = Ann.queryFrame(codes, Ann.NQueries, "b_lo" -> "q_lo", "b_hi" -> "q_hi")
     // stage 1: the shared rank tail by ASCENDING distance
     val cand = Ann.topK(Ann.candidates(codes, qCodes).withColumn("hamming",
         hammingDist(col("b_lo"), col("b_hi"), col("q_lo"), col("q_hi"))),
-        candPerQuery, asc("hamming"))
+        CandPerQuery, asc("hamming"))
       .select(col("qid"), col("vec_id"), col("hamming"))
     // exact re-rank: only the candidate ids pull their float vectors
     val e = Ann.normed(Tables.embeddings(spark, sfDir))
@@ -79,10 +81,9 @@ object BinaryAnn {
 
   /** Recall@k of the binary pipeline against exact brute force — the
     * q136/q143/q144 gate pattern applied to the sign-quantized codes:
-    * measured, not assumed, and tunable via `candPerQuery`. */
-  def hammingRecallVsBrute(spark: SparkSession, sfDir: String,
-                           candPerQuery: Int = 20): DataFrame =
+    * measured, not assumed, at [[CandPerQuery]] candidates. */
+  def hammingRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
     Ann.recall(
-      hammingTopK(spark, sfDir, candPerQuery),
+      hammingTopK(spark, sfDir),
       Similarity.bruteForceTopK(spark, sfDir))
 }

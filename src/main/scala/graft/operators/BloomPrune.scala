@@ -22,7 +22,7 @@ import graft.functions.ExactNum._
   * (which injects the same BloomFilterAggregate/MightContain pair under
   * AQE when stats justify it). Building the sketch via
   * `df.stat.bloomFilter` keeps the bitmap bounded (numBits from
-  * expectedItems×fpp, independent of fact size); probing reuses
+  * the dim key count and the fpp, independent of fact size); probing reuses
   * Catalyst's codegen'd [[BloomFilterMightContain]], so the probe stays
   * inside whole-stage codegen — no Scala UDF on the hot path.
   *
@@ -35,15 +35,14 @@ object BloomPrune {
   /** `fact` rows whose `factKey` might be in `dim`'s `dimKey` set.
     * Key columns must be integral (probed as long).
     *
-    * `expectedItems <= 0` (the default) sizes the filter from
-    * `dim.count()` — one cheap action over the already-filtered dim
-    * side. A fixed capacity would silently saturate at larger scale
-    * factors (fpp degrades toward 1 and the pruning claim evaporates,
-    * even though the exact join keeps the RESULT correct); callers that
-    * know a tight upper bound can pass it to skip the count.
+    * The filter is sized from `dim.count()` — one cheap action over
+    * the already-filtered dim side — at a 1% false-positive rate. A
+    * fixed capacity would silently saturate at larger scale factors
+    * (fpp degrades toward 1 and the pruning claim evaporates, even
+    * though the exact join keeps the RESULT correct).
     *
     * The built sketch (count pass + aggregation pass) is memoized per
-    * (session, canonicalized dim plan, key, sizing) — repeat callers
+    * (session, canonicalized dim plan, key) — repeat callers
     * of the same pruned join (dashboard refresh, bench iterations)
     * reuse the serialized bitmap instead of re-scanning the dim twice
     * per call. Keying on the CANONICALIZED logical plan makes cache
@@ -56,15 +55,10 @@ object BloomPrune {
     * files mid-session requires a new session to avoid a stale
     * bitmap, the standard warehouse snapshot assumption. */
   def prunedFact(fact: DataFrame, factKey: String,
-                 dim: DataFrame, dimKey: String,
-                 expectedItems: Long = -1L,
-                 fpp: Double = 0.01): DataFrame = {
-    val cacheKey = (dim.queryExecution.analyzed.canonicalized,
-      dimKey, expectedItems, fpp)
+                 dim: DataFrame, dimKey: String): DataFrame = {
+    val cacheKey = (dim.queryExecution.analyzed.canonicalized, dimKey)
     val bytes = graft.Layers.value(dim.sparkSession, "bloom_filter", cacheKey) {
-      val expected =
-        if (expectedItems > 0) expectedItems else math.max(dim.count(), 1L)
-      val bf = dim.stat.bloomFilter(dimKey, expected, fpp)
+      val bf = dim.stat.bloomFilter(dimKey, math.max(dim.count(), 1L), 0.01)
       val bos = new ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray

@@ -194,19 +194,16 @@ object Dedup {
       materializedCappedPostings(spark, sfDir), threshold)
 
   /** The MATERIALIZED verified near-dup pair layer (`near_pairs`):
-    * [[jaccardPairs]] at `threshold` computed once per (session,
-    * sfDir, threshold) and re-entered as a checkpointed frame. Three
+    * [[jaccardPairs]] at [[NearDupThreshold]] computed once per
+    * (session, sfDir) and re-entered as a checkpointed frame. Three
     * consumers read the identical pair set — the q20 report, the
     * q156 flow matrix, and the cluster-label build — and before this
     * layer each re-ran the full shingle-join + verification pass
     * (q156 alone paid ~3 s of the ~4 s the bench charged it). The
     * pair frame is near-dup-density-bounded, so the checkpoint is
     * tiny relative to the corpus at any scale. */
-  def materializedNearPairs(spark: SparkSession, sfDir: String,
-                            threshold: Double = NearDupThreshold): DataFrame =
-    graft.Layers.frame(spark, "near_pairs", (sfDir, threshold)) {
-      jaccardPairs(spark, sfDir, threshold)
-    }
+  def materializedNearPairs(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "near_pairs", sfDir)(jaccardPairs(spark, sfDir, NearDupThreshold))
 
   /** q156: the cross-source duplicate-flow matrix — for every
     * unordered source pair, how many verified near-dup pairs
@@ -260,14 +257,8 @@ object Dedup {
     * evaluated map-side on doc_i/doc_j (the q81 hash is a pure
     * function of the key), so no corpus-sized assignment frame ever
     * joins or shuffles. The matrix aggregation is splits²-bounded. */
-  def splitLeakage(spark: SparkSession, sfDir: String,
-                   trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
-    // fractions are parameters (defaulting to splitAssign's own
-    // defaults) so a pipeline running a non-default split can audit THE
-    // split it uses — an audit hard-wired to 0.8/0.1 would silently
-    // check a different partition than the one in production
-    def splitOf(c: org.apache.spark.sql.Column) =
-      Analytics.splitOf(c, trainFrac, valFrac)
+  def splitLeakage(spark: SparkSession, sfDir: String): DataFrame = {
+    import Analytics.splitOf
     def matrix(pairs: DataFrame, as: String): DataFrame = pairs
       .select(least(splitOf(col("doc_i")), splitOf(col("doc_j"))).as("split_a"),
         greatest(splitOf(col("doc_i")), splitOf(col("doc_j"))).as("split_b"))
@@ -491,13 +482,12 @@ object Dedup {
     * their own cluster. `cluster_id` = min doc_id of the component —
     * the canonical representative, which is what a keep-one dedup pass
     * keys on. */
-  def nearDupClusters(spark: SparkSession, sfDir: String,
-                      threshold: Double = NearDupThreshold): DataFrame = {
+  def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     // the lake path reads the near_pairs layer (one pair build per
     // session, shared with q20/q156); the spec-generic planted-corpus
     // path below keeps building its own pairs
     val docs = Tables.documents(spark, sfDir)
-    val edges = materializedNearPairs(spark, sfDir, threshold)
+    val edges = materializedNearPairs(spark, sfDir)
       .select(col("doc_i"), col("doc_j"))
       .unionByName(materializedExactEdges(spark, sfDir))
     docs.select(col("doc_id"))
@@ -548,18 +538,15 @@ object Dedup {
   }
 
   /** The MATERIALIZED cluster-label layer: [[nearDupClusters]] computed
-    * once per (session, sfDir, threshold) and re-entered as a
+    * once per (session, sfDir) and re-entered as a
     * checkpointed frame. In a real pipeline the dedup labels are written
     * once and every downstream consumer reads the materialization — the
     * round-5 anti-pattern was q62 re-running the whole shingle join +
     * label propagation that q60 had just produced. Consumers
     * ([[clusterKeep]], [[TextOps.corpusFilter]]) build on this frame, so
     * their plans contain ZERO shingle explodes (plan-audited). */
-  def materializedClusters(spark: SparkSession, sfDir: String,
-                           threshold: Double = NearDupThreshold): DataFrame =
-    graft.Layers.frame(spark, "dedup_clusters", (sfDir, threshold)) {
-      nearDupClusters(spark, sfDir, threshold)
-    }
+  def materializedClusters(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "dedup_clusters", sfDir)(nearDupClusters(spark, sfDir))
 
   /** Component labels for the edge-endpoint set only (every doc that
     * appears in some near-dup pair or exact-duplicate group); singletons
@@ -724,17 +711,12 @@ object Dedup {
     * consists entirely of pair endpoints, singletons form n = 1 groups
     * and fall to the HAVING filter — identical output to counting the
     * edge-node label set alone, without re-running the clustering. */
-  def clusterKeep(spark: SparkSession, sfDir: String,
-                  threshold: Double = NearDupThreshold): DataFrame =
-    materializedClusters(spark, sfDir, threshold)
+  def clusterKeep(spark: SparkSession, sfDir: String): DataFrame =
+    materializedClusters(spark, sfDir)
       .groupBy(col("cluster_id").as("keep_id"))
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2) // clusters that actually deduplicate
 
-  /** Embedding-cosine near-dup, EXACT all-pairs form: the spec-side
-    * recall oracle for [[embeddingPairsBucketed]], quadratic by
-    * construction — never the queries-map entry (a cartesian product
-    * dies at corpus scale). */
   /** Fuzzy entity matching with blocking — the edit-distance member of
     * the dedup family (catalogue/entity-resolution shape): dedupe to
     * DISTINCT names first (vocabulary-bounded, not row-bounded), block
@@ -757,6 +739,10 @@ object Dedup {
         col("n_parts_a"), col("n_parts_b"))
   }
 
+  /** Embedding-cosine near-dup, EXACT all-pairs form: the spec-side
+    * recall oracle for [[embeddingPairsBucketed]], quadratic by
+    * construction — never the queries-map entry (a cartesian product
+    * dies at corpus scale). */
   def embeddingPairs(spark: SparkSession, sfDir: String, threshold: Double): DataFrame = {
     val e = Similarity.spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("embedding"),
@@ -808,8 +794,7 @@ object Dedup {
     * `planeOffset = band·width` — bit-identical to slicing one packed
     * signature at the default width, spec-pinned, but not limited to
     * 64 total planes). */
-  def embeddingPairsBucketed(spark: SparkSession, sfDir: String, threshold: Double,
-                             planesPerBand: Int = 0): DataFrame = {
+  def embeddingPairsBucketed(spark: SparkSession, sfDir: String, threshold: Double): DataFrame = {
     val raw = Tables.embeddings(spark, sfDir)
     val base = Similarity.spread(raw)
     // Derive from the session-cached RAW table count (one metadata-read
@@ -817,9 +802,7 @@ object Dedup {
     // `spread`'s repartition, which would execute a full shuffle of the
     // vector payload just to be thrown away (repartition preserves
     // cardinality, so the value is equal).
-    val pp =
-      if (planesPerBand > 0) planesPerBand
-      else deriveSrpPlanes(Tables.countOf(spark, sfDir, "embeddings"))
+    val pp = deriveSrpPlanes(Tables.countOf(spark, sfDir, "embeddings"))
     val e = base
       .select(col("vec_id"), col("embedding"),
         Similarity.l2norm(col("embedding")).as("nrm"))

@@ -56,16 +56,15 @@ object HeavyHitters {
     * driver (xxhash64 buckets are engine-specific); the spec asserts
     * the CM guarantees: estimate ≥ exact always, bounded overestimate,
     * and partitioning-invariance of the sketch. */
-  def heavyTokenEstimates(spark: SparkSession, sfDir: String,
-                          width: Int = CmsWidth): DataFrame = {
+  def heavyTokenEstimates(spark: SparkSession, sfDir: String): DataFrame = {
     def toks = Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("t"))
-    val sketch = toks.agg(graft.functions.Cms.sketchAgg(col("t"), width)
+    val sketch = toks.agg(graft.functions.Cms.sketchAgg(col("t"), CmsWidth)
       .as("sketch"))
     heavyTokens(spark, sfDir)
       .crossJoin(broadcast(sketch))
       .select(col("token"), col("cnt").as("exact_cnt"),
-        graft.functions.Cms.estimate(col("sketch"), col("token"), width)
+        graft.functions.Cms.estimate(col("sketch"), col("token"), CmsWidth)
           .as("cms_est"))
       .withColumn("overestimate", col("cms_est") - col("exact_cnt"))
   }
@@ -148,7 +147,7 @@ object HeavyHitters {
         "jaccard_bp", "est_intersect")
   }
 
-  /** Corpus tokens with count·k > n (frequency above 1/k): MG candidate
+  /** Corpus tokens with count·50 > n (frequency above 1/50): MG candidate
     * pass over the raw token stream (the sketch IS the operator — it
     * bounds what a 100 TB stream shuffles), then the exact counts and
     * the corpus total come from the session's term-frequency index
@@ -156,8 +155,9 @@ object HeavyHitters {
     * count = Σ tf over the candidate's postings, total = Σ tf — both
     * identical to the former raw-stream counts, without re-exploding
     * the corpus twice more. */
-  def heavyTokens(spark: SparkSession, sfDir: String, k: Int = 50): DataFrame = {
+  def heavyTokens(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    val k = 50
     def toks = Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("t"))
     val cand = candidates(toks.as[String], 4 * k)

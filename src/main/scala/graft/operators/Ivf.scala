@@ -114,48 +114,45 @@ object Ivf {
     * broadcastable far up the scale curve: k = n/512 means a 1B-vector
     * corpus fits ~2M × d centroids — at that point raise the target or
     * go hierarchical, per the SemDeDup paper's k=50 000 note. */
-  val DefaultTargetCellSize = 512
+  val TargetCellSize = 512
 
   /** SemDeDup's k must GROW with the corpus or within-cell pair work
-    * is quadratic: k = max(16, ⌈n / targetCellSize⌉) pins the MEAN
-    * cell size at ≤ targetCellSize (k-means does not bound the max —
+    * is quadratic: k = max(16, ⌈n / [[TargetCellSize]]⌉) pins the MEAN
+    * cell size at ≤ [[TargetCellSize]] (k-means does not bound the max —
     * skew is bounded empirically by the cell-size spec and, at real
     * scale, by AQE skew-join splitting on the cell equi-join). */
-  def deriveK(n: Long, targetCellSize: Int = DefaultTargetCellSize): Int = {
-    require(targetCellSize >= 1, s"targetCellSize must be >= 1, got $targetCellSize")
-    math.max(16L, (n + targetCellSize - 1) / targetCellSize)
+  def deriveK(n: Long): Int =
+    math.max(16L, (n + TargetCellSize - 1) / TargetCellSize)
       .min(Int.MaxValue.toLong).toInt
-  }
 
   /** Semantic (embedding-space) dedup over the IVF cell layer — the
     * SemDeDup recipe (Abbas et al. 2023, arXiv:2303.09540): cluster the
     * corpus with a coarse k-means, compare pairs only WITHIN a cell,
     * and drop all but one representative of each high-cosine group.
     * Pair work is Σ|cell|² instead of |corpus|² — k grows with the
-    * corpus via [[deriveK]] (`kClusters <= 0`, the default, derives
-    * k = max(16, ⌈n/[[DefaultTargetCellSize]]⌉); the paper runs
-    * k=50 000 at web scale) so cells stay bounded; the join is an
+    * corpus via [[deriveK]] (k = max(16, ⌈n/[[TargetCellSize]]⌉); the
+    * paper runs k=50 000 at web scale) so cells stay bounded; the join is an
     * equi-join on the cell id, keyed and shuffle-partitioned, never a
     * cross.
     *
     * Representative rule (deterministic, engine-portable): a vector is
     * DROPPED iff some lower-id vector in the same cell has rounded
-    * cosine ≥ `threshold` with it — min-id-wins dominance, the same
+    * cosine ≥ [[SemanticThreshold]] with it — min-id-wins dominance, the same
     * discipline as [[graft.operators.Dedup.exact]]'s min-doc_id
     * canonical representative (the paper keeps the vector farthest
     * from the centroid; the tie-break differs, the set semantics —
     * one survivor per dup neighborhood — is the same). Rows-only:
     * cell assignment needs the fitted centroids; exact agreement with
     * a brute within-cell replication is spec-asserted. */
-  def semanticKeep(spark: SparkSession, sfDir: String, threshold: Double = 0.4,
-                   kClusters: Int = 0, iters: Int = Ann.DefaultIters): DataFrame = {
-    val k = semanticK(spark, sfDir, kClusters)
-    semanticKeepFrom(Ann.corpus(spark, sfDir), fittedCentroids(spark, sfDir, k, iters), threshold)
-  }
+  def semanticKeep(spark: SparkSession, sfDir: String): DataFrame =
+    semanticKeepFrom(Ann.corpus(spark, sfDir),
+      fittedCentroids(spark, sfDir, semanticK(spark, sfDir), Ann.DefaultIters), SemanticThreshold)
+
+  /** The rounded within-cell cosine at which q129 drops the higher id. */
+  val SemanticThreshold = 0.4
 
   /** The MATERIALIZED [[semanticKeep]] survivor frame — (vec_id, cell),
-    * computed once per (session, sfDir) at the default threshold and the
-    * corpus-derived k. Six consumers read the identical survivor set
+    * computed once per (session, sfDir). Six consumers read the identical survivor set
     * (q129 itself, the q145/q146/q153 curation chains, the q172/q175
     * funnel); before this layer each re-paid the within-cell dominance
     * self-join. The `dedup_clusters` discipline applied to semantic
@@ -163,14 +160,12 @@ object Ivf {
   def materializedSemanticKeep(spark: SparkSession, sfDir: String): DataFrame =
     graft.Layers.frame(spark, "semantic_keep", sfDir)(semanticKeep(spark, sfDir))
 
-  /** The k [[semanticKeep]] will fit for `sfDir` — `kClusters` wins if
-    * positive, else [[deriveK]] of the corpus count (a columnar
-    * metadata count, cheap; the fitted matrix itself is session-cached
-    * per (sfDir, k, iters)). Exposed so layer warmers (Bench) build
-    * the same cache entry the query probes. */
-  def semanticK(spark: SparkSession, sfDir: String, kClusters: Int = 0): Int =
-    if (kClusters > 0) kClusters
-    else deriveK(Tables.countOf(spark, sfDir, "embeddings"))
+  /** The k [[semanticKeep]] will fit for `sfDir`: [[deriveK]] of the
+    * corpus count (a columnar metadata count, cheap; the fitted matrix
+    * itself is session-cached per (sfDir, k, iters)). Exposed so layer
+    * warmers (Bench) build the same cache entry the query probes. */
+  def semanticK(spark: SparkSession, sfDir: String): Int =
+    deriveK(Tables.countOf(spark, sfDir, "embeddings"))
 
   /** [[semanticKeep]] over an arbitrary `(vec_id, embedding)` frame
     * with caller-supplied centroids — spec-visible so dominance
@@ -190,7 +185,7 @@ object Ivf {
       .select(col("vec_id"), col("cell"))
   }
 
-  /** q139: cluster-balanced quality selection — keep the `perCell`
+  /** q139: cluster-balanced quality selection — keep the 8
     * highest-quality documents of every semantic cell. The curation
     * move AFTER dedup: a quality-ranked global top-N over-samples the
     * dominant topic, while capping per embedding-cell keeps the
@@ -199,13 +194,13 @@ object Ivf {
     * instead of deletion). Quality = the q130 stupid-backoff LM score;
     * cells = the session IVF layer at [[semanticK]]'s corpus-derived k,
     * so per-cell populations — and with them the ranking windows — stay
-    * ~[[DefaultTargetCellSize]]-bounded however large the corpus grows.
+    * ~[[TargetCellSize]]-bounded however large the corpus grows.
     * One doc-keyed equi-join (embedding cell ↔ LM score via the
     * fixture's doc_id = vec_id pairing), one bounded per-cell window.
     * Documents without a scorable bigram (sub-2-token) have no LM score
     * and are not selection candidates, matching the oracle's inner
     * join. */
-  def cellBalancedKeep(spark: SparkSession, sfDir: String, perCell: Int = 8): DataFrame = {
+  def cellBalancedKeep(spark: SparkSession, sfDir: String): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, semanticK(spark, sfDir), Ann.DefaultIters)
     val cells = Similarity.spread(Tables.embeddings(spark, sfDir))
       .select(col("vec_id").as("doc_id"),
@@ -215,7 +210,7 @@ object Ivf {
     TextOps.lmScore(spark, sfDir)
       .join(cells, Seq("doc_id"))
       .withColumn("cell_rank", row_number().over(w).cast("long"))
-      .filter(col("cell_rank") <= perCell)
+      .filter(col("cell_rank") <= 8)
       .select(col("cell"), col("doc_id"), col("cell_rank"), col("lm_score"))
   }
 
@@ -235,10 +230,9 @@ object Ivf {
     * (vec_id, cell, cos) ONLY — embeddings are projected away before
     * the shuffle, and cell populations are target-cell-size-bounded
     * when k comes from [[deriveK]]. */
-  def cellOutliers(spark: SparkSession, sfDir: String, frac: Double = 0.1): DataFrame = {
+  def cellOutliers(spark: SparkSession, sfDir: String): DataFrame = {
     val centroids = fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     val cdf = centroidFrame(spark, centroids, "cell")
-    val pct = math.round(frac * 100).toInt
     val rows = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))
       .withColumn("cell", assignExpr(centroids)(col("embedding")))
       .join(broadcast(cdf), "cell")
@@ -250,7 +244,7 @@ object Ivf {
       .withColumn("rk_cold", row_number()
         .over(w.orderBy(col("cos_centroid"), col("vec_id"))).cast("long"))
       .withColumn("n_cell", count(lit(1)).over(w))
-      .withColumn("k_cut", expr(s"(n_cell * $pct + 99) div 100"))
+      .withColumn("k_cut", expr("(n_cell * 10 + 99) div 100"))
       .filter(col("rk_cold") <= col("k_cut"))
       .select(col("vec_id"), col("cell"), col("cos_centroid"),
         col("rk_cold"), col("n_cell"), col("k_cut"))
@@ -289,19 +283,17 @@ object Ivf {
         col("n_docs_term"), col("rnk"))
   }
 
-  /** q44: ANN top-k probing `nProbe` of `k` cells — exact cosine over
-    * the probed cells' vectors only, ranked by the shared tail.
-    * `nProbe == k` degenerates to exact brute force (spec-asserted
-    * invariant). */
-  def topK(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
-           topk: Int = Ann.TopK, kClusters: Int = Ann.Cells, nProbe: Int = 4,
-           iters: Int = Ann.DefaultIters): DataFrame = {
-    val centroids = fittedCentroids(spark, sfDir, kClusters, iters)
+  /** q44: ANN top-k probing 4 of the [[Ann.Cells]] cells — exact
+    * cosine over the probed cells' vectors only, ranked by the shared
+    * tail, so the result is brute force over the probed cells
+    * (spec-asserted). */
+  def topK(spark: SparkSession, sfDir: String): DataFrame = {
+    val centroids = fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
     val e = Ann.normed(Similarity.spread(Tables.embeddings(spark, sfDir)))
       .withColumn("cluster", assignExpr(centroids)(col("embedding")))
     val q = Ann.probed(
-      Ann.queryFrame(e, nQueries, "embedding" -> "qemb", "nrm" -> "qnrm"), centroids, nProbe)
+      Ann.queryFrame(e, Ann.NQueries, "embedding" -> "qemb", "nrm" -> "qnrm"), centroids, 4)
     Ann.ranked(Ann.candidates(e, q, col("cluster") === col("probe"))
-      .withColumn("cos_sim", Similarity.cosine), "cos_sim", topk)
+      .withColumn("cos_sim", Similarity.cosine), "cos_sim", Ann.TopK)
   }
 }

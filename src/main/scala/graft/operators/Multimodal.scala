@@ -136,13 +136,14 @@ object Multimodal {
         .otherwise(expr(s"CAST(height AS BIGINT) * $maxW div width")).as("out_h"))
   }
 
-  /** Frame sampling: fan one video row out to ceil(n_frames/stride)
-    * frame rows — generator fan-out (`explode(sequence(...))`), the
-    * UDTF analog (SURVEY §2.10), oracle-checkable. */
-  def frameSample(spark: SparkSession, sfDir: String, stride: Int = 8): DataFrame =
+  /** Frame sampling: fan one video row out to ceil(n_frames/8) frame
+    * rows, every 8th frame — generator fan-out
+    * (`explode(sequence(...))`), the UDTF analog (SURVEY §2.10),
+    * oracle-checkable. */
+  def frameSample(spark: SparkSession, sfDir: String): DataFrame =
     mediaTable(spark, sfDir).toDF()
       .select(col("media_id"), col("n_frames"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_no"))
+        explode(sequence(lit(0), col("n_frames") - 1, lit(8))).as("frame_no"))
       .select(col("media_id"), col("frame_no").cast("long").as("frame_no"))
 }
 

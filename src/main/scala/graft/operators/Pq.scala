@@ -153,17 +153,17 @@ object Pq {
 
   /** q135: PQ-compressed ANN top-k on the embeddings lake: the
     * [[encodedCodes]] layer ranked by ADC inner product against the
-    * `nQueries` lowest vec_ids. The query batch is the small side by
+    * [[Ann.NQueries]] lowest vec_ids. The query batch is the small side by
     * construction (ANN serving), so collecting it to build lookup
     * tables is config-bounded — collected from the raw table: values
     * are partitioning-free, so the spread shuffle would buy nothing on
     * a bounded filter. */
-  def adcTopK(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
-              topk: Int = Ann.TopK): DataFrame = {
+  def adcTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val queries = Ann.queryFrame(Tables.embeddings(spark, sfDir), nQueries, "embedding" -> "qemb")
+    val queries = Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries,
+        "embedding" -> "qemb")
       .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
-    adcTopKFrom(encodedCodes(spark, sfDir), queries, fittedCodebooks(spark, sfDir), topk)
+    adcTopKFrom(encodedCodes(spark, sfDir), queries, fittedCodebooks(spark, sfDir), Ann.TopK)
   }
 
   /** THE IVF-ADC path, once per `residual` variant over ONE collected
@@ -211,7 +211,7 @@ object Pq {
 
   /** q137: IVF-ADC — the paper's §IV deployment shape and the one a
     * 100 TB serving tier actually runs: the coarse IVF quantizer
-    * prunes candidates to the query's `nProbe` cells (compute:
+    * prunes candidates to the query's [[DeployedNProbe]] cells (compute:
     * |corpus|·nProbe/k rows scored instead of |corpus|) while PQ codes
     * compress what those candidates cost to hold and read (memory:
     * 8 B/row instead of 256 B).
@@ -223,10 +223,9 @@ object Pq {
     * fit serves q135/q136/q137 and survives a re-clustered cell layer
     * unchanged). q143 measures the recall this configuration actually
     * delivers, which is the honest gate either way. This is the entry
-    * point a serving tier binds to, at [[DeployedNProbe]]. */
-  def ivfAdcTopK(spark: SparkSession, sfDir: String,
-                 nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.ranked(ivfAdc(spark, sfDir, Seq(nProbe), false).head, "adc_ip", Ann.TopK)
+    * point a serving tier binds to. */
+  def ivfAdcTopK(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.ranked(ivfAdc(spark, sfDir, Seq(DeployedNProbe), false).head, "adc_ip", Ann.TopK)
 
   /** q141: FULL IVFADC (Jégou et al. §IV-A) — PQ over the CELL
     * RESIDUALS r = x − c_cell(x) instead of the raw vectors. Residuals
@@ -241,19 +240,19 @@ object Pq {
     * ⟨q,x⟩ = ⟨q,c_cell⟩ + ⟨q,r⟩: the first term is exact per
     * (query, probed cell) and the second is the standard ADC fold over
     * the residual codebooks (global, cell-independent, so ONE m·k LUT
-    * per query serves every probe). */
-  def ivfAdcResidualTopK(spark: SparkSession, sfDir: String,
-                         nProbe: Int = DeployedNProbe): DataFrame =
-    Ann.ranked(ivfAdc(spark, sfDir, Seq(nProbe), true).head, "adc_ip", Ann.TopK)
+    * per query serves every probe). It probes [[DeployedNProbe]] cells,
+    * like [[ivfAdcTopK]]. */
+  def ivfAdcResidualTopK(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.ranked(ivfAdc(spark, sfDir, Seq(DeployedNProbe), true).head, "adc_ip", Ann.TopK)
 
   /** q136: recall\@k of the PQ index against the exact brute-force
     * baseline — the eval harness every compressed-index deployment
-    * runs before flipping traffic. Both sides reuse their query
-    * operators unchanged, so this measures exactly what q135 serves. */
-  def recallVsBrute(spark: SparkSession, sfDir: String, nQueries: Int = Ann.NQueries,
-                    topk: Int = Ann.TopK): DataFrame =
-    Ann.recall(adcTopK(spark, sfDir, nQueries, topk),
-      Similarity.materializedBruteTopK(spark, sfDir, nQueries, topk))
+    * runs before flipping traffic, over q135's serving batch
+    * ([[Ann.NQueries]] queries × top [[Ann.TopK]]). Both sides reuse
+    * their query operators unchanged, so this measures exactly what
+    * q135 serves. */
+  def recallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
+    Ann.recall(adcTopK(spark, sfDir), Similarity.materializedBruteTopK(spark, sfDir))
 
   /** q143: recall\@k of the RAW-codes IVF-ADC deployment shape (q137)
     * against exact brute force. Together with [[residualRecallVsBrute]]

@@ -62,8 +62,8 @@ object Relational {
 
   /** A1 + A2: the dashboard KPI row — distinct orders / users / parts,
     * row count, total revenue. `countDistinct` is exact here for oracle
-    * parity; the 100 TB variant is `approx_count_distinct` (HLL), exposed
-    * in [[dashboardMetricsApprox]].
+    * parity; the 100 TB variant is `approx_count_distinct` (HLL), whose
+    * error envelope [[dashboardMetricsChecked]] (q84) pins.
     */
   def dashboardMetrics(spark: SparkSession, sfDir: String): DataFrame =
     dashboardBase(spark, sfDir).agg(
@@ -73,24 +73,16 @@ object Relational {
       count(lit(1)).as("n_items"),
       round(moneySum4(revenue(col("l_extendedprice"), col("l_discount"))), 2).as("total_revenue"))
 
-  /** Scale path for A1: HLL-sketch distinct counts — one pass, no
-    * per-key shuffle of the distinct values. Not oracle-checked (approx).
-    */
-  def dashboardMetricsApprox(spark: SparkSession, sfDir: String): DataFrame =
-    dashboardBase(spark, sfDir).agg(
-      approx_count_distinct(col("o_orderkey"), 0.01).as("n_orders_approx"),
-      approx_count_distinct(col("c_custkey"), 0.01).as("n_users_approx"),
-      count(lit(1)).as("n_items"))
-
-  /** Oracle-checkable twin of [[dashboardMetricsApprox]]: the HLL
+  /** A1's scale path, oracle-checked: HLL-sketch distinct counts (one
+    * pass, no per-key shuffle of the distinct values). The HLL
     * estimates are engine-specific, but the CLAIM they carry — within
     * rsd·5 of the exact count (5σ of the requested 1% rsd) — is an
     * exact boolean DuckDB can pin: the oracle recomputes the exact
     * distincts and asserts the flag TRUE, so an HLL regression
     * hash-mismatches instead of drifting silently. The exact
-    * countDistincts here exist only to evaluate the envelope; the
-    * production scale path is [[dashboardMetricsApprox]] (sketch-only,
-    * no distinct expand). */
+    * countDistincts here exist only to evaluate the envelope; a
+    * production scale path keeps the sketches alone, with no distinct
+    * expand. */
   def dashboardMetricsChecked(spark: SparkSession, sfDir: String): DataFrame =
     dashboardBase(spark, sfDir).agg(
       countDistinct(col("o_orderkey")).as("n_orders"),

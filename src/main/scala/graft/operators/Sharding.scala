@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Output sharding for a training corpus — the writer-side step after
-  * curation: assign every document to one of `nShards` output shards
+  * curation: assign every document to one of [[Sharding.Shards]] output shards
   * so per-shard TOKEN totals stay balanced (a data-parallel trainer
   * reads one shard per worker; token skew = straggler steps). Greedy
   * balance via boustrophedon ("snake") assignment over the global
@@ -19,8 +19,12 @@ import graft.Tables
   */
 object Sharding {
 
+  /** Shards of the q162 assignment. */
+  val Shards = 8
+
   /** q162: (doc_id, n_tokens, rn, shard) — `rn` the global rank by
-    * (n_tokens desc, doc_id), `shard` the snake assignment.
+    * (n_tokens desc, doc_id), `shard` the snake assignment over
+    * [[Shards]] shards.
     *
     * Scale shape: the global rank uses the range-partitioned
     * prefix-scan idiom (the q108 ABC plan) — `repartitionByRange` on
@@ -29,9 +33,7 @@ object Sharding {
     * runs WITHIN partitions only. No single-partition window anywhere;
     * the shard arithmetic is map-side integer math on the rank. Only
     * (doc_id, n_tokens) shuffles — text never moves. */
-  def tokenBalancedShards(spark: SparkSession, sfDir: String,
-                          nShards: Int = 8): DataFrame = {
-    require(nShards >= 2, "nShards must be >= 2")
+  def tokenBalancedShards(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
@@ -41,7 +43,7 @@ object Sharding {
       toks, Seq(desc("n_tokens"), asc("doc_id")), lit(1L))
     val w = Window.partitionBy(col("pid"))
       .orderBy(desc("n_tokens"), asc("doc_id"))
-    val n = nShards.toLong
+    val n = Shards.toLong
     val rn = col("off") + row_number().over(w)
     // pos/block via exact integer arithmetic — ((rn−1)−pos) is a
     // multiple of n, so the double division is exact for ANY n (a bare

@@ -54,17 +54,14 @@ object Similarity {
   /** The MATERIALIZED exact-brute baseline the recall gates share
     * (q136/q143/q144/q167/q170/q174 — six queries, each previously
     * paying its own full corpus × query-batch scan): one
-    * [[bruteForceTopK]] pass per (session, sfDir, nQueries, k),
-    * re-entered as a checkpointed nQueries×k-row frame — the
+    * [[bruteForceTopK]] pass per (session, sfDir) at the serving batch
+    * ([[Ann.NQueries]] × [[Ann.TopK]]), re-entered as a checkpointed frame — the
     * `near_pairs`/`dedup_clusters` layer discipline applied to the
     * ANN-eval baseline. The SERVING brute scan (q24) stays a live
     * computation: this cache is the eval harness's ground-truth
     * artifact, not the scan operator. */
-  def materializedBruteTopK(spark: SparkSession, sfDir: String,
-                            nQueries: Int = Ann.NQueries, k: Int = Ann.TopK): DataFrame =
-    graft.Layers.frame(spark, "ann_brute_topk", (sfDir, nQueries, k)) {
-      bruteForceTopK(spark, sfDir, nQueries, k)
-    }
+  def materializedBruteTopK(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "ann_brute_topk", sfDir)(bruteForceTopK(spark, sfDir))
 
   /** L2 normalization — the standard pre-ANN transform (unit vectors
     * turn cosine into dot product). Map-only; the query surface emits
@@ -157,46 +154,18 @@ object Similarity {
 
   /** Scalar int8 quantization of the embedding column — the 4× memory
     * shrink that lets an ANN index at 100 TB stay in executor RAM:
-    * per-dimension (min, max) over the corpus, then
-    * `code = floor((v-mn)·255/(mx-mn) + 0.5)`. Two-pass, both cheap at
-    * scale: the stats pass explodes but map-side-combines down to one
-    * row per DIMENSION before the shuffle (64 groups, not 64×rows);
-    * the quantize pass is map-only — the per-dim arrays ride in as one
-    * broadcast row and a `transform` lambda does the elementwise math
-    * inside codegen. Reports the first 4 codes and the per-vector
-    * reconstruction error (order-independent max, engine-portable). */
+    * [[Sq]]'s SQ8 codec (per-dimension (min, max) over the corpus, one
+    * 8-bit level per value, constant dimensions at code 0). Reports the
+    * first 4 codes and the per-vector reconstruction error
+    * (order-independent max, engine-portable). */
   def int8Quantize(spark: SparkSession, sfDir: String): DataFrame = {
-    val x = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .select(col("pos"), col("vf").cast("double").as("v"))
-    val statsRow = x.groupBy(col("pos"))
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .agg(
-        expr("transform(array_sort(collect_list(struct(pos, mn))), s -> s.mn)")
-          .as("mns"),
-        expr("transform(array_sort(collect_list(struct(pos, mx))), s -> s.mx)")
-          .as("mxs"))
+    val (mn, mx) = Sq.fittedBounds(spark, sfDir)
     Tables.embeddings(spark, sfDir)
-      .crossJoin(broadcast(statsRow))
-      // greatest(mx-mn, 1e-12): a CONSTANT dimension (mx == mn) would
-      // divide by zero → NaN codes with engine-divergent semantics; the
-      // clamp maps it to code 0 / err 0 identically everywhere (the
-      // oracle mirrors the same GREATEST)
-      .withColumn("codes", expr(
-        """transform(embedding, (vf, i) ->
-          |  floor((CAST(vf AS DOUBLE) - mns[i]) * 255
-          |    / greatest(mxs[i] - mns[i], 1e-12) + 0.5))"""
-          .stripMargin))
-      .withColumn("errs", expr(
-        """transform(embedding, (vf, i) ->
-          |  abs(CAST(vf AS DOUBLE) - (mns[i] +
-          |    floor((CAST(vf AS DOUBLE) - mns[i]) * 255
-          |      / greatest(mxs[i] - mns[i], 1e-12) + 0.5)
-          |      * (mxs[i] - mns[i]) / 255)))""".stripMargin))
-      .select(col("vec_id"),
-        col("codes")(0).as("code0"), col("codes")(1).as("code1"),
-        col("codes")(2).as("code2"), col("codes")(3).as("code3"),
-        round(array_max(col("errs")), 6).as("max_abs_err"))
+      .withColumn("codes", Sq.encode(mn, mx)(col("embedding")))
+      .withColumn("errs", zip_with(col("embedding"), Sq.reconstruct(mn, mx)(col("codes")),
+        (v, r) => abs(v.cast("double") - r)))
+      .select(col("vec_id") +: (0 until 4).map(i => col("codes")(i).cast("long").as(s"code$i")) :+
+        round(array_max(col("errs")), 6).as("max_abs_err"): _*)
   }
 
   /** Exactness ceiling for [[deriveNProbe]]: at or below this corpus
@@ -224,8 +193,8 @@ object Similarity {
 
   /** kNN label propagation — the semi-supervised classifier a labeling
     * pipeline runs to extend a small labeled seed set over an unlabeled
-    * corpus: each "unlabeled" vector (here `vec_id % holdout == 0`, a
-    * deterministic holdout) takes the majority label of its k nearest
+    * corpus: each "unlabeled" vector (here `vec_id % 5 == 0`, a
+    * deterministic holdout) takes the majority label of its 10 nearest
     * labeled neighbors by cosine. Ranking uses the q24 discipline
     * (4dp-rounded cosine + id tie-break → unique neighbor set, then
     * count-desc + label-asc tie-break → unique winner), so the result
@@ -239,7 +208,7 @@ object Similarity {
     * of corpus/holdout. BOTH index knobs derive from the corpus by
     * default: the cell count is [[Ivf.semanticK]]
     * (= [[Ivf.deriveK]], the SemDeDup-family discipline — cells of
-    * ~[[Ivf.DefaultTargetCellSize]] mean size, 16-cell floor), because
+    * ~[[Ivf.TargetCellSize]] mean size, 16-cell floor), because
     * the HOLDOUT query side scales WITH the corpus: at a fixed 16
     * cells the candidate join is Σ|cell|²·nProbe/k ≈ quadratic in the
     * corpus (measured r16: the first full 100×-lake battery ground
@@ -259,8 +228,7 @@ object Similarity {
     * the cell count k (q127's pinned configuration) the scored pairs shrink
     * to ~|corpus|·nProbe/k, with prediction agreement vs brute
     * asserted in the spec. The vote layer is identical in all modes. */
-  def knnClassify(spark: SparkSession, sfDir: String, k: Int = 10,
-                  holdout: Int = 5, nProbe: Int = -1): DataFrame = {
+  def knnClassify(spark: SparkSession, sfDir: String, nProbe: Int = -1): DataFrame = {
     // every driver SF sits at deriveK's 16-cell floor, so the derived
     // default is bit-identical to the old fixed 16 below the ceiling
     // (and shares the ivf_centroids_semantic layer's cache entry above)
@@ -277,16 +245,16 @@ object Similarity {
         deriveNProbe(Tables.countOf(spark, sfDir, "embeddings"), centroids.length)
       else math.min(nProbe, centroids.length)
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)), "label")
-    val labeled = e.filter(col("vec_id") % holdout =!= 0)
+    val labeled = e.filter(col("vec_id") % 5 =!= 0)
       .withColumn("cell", Ivf.assignExpr(centroids)(col("embedding")))
-    val q = Ann.probed(e.filter(col("vec_id") % holdout === 0)
+    val q = Ann.probed(e.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
         col("nrm").as("qnrm"), col("label").as("true_label")), centroids, probes)
     // holdout and labeled side both scale with the corpus: a keyed
     // cell equi-join, not the broadcast candidate join
     val neighbors = Ann.topK(labeled.join(q,
         col("cell") === col("probe") && col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", cosine), k, desc("cos_sim"))
+      .withColumn("cos_sim", cosine), 10, desc("cos_sim"))
     val votes = neighbors.groupBy(col("qid"), col("true_label"), col("label"))
       // sim_sum, not a rounded mean: the 4dp cosines sum EXACTLY as
       // DECIMAL (a mean like 0.25425 sits on a rounding boundary where
@@ -301,10 +269,10 @@ object Similarity {
   }
 
   /** MMR (maximal-marginal-relevance) diversity re-ranking — the
-    * retrieval-side step after ANN: from a candidate pool of the
-    * query's 100 nearest vectors, greedily pick `k` maximizing
+    * retrieval-side step after ANN: from a candidate pool of query
+    * vector 0's 100 nearest vectors, greedily pick 10 maximizing
     * `λ·sim(q,c) − (1−λ)·max_{s∈picked} sim(c,s)`, λ = 0.7, so the result covers
-    * the neighborhood instead of returning k near-duplicates of the
+    * the neighborhood instead of returning 10 near-duplicates of the
     * top hit. Architecture mirrors the IVF probe layer: the POOL
     * selection is the distributed pass (brute/IVF top-100 —
     * corpus partitioned, query broadcast), the greedy fold runs on the
@@ -314,10 +282,9 @@ object Similarity {
     * pool cut and each greedy step. Spec: first pick is the nearest
     * neighbor; the MMR set's mean pairwise similarity is below the
     * plain top-k's. */
-  def mmrRerank(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                k: Int = 10): DataFrame = {
+  def mmrRerank(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val lambda = 0.7
+    val (queryId, k, lambda) = (0L, 10, 0.7)
     val e = Ann.normed(spread(Tables.embeddings(spark, sfDir)))
     val q = e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qemb"), col("nrm").as("qnrm"))
@@ -374,7 +341,7 @@ object Similarity {
   /** Embedding-space decontamination against an EXPLICIT eval frame —
     * the entry point a real pipeline calls with its benchmark/eval
     * holdout (a frame the corpus never saw). Flags every corpus vector
-    * whose cosine to ANY eval vector reaches `tau`: the semantic
+    * whose cosine to ANY eval vector reaches 0.6: the semantic
     * complement of the n-gram containment checks (q79/q83) —
     * paraphrased eval leakage that shares no 8-gram still lands near
     * its source in embedding space. Both frames carry
@@ -391,8 +358,7 @@ object Similarity {
     * [[DecontamMaxEvalVectors]] is refused up front (the
     * [[ProbeAllMaxVectors]] discipline) rather than silently handed to
     * a multi-GB broadcast. */
-  def embeddingDecontamFrom(corpus: DataFrame, evalDf: DataFrame,
-                            tau: Double = 0.6): DataFrame = {
+  def embeddingDecontamFrom(corpus: DataFrame, evalDf: DataFrame): DataFrame = {
     val nEval = evalDf.count()
     require(nEval <= DecontamMaxEvalVectors,
       s"decontamination eval side has $nEval vectors, above the broadcast " +
@@ -413,7 +379,7 @@ object Similarity {
         max_by(col("eid"), struct(col("cos_eval"), -col("eid")))
           .as("nearest_eval_id"))
       .select(col("vec_id"), col("nearest_eval_id"), col("max_eval_cos"),
-        (col("max_eval_cos") >= tau).as("contaminated"))
+        (col("max_eval_cos") >= 0.6).as("contaminated"))
   }
 
   /** q142 fixture adapter for [[embeddingDecontamFrom]]: with no

@@ -53,27 +53,29 @@ object Sq {
     * `round((v - min_j) / (max_j - min_j) * 255)` (half-up on
     * non-negative values: engine-portable); constant dimensions encode
     * as 0. */
-  private def encode(mn: Seq[Double], mx: Seq[Double])(vec: Column): Column =
+  private[operators] def encode(mn: Seq[Double], mx: Seq[Double])(vec: Column): Column =
     transform(vec, (v, j) => {
       val (lo, hi) = (element_at(typedLit(mn), j + 1), element_at(typedLit(mx), j + 1))
       when(hi > lo, round((v.cast("double") - lo) / (hi - lo) * Levels, 0).cast("int"))
         .otherwise(0)
     })
 
-  /** THE asymmetric-distance definition: reconstruct each candidate's
-    * `codes` map-side (`mn_j + c * (mx_j - mn_j) / 255`; constant
-    * dimensions reconstruct to their min), then fold the inner product
-    * against the exact query `qemb` IN INDEX ORDER from 0.0 (the
-    * oracle's list_sum over an i-ordered list is the same fold),
-    * 4dp-rounded. */
-  private def reconstructedDot(mn: Seq[Double], mx: Seq[Double]): Column = {
-    val rv = transform(col("codes"), (c, j) => {
+  /** THE reconstruction definition: each of `codes` back to
+    * `mn_j + c * (mx_j - mn_j) / 255`; constant dimensions reconstruct
+    * to their min. */
+  private[operators] def reconstruct(mn: Seq[Double], mx: Seq[Double])(codes: Column): Column =
+    transform(codes, (c, j) => {
       val (lo, hi) = (element_at(typedLit(mn), j + 1), element_at(typedLit(mx), j + 1))
       when(hi > lo, lo + c.cast("double") * (hi - lo) / Levels).otherwise(lo)
     })
-    round(aggregate(zip_with(rv, col("qemb"), (r, qv) => r * qv.cast("double")),
-      lit(0.0), (acc, x) => acc + x), 4)
-  }
+
+  /** THE asymmetric-distance definition: [[reconstruct]] each
+    * candidate's `codes` map-side, then fold the inner product against
+    * the exact query `qemb` IN INDEX ORDER from 0.0 (the oracle's
+    * list_sum over an i-ordered list is the same fold), 4dp-rounded. */
+  private def reconstructedDot(mn: Seq[Double], mx: Seq[Double]): Column =
+    round(aggregate(zip_with(reconstruct(mn, mx)(col("codes")), col("qemb"),
+      (r, qv) => r * qv.cast("double")), lit(0.0), (acc, x) => acc + x), 4)
 
   /** Shared serving tail over an encoded layer: the candidate join
     * (cell-pruned by `on`), scored by [[reconstructedDot]] into `sq_ip`
@@ -118,9 +120,8 @@ object Sq {
     * serving stream ([[graft.streaming.AnnServeStream]]) execute, so
     * the two cannot drift. The query side must stay bounded (it
     * broadcasts); the corpus side streams through once per call. */
-  def sqTopKFor(spark: SparkSession, sfDir: String, q: DataFrame,
-                k: Int = Ann.TopK): DataFrame =
-    scan(spark, sfDir, encoded(spark, sfDir), q, k)
+  def sqTopKFor(spark: SparkSession, sfDir: String, q: DataFrame): DataFrame =
+    scan(spark, sfDir, encoded(spark, sfDir), q, Ann.TopK)
 
   /** q170: recall\@k of the SQ8 scan against exact brute force — the
     * measured-not-assumed gate every quantization family in the engine

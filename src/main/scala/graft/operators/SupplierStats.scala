@@ -115,11 +115,12 @@ object SupplierStats {
     * single-partition global sort — the round-5 scale-killer. This form
     * distributes the same sequential fold as a classic parallel
     * prefix-scan over the dense arrival key:
-    *   1. bucket records by `event_id div width` (deterministic — no
-    *      range-sampling, so the two passes can never disagree);
+    *   1. bucket records into 256 ranges of `event_id div width`
+    *      (deterministic — no range-sampling, so the two passes can
+    *      never disagree);
     *   2. one map-side-combined aggregation yields each bucket's max
-    *      event time — `buckets` rows to the driver;
-    *   3. the driver prefix-scans those `buckets` values into exclusive
+    *      event time — one row per bucket to the driver;
+    *   3. the driver prefix-scans those values into exclusive
     *      offsets (the only sequential step, O(buckets) not O(rows));
     *   4. the per-record running max is a window PARTITIONED by bucket
     *      (parallel, each sort bounded by rows/buckets), combined with
@@ -129,22 +130,17 @@ object SupplierStats {
     * ([[graft.streaming.SupplierStatsStream.forkBatch]]) remains the
     * incremental path; this batch form is now scale-safe on its own
     * (plan-audited: no SinglePartition window). */
-  def tagLate(spark: SparkSession, sfDir: String, buckets: Int = 256): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+  def tagLate(spark: SparkSession, sfDir: String): DataFrame =
     // construction runs two small eager jobs (max id, per-bucket maxes)
     // — memoize the finished frame so repeat callers (q14 + q15 share
     // it) don't re-run them
-    graft.Layers.value(spark, "late_tags", (sfDir, buckets)) {
-      buildTagLate(spark, sfDir, buckets)
-    }
-  }
+    graft.Layers.value(spark, "late_tags", sfDir)(buildTagLate(spark, sfDir))
 
-  private def buildTagLate(spark: SparkSession, sfDir: String,
-                           buckets: Int): DataFrame = {
+  private def buildTagLate(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     val maxId = Option(ev.agg(max(col("event_id"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val width = maxId / buckets + 1
+    val width = maxId / 256 + 1
     val bucketed = ev.select(col("event_id"), col("ts_us"))
       .withColumn("bkt", expr(s"event_id div $width"))
     val bucketMax = bucketed.groupBy(col("bkt")).agg(max(col("ts_us")).as("m"))

@@ -156,13 +156,13 @@ object TextOps {
   def corpusFilter(spark: SparkSession, sfDir: String): DataFrame =
     corpusFilter(spark, sfDir, Dedup.materializedClusters(spark, sfDir))
 
-  /** Context-window chunking: split each document into fixed-size token
+  /** Context-window chunking: split each document into 64-token
     * chunks (the pre-tokenization pass of sequence preparation). Pure
     * map-side fan-out — tokenize once, slice per chunk, `posexplode`;
     * each chunk carries a portable rolling fingerprint so the oracle
     * verifies CONTENT, not just shape. */
-  def chunkDocs(spark: SparkSession, sfDir: String, chunkTokens: Int = 64): DataFrame = {
-    require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
+  def chunkDocs(spark: SparkSession, sfDir: String): DataFrame = {
+    val chunkTokens = 64
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 1) // sequence(0,-1) would run DESCENDING
@@ -174,14 +174,13 @@ object TextOps {
         graft.functions.polyHash64(col("col")).as("chunk_fp"))
   }
 
-  /** Greedy in-order sequence packing: assign documents to fixed-token-
-    * capacity bins per language shard — `bin = floor(cumulative tokens
-    * before this doc / capacity)`, one window pass per shard. The keyed
+  /** Greedy in-order sequence packing: assign documents to 512-token
+    * bins per language shard — `bin = floor(cumulative tokens before
+    * this doc / 512)`, one window pass per shard. The keyed
     * partitioning is the point: packing state never crosses shards, so
     * the operator scales by adding shards, not by sorting the corpus
     * globally. */
-  def packSequences(spark: SparkSession, sfDir: String, capacity: Int = 512): DataFrame = {
-    require(capacity >= 1, s"capacity must be >= 1, got $capacity")
+  def packSequences(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -196,13 +195,9 @@ object TextOps {
       .select(col("doc_id"), col("lang"), size(toks).cast("long").as("n_tokens"))
       .withColumn("cum", sum(col("n_tokens")).over(w))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
-        expr(s"(cum - n_tokens) div $capacity").as("bin_no"))
+        expr("(cum - n_tokens) div 512").as("bin_no"))
   }
 
-  /** Document fingerprinting: 64-bit FNV-1a rolling hash over the raw
-    * text — implemented as a native Catalyst expression with codegen
-    * ([[graft.functions.Fnv1a64]]); plus xxhash64 for comparison. Not
-    * SQL-expressible in the oracle (rows-only check). */
   /** Repetition / diversity quality signals — the Gopher-family filters
     * that catch degenerate generations and boilerplate: fraction of the
     * doc covered by its most frequent unigram and bigram, and the hapax
@@ -494,11 +489,11 @@ object TextOps {
     * first (map-side combined; vocabulary-bounded, not corpus-bounded)
     * and explode pairs over distinct words only — a 100 TB corpus with
     * a 10 M-word vocabulary fans out 10 M × avg-len pair rows, not
-    * corpus-tokens × len. Top-k via TakeOrderedAndProject with a pair
+    * corpus-tokens × len. Top 20 via TakeOrderedAndProject with a pair
     * tie-break. The merge LOOP (apply top pair, recount) is the
     * sequential part of tokenizer training and belongs to a driver
     * harness; the heavy statistic it iterates is this operator. */
-  def bpePairCounts(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame =
+  def bpePairCounts(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2)
@@ -507,13 +502,13 @@ object TextOps {
         "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
         .as("pair"))
       .groupBy(col("pair")).agg(sum(col("n")).as("freq"))
-      .orderBy(desc("freq"), asc("pair")).limit(k)
+      .orderBy(desc("freq"), asc("pair")).limit(20)
 
   /** Merges of the BPE queries (q131/q132/q160) and the `bpe_merges` layer. */
   val BpeMerges = 10
 
   /** BPE vocabulary learning — the merge LOOP [[bpePairCounts]]'s
-    * docstring defers to a driver harness: `merges` iterations of
+    * docstring defers to a driver harness: [[BpeMerges]] iterations of
     * (count weighted adjacent pairs over the word-frequency table) →
     * (argmax with freq-desc, pair-asc tie-break) → (apply the merge
     * to every word). The classic tokenizer-training shape (Sennrich et
@@ -526,9 +521,9 @@ object TextOps {
     * inside recursion, which SQL engines reject); spec-verified
     * against an independent token-array driver BPE on planted words
     * and the real fixture. */
-  def bpeLearn(spark: SparkSession, sfDir: String, merges: Int = BpeMerges): DataFrame = {
+  def bpeLearn(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    learnedMerges(spark, sfDir, merges)
+    learnedMerges(spark, sfDir)
       .toSeq.toDF("rank", "left", "right", "merged", "freq")
   }
 
@@ -537,29 +532,21 @@ object TextOps {
     * merge loop runs locally ([[bpeFitLocal]]) — the industry-standard
     * tokenizer-training shape (Sennrich's learn_bpe, HF tokenizers,
     * SentencePiece all fit in memory over a distributed word count),
-    * giving a CONSTANT Spark-job count at any `merges`. 2M words ×
+    * giving a CONSTANT Spark-job count at any merge count. 2M words ×
     * ~short strings is a few hundred MB of driver heap; a corpus whose
     * vocabulary exceeds the ceiling is refused. */
   val BpeMaxLocalVocab: Int = 2 * 1024 * 1024
 
-  /** Merge-chain batch size for [[bpeApply]]: how many regexp merges
-    * stack into one expression before the vocab frame is pinned with a
-    * localCheckpoint. 64 nested replaces is comfortably inside codegen
-    * limits (the 10-merge default never checkpoints at all); a 32k
-    * table then costs ~512 vocabulary-bounded materializations instead
-    * of one unanalyzable 32k-deep expression. */
-  private[graft] val BpeApplyBatch: Int = 64
-
   /** The learned merge table as a MATERIALIZED LAYER — one fit per
-    * (session, sfDir, merges), shared by [[bpeLearn]] (the query
+    * (session, sfDir), shared by [[bpeLearn]] (the query
     * surface) and [[bpeApply]] (the tokenizer), same discipline as the
     * IVF centroid fit. The value is merges×5 driver scalars. The fit
     * itself: one distributed word-count pass, one collect of the
     * [[BpeMaxLocalVocab]]-bounded vocabulary, then the in-memory loop
-    * ([[bpeFitLocal]]) — a job count independent of `merges`. */
-  def learnedMerges(spark: SparkSession, sfDir: String,
-                    merges: Int): Array[(Long, String, String, String, Long)] =
-    graft.Layers.value(spark, "bpe_merges", (sfDir, merges)) {
+    * ([[bpeFitLocal]]) — a job count independent of the merge count. */
+  def learnedMerges(spark: SparkSession,
+                    sfDir: String): Array[(Long, String, String, String, Long)] =
+    graft.Layers.value(spark, "bpe_merges", sfDir) {
       import spark.implicits._
       val wordFreq = Tables.documents(spark, sfDir)
         .select(explode(split(col("text"), " ")).as("word"))
@@ -571,7 +558,7 @@ object TextOps {
         .as[(String, Long)].collect()
       require(local.length <= BpeMaxLocalVocab,
         s"BPE vocabulary exceeds the in-memory fit ceiling of $BpeMaxLocalVocab distinct words")
-      bpeFitLocal(local, merges).toArray
+      bpeFitLocal(local, BpeMerges).toArray
     }
 
   /** Exact in-memory BPE fit over a collected word-frequency table:
@@ -674,40 +661,25 @@ object TextOps {
     * occurrence. Rows-only (depends on the learned merge chain);
     * spec asserts exact agreement with a driver-side apply plus the
     * compression invariant n_subwords ≤ n_chars. */
-  def bpeApply(spark: SparkSession, sfDir: String, merges: Int = BpeMerges): DataFrame = {
-    val learned = learnedMerges(spark, sfDir, merges)
+  def bpeApply(spark: SparkSession, sfDir: String): DataFrame = {
+    val learned = learnedMerges(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
     var vocab = docs
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2).distinct()
       .withColumn("toks",
         concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" ")))
-    // superseded batch checkpoints release eagerly; the LAST one must
-    // stay persisted — the returned frame's lineage truncates to it
-    var prevCkpt: DataFrame = null
     // words are stored space-joined and padded (" h e l l o "); each
     // merge is a regexp_replace with non-consuming space lookarounds,
     // the reference's `(?<!\S)l r(?!\S)` re.sub: matches consume only
     // the pair text, so identical-token runs split the way a greedy
     // left-to-right scan does ("a a a a a" + (a,a) → "aa aa a").
     // Tokens are regex-quoted, so corpus punctuation injects no syntax.
-    learned.zipWithIndex.foreach { case ((_, w1, w2, _, _), i) =>
+    learned.foreach { case (_, w1, w2, _, _) =>
       val pat = "(?<= )" + java.util.regex.Pattern.quote(w1) + " " +
         java.util.regex.Pattern.quote(w2) + "(?= )"
       vocab = vocab.withColumn("toks",
         regexp_replace(col("toks"), pat, java.util.regex.Matcher.quoteReplacement(w1 + w2)))
-      // tokenizer-scale merge tables (32k-class) can't live in ONE
-      // expression: pin the vocab frame every BpeApplyBatch merges so
-      // plan depth stays batch-bounded while each checkpointed pass is
-      // still a codegen'd map over the vocabulary-bounded frame — total
-      // work merges/batch extra vocab materializations, never
-      // corpus-shaped. Small tables (the q132/q160 default of 10) never
-      // checkpoint, so their plans and oracles are untouched.
-      if ((i + 1) % BpeApplyBatch == 0) {
-        vocab = vocab.localCheckpoint()
-        if (prevCkpt != null) graft.Layers.release(prevCkpt)
-        prevCkpt = vocab
-      }
     }
     val wordTokens = vocab.select(col("word"),
       size(split(trim(col("toks")), " ")).cast("long").as("n_subwords"))
@@ -736,9 +708,8 @@ object TextOps {
     * (doc_id, lang, n_chars), then a map-side-combined groupBy on a
     * languages-bounded key. Integer sums are exact under any
     * partitioning; only the final two ratios round. */
-  def tokenizerFertility(spark: SparkSession, sfDir: String,
-                         merges: Int = BpeMerges): DataFrame = {
-    val perDoc = bpeApply(spark, sfDir, merges)
+  def tokenizerFertility(spark: SparkSession, sfDir: String): DataFrame = {
+    val perDoc = bpeApply(spark, sfDir)
       .select(col("doc_id"), col("n_words"), col("n_subwords"))
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -943,14 +914,10 @@ object TextOps {
         col("mean_chars"), col("top_lang"), col("lang_entropy"))
   }
 
-  def fingerprints(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir).select(
-      col("doc_id"),
-      graft.functions.fnv1a64(col("text")).as("fnv1a64"),
-      xxhash64(col("text")).as("xxh64"))
-
-  /** Oracle-checkable twin of [[fingerprints]]: the 64-bit values are
-    * engine-specific, but the structural contract a fingerprint exists
+  /** Document fingerprinting, oracle-checked: the 64-bit FNV-1a
+    * rolling hash over the raw text (a native Catalyst expression with
+    * codegen, [[graft.functions.Fnv1a64]]) and xxhash64 for comparison.
+    * Their values are engine-specific, but the structural contract a fingerprint exists
     * for is exact — it must induce the same duplicate partition as the
     * text itself (equality-preserving by construction, collision-free
     * on the corpus). Per document, emit the text-duplicate count and a

@@ -39,9 +39,9 @@ object ZOrder {
         expr("(ts_us div 3600000000) % 256").as("hb"))
       .withColumn("z", graft.functions.zorder2(col("ub"), col("hb"), 8))
 
-  /** The clustered layout: range-partition by z. Each partition then
+  /** The clustered layout: range-partition by z into 16 partitions. Each partition then
     * spans a bounded rectangle in (ub, hb) — the spec measures the
     * shrinkage vs the unclustered layout. */
-  def clustered(spark: SparkSession, sfDir: String, numPartitions: Int = 16): DataFrame =
-    eventZValues(spark, sfDir).repartitionByRange(numPartitions, col("z"))
+  def clustered(spark: SparkSession, sfDir: String): DataFrame =
+    eventZValues(spark, sfDir).repartitionByRange(16, col("z"))
 }

@@ -30,14 +30,14 @@ object AnnServeStream {
 
   /** Start serving: each micro-batch of `queries` (`qid`, `qemb`) is
     * scored with the batch operator and handed to `sink` as
-    * (qid, nbr_id, rank, sq_ip). */
-  def serve(spark: SparkSession, sfDir: String, queries: DataFrame,
-            k: Int = 5)(sink: DataFrame => Unit): StreamingQuery =
+    * (qid, nbr_id, rank, sq_ip), top [[graft.operators.Ann.TopK]] per query. */
+  def serve(spark: SparkSession, sfDir: String, queries: DataFrame)(
+      sink: DataFrame => Unit): StreamingQuery =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          sink(graft.operators.Sq.sqTopKFor(spark, sfDir, batch, k))
+          sink(graft.operators.Sq.sqTopKFor(spark, sfDir, batch))
       }
       .start()
 }

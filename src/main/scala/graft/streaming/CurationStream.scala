@@ -39,58 +39,26 @@ import org.apache.spark.sql.functions._
   */
 object CurationStream {
 
-  /** Which copy of an in-horizon duplicate the stream keeps. */
-  sealed trait KeepRule
-  object KeepRule {
-    /** Processing-order first arrival (the default): zero added
-      * latency, state = one fingerprint per in-horizon key, but
-      * divergent from the batch twin for out-of-order cross-source
-      * duplicates (the spec-pinned contract boundary). */
-    case object FirstArrival extends KeepRule
-    /** The batch twin's (ts, source, text)-least row, emitted when the
-      * watermark closes the fingerprint's horizon
-      * ([[StreamingDedup.keepLeast]]): competing copies delivered
-      * inside the watermark resolve exactly as [[batchDeduped]]
-      * resolves them, at the standard append-aggregation latency of
-      * one watermark delay. Post-eviction re-deliveries still re-emit
-      * — that divergence is inherent to bounded state. */
-    case object TsLeast extends KeepRule
-  }
-
   /** Content fingerprint — the q112 incremental-dedup key. */
   private def fingerprinted(docs: DataFrame): DataFrame =
     docs.withColumn("fp", sha2(col("text"), 256))
 
   /** Stage 1: one row per content fingerprint, state expiring past the
     * watermark on `ts` ([[IngestMonitorStream.WatermarkDelay]]). Input carries at least
-    * (source, ts, text, n_chars). Which copy survives is the
-    * `keep` rule: [[KeepRule.FirstArrival]] uses the dedicated
-    * [[StreamingDedup.withinWatermark]] form (the engine evicts each
-    * fingerprint's state once the watermark passes its event time,
-    * keeping dedup state rate-bounded instead of corpus-bounded);
-    * [[KeepRule.TsLeast]] matches the batch keep rule for every
-    * in-horizon competitor at one watermark delay of latency. */
-  def dedupedDocs(docs: DataFrame, keep: KeepRule = KeepRule.FirstArrival): DataFrame =
-    keep match {
-      case KeepRule.FirstArrival =>
-        StreamingDedup.withinWatermark(
-          fingerprinted(docs), "ts", IngestMonitorStream.WatermarkDelay, "fp")
-      case KeepRule.TsLeast =>
-        val spark = docs.sparkSession
-        import spark.implicits._
-        StreamingDedup.keepLeast(
-          fingerprinted(docs)
-            .select(col("fp"), col("source"), col("ts"), col("text"),
-              col("n_chars").cast("long").as("n_chars"))
-            .as[StreamingDedup.FpDoc],
-          "ts", IngestMonitorStream.WatermarkDelay).toDF()
-    }
+    * (source, ts, text, n_chars). The processing-order first arrival
+    * survives, through the dedicated [[StreamingDedup.withinWatermark]]
+    * form (the engine evicts each fingerprint's state once the
+    * watermark passes its event time, keeping dedup state rate-bounded
+    * instead of corpus-bounded). */
+  def dedupedDocs(docs: DataFrame): DataFrame =
+    StreamingDedup.withinWatermark(
+      fingerprinted(docs), "ts", IngestMonitorStream.WatermarkDelay, "fp")
 
   /** Stages 1+2: the curated per-document stream — deduped docs that
     * pass the q27 gate, with the token count the downstream trainer
     * bills by. Append-mode, stateless past the dedup. */
-  def curatedStream(docs: DataFrame, keep: KeepRule = KeepRule.FirstArrival): DataFrame =
-    dedupedDocs(docs, keep)
+  def curatedStream(docs: DataFrame): DataFrame =
+    dedupedDocs(docs)
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
       .withColumn("n_stop", graft.operators.TextOps.stopHits)
       .filter(graft.operators.TextOps.qualityGate)
@@ -117,9 +85,7 @@ object CurationStream {
     * processing-order first, this twin the (ts, source, text)-least —
     * and (b) duplicates re-delivered after the watermark evicted their
     * fingerprint state, which the stream re-emits and this twin never
-    * does. [[KeepRule.TsLeast]] collapses divergence (a) for every
-    * competitor inside the watermark horizon (spec-asserted); feeds
-    * that must also agree across (b) need event-time-ordered delivery
+    * does. Feeds that must agree need event-time-ordered delivery
     * within the watermark, the standard log-compaction assumption. */
   def batchDeduped(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -28,16 +28,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object LinUCBServeStream {
 
   /** Start serving: each micro-batch of `contexts` (`ctx_id`, `x`) is
-    * scored against the CURRENT store contents and handed to `sink` as
-    * (ctx_id, product_id, rank, score). */
-  def serve(spark: SparkSession, store: graft.ml.ModelStore,
-            contexts: DataFrame, alpha: Double = 0.5, k: Int = 3)
+    * scored against the CURRENT store contents, at q31's
+    * [[graft.ml.LinUCB.ServeAlpha]] and [[graft.ml.LinUCB.ServeK]], and
+    * handed to `sink` as (ctx_id, product_id, rank, score). */
+  def serve(spark: SparkSession, store: graft.ml.ModelStore, contexts: DataFrame)
            (sink: DataFrame => Unit): StreamingQuery =
     contexts.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          sink(graft.ml.LinUCB.topK(batch, store.read(spark), alpha, k)(spark))
+          sink(graft.ml.LinUCB.topK(batch, store.read(spark),
+            graft.ml.LinUCB.ServeAlpha, graft.ml.LinUCB.ServeK)(spark))
       }
       .start()
 }

@@ -35,10 +35,10 @@ class FeaturesSpec extends SparkSpec {
   }
 
   test("text embedding is deterministic across partitionings and k-dim") {
-    val a = Features.textEmbedding(spark, sf(), k = 4)
+    val a = Features.textEmbedding(spark, sf())
       .orderBy("doc_id").as[(Long, Array[Double])].collect()
-    assert(a.forall(_._2.length == 4))
-    val b = Features.textEmbedding(spark, sf(), k = 4)
+    assert(a.forall(_._2.length == Features.EmbeddingDims))
+    val b = Features.textEmbedding(spark, sf())
       .orderBy("doc_id").as[(Long, Array[Double])].collect()
     assert(a.zip(b).forall { case ((i1, v1), (i2, v2)) =>
       i1 == i2 && v1.sameElements(v2) })
@@ -49,7 +49,7 @@ class FeaturesSpec extends SparkSpec {
   test("similar documents embed closer than dissimilar ones") {
     // The corpus has planted near-dup pairs (Jaccard ≥ 0.9); their
     // embeddings must be closer than a random pair's on average.
-    val emb = Features.textEmbedding(spark, sf("0.01"), k = 10)
+    val emb = Features.textEmbedding(spark, sf("0.01"))
       .as[(Long, Array[Double])].collect().toMap
     val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"), 0.9)
       .select("doc_i", "doc_j").as[(Long, Long)].collect()
@@ -123,7 +123,7 @@ class FeaturesSpec extends SparkSpec {
   }
 
   test("frame sampling fans out ceil(n_frames/stride) rows per media") {
-    val counts = Multimodal.frameSample(spark, sf(), stride = 8)
+    val counts = Multimodal.frameSample(spark, sf())
       .groupBy("media_id").agg(count(lit(1)).as("n"))
       .join(Multimodal.mediaMeta(spark, sf()), "media_id")
       .select($"n", ceil($"n_frames" / lit(8.0)).cast("long").as("want"))
@@ -134,7 +134,7 @@ class FeaturesSpec extends SparkSpec {
   test("hashed embedding keeps near-dups near and is deterministic") {
     // open-vocab twin of the two tests above: same invariants, but the
     // vector space is the feature-hashed one (no driver vocabulary)
-    val emb = Features.textEmbeddingHashed(spark, sf("0.01"), k = 10)
+    val emb = Features.textEmbeddingHashed(spark, sf("0.01"))
       .as[(Long, Array[Double])].collect().toMap
     // high-Jaccard near-dups: mean distance well under the random background
     val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"), 0.9)
@@ -149,7 +149,7 @@ class FeaturesSpec extends SparkSpec {
     assert(dupDist < randDist / 2,
       s"dup pairs mean dist $dupDist vs random $randDist")
     // and determinism across re-runs (decimal bucket sums - exact)
-    val again = Features.textEmbeddingHashed(spark, sf("0.01"), k = 10)
+    val again = Features.textEmbeddingHashed(spark, sf("0.01"))
       .as[(Long, Array[Double])].collect().toMap
     assert(emb.keys.forall(k => emb(k).sameElements(again(k))))
   }

@@ -22,7 +22,7 @@ class DecontamSpec extends SparkSpec {
     val eval = e.filter(col("vec_id").isin(copiedIds: _*))
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
 
-    val out = Similarity.embeddingDecontamFrom(corpus, eval, tau = 0.99)
+    val out = Similarity.embeddingDecontamFrom(corpus, eval)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getBoolean(3))).toMap
 
@@ -36,10 +36,20 @@ class DecontamSpec extends SparkSpec {
     }
     // Verdicts reference only eval-side ids — the frames stay distinct.
     assert(out.values.forall(_._1 >= 1000000L))
-    // tau=0.99 keeps the gate tight: non-copies stay below it here.
-    val flagged = out.filter(_._2._3).keySet
-    assert(flagged == copiedIds.toSet,
-      s"only the planted copies should reach tau=0.99, got $flagged")
+    // every other verdict is the brute argmax over the three eval
+    // vectors (4dp cosine, ties to the lower id), flagged at 0.6
+    def dot(a: Array[Float], b: Array[Float]) =
+      a.indices.foldLeft(0.0)((s, i) => s + a(i).toDouble * b(i).toDouble)
+    def vecs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val evalVecs = vecs(eval)
+    vecs(corpus).foreach { case (id, v) =>
+      val (cos, nearest) = evalVecs.map { case (eid, ev) =>
+        (BigDecimal(dot(v, ev) / (math.sqrt(dot(v, v)) * math.sqrt(dot(ev, ev))))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, eid)
+      }.minBy { case (c, eid) => (-c, eid) }
+      assert(out(id) == ((nearest, cos, cos >= 0.6)), s"vec $id: ${out(id)}")
+    }
   }
 
   test("eval side above DecontamMaxEvalVectors is refused up front") {

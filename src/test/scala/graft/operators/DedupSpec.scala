@@ -194,10 +194,15 @@ class DedupSpec extends SparkSpec {
 
   test("cluster operators degrade gracefully when no pairs exist") {
     // threshold above 1.0 → empty pair graph → every doc its own cluster
-    val labels = Dedup.nearDupClusters(spark, sf(), threshold = 1.1)
+    val labels = Dedup.nearDupClustersFrom(graft.Tables.documents(spark, sf()), 1.1)
       .as[(Long, Long)].collect()
     assert(labels.nonEmpty && labels.forall { case (d, c) => d == c })
-    assert(Dedup.clusterKeep(spark, sf(), threshold = 1.1).count() == 0)
+    // clusterKeep is its labels' non-singleton clusters: none at 1.1
+    // (above), exactly the grouped labels at the deployed threshold
+    val grouped = Dedup.nearDupClusters(spark, sf()).as[(Long, Long)].collect()
+      .groupBy(_._2).map { case (c, m) => (c, m.length.toLong) }.filter(_._2 >= 2).toSet
+    assert(grouped.nonEmpty)
+    assert(Dedup.clusterKeep(spark, sf()).as[(Long, Long)].collect().toSet == grouped)
   }
 
   test("label propagation converges on a 200-node chain within 20 rounds (pointer jumping)") {
@@ -284,13 +289,23 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q23's derived default equals the pinned classic geometry on the fixture") {
-    val derived = Dedup.embeddingPairsBucketed(spark, sf("0.01"), 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    val pinned = Dedup.embeddingPairsBucketed(spark, sf("0.01"), 0.4,
-      planesPerBand = 6)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(derived == pinned,
+    val d = sf("0.01")
+    assert(Dedup.deriveSrpPlanes(graft.Tables.countOf(spark, d, "embeddings")) == 6,
       "derived width diverged from 6 below the oracle ceiling")
+    val derived = Dedup.embeddingPairsBucketed(spark, d, 0.4)
+      .as[(Long, Long, Double)].collect().toSet
+    // the pinned geometry's reference: the exact pairs that share a
+    // band key of the classic 8 bands x 6 planes
+    val keys = Dedup.srpBandKeys(graft.Tables.embeddings(spark, d), 6, 8)
+      .select($"vec_id", $"band", $"bkey".cast("long")).as[(Long, Int, Long)].collect()
+    val cands: Set[(Long, Long)] = keys.groupBy(k => (k._2, k._3)).values.flatMap { g =>
+      val ids = g.map(_._1).sorted.toSeq
+      for (i <- ids; j <- ids if i < j) yield (i, j)
+    }.toSet
+    val pinned = Dedup.embeddingPairs(spark, d, 0.4).as[(Long, Long, Double)].collect()
+      .filter { case (i, j, _) => cands((i, j)) }.toSet
+    assert(derived.nonEmpty && derived == pinned,
+      "the derived geometry's pairs differ from the classic 8x6 banding's")
   }
 
   test("Manku multi-table SimHash emits exactly the classic pair set") {

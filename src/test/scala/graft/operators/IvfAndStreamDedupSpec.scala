@@ -22,32 +22,45 @@ class IvfAndStreamDedupSpec extends SparkSpec {
     def r4(x: Double): Double =
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     def cell(centroids: Array[Array[Double]])(v: Array[Float]): Int =
-      centroids.indices.minBy { c =>
+      probes(centroids, 1)(v).head
+    /** The `nProbe` nearest cells by (squared L2, index). */
+    def probes(centroids: Array[Array[Double]], nProbe: Int)(v: Array[Float]): Seq[Int] =
+      centroids.indices.sortBy { c =>
         var d = 0.0; var i = 0
         while (i < v.length) {
           val diff = v(i).toDouble - centroids(c)(i); d += diff * diff; i += 1
         }
-        d
-      }
+        (d, c)
+      }.take(nProbe)
   }
 
-  test("IVF probing ALL cells reproduces brute force exactly") {
-    val brute = Similarity.bruteForceTopK(spark, sf("0.01"), nQueries = 5, k = 3)
+  test("IVF top-k is brute force over the probed cells") {
+    // driver replay of the probe: each query's 4 nearest of the 16
+    // cells, each corpus vector's nearest cell; the reference is the
+    // brute ranking of every pair cut to the probed cells
+    val centroids = Ivf.fittedCentroids(spark, sf("0.01"), Ann.Cells, Ann.DefaultIters)
+    val emb = graft.Tables.embeddings(spark, sf("0.01"))
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect().toMap
+    val cellOf = emb.map { case (id, v) => id -> BruteMath.cell(centroids)(v) }
+    val probed = (0L until Ann.NQueries)
+      .map(q => q -> BruteMath.probes(centroids, 4)(emb(q)).toSet).toMap
+    val expected = Similarity.bruteForceTopK(spark, sf("0.01"), k = emb.size)
+      .select("qid", "nbr_id", "rank").as[(Long, Long, Long)].collect()
+      .filter { case (q, id, _) => probed(q)(cellOf(id)) }
+      .groupBy(_._1).values.flatMap(_.sortBy(_._3).take(Ann.TopK).zipWithIndex
+        .map { case ((q, id, _), i) => (q, id, i + 1L) }).toSet
+    val ivf = Ivf.topK(spark, sf("0.01"))
       .select("qid", "nbr_id", "rank").as[(Long, Long, Long)].collect().toSet
-    val ivfAll = Ivf.topK(spark, sf("0.01"), nQueries = 5, topk = 3,
-      kClusters = 8, nProbe = 8, iters = 1)
-      .select("qid", "nbr_id", "rank").as[(Long, Long, Long)].collect().toSet
-    assert(ivfAll == brute)
+    assert(ivf.size == Ann.NQueries * Ann.TopK && ivf == expected)
   }
 
   test("IVF partial probe keeps useful recall at a fraction of the scans") {
-    val brute = Similarity.bruteForceTopK(spark, sf("0.01"), nQueries = 10, k = 5)
+    val brute = Similarity.bruteForceTopK(spark, sf("0.01"))
       .select("qid", "nbr_id").as[(Long, Long)].collect().toSet
-    val ivf = Ivf.topK(spark, sf("0.01"), nQueries = 10, topk = 5,
-      kClusters = 8, nProbe = 3, iters = 2)
+    val ivf = Ivf.topK(spark, sf("0.01"))
       .select("qid", "nbr_id").as[(Long, Long)].collect().toSet
     val recall = (brute & ivf).size.toDouble / brute.size
-    assert(recall >= 0.4, s"recall $recall") // 3/8 cells probed
+    assert(recall >= 0.4, s"recall $recall") // 4/16 cells probed
   }
 
   test("kNN classify probe-all equals driver brute force; partial probes keep label agreement") {
@@ -171,14 +184,13 @@ class IvfAndStreamDedupSpec extends SparkSpec {
   }
 
   test("semanticKeep agrees with a brute within-cell replication on the real fixture") {
-    val kClusters = 8
-    val kept = Ivf.semanticKeep(spark, sf("0.001"), threshold = 0.3,
-        kClusters = kClusters, iters = 1)
+    val kept = Ivf.semanticKeep(spark, sf("0.001"))
       .as[(Long, Int)].collect().toMap
     // driver replication: same centroids (session-cached fit), same
     // squared-L2 lowest-id assignment, same 4dp HALF_UP cosine
     import BruteMath.{dotd, r4}
-    val centroids = Ivf.fittedCentroids(spark, sf("0.001"), kClusters, 1)
+    val centroids = Ivf.fittedCentroids(spark, sf("0.001"),
+      Ivf.semanticK(spark, sf("0.001")), Ann.DefaultIters)
     val emb = graft.Tables.embeddings(spark, sf("0.001"))
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
@@ -187,10 +199,10 @@ class IvfAndStreamDedupSpec extends SparkSpec {
     val expected = emb.indices.filterNot { j =>
       emb.indices.exists { i =>
         i < j && cells(i) == cells(j) &&
-          r4(dotd(emb(i)._2, emb(j)._2) / (nrm(i) * nrm(j))) >= 0.3
+          r4(dotd(emb(i)._2, emb(j)._2) / (nrm(i) * nrm(j))) >= Ivf.SemanticThreshold
       }
     }.map(j => emb(j)._1 -> cells(j)).toMap
-    assert(expected.size < emb.length, "fixture produced no dominated vector at 0.3")
+    assert(expected.size < emb.length, "fixture produced no dominated vector")
     assert(kept == expected,
       s"diverged on ${(kept.toSet -- expected.toSet).take(5)} / ${(expected.toSet -- kept.toSet).take(5)}")
   }
@@ -203,15 +215,15 @@ class IvfAndStreamDedupSpec extends SparkSpec {
     // ...and k grows once the corpus outruns the floor: 10x a
     // 16-cell-by-target corpus must derive 10x the cells, keeping
     // within-cell pair work ~n*target instead of n^2/16.
-    val target = 64
-    val n = 16 * target * 10 // 10 240
-    assert(Ivf.deriveK(n, target) == 160)
+    val target = Ivf.TargetCellSize
+    val n = 16 * target * 10 // 81 920
+    assert(Ivf.deriveK(n) == 160)
     val dir = java.nio.file.Files.createTempDirectory("derivedk").toString
     spark.range(n).select(col("id").as("vec_id"), expr(
         "transform(sequence(0, 7), j -> CAST(sin(id * 0.7 + j * 1.3 + id * j * 0.01) AS FLOAT))")
       .as("embedding"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val k = Ivf.deriveK(n, target)
+    val k = Ivf.deriveK(n)
     val centroids = Ivf.fittedCentroids(spark, dir, k, 1)
     val sizes = graft.Tables.embeddings(spark, dir)
       .withColumn("cell", Ivf.assignExpr(centroids)(col("embedding")))
@@ -293,7 +305,7 @@ class IvfAndStreamDedupSpec extends SparkSpec {
 
   test("cell-balanced keep: per-cell cap + ranks replicate a driver top-k replay") {
     val perCell = 8
-    val kept = Ivf.cellBalancedKeep(spark, sf("0.01"), perCell)
+    val kept = Ivf.cellBalancedKeep(spark, sf("0.01"))
       .select("cell", "doc_id", "cell_rank", "lm_score")
       .as[(Int, Long, Long, Double)].collect()
     // cap + contiguous ranks per cell

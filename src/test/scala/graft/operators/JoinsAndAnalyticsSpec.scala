@@ -160,7 +160,7 @@ class JoinsAndAnalyticsSpec extends SparkSpec {
   }
 
   test("chunking reassembles every document: token counts sum, last chunk partial") {
-    val chunks = TextOps.chunkDocs(spark, sf(), chunkTokens = 64)
+    val chunks = TextOps.chunkDocs(spark, sf())
     val perDoc = chunks.groupBy($"doc_id")
       .agg(sum($"n_chunk_tokens").as("tok"), count(lit(1)).as("n"),
         max($"n_chunk_tokens").as("maxc"))
@@ -175,7 +175,7 @@ class JoinsAndAnalyticsSpec extends SparkSpec {
   }
 
   test("sequence packing: bins respect capacity given per-doc token bound, shards independent") {
-    val packed = TextOps.packSequences(spark, sf(), capacity = 512).cache()
+    val packed = TextOps.packSequences(spark, sf()).cache()
     assert(packed.count() == graft.Tables.documents(spark, sf()).count())
     // density assertion below presumes no single doc exceeds capacity
     // (else bins legitimately skip numbers) — pin that data property
@@ -195,7 +195,7 @@ class JoinsAndAnalyticsSpec extends SparkSpec {
   }
 
   test("top bigrams equal a driver-side exact count (non-distinct occurrences)") {
-    val out = Analytics.topBigrams(spark, sf(), k = 20).as[(String, Long)].collect()
+    val out = Analytics.topBigrams(spark, sf()).as[(String, Long)].collect()
     assert(out.length == 20)
     assert(out.sliding(2).forall {
       case Array((b1, n1), (b2, n2)) => n1 > n2 || (n1 == n2 && b1 < b2)

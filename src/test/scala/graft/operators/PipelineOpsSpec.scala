@@ -57,7 +57,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("bloom-pruned fact keeps every true match and actually prunes") {
     val fact = spark.range(50000).select($"id".as("k"), ($"id" % 97).as("v"))
     val dim = spark.range(1000).select(($"id" * 50).as("k")) // 2% selectivity
-    val pruned = BloomPrune.prunedFact(fact, "k", dim, "k", 4096, 0.01)
+    val pruned = BloomPrune.prunedFact(fact, "k", dim, "k")
     // no false negatives: pruned ⊇ true matches
     assert(pruned.join(dim, "k").count() == fact.join(dim, "k").count())
     // at fpp=1% the survivor set is within ~2x of the true match count
@@ -106,7 +106,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("heavyTokens equals the exact HAVING computation") {
-    val sketched = HeavyHitters.heavyTokens(spark, sf("0.001"), k = 50)
+    val sketched = HeavyHitters.heavyTokens(spark, sf("0.001"))
       .orderBy("token").collect().toSeq
     val toks = spark.read.parquet(sf("0.001") + "/documents.parquet")
       .select(explode(split($"text", " ")).as("t"))
@@ -168,7 +168,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("z-clustering bounds BOTH dimension spans per partition") {
-    val parts = ZOrder.clustered(spark, sf("0.01"), 16)
+    val parts = ZOrder.clustered(spark, sf("0.01"))
       .groupBy(spark_partition_id().as("p"))
       .agg((max($"ub") - min($"ub")).as("ub_span"),
         (max($"hb") - min($"hb")).as("hb_span"),
@@ -187,7 +187,15 @@ class PipelineOpsSpec extends SparkSpec {
     for (sfTag <- Seq("0.001", "0.01")) {
       val withFilter = Analytics.groupSample(spark, sf(sfTag))
         .orderBy("event_type", "rk").collect().toSeq
-      val noFilter = Analytics.groupSample(spark, sf(sfTag), preKeep = 1.0)
+      // the unfiltered reservoir: the same hash rank over every event
+      val w = org.apache.spark.sql.expressions.Window.partitionBy($"event_type")
+        .orderBy($"h", $"event_id")
+      val noFilter = graft.Tables.events(spark, sf(sfTag))
+        .select($"event_type", $"event_id", $"user_id")
+        .withColumn("h", Analytics.arithHash($"event_id"))
+        .withColumn("rk", row_number().over(w))
+        .filter($"rk" <= 5)
+        .select($"event_type", $"rk".cast("long").as("rk"), $"event_id", $"user_id")
         .orderBy("event_type", "rk").collect().toSeq
       assert(withFilter == noFilter, s"sf$sfTag differs")
       assert(withFilter.size == 5 * 5) // 5 types x k=5
@@ -283,8 +291,8 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("count-min: never underestimates, bounded overestimate, merge-invariant") {
-    val width = 1024
-    val est = HeavyHitters.heavyTokenEstimates(spark, sf("0.01"), width = width)
+    val width = HeavyHitters.CmsWidth
+    val est = HeavyHitters.heavyTokenEstimates(spark, sf("0.01"))
       .select("token", "exact_cnt", "cms_est")
       .as[(String, Long, Long)].collect()
     assert(est.length >= 25)
@@ -354,7 +362,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("kNN classify: one row per holdout vector, vote = recomputed mode of its k nearest") {
-    val out = Similarity.knnClassify(spark, sf("0.001"), k = 10, holdout = 5)
+    val out = Similarity.knnClassify(spark, sf("0.001"))
       .collect().map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Int]("predicted_label"), r.getAs[Long]("votes"))).toMap
     val all = graft.Tables.embeddings(spark, sf("0.001"))
@@ -380,7 +388,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("weighted sample: equals naive A-ES recompute and skews toward long docs") {
     val k = 50
-    val sample = Analytics.weightedSample(spark, sf("0.001"), k).collect()
+    val sample = Analytics.weightedSample(spark, sf("0.001")).collect()
       .map(_.getAs[Long]("doc_id"))
     val docs = graft.Tables.documents(spark, sf("0.001"))
       .select("doc_id", "n_chars").collect()
@@ -405,7 +413,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("MMR re-rank: first pick is the nearest neighbor, set is more diverse than top-k") {
     val k = 10
-    val mmr = Similarity.mmrRerank(spark, sf("0.001"), queryId = 0L, k = k)
+    val mmr = Similarity.mmrRerank(spark, sf("0.001"))
       .orderBy("rank").collect()
     assert(mmr.length == k)
     val topk = Similarity.bruteForceTopK(spark, sf("0.001"), nQueries = 1, k = k)
@@ -473,7 +481,7 @@ class PipelineOpsSpec extends SparkSpec {
     // real fixture, 10 merges (the planted shared-boundary and
     // identical-run corpus is checked against the fitter below)
     val fixtureFreqs = fixtureWordFreqs()
-    val got = TextOps.bpeLearn(spark, sf("0.001"), merges = 10)
+    val got = TextOps.bpeLearn(spark, sf("0.001"))
       .as[(Long, String, String, String, Long)].collect().toSeq
     assert(got == naiveBpe(fixtureFreqs, 10),
       s"fixture diverged:\n$got\nvs\n${naiveBpe(fixtureFreqs, 10)}")
@@ -497,7 +505,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("BPE apply matches a driver-side apply of the learned merges") {
-    val merges = TextOps.bpeLearn(spark, sf("0.001"), merges = 10)
+    val merges = TextOps.bpeLearn(spark, sf("0.001"))
       .as[(Long, String, String, String, Long)].collect()
       .map(r => (r._2, r._3))
     def applyWord(w: String): Int = {
@@ -534,48 +542,9 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("bpeApply with a checkpoint-batch-crossing merge table equals the " +
-    "driver replay (the 32k-table plan-depth path)") {
-    import spark.implicits._
-    // request far past saturation: the fixture vocabulary collapses
-    // completely, and the learned table must cross BpeApplyBatch so the
-    // batched localCheckpoint path actually runs
-    val learned = TextOps.learnedMerges(spark, sf("0.001"), 32768)
-    assert(learned.length > TextOps.BpeApplyBatch,
-      s"saturation ${learned.length} <= batch ${TextOps.BpeApplyBatch}: " +
-        "test no longer crosses a checkpoint — lower the batch or plant words")
-    def applyWord(w: String): Long = {
-      var ts: Vector[String] = w.map(_.toString).toVector
-      learned.foreach { case (_, w1, w2, _, _) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var i = 0
-        while (i < ts.length) {
-          if (i + 1 < ts.length && ts(i) == w1 && ts(i + 1) == w2) {
-            out += w1 + w2; i += 2
-          } else { out += ts(i); i += 1 }
-        }
-        ts = out.toVector
-      }
-      ts.length
-    }
-    val got = TextOps.bpeApply(spark, sf("0.001"), 32768)
-      .select("doc_id", "n_subwords").as[(Long, Long)].collect().toMap
-    val docs = graft.Tables.documents(spark, sf("0.001"))
-      .select("doc_id", "text").as[(Long, String)].collect()
-    docs.foreach { case (id, text) =>
-      val exp = text.split(" ").filter(_.nonEmpty)
-        .map(w => if (w.length >= 2) applyWord(w) else 1L).sum
-      assert(got(id) == exp, s"doc $id: ${got(id)} subwords, replay says $exp")
-    }
-    // fully saturated table -> every multi-char word is ONE token, so
-    // fertility collapses to exactly 1.0 everywhere
-    TextOps.tokenizerFertility(spark, sf("0.001"), 32768).collect()
-      .foreach(r => assert(r.getAs[Double]("fertility") == 1.0, r.toString))
-  }
-
   test("BPE pair counts equal a naive recompute; top merge empties its own pair") {
     val k = 20
-    val got = TextOps.bpePairCounts(spark, sf("0.001"), k).collect()
+    val got = TextOps.bpePairCounts(spark, sf("0.001")).collect()
       .map(r => (r.getAs[String]("pair"), r.getAs[Long]("freq"))).toSeq
     val words = graft.Tables.documents(spark, sf("0.001"))
       .select("text").as[String].collect()
@@ -627,7 +596,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bigram PMI equals a naive recompute including rank order") {
-    val got = Analytics.bigramPmi(spark, sf("0.001"), k = 20, minCount = 5)
+    val got = Analytics.bigramPmi(spark, sf("0.001"))
       .collect().map(r => (r.getAs[String]("bigram"), r.getAs[Long]("cab"),
         r.getAs[Double]("pmi"))).toSeq
     val docs = graft.Tables.documents(spark, sf("0.001"))
@@ -648,17 +617,18 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("bigram PMI counts bigrams over the documents that have text") {
     val lake = java.nio.file.Files.createTempDirectory("pmi-lake").toString
-    val texts = Seq(Some("a b c a b"), None, Some("a b d"), Some("c a b"), Some("d"))
+    // "a b" occurs 5 times, the least count a bigram needs to be ranked
+    val texts = Seq(Some("a b c a b"), None, Some("a b d a b"), Some("c a b"), Some("d"))
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$lake/documents.parquet")
-    val got = Analytics.bigramPmi(spark, lake, k = 20, minCount = 1)
+    val got = Analytics.bigramPmi(spark, lake)
       .collect().map(r => (r.getAs[String]("bigram"), r.getAs[Double]("pmi"))).toSeq
     val docs = texts.flatten.map(_.split(" ").toSeq)
     val nTokens = docs.map(_.length).sum.toDouble
-    val nBigrams = docs.map(_.length - 1).sum.toDouble // 7: the null-text doc has none
+    val nBigrams = docs.map(_.length - 1).sum.toDouble // 10: the null-text doc has none
     val uni = docs.flatten.groupBy(identity).map { case (w, g) => w -> g.size }
     val expected = docs.flatMap(_.sliding(2).filter(_.length == 2))
-      .groupBy(identity).toSeq.map { case (Seq(a, b), g) =>
+      .groupBy(identity).filter(_._2.size >= 5).toSeq.map { case (Seq(a, b), g) =>
         (s"$a $b", BigDecimal(math.log((g.size / nBigrams) /
           ((uni(a) / nTokens) * (uni(b) / nTokens))))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)

@@ -45,17 +45,16 @@ class PqSpec extends SparkSpec {
       }
       books
     }
-    def code(cb: Array[Array[Double]], v: Array[Float]): Int = {
-      var best = 0; var bestD = Double.MaxValue
-      for (c <- cb.indices) {
+    def code(cb: Array[Array[Double]], v: Array[Float]): Int = nearest(cb, v, 1).head
+    /** The `n` nearest codes by (squared L2, index). */
+    def nearest(cb: Array[Array[Double]], v: Array[Float], n: Int): Seq[Int] =
+      cb.indices.sortBy { c =>
         var d = 0.0; var i = 0
         while (i < v.length) {
           val diff = v(i).toDouble - cb(c)(i); d += diff * diff; i += 1
         }
-        if (d < bestD) { bestD = d; best = c }
-      }
-      best
-    }
+        (d, c)
+      }.take(n)
     def r4(x: Double): Double =
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     /** ADC top-k with the engine's fold order: LUT entries in
@@ -159,18 +158,27 @@ class PqSpec extends SparkSpec {
     }
   }
 
-  test("IVF-ADC probing ALL cells reproduces plain ADC exactly") {
-    // the composition invariant (the IVF family's probe-all ≡ brute
-    // rule, one level up): with every cell probed the candidate set is
-    // the full corpus, so cell pruning must change NOTHING
-    val all = Pq.ivfAdcTopK(spark, sf("0.001"), nProbe = 16)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val plain = Pq.adcTopK(spark, sf("0.001"))
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(all == plain)
+  test("IVF-ADC is plain ADC over the probed cells") {
+    // the composition invariant (the IVF family's probe ≡ brute-over-
+    // the-probed-cells rule, one level up): cell pruning only narrows
+    // each query's candidates to its DeployedNProbe nearest cells
+    val d = sf("0.001")
+    val cents = Ivf.fittedCentroids(spark, d, Ann.Cells, Ann.DefaultIters)
+    val books = Pq.fittedCodebooks(spark, d)
+    val enc = Pq.ivfEncodedRaw(spark, d)
+    val queries = graft.Tables.embeddings(spark, d).filter(col("vec_id") < Ann.NQueries)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+    val plain = queries.flatMap { case (qid, qv) =>
+      val probes = Replay.nearest(cents, qv, Pq.DeployedNProbe)
+      Pq.adcTopKFrom(enc.filter(col("cluster").isin(probes: _*)).select("vec_id", "codes"),
+          Seq(qid -> qv), books, Ann.TopK)
+        .as[(Long, Long, Long, Double)].collect()
+    }.toSet
+    val ivf = Pq.ivfAdcTopK(spark, d).as[(Long, Long, Long, Double)].collect().toSet
+    assert(ivf.size == Ann.NQueries * Ann.TopK && ivf == plain)
   }
 
-  test("residual IVFADC probing ALL cells matches a driver replay of the full pipeline") {
+  test("residual IVFADC matches a driver replay of the full pipeline") {
     val d = sf("0.001")
     val (m, k, topk) = (8, 16, 5)
     val cents = Ivf.fittedCentroids(spark, d, 16, 2)
@@ -190,12 +198,13 @@ class PqSpec extends SparkSpec {
       (id, c, Array.tabulate(m)(s => Replay.code(books(s), r.slice(s * sub, (s + 1) * sub))))
     }
     val expect = vecs.filter(_._1 < 10).flatMap { case (qid, qv) =>
+      val probes = Replay.nearest(cents, qv, Pq.DeployedNProbe).toSet
       val lut = Array.tabulate(m, k) { (s, c) =>
         var acc = 0.0; var i = 0
         while (i < sub) { acc += qv(s * sub + i).toDouble * books(s)(c)(i); i += 1 }
         acc
       }
-      codes.filter(_._1 != qid).map { case (id, cell, cs) =>
+      codes.filter { case (id, cell, _) => id != qid && probes(cell) }.map { case (id, cell, cs) =>
         var cd = 0.0; var i = 0
         while (i < 64) { cd += qv(i).toDouble * cents(cell)(i); i += 1 }
         var score = cd
@@ -204,7 +213,7 @@ class PqSpec extends SparkSpec {
       }.sortBy { case (id, sc) => (-sc, id) }.take(topk).zipWithIndex
         .map { case ((id, sc), r) => (qid, id, (r + 1).toLong, sc) }
     }.toSet
-    val engine = Pq.ivfAdcResidualTopK(spark, d, nProbe = 16)
+    val engine = Pq.ivfAdcResidualTopK(spark, d)
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(engine == expect)
   }
@@ -217,15 +226,14 @@ class PqSpec extends SparkSpec {
   }
 
   test("recall stays a true fraction when topk exceeds the corpus") {
-    // topk > |corpus|-1 shortens BOTH lists to the full 499-candidate
-    // set, so every query's PQ list trivially covers the brute list:
-    // recall must be exactly 1.0. Dividing by the topk parameter (the
-    // pre-fix denominator) would report 499/600 ≈ 0.83 here.
-    val rows = Pq.recallVsBrute(spark, sf("0.001"), nQueries = 2, topk = 600)
-      .as[(Long, Double)].collect()
-    assert(rows.length == 2)
-    assert(rows.forall { case (_, r) => r == 1.0 },
-      s"degenerate-corpus recall must be 1.0, got ${rows.mkString(",")}")
+    // a corpus under topk (5) shortens BOTH lists: q0's brute list
+    // holds 3 neighbours, all found, q1's holds 2, one found. The gate
+    // q136 runs divides by the brute list; dividing by topk (the
+    // pre-fix denominator) would report 0.6 and 0.2 here.
+    val brute = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 0L), (1L, 2L)).toDF("qid", "nbr_id")
+    val ann = Seq((0L, 3L), (0L, 1L), (0L, 2L), (1L, 2L), (1L, 3L)).toDF("qid", "nbr_id")
+    val rows = Ann.recall(ann, brute).as[(Long, Double)].collect().toMap
+    assert(rows == Map(0L -> 1.0, 1L -> 0.5), s"recall must divide by the brute list, got $rows")
   }
 
   private def Tables_embeddings(): Seq[(Long, Array[Float])] =

@@ -95,15 +95,24 @@ class RetrievalFusionSpec extends SparkSpec {
     "gate bounded, plan stays equi-join + broadcast") {
     import spark.implicits._
     // every (qid, nbr) the pruned scan emits must carry EXACTLY the
-    // score the flat SQ8 scan assigns that pair — pruning changes the
-    // candidate set, never the arithmetic
-    val flat = Sq.sqTopKFor(spark, sf(),
-        graft.Tables.embeddings(spark, sf()).filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qemb")),
-        k = Int.MaxValue)
-      .select("qid", "nbr_id", "sq_ip")
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, n, s) => (q, n) -> s }.toMap
+    // score the flat SQ8 arithmetic assigns that pair — pruning changes
+    // the candidate set, never the arithmetic. The flat score of every
+    // pair, replayed over the encoded layer: reconstruct each code,
+    // fold the dot in index order from 0.0, round 4dp half-up
+    val (mn, mx) = Sq.fittedBounds(spark, sf())
+    val codes = Sq.encoded(spark, sf()).select("vec_id", "codes")
+      .as[(Long, Array[Int])].collect()
+    val queries = graft.Tables.embeddings(spark, sf()).filter(col("vec_id") < 10)
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
+    val flat = (for ((q, qv) <- queries; (n, cs) <- codes if n != q) yield {
+      var acc = 0.0
+      cs.indices.foreach { j =>
+        val r = if (mx(j) > mn(j)) mn(j) + cs(j).toDouble * (mx(j) - mn(j)) / Sq.Levels
+          else mn(j)
+        acc += r * qv(j).toDouble
+      }
+      (q, n) -> BigDecimal(acc).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }).toMap
     val pruned = Sq.ivfSqTopK(spark, sf()).collect()
     assert(pruned.nonEmpty)
     pruned.foreach { r =>
@@ -174,20 +183,41 @@ class RetrievalFusionSpec extends SparkSpec {
     }
   }
 
-  test("hamming ANN with an all-corpus candidate set IS brute force") {
+  test("hamming ANN is brute force over its Hamming candidates") {
+    // stage 1 recomputed on the driver: the CandPerQuery ids nearest
+    // each query's packed code, ties by vec_id
+    val codes = BinaryAnn.packed(spark, sf()).collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    def hamming(a: (Long, Long), b: (Long, Long)) =
+      java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)
+    val cands = (0L until Ann.NQueries).map { q =>
+      q -> (codes - q).toSeq.sortBy { case (id, c) => (hamming(codes(q), c), id) }
+        .take(BinaryAnn.CandPerQuery).map(_._1).toSet
+    }.toMap
+    // stage 2's reference: the brute ranking of every pair, cut to the
+    // candidates and re-numbered
     val n = graft.Tables.embeddings(spark, sf()).count().toInt
-    val full = BinaryAnn.hammingTopK(spark, sf(), candPerQuery = n)
+    val expected = Similarity.bruteForceTopK(spark, sf(), k = n).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .filter { case (q, id, _, _) => cands(q).contains(id) }
+      .groupBy(_._1).values.flatMap(_.sortBy(_._3).take(Ann.TopK).zipWithIndex
+        .map { case ((q, id, _, cos), i) => (q, id, i + 1L, cos) }).toSet
+    val got = BinaryAnn.hammingTopK(spark, sf())
       .select("qid", "nbr_id", "rank", "cos_sim").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val brute = Similarity.bruteForceTopK(spark, sf())
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(full == brute,
-      "exact re-rank over every candidate must reproduce the brute baseline")
-    // and the recall gate agrees: 1.0 for every query
-    val rec = BinaryAnn.hammingRecallVsBrute(spark, sf(), candPerQuery = n)
-      .collect()
-    assert(rec.length == 10 && rec.forall(_.getDouble(1) == 1.0))
+    assert(got.size == Ann.NQueries * Ann.TopK && got == expected,
+      "the exact re-rank must be the brute ranking of the candidates")
+    // and the recall gate counts the brute top-k it keeps
+    val brute = Similarity.bruteForceTopK(spark, sf()).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rec = BinaryAnn.hammingRecallVsBrute(spark, sf()).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(rec.size == Ann.NQueries)
+    rec.foreach { case (q, r) =>
+      val hits = got.count { case (gq, id, _, _) => gq == q && brute((q, id)) }
+      assert(r == BigDecimal(hits.toDouble / Ann.TopK)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, s"q$q recall $r")
+    }
   }
 
   test("bounded-candidate hamming recall is measured and sane on the fixture") {

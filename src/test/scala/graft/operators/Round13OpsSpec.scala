@@ -216,20 +216,36 @@ class Round13OpsSpec extends SparkSpec {
   }
 
   test("cell outliers are exactly the coldest ceil(10%) of the full per-cell ranking") {
-    val full = Ivf.cellOutliers(spark, sf(), frac = 1.0)
-      .collect()
-      .groupBy(_.getInt(1))
+    // the full ranking replayed on the driver: nearest cell by (squared
+    // L2, index), 4dp cosine to the float-cast centroid, ascending
+    // double accumulation as dot_f32 runs it
+    def dot(a: Array[Float], b: Array[Float]) =
+      a.indices.foldLeft(0.0)((s, i) => s + a(i).toDouble * b(i).toDouble)
+    val centroids = Ivf.fittedCentroids(spark, sf(), Ann.Cells, Ann.DefaultIters)
+    val cf = centroids.map(_.map(_.toFloat))
+    val full = graft.Tables.embeddings(spark, sf())
+      .select(col("vec_id"), col("embedding")).collect()
+      .map { r =>
+        val v = r.getSeq[Float](1).toArray
+        val cell = centroids.indices.minBy(c => (v.indices.map { i =>
+          val d = v(i).toDouble - centroids(c)(i); d * d }.sum, c))
+        val cos = BigDecimal(dot(v, cf(cell)) /
+            (math.sqrt(dot(v, v)) * math.sqrt(dot(cf(cell), cf(cell)))))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (r.getLong(0), cell, cos)
+      }
+      .groupBy(_._2)
     val out = Ivf.cellOutliers(spark, sf())
       .collect()
       .groupBy(_.getInt(1))
-    assert(out.nonEmpty)
+    assert(out.nonEmpty && out.keySet == full.keySet)
     out.foreach { case (cell, rs) =>
       val n = full(cell).length
       val cut = (n + 9) / 10
       assert(rs.length == cut, s"cell $cell: ${rs.length} outliers, want $cut")
-      val expectIds = full(cell).sortBy(r => (r.getDouble(2), r.getLong(0)))
-        .take(cut).map(_.getLong(0)).toSet
-      assert(rs.map(_.getLong(0)).toSet == expectIds,
+      val expect = full(cell).sortBy { case (id, _, cos) => (cos, id) }
+        .take(cut).map { case (id, _, cos) => (id, cos) }.toSet
+      assert(rs.map(r => (r.getLong(0), r.getDouble(2))).toSet == expect,
         s"cell $cell: outlier set is not the bottom of the full ranking")
     }
   }

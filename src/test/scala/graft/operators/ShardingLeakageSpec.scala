@@ -9,9 +9,9 @@ import graft.SparkSpec
 class ShardingLeakageSpec extends SparkSpec {
 
   test("token shards: every doc once, counts within 1, snake beats chunking") {
-    val nShards = 8
+    val nShards = Sharding.Shards
     val docs = graft.Tables.documents(spark, sf())
-    val out = Sharding.tokenBalancedShards(spark, sf(), nShards).collect()
+    val out = Sharding.tokenBalancedShards(spark, sf()).collect()
     assert(out.length == docs.count())
     assert(out.map(_.getLong(0)).distinct.length == out.length)
     assert(out.forall(r => r.getLong(3) >= 0 && r.getLong(3) < nShards))
@@ -100,24 +100,26 @@ class ShardingLeakageSpec extends SparkSpec {
     got.filter(_._2 > 0).keys.foreach(k => assert(expected.contains(k)))
   }
 
-  test("split leakage: fractions parameterize the audited split") {
-    // a pipeline splitting 50/25/25 must be audited against THAT split,
-    // not the 80/10/10 default — replay with the same non-default
-    // fractions through splitAssign and require exact agreement
-    val sp = Analytics.splitAssign(spark, sf(), trainFrac = 0.5, valFrac = 0.25)
+  test("split leakage: exact channel replays from splitAssign") {
+    // the audit's map-side split must be the one splitAssign assigns on
+    // the exact-duplicate channel too (sf0.1 is the SF that plants
+    // exact duplicates)
+    val d = sf("0.1")
+    val sp = Analytics.splitAssign(spark, d)
       .select("doc_id", "split").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val expected = Dedup.materializedNearPairs(spark, sf())
+    val expected = Dedup.exactEdgesFrom(graft.Tables.documents(spark, d))
       .select("doc_i", "doc_j").collect()
       .map { r =>
         val (a, b) = (sp(r.getLong(0)), sp(r.getLong(1)))
         (if (a <= b) a else b, if (a <= b) b else a)
       }
       .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
-    val got = Dedup.splitLeakage(spark, sf(), trainFrac = 0.5, valFrac = 0.25)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val got = Dedup.splitLeakage(spark, d)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
+    assert(expected.nonEmpty)
     expected.foreach { case (k, n) =>
-      assert(got.getOrElse(k, 0L) == n, s"near count mismatch at $k")
+      assert(got.getOrElse(k, 0L) == n, s"exact count mismatch at $k")
     }
     got.filter(_._2 > 0).keys.foreach(k => assert(expected.contains(k)))
   }

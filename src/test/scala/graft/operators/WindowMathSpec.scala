@@ -47,14 +47,21 @@ class WindowMathSpec extends SparkSpec {
   }
 
   test("tagLate prefix scan is bucket-count invariant (incl. degenerate 1)") {
-    // The distributed running max must be a pure function of the data —
-    // identical under one bucket (the naive sequential fold), a prime
-    // bucket count (uneven ranges), and the default.
-    def run(b: Int) = SupplierStats.tagLate(spark, sf(), buckets = b)
+    // The distributed running max must be a pure function of the data:
+    // the deployed 256-bucket scan must equal the degenerate one-bucket
+    // case, the reference's naive fold over arrival order, replayed here.
+    val graceUs = SupplierStats.GraceSeconds * 1000000L
+    val events = graft.Tables.events(spark, sf()).select($"event_id", $"ts_us")
+      .as[(Long, Long)].collect().sortBy(_._1)
+    val fold = events.scanLeft((0L, 0L, Long.MinValue, false)) {
+      case ((_, _, stream, _), (id, ts)) =>
+        val st = math.max(stream, ts)
+        val we = (ts / windowUs + 1) * windowUs
+        (id, we, st, st > we + graceUs)
+    }.tail.map { case (id, we, _, late) => Seq(id, we, late) }.toSeq
+    val got = SupplierStats.tagLate(spark, sf())
       .orderBy("event_id").collect().map(_.toSeq).toSeq
-    val base = run(1)
-    assert(run(7) == base, "7 buckets diverged from the sequential fold")
-    assert(run(256) == base, "256 buckets diverged from the sequential fold")
+    assert(got.nonEmpty && got == fold, "the prefix scan diverged from the sequential fold")
   }
 
   test("revenue ABC prefix scan is shuffle-partition invariant") {

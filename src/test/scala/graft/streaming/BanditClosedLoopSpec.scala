@@ -40,7 +40,7 @@ class BanditClosedLoopSpec extends SparkSpec {
       .empty[(Long, String, Long, Double)]
     // serving half: scores each context batch against the LIVE store
     val serveQ = LinUCBServeStream.serve(spark, store,
-      ctxMem.toDF().toDF("ctx_id", "x"), alpha = 0.3, k = 2) { out =>
+      ctxMem.toDF().toDF("ctx_id", "x")) { out =>
       served.synchronized {
         served ++= out.as[(Long, String, Long, Double)].collect()
       }
@@ -60,7 +60,7 @@ class BanditClosedLoopSpec extends SparkSpec {
       serveQ.processAllAvailable()
       val round1 = served.synchronized(served.toList)
       val expectV0 = LinUCB.topK(ctx.toDF("ctx_id", "x"),
-          spark.createDataset(storeV0), alpha = 0.3, k = 2)(spark)
+          spark.createDataset(storeV0), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(round1.toSet == expectV0,
         s"round1 served:\n$round1\nbatch op:\n$expectV0")
@@ -94,14 +94,14 @@ class BanditClosedLoopSpec extends SparkSpec {
       serveQ.processAllAvailable()
       val round2 = served.synchronized(served.toList).drop(round1.size)
       val expectV1 = LinUCB.topK(ctx2.toDF("ctx_id", "x"),
-          store.read(spark), alpha = 0.3, k = 2)(spark)
+          store.read(spark), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(round2.toSet == expectV1,
         s"round2 served:\n$round2\nbatch op on live store:\n$expectV1")
       // ...and the loop BIT: the same context against the frozen v0
       // store scores differently
       val counterfactual = LinUCB.topK(ctx2.toDF("ctx_id", "x"),
-          spark.createDataset(storeV0), alpha = 0.3, k = 2)(spark)
+          spark.createDataset(storeV0), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(round2.toSet != counterfactual,
         "loop feedback did not change what gets served")

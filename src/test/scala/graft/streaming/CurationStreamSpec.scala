@@ -163,45 +163,6 @@ class CurationStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("KeepRule.TsLeast collapses the out-of-order divergence: the stream " +
-    "keeps the batch twin's (ts, source, text)-least row per fingerprint") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String, java.sql.Timestamp)]
-    val q = CurationStream.curatedStream(withCols(mem.toDF()),
-        keep = CurationStream.KeepRule.TsLeast)
-      .writeStream.format("memory").queryName("curated_tsleast")
-      .outputMode("append").start()
-    try {
-      // the EXACT f6d551c boundary scenario: same text from two sources
-      // delivered out of event-time order across micro-batches (inside
-      // the watermark), then a far-future closer to flush the horizon
-      mem.addData(("src_z", passA, ts("2024-01-01 00:01:30")))
-      q.processAllAvailable()
-      mem.addData(("src_a", passA, ts("2024-01-01 00:01:00")))
-      q.processAllAvailable()
-      mem.addData(("src_b", passC, ts("2024-01-01 00:30:00")))
-      q.processAllAvailable()
-      // another closer so passC's own horizon also closes
-      mem.addData(("src_c", passD, ts("2024-01-01 01:30:00")))
-      q.processAllAvailable()
-      val streamed = spark.table("curated_tsleast")
-        .select("fp", "source", "ts").as[(String, String, java.sql.Timestamp)]
-        .collect().toSet
-      val batch = CurationStream.batchCurated(withCols(Seq(
-          ("src_z", passA, ts("2024-01-01 00:01:30")),
-          ("src_a", passA, ts("2024-01-01 00:01:00")),
-          ("src_b", passC, ts("2024-01-01 00:30:00"))).toDF()))
-        .select("fp", "source", "ts").as[(String, String, java.sql.Timestamp)]
-        .collect().toSet
-      // the divergence case from the FirstArrival contract spec is GONE:
-      // the stream emits src_a's earlier-ts copy, exactly the batch rule
-      // (under FirstArrival the same feed emits src_z's late-ts copy)
-      assert(batch.subsetOf(streamed), s"stream: $streamed\nbatch: $batch")
-      assert((streamed -- batch).forall(_._2 == "src_c"),
-        s"unexpected extra emissions: ${streamed -- batch}")
-    } finally q.stop()
-  }
-
   test("q168 batch surface: dedup removes exactly the corpus's exact-duplicate " +
     "rows vs the undeduped monitor (sf0.1, the SF that plants them)") {
     val qs = graft.SparkEntry.queries

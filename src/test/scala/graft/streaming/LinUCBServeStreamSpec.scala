@@ -32,7 +32,7 @@ class LinUCBServeStreamSpec extends SparkSpec {
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Long, Double)]
     val q = LinUCBServeStream.serve(spark, store,
-      mem.toDF().toDF("ctx_id", "x"), alpha = 0.3, k = 2) { out =>
+      mem.toDF().toDF("ctx_id", "x")) { out =>
       got.synchronized {
         got ++= out.as[(Long, String, Long, Double)].collect()
       }
@@ -43,7 +43,7 @@ class LinUCBServeStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val firstServed = got.synchronized(got.toSet)
       val expectV1 = LinUCB.topK(ctx1.toDF("ctx_id", "x"),
-          spark.createDataset(storeV1), alpha = 0.3, k = 2)(spark)
+          spark.createDataset(storeV1), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(firstServed == expectV1,
         s"batch1 served:\n$firstServed\nbatch op:\n$expectV1")
@@ -60,7 +60,7 @@ class LinUCBServeStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val secondServed = got.synchronized(got.toSet) -- firstServed
       val expectV2 = LinUCB.topK(ctx2.toDF("ctx_id", "x"),
-          store.read(spark), alpha = 0.3, k = 2)(spark)
+          store.read(spark), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(secondServed == expectV2,
         s"batch2 served:\n$secondServed\nbatch op on live store:\n$expectV2")
@@ -68,7 +68,7 @@ class LinUCBServeStreamSpec extends SparkSpec {
       // frozen v1 store score differently, so "live" is measured, not
       // assumed
       val counterfactual = LinUCB.topK(ctx2.toDF("ctx_id", "x"),
-          spark.createDataset(storeV1), alpha = 0.3, k = 2)(spark)
+          spark.createDataset(storeV1), LinUCB.ServeAlpha, LinUCB.ServeK)(spark)
         .as[(Long, String, Long, Double)].collect().toSet
       assert(secondServed != counterfactual,
         "mid-stream publish did not change the served scores")

@@ -12,10 +12,18 @@ harness), set only by specs (src/test), or set by no caller.
 The scan is lexical: comments and string literals are blanked (string
 interpolations `${...}` are kept, since they hold calls), defs are matched by
 `def name[...](...)...`, calls by `name[...](...)...` with their argument lists
-paired to the def's parameter lists. Calls to a name defined more than once are
-credited to every def of that name, so the scan errs toward "set". A
-defaulted parameter whose def name also appears without an argument list
-(passed as a function value) is listed with a `ref` mark for a look by hand.
+paired to the def's parameter lists. A call qualified by an object of
+src/main (`Ann.topK(`) is credited to that object's def only, and so is an
+unqualified call inside an object that defines the name itself (Scala's
+scoping: `topK(` inside `Ann` is `Ann.topK`); any other call to a name
+defined more than once is credited to every def of that name, so the scan
+errs toward "set". A defaulted parameter whose def name
+also appears without an argument list (passed as a function value) is listed
+with a `ref` mark for a look by hand.
+
+Exits 1 when a defaulted parameter is set by no caller, or only by specs and
+is not in ALLOWED below: a value every non-test caller leaves at its default
+is a constant, not an option.
 """
 import os
 import re
@@ -26,6 +34,19 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = [os.path.join(ROOT, "src/main")]
 SPECS = [os.path.join(ROOT, "src/test")]
 HARNESS = [os.path.join(ROOT, "perfbench/harness/src")]
+
+# Defaulted parameters only specs may set, as `Object.def.param`, each with
+# the reason it stays a parameter.
+ALLOWED = {
+    "LinUCBStream.train.emitEveryMs":
+        "test seam: 0 emits every micro-batch, so specs need no processing-time wait",
+    "LinUCBStream.trainWithBootstrap.emitEveryMs":
+        "test seam: 0 emits every micro-batch, so specs need no processing-time wait",
+    "AvroSerde.encodeOrdersFramed.schemaId":
+        "outside input: a frame written under another id must be rejected on decode",
+    "AvroSerde.decodeOrdersFramed.registry":
+        "outside input: a frame's id resolves only through a registry that holds it",
+}
 
 
 def scala_files(dirs):
@@ -156,8 +177,19 @@ DEF = re.compile(r"\bdef\s+([A-Za-z_]\w*)")
 NAMED = re.compile(r"^\s*([A-Za-z_]\w*)\s*=(?![=>])")
 
 
+def object_spans(text):
+    """(start, end, name) of every `object Name ... { ... }` body."""
+    spans = []
+    for m in re.finditer(r"\bobject\s+([A-Za-z_]\w*)", text):
+        j = text.find("{", m.end())
+        if j >= 0:
+            spans.append((j, balanced(text, j), m.group(1)))
+    return spans
+
+
 def defs_of(path, text, orig):
     out = []
+    spans = object_spans(text)
     for m in DEF.finditer(text):
         line_start = text.rfind("\n", 0, m.start()) + 1
         head = text[line_start:m.start()]
@@ -189,13 +221,20 @@ def defs_of(path, text, orig):
                         break
                 params.append((li, pi, pm.group(1), default))
         line = text.count("\n", 0, m.start()) + 1
+        inner = [s for s in spans if s[0] < m.start() < s[1]]
+        obj = max(inner)[2] if inner else None  # the innermost body
         out.append({"name": m.group(1), "file": os.path.relpath(path, ROOT),
-                    "line": line, "params": params, "start": m.start()})
+                    "line": line, "params": params, "start": m.start(), "obj": obj})
     return out
 
 
+QUALIFIER = re.compile(r"([A-Za-z_]\w*)\s*\.\s*$")
+
+
 def calls_of(name, text, def_starts):
-    """Yield each call's argument groups: [(positional count, named set)]."""
+    """Yield each call's qualifier (the identifier before `.name`, or None),
+    offset and argument groups: (qualifier, offset, [(positional count,
+    named set)])."""
     pat = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])")
     refs = 0
     for m in pat.finditer(text):
@@ -226,7 +265,8 @@ def calls_of(name, text, def_starts):
                 elif not named:
                     pos += 1
             out.append((pos, named))
-        yield out
+        q = QUALIFIER.search(text, max(0, m.start() - 80), m.start())
+        yield (q.group(1) if q else None, m.start(), out)
     yield ("refs", refs)
 
 
@@ -239,9 +279,26 @@ def main(argv):
             sources[f] = (kind, strip(orig), orig)
 
     defs = []
+    spans = {f: object_spans(text) for f, (_, text, _) in sources.items()}
+    objects = set()  # every object of src/main
+    scope = defaultdict(set)  # object -> names it defines, any visibility
     for f, (_, text, orig) in sources.items():
         if f.startswith(ENGINE[0]):
             defs.extend(defs_of(f, text, orig))
+            objects |= {s[2] for s in spans[f]}
+            for m in DEF.finditer(text):
+                inner = [s for s in spans[f] if s[0] < m.start() < s[1]]
+                if inner:
+                    scope[max(inner)[2]].add(m.group(1))
+
+    def resolve(name, qual, f, at, objs):
+        """The objects whose def of `name` a call may reach."""
+        if qual is not None:
+            return {qual} & objs if qual in objects else objs
+        for s in sorted((s for s in spans[f] if s[0] < at < s[1]), reverse=True):
+            if name in scope[s[2]]:
+                return {s[2]} & objs
+        return objs
     by_name = defaultdict(list)
     for d in defs:
         by_name[d["name"]].append(d)
@@ -249,27 +306,32 @@ def main(argv):
     total = sum(len(d["params"]) for d in defs)
     rows = []
     for name, ds in sorted(by_name.items()):
-        setters = defaultdict(set)  # (li, pname) -> {"engine", "spec"}
-        positional = defaultdict(set)  # (li, pi) -> kinds
+        objs = {d["obj"] for d in ds}
+        # (obj, li, pname) and (obj, li, pi) -> {"engine", "spec"}
+        setters = defaultdict(set)
+        positional = defaultdict(set)
         refs = 0
         for f, (kind, text, _) in sources.items():
             starts = {d["start"] for d in ds if os.path.join(ROOT, d["file"]) == f}
             for call in calls_of(name, text, starts):
-                if call and call[0] == "refs":
+                if call[0] == "refs":
                     refs += call[1]
                     continue
-                for li, (pos, named) in enumerate(call):
-                    for pi in range(pos):
-                        positional[(li, pi)].add(kind)
-                    for p in named:
-                        setters[(li, p)].add(kind)
+                qual, at, groups_ = call
+                for obj in resolve(name, qual, f, at, objs):
+                    for li, (pos, named) in enumerate(groups_):
+                        for pi in range(pos):
+                            positional[(obj, li, pi)].add(kind)
+                        for p in named:
+                            setters[(obj, li, p)].add(kind)
         for d in ds:
             for li, pi, pname, default in d["params"]:
                 if default is None:
                     continue
-                kinds = setters[(li, pname)] | positional[(li, pi)]
+                kinds = setters[(d["obj"], li, pname)] | positional[(d["obj"], li, pi)]
                 cls = "engine" if "engine" in kinds else "spec" if kinds else "unset"
-                rows.append((d["file"], d["line"], name, pname, default, cls, refs))
+                rows.append((d["file"], d["line"], f"{d['obj']}.{name}", pname,
+                             default, cls, refs))
 
     counts = defaultdict(int)
     per_file = defaultdict(lambda: defaultdict(int))
@@ -286,7 +348,16 @@ def main(argv):
         print(f"{f}: unset {c['unset']}, spec-only {c['spec']}, engine {c['engine']}")
     print(f"non-private defs {len(defs)}, parameters {total}, defaulted {len(rows)}: "
           f"unset {counts['unset']}, spec-only {counts['spec']}, engine {counts['engine']}")
+    bad = [r for r in rows if r[5] == "unset" or
+           (r[5] == "spec" and f"{r[2]}.{r[3]}" not in ALLOWED)]
+    for f, line, name, pname, _, cls, _ in bad:
+        print(f"FAIL {f}:{line} {name}.{pname} is set by "
+              f"{'no caller' if cls == 'unset' else 'specs only'}", file=sys.stderr)
+    stale = set(ALLOWED) - {f"{r[2]}.{r[3]}" for r in rows if r[5] == "spec"}
+    for key in sorted(stale):
+        print(f"FAIL allowlisted {key} is no longer a spec-only default", file=sys.stderr)
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    sys.exit(main(sys.argv[1:]))
