@@ -315,15 +315,11 @@ object SparkEntry {
     "q139_cell_balanced_keep" -> ((s, d) => Ivf.cellBalancedKeep(s, d)),
     // corpus-ingestion monitor: per (1-min window, source) doc/token
     // volume + quality-gate pass rate — the q13 windowed-stats shape on
-    // the documents lake; the streaming twin shares ingestCore and is
-    // spec-asserted batch≡stream
+    // the documents lake
     "q140_ingest_monitor" ->
       ((s, d) => streaming.IngestMonitorStream.batchMonitor(s, d)),
-    // the streaming curation pipeline's batch surface: q140's monitor
-    // over the DEDUPED corpus (first arrival per sha2(text), the q112
-    // fingerprint) — the exact frame CurationStream's one-writeStream
-    // composition emits, hash-checked here so the streaming twin has
-    // an oracle-pinned footprint beyond the batch≡stream spec
+    // the curation chain's monitor: q140's monitor over the DEDUPED
+    // corpus (first arrival per sha2(text), the q112 fingerprint)
     "q168_curated_ingest" ->
       ((s, d) => {
         import org.apache.spark.sql.functions._
@@ -514,7 +510,7 @@ object SparkEntry {
     "ann_brute_topk" ->
       ((s, d) => { operators.Similarity.materializedBruteTopK(s, d); () }),
     // SQ8 index: per-dim bounds fit + the checkpointed 1-int/dim code
-    // table (q169/q170 and the online ANN serving stream)
+    // table (q169/q170)
     "sq8_encoded" -> ((s, d) => { operators.Sq.encoded(s, d); () }),
     // the shingle table + DF-capped postings behind the whole
     // inverted-index family (near-pair build, q83, q112, q79 grams,
@@ -759,11 +755,6 @@ object SparkEntry {
   private val pqKmeans =
     s"""e AS (SELECT vec_id, embedding FROM embeddings),
        |$pqFit""".stripMargin
-  /** ADC scoring chain over `paf`/`pc2`: exact query subvectors build
-    * the (qid, s, code) lookup table; the per-(qid, vec_id) score sums
-    * the 8 looked-up terms in ascending-s order — list_sum over an
-    * s-ordered list, the exact fold order of the engine's aggregate()
-    * expression, so the 4dp rounding cannot straddle. */
   /** qsv + lut: per-(query, subspace, code) ADC table from the exact
     * query subvectors. Expects `qv(qid, qemb, …)` and `pc2` in scope —
     * shared by q135/q136 (all-pairs tail) and q137 (cell-pruned tail). */
@@ -777,6 +768,11 @@ object SparkEntry {
        |    list_sum(list_transform(range(1, 9),
        |      i -> CAST(qs[i] AS DOUBLE) * c[i])) AS t
        |  FROM qsv JOIN pc2 USING (s))""".stripMargin
+  /** ADC scoring chain over `paf`/`pc2`: exact query subvectors build
+    * the (qid, s, code) lookup table; the per-(qid, vec_id) score sums
+    * the 8 looked-up terms in ascending-s order — list_sum over an
+    * s-ordered list, the exact fold order of the engine's aggregate()
+    * expression, so the 4dp rounding cannot straddle. */
   private val pqAdc =
     s"""qv AS (SELECT vec_id AS qid, embedding AS qemb FROM e WHERE vec_id < 10),
        |$pqLut,
@@ -1328,7 +1324,7 @@ object SparkEntry {
       ",\n" + (1 to 4).map(lrIter).mkString(",\n")
 
   // --- LinUCB seed replay (q30/q31): since the model layer seeds
-  // through LinUCB.seedColumnar (decimal-exact sufficient statistics —
+  // through LinUCB.seedColumnarWithChol (decimal-exact sufficient statistics —
   // every scaled product `round(xᵢxⱼ·1e12)` is an integer-valued
   // double ≥ 0.005 from its rounding boundary, summed as an integer
   // decimal), A and b are bit-recomputable by an external engine from
@@ -1339,7 +1335,7 @@ object SparkEntry {
   // ~cond(A)·ε ≈ 1e-12 relative, far inside the 9dp/6dp output
   // rounding; q41's scoring goes further: since r12 the engine scores
   // its deterministic policies through the SAME chol(A) forward/back
-  // solves (PolicyMath.linUcbCholScore mirrors luCholAliases /
+  // solves (PolicyMath.linUcbCholScorePair mirrors luCholAliases /
   // luSolveAliases term for term), so that replay is bit-exact by
   // construction. Same hygiene as the IRLS replay: per-stage CTEs are
   // MATERIALIZED and project only what the next stage consumes.
@@ -2108,7 +2104,7 @@ object SparkEntry {
     // (the q30 seed replay), one Cholesky forward/back solve PER
     // INTERACTION for w = A⁻¹x (mean = b·w, var = x·w — the ENGINE
     // scores these two policies through the identical chol(A) float
-    // chain, PolicyMath.linUcbCholScore, so the replay is bit-exact by
+    // chain, PolicyMath.linUcbCholScorePair, so the replay is bit-exact by
     // construction), then the same
     // 4096-bucket Mann-Whitney histogram as aucPerPolicyApprox. The
     // three splitmix-seeded policies keep auc_det NULL and hash-check

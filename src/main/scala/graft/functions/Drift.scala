@@ -4,14 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Shared PSI drift-monitor arithmetic — ONE definition of the bin
-  * assignment, the per-bin PSI term, and the alert threshold, used by
-  * both the batch monitor ([[graft.operators.Analytics.valueDrift]],
-  * q113) and the continuous monitor
-  * ([[graft.streaming.DriftStream]]). Keeping these here is what makes
-  * the "streaming twin of the batch monitor" claim structural rather
-  * than aspirational: tuning a constant or the rounding discipline in
-  * one place tunes both monitors.
+/** PSI drift-monitor arithmetic — ONE definition of the bin
+  * assignment, the per-bin PSI term, and the alert threshold of the
+  * drift monitor ([[graft.operators.Analytics.valueDrift]], q113),
+  * which its oracle replays.
   */
 object Drift {
 
@@ -23,18 +19,17 @@ object Drift {
   val Eps = 1e-6
 
   /** PSI above this reads as drift. The conventional industry bands
-    * are <0.1 stable / 0.1–0.25 moderate / >0.25 major; both monitors
-    * alert at the conservative end of that scale. */
+    * are <0.1 stable / 0.1–0.25 moderate / >0.25 major; the monitor
+    * alerts at the conservative end of that scale. */
   val Threshold = 0.1
 
   /** Fixed-width bin over [lo, hi], clamped at BOTH ends: values above
     * `hi` land in the top bin and values below `lo` land in bin 0.
     * The lower clamp matters only when the edges come from a DIFFERENT
-    * population than the values (the streaming monitor applies
-    * reference-fitted edges to live data, which can shift downward);
-    * when a population is binned over its own [min, max] the clamp is
-    * a no-op. Denominator clamped so a constant column maps to bin 0
-    * rather than dividing by zero (the int8-quantize discipline). */
+    * population than the values; q113 bins each type over its own
+    * [min, max], where it is a no-op. Denominator clamped so a
+    * constant column maps to bin 0 rather than dividing by zero (the
+    * int8-quantize discipline). */
   def binOf(value: Column, lo: Column, hi: Column): Column =
     greatest(
       least(floor((value - lo) * Bins / greatest(hi - lo, lit(1e-12))),

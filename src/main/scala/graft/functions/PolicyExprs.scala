@@ -48,62 +48,23 @@ object PolicyMath {
     mean + alpha * math.sqrt(math.max(varTerm, 0.0))
   }
 
-  /** The same UCB score computed through the CHOLESKY factors of A
-    * instead of the precomputed inverse: `w = A⁻¹x` via forward solve
-    * `L z = x` then back solve `Lᵀ w = z`, `mean = b·w`,
-    * `var = x·w`. The float-operation chain (subtraction order inside
-    * each solve step, term order of the two dot products, the
-    * `max(·,0)` guard under the sqrt) mirrors the q41 oracle's lateral
-    * aliases (`SparkEntry.luCholAliases`/`luSolveAliases`) EXACTLY, so
-    * given bit-identical stats (the decimal-exact seed layer) the two
-    * engines produce bit-identical scores — the oracle is exact by
-    * construction, not merely "solver gap far inside the rounding"
-    * (the r12 review's residual probabilistic premise). `l` is the
-    * d×d row-major lower factor of A itself (NOT of A⁻¹, which is what
-    * the TS draw uses). α = 0 returns `mean` directly, matching the
-    * oracle's `ROUND(mu, 9)` with no `+ 0.0·√·` term (a `-0.0` mean
-    * must not flip sign through `+ 0.0`). */
-  def linUcbCholScore(x: ArrayData, b: ArrayData, l: ArrayData,
-                      alpha: Double): Double = {
-    val d = x.numElements()
-    val z = new Array[Double](d)
-    var i = 0
-    while (i < d) {
-      var acc = x.getDouble(i)
-      var k = 0
-      while (k < i) { acc -= l.getDouble(i * d + k) * z(k); k += 1 }
-      z(i) = acc / l.getDouble(i * d + i)
-      i += 1
-    }
-    val w = new Array[Double](d)
-    i = d - 1
-    while (i >= 0) {
-      var acc = z(i)
-      var k = i + 1
-      while (k < d) { acc -= l.getDouble(k * d + i) * w(k); k += 1 }
-      w(i) = acc / l.getDouble(i * d + i)
-      i -= 1
-    }
-    var mean = b.getDouble(0) * w(0)
-    var varTerm = x.getDouble(0) * w(0)
-    i = 1
-    while (i < d) {
-      mean += b.getDouble(i) * w(i)
-      varTerm += x.getDouble(i) * w(i)
-      i += 1
-    }
-    if (alpha == 0.0) mean
-    else mean + alpha * math.sqrt(math.max(varTerm, 0.0))
-  }
-
   /** BOTH serving scores — the greedy mean (α = 0) and the UCB score at
-    * the given α — from ONE forward/back solve. The melted q41 frame
-    * scores every interaction under both policies; two
-    * [[linUcbCholScore]] calls ran the identical O(d²) solve twice per
-    * row. Element 0 is exactly the α = 0 path's value (the bare `mean`,
-    * no `+ 0·√·` term — a `-0.0` mean must not flip sign), element 1 is
-    * `mean + α·√(max(var, 0))` — the same float chains as the two
-    * separate calls, so the fused form is bit-identical. */
+    * the given α — computed through the CHOLESKY factors of A instead
+    * of the precomputed inverse, from ONE forward/back solve: `w = A⁻¹x`
+    * via forward solve `L z = x` then back solve `Lᵀ w = z`,
+    * `mean = b·w`, `var = x·w`. The float-operation chain (subtraction
+    * order inside each solve step, term order of the two dot products,
+    * the `max(·,0)` guard under the sqrt) mirrors the q41 oracle's
+    * lateral aliases (`SparkEntry.luCholAliases`/`luSolveAliases`)
+    * EXACTLY, so given bit-identical stats (the decimal-exact seed
+    * layer) the two engines produce bit-identical scores — the oracle
+    * is exact by construction, not merely "solver gap far inside the
+    * rounding". `l` is the d×d row-major lower factor of A itself (NOT
+    * of A⁻¹, which is what the TS draw uses). Element 0 is the bare
+    * `mean`, matching the oracle's `ROUND(mu, 9)` with no `+ 0·√·` term
+    * (a `-0.0` mean must not flip sign), element 1 is
+    * `mean + α·√(max(var, 0))`. The melted q41 frame scores every
+    * interaction under both policies, so one solve serves both. */
   def linUcbCholScorePair(x: ArrayData, b: ArrayData, l: ArrayData,
                           alpha: Double): ArrayData = {
     val d = x.numElements()
@@ -228,35 +189,10 @@ case class LinUcbScore(first: Expression, second: Expression,
   override def prettyName: String = "linucb_score"
 }
 
-/** LinUCB serving score through the Cholesky factors of A (the q41
-  * oracle-exact form): `linucb_chol_score(x, b, lcholA)` with
-  * plan-time α. */
-case class LinUcbCholScore(first: Expression, second: Expression,
-                           third: Expression, alpha: Double)
-    extends TernaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    PolicyMath.requireDoubleArrays("linucb_chol_score",
-      Seq(first, second, third))
-
-  override def nullSafeEval(x: Any, b: Any, l: Any): Any =
-    PolicyMath.linUcbCholScore(x.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData], alpha)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, b, l) =>
-      s"${ev.value} = graft.functions.PolicyMath.linUcbCholScore($x, $b, $l, $alpha);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): LinUcbCholScore =
-    copy(first = newFirst, second = newSecond, third = newThird)
-  override def prettyName: String = "linucb_chol_score"
-}
-
-/** Both serving scores (greedy mean and UCB at plan-time α) from one
-  * Cholesky solve: `linucb_chol_score_pair(x, b, lcholA)` →
-  * `array(greedy, ucb)` — bit-identical to the two single-α calls. */
+/** Both LinUCB serving scores (greedy mean and UCB at plan-time α)
+  * through the Cholesky factors of A, the q41 oracle-exact form, from
+  * one solve: `linucb_chol_score_pair(x, b, lcholA)` →
+  * `array(greedy, ucb)`. */
 case class LinUcbCholScorePair(first: Expression, second: Expression,
                                third: Expression, alpha: Double)
     extends TernaryExpression {

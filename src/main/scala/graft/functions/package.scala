@@ -50,16 +50,10 @@ package object functions {
   def linucbScore(x: Column, aInv: Column, b: Column, alpha: Double): Column =
     wrap(LinUcbScore(ex(x), ex(aInv), ex(b), alpha))
 
-  /** LinUCB score through chol(A) — forward/back solves replaying the
-    * q41 oracle's float chain exactly (codegen'd; α fixed at plan
-    * time). */
-  def linucbCholScore(x: Column, b: Column, lcholA: Column,
-                      alpha: Double): Column =
-    wrap(LinUcbCholScore(ex(x), ex(b), ex(lcholA), alpha))
-
-  /** Both LinUCB serving scores (greedy, UCB at α) from one solve —
-    * `array(greedy, ucb)`, bit-identical to two [[linucbCholScore]]
-    * calls (codegen'd). */
+  /** Both LinUCB serving scores (greedy, UCB at α) from one solve
+    * through chol(A) — `array(greedy, ucb)`, forward/back solves
+    * replaying the q41 oracle's float chain exactly (codegen'd; α fixed
+    * at plan time). */
   def linucbCholScorePair(x: Column, b: Column, lcholA: Column,
                           alpha: Double): Column =
     wrap(LinUcbCholScorePair(ex(x), ex(b), ex(lcholA), alpha))

@@ -118,7 +118,7 @@ object LinUCB {
     * each, the same materialization discipline as
     * [[graft.operators.Dedup.materializedClusters]].
     *
-    * Since round 11 the layer seeds through [[seedColumnar]] (the
+    * Since round 11 the layer seeds through [[seedColumnarWithChol]] (the
     * decimal-exact sufficient statistics) rather than the double-fold
     * [[SeedAggregator]]: the sums become independent of partial-merge
     * order, so the fitted models are bit-stable across partitionings
@@ -163,15 +163,6 @@ object LinUCB {
     mean + alpha * math.sqrt(math.max(varTerm, 0.0))
   }
 
-  /** LinTS (Thompson sampling) score with DETERMINISTIC noise: sample
-    * θ̃ = θ + ν·L·z with L = chol(A⁻¹) and z standard normals derived
-    * from a caller-provided seed via Box-Muller over splitmix64 — the
-    * reference's LinTS (`evaluate.py`, mabwiser) made reproducible, the
-    * same fixed-seed discipline the reference applies everywhere
-    * (seed 1237, `prepare_data.py:25`). Returns x·θ̃. */
-  def scoreTS(x: Array[Double], m: Model, nu: Double, seed: Long): Double =
-    scoreTSPre(x, thetaOf(m), LinAlg.choleskyLower(m.aInv, m.d), m.d, nu, seed)
-
   /** θ = A⁻¹b — the per-arm posterior mean, computable once per model. */
   def thetaOf(m: Model): Array[Double] = {
     val d = m.d
@@ -187,10 +178,15 @@ object LinUCB {
     theta
   }
 
-  /** [[scoreTS]] with the per-arm factors (θ, L = chol(A⁻¹)) hoisted
-    * out — the hot-path form: per interaction only the z draw (O(d))
-    * and two dot products remain; the O(d³) factorization happens once
-    * per ARM, not once per row. */
+  /** LinTS (Thompson sampling) score with DETERMINISTIC noise: sample
+    * θ̃ = θ + ν·L·z with L = chol(A⁻¹) and z standard normals derived
+    * from a caller-provided seed via Box-Muller over splitmix64 — the
+    * reference's LinTS (`evaluate.py`, mabwiser) made reproducible, the
+    * same fixed-seed discipline the reference applies everywhere
+    * (seed 1237, `prepare_data.py:25`). Returns x·θ̃. The per-arm
+    * factors (θ = [[thetaOf]], L) come in precomputed: per interaction
+    * only the z draw (O(d)) and two dot products remain; the O(d³)
+    * factorization happens once per ARM, not once per row. */
   def scoreTSPre(x: Array[Double], theta: Array[Double], l: Array[Double],
                  d: Int, nu: Double, seed: Long): Double = {
     // deterministic standard normals: splitmix64 stream → Box-Muller
@@ -301,14 +297,10 @@ object LinUCB {
     * inside the spec's 1e-9. The 38-digit accumulator makes the
     * per-arm row ceiling a non-issue: terms are ≤ ~1e14, so overflow
     * would need ~1e24 rows in ONE arm (a 20-digit sum overflowed —
-    * and then NPE'd on the null — at a plausible ~1e8 rows/arm). */
-  def seedColumnar(spark: SparkSession, sfDir: String): Dataset[Model] = {
-    import spark.implicits._
-    seedColumnarWithChol(spark, sfDir).map(_._1)
-  }
-
-  /** [[seedColumnar]] plus the Cholesky lower factor of the exact A per
-    * arm (computed from the decimal sums BEFORE inversion, so it is
+    * and then NPE'd on the null — at a plausible ~1e8 rows/arm).
+    *
+    * Each arm's [[Model]] comes with the Cholesky lower factor of the
+    * exact A (computed from the decimal sums BEFORE inversion, so it is
     * bit-equal to the q41 oracle's lateral-alias factorization of
     * `a_i_j = s_i_j (+1.0)` — [[LinAlg.choleskyLower]]'s subtraction
     * chain matches the SQL's left-associated alias chain term for

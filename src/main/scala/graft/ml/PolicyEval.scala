@@ -26,7 +26,10 @@ object PolicyEval {
   /** The rank cutoff of the precision, recall and NDCG reports. */
   val RankK = 3
 
-  /** Tie-corrected AUC of `score` against binary `label`, plus CTR.
+  /** Tie-corrected AUC of `score` against binary `label`, plus CTR, per
+    * `policy`, in ONE pass: evaluating k policies costs one scan of the
+    * melted (policy, score, label) frame instead of k scans of the
+    * source.
     *
     * Ranks are derived from a distributed group-by on the score (one
     * shuffle), then a cumulative count over DISTINCT scores — so the
@@ -35,13 +38,6 @@ object PolicyEval {
     * `pos · (mn + mx)` with `mn+mx = 2c - cnt + 1` — integers
     * throughout, so the statistic is exact and partitioning-independent.
     */
-  def aucOf(df: DataFrame, score: Column, label: Column): DataFrame =
-    aucPerPolicy(df, lit("_"), score, label).drop("policy")
-
-  /** [[aucOf]] generalized to several policies in ONE pass: the same
-    * integer-rank construction, windowed and grouped by a policy
-    * column — evaluating k policies costs one scan of the melted
-    * (policy, score, label) frame instead of k scans of the source. */
   def aucPerPolicy(df: DataFrame, policy: Column, score: Column,
                    label: Column): DataFrame = {
     val grouped = df.select(policy.as("policy"), score.as("s"), label.as("y"))
@@ -220,7 +216,7 @@ object PolicyEval {
     * statistics (the q30 seed replay) → per-row Cholesky scoring (one
     * forward/back solve per interaction — since r12 the ENGINE scores
     * these two policies through the identical chol(A) float chain
-    * ([[graft.functions.PolicyMath.linUcbCholScore]]), so the replay
+    * ([[graft.functions.PolicyMath.linUcbCholScorePair]]), so the replay
     * is bit-exact by construction, not merely inside the 9dp rounding
     * margin) → the SAME
     * 4096-bucket Mann-Whitney histogram as [[aucPerPolicyApprox]]. The
@@ -302,14 +298,14 @@ object PolicyEval {
     // the TS draw) — scoring the deterministic policies through it
     // replays the q41 oracle's forward/back-solve float chain exactly,
     // so s_ucb/s_greedy are bit-equal across engines by construction
-    // (see graft.functions.PolicyMath.linUcbCholScore)
+    // (see graft.functions.PolicyMath.linUcbCholScorePair)
     val cholA = LinUCB.seededCholA(spark, sfDir)
     val models = seeded.toSeq
       .map(m => (m.productId, m.aInv, m.b, m.d,
         LinUCB.thetaOf(m), LinAlg.choleskyLower(m.aInv, m.d),
         cholA(m.productId)))
       .toDF("productId", "aInv", "b", "d", "theta", "lchol", "chol_a")
-    // Native codegen'd scoring ([[graft.functions.LinUcbCholScore]] /
+    // Native codegen'd scoring ([[graft.functions.LinUcbCholScorePair]] /
     // [[graft.functions.LinTsScore]] / the seeded-draw expressions) —
     // the round-5 Scala UDFs cost a serde round-trip per row and broke
     // whole-stage codegen on the scoring subtree (q41 was the slowest
@@ -324,7 +320,6 @@ object PolicyEval {
       .join(broadcast(models), "productId")
       .join(broadcast(cts), "productId")
       // one solve yields both deterministic policies' scores
-      // (bit-identical to the former two linucbCholScore calls)
       .withColumn("s_pair",
         linucbCholScorePair(col("x"), col("b"), col("chol_a"), 0.1))
       .withColumn("s_ucb", round(element_at(col("s_pair"), 2), 9))
@@ -348,19 +343,6 @@ object PolicyEval {
       col("s_cts"), col("reward"))
   }
 
-  /** Precision@k / Recall@k — the other half of the reference's
-    * benchmark table (`evaluate.py:75-76`): each order is one
-    * interaction group, its lineitems are the ranked candidates, a hit
-    * is a top-k row with reward 1. Reported per policy (popularity +
-    * random, the SQL-expressible pair):
-    *   - `p_at_k`  = Σ hits / (k · #groups)
-    *   - `r_micro` = Σ hits / Σ positives (micro-averaged recall)
-    *   - `r_macro` = mean over positive groups of hits/tot
-    * All aggregates are either integer-valued doubles (hit/positive
-    * counts — exact under any partitioning) or fixed-scale decimals
-    * (per-group recall rounded to 12 dp before the sum), so the result
-    * hash-matches an external engine. The ranking window partitions by
-    * (policy, group) — millions of small partitions, no global sort. */
   /** Shared ranked-list build for the ranking metrics (q76 precision/
     * recall, q99 NDCG): per-interaction-group arms scored by the
     * popularity and hash-random policies, melted to one row per
@@ -406,6 +388,19 @@ object PolicyEval {
         "stack(2, 'popularity', rn_pop, 'random', rn_rnd) AS (policy, rn)")
   }
 
+  /** Precision@k / Recall@k — the other half of the reference's
+    * benchmark table (`evaluate.py:75-76`): each order is one
+    * interaction group, its lineitems are the ranked candidates, a hit
+    * is a top-k row with reward 1. Reported per policy (popularity +
+    * random, the SQL-expressible pair):
+    *   - `p_at_k`  = Σ hits / (k · #groups)
+    *   - `r_micro` = Σ hits / Σ positives (micro-averaged recall)
+    *   - `r_macro` = mean over positive groups of hits/tot
+    * All aggregates are either integer-valued doubles (hit/positive
+    * counts — exact under any partitioning) or fixed-scale decimals
+    * (per-group recall rounded to 12 dp before the sum), so the result
+    * hash-matches an external engine. The ranking window partitions by
+    * (policy, group) — millions of small partitions, no global sort. */
   def rankingMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val perGroup = rankedScores(spark, sfDir)
       .groupBy(col("policy"), col("group_id"))

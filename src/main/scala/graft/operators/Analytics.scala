@@ -34,9 +34,8 @@ object Analytics {
   }
 
   /** The inactivity gap that closes a user session: the batch session
-    * windows, the hand-rolled [[Relational.sessionize]] and the
-    * streaming [[graft.streaming.EventStreams.sessionAgg]] all split on
-    * it. */
+    * windows and the hand-rolled [[Relational.sessionize]] both split
+    * on it. */
   val SessionGapMinutes = 30
   val SessionGap = s"$SessionGapMinutes minutes"
 
@@ -594,9 +593,7 @@ object Analytics {
     * formula (clamped denominator), each PSI term is 9dp-rounded
     * DECIMAL before the sum (order-independent), shares are exact
     * integer-count divisions. All drift arithmetic (bin formula, PSI
-    * term, alert threshold) is [[graft.functions.Drift]] — shared with
-    * the streaming monitor [[graft.streaming.DriftStream]] so the two
-    * cannot diverge. Shape: one min/max aggregation broadcast
+    * term, alert threshold) is [[graft.functions.Drift]]. Shape: one min/max aggregation broadcast
     * back, one (type, side, bin) counting aggregation, one type-level
     * fold — all map-side-combined, no window, no per-row state. */
   def valueDrift(spark: SparkSession, sfDir: String): DataFrame = {

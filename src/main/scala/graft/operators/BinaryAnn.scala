@@ -78,12 +78,4 @@ object BinaryAnn {
       .select(col("qid"), col("vec_id").as("nbr_id"), col("rank"),
         col("hamming"), col("cos_sim"))
   }
-
-  /** Recall@k of the binary pipeline against exact brute force — the
-    * q136/q143/q144 gate pattern applied to the sign-quantized codes:
-    * measured, not assumed, at [[CandPerQuery]] candidates. */
-  def hammingRecallVsBrute(spark: SparkSession, sfDir: String): DataFrame =
-    Ann.recall(
-      hammingTopK(spark, sfDir),
-      Similarity.bruteForceTopK(spark, sfDir))
 }

@@ -210,23 +210,6 @@ object Curation {
           .as("sem_rate"))
   }
 
-  /** q171: the per-source DATASHEET card (Gebru et al. 2021's
-    * "datasheets for datasets", the summary block) — the numbers a
-    * corpus release publishes per source: volume (docs, tokens,
-    * chars), the exact-duplication exposure (within-source dup rows
-    * AND rows whose text duplicates anywhere in the corpus — syndicated
-    * content shows up in the second, not the first), the q27
-    * quality-gate pass rate, and the English share from the corpus's
-    * language labels (detection is q28's job; the card reports the
-    * labeled mix).
-    *
-    * Scale shape: every metric is a map-side expression over the
-    * document row except the duplication columns — within-source dups
-    * come from `count(DISTINCT text)` inside the grouped aggregate
-    * (two-phase expand keyed on (source, text)), cross-corpus dups
-    * from one text-keyed group count joined back (the q19 exact-dedup
-    * shuffle). Sources-bounded output; exact integer counts and single
-    * divisions, so it hash-checks on any engine. */
   /** q172: the per-source curation FUNNEL — the lineage block a
     * datasheet (q171) publishes next to its volume stats: how many of
     * each source's documents survive each stage of the decontaminated
@@ -313,6 +296,23 @@ object Curation {
       curationFunnel(spark, sfDir).drop("n_docs"),
       Seq("source"))
 
+  /** q171: the per-source DATASHEET card (Gebru et al. 2021's
+    * "datasheets for datasets", the summary block) — the numbers a
+    * corpus release publishes per source: volume (docs, tokens,
+    * chars), the exact-duplication exposure (within-source dup rows
+    * AND rows whose text duplicates anywhere in the corpus — syndicated
+    * content shows up in the second, not the first), the q27
+    * quality-gate pass rate, and the English share from the corpus's
+    * language labels (detection is q28's job; the card reports the
+    * labeled mix).
+    *
+    * Scale shape: every metric is a map-side expression over the
+    * document row except the duplication columns — within-source dups
+    * come from `count(DISTINCT text)` inside the grouped aggregate
+    * (two-phase expand keyed on (source, text)), cross-corpus dups
+    * from one text-keyed group count joined back (the q19 exact-dedup
+    * shuffle). Sources-bounded output; exact integer counts and single
+    * divisions, so it hash-checks on any engine. */
   def datasetCard(spark: SparkSession, sfDir: String): DataFrame = {
     // duplication keys on the sha2 DIGEST, never the raw text (the q19
     // exact-dedup / q118 source-profile discipline): the dup-count

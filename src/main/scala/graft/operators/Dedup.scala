@@ -503,6 +503,16 @@ object Dedup {
       .join(edgeLabelsFrom(docs, threshold), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
 
+  /** The MATERIALIZED exact-duplicate star edges — duplicate-group-
+    * bounded, computed once per (session, sfDir): the cluster-label
+    * build, q156's flow matrix and q163's leakage audit read the
+    * identical edge set; before this each re-paid the sha2 group pass
+    * over the corpus. */
+  def materializedExactEdges(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "exact_edges", sfDir) {
+      exactEdgesFrom(Tables.documents(spark, sfDir))
+    }
+
   /** Star edges connecting each EXACT-duplicate group (identical text):
     * group min doc_id → every other member. These bypass the shingle
     * DF-cap: a 1000-copy boilerplate page has every shingle above any
@@ -516,16 +526,6 @@ object Dedup {
     * `sha2(text, 256)` — both the aggregation and the member join
     * shuffle fixed-width hex digests, never document payloads, so the
     * edge pass stays narrow at 100 TB. */
-  /** The MATERIALIZED exact-duplicate star edges — duplicate-group-
-    * bounded, computed once per (session, sfDir): the cluster-label
-    * build, q156's flow matrix and q163's leakage audit read the
-    * identical edge set; before this each re-paid the sha2 group pass
-    * over the corpus. */
-  def materializedExactEdges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Layers.frame(spark, "exact_edges", sfDir) {
-      exactEdgesFrom(Tables.documents(spark, sfDir))
-    }
-
   private[graft] def exactEdgesFrom(docs: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"), sha2(col("text"), 256).as("th"))
     val groups = keyed.groupBy(col("th"))

@@ -47,28 +47,6 @@ object HeavyHitters {
   /** Count-min sketch width of the heavy-token reports. */
   val CmsWidth = 1024
 
-  /** Count-min point estimates for the heavy tokens, next to their
-    * exact counts: one sketch pass over the token stream (a single
-    * 4×width long array crossing the wire per partition), then the
-    * estimate is a pure column expression over the broadcast sketch —
-    * the frequency-oracle pattern that answers "how often does X
-    * occur" at 100 TB without a per-key shuffle. Rows-only for the
-    * driver (xxhash64 buckets are engine-specific); the spec asserts
-    * the CM guarantees: estimate ≥ exact always, bounded overestimate,
-    * and partitioning-invariance of the sketch. */
-  def heavyTokenEstimates(spark: SparkSession, sfDir: String): DataFrame = {
-    def toks = Tables.documents(spark, sfDir)
-      .select(explode(split(col("text"), " ")).as("t"))
-    val sketch = toks.agg(graft.functions.Cms.sketchAgg(col("t"), CmsWidth)
-      .as("sketch"))
-    heavyTokens(spark, sfDir)
-      .crossJoin(broadcast(sketch))
-      .select(col("token"), col("cnt").as("exact_cnt"),
-        graft.functions.Cms.estimate(col("sketch"), col("token"), CmsWidth)
-          .as("cms_est"))
-      .withColumn("overestimate", col("cms_est") - col("exact_cnt"))
-  }
-
   /** The one-pass sketch + total: the CMS aggregation and the corpus
     * token count ride the SAME raw-token scan (they were two separate
     * full explodes — guide §1.2, don't run the stream twice for two
@@ -79,7 +57,12 @@ object HeavyHitters {
       .agg(graft.functions.Cms.sketchAgg(col("t"), CmsWidth).as("sketch"),
         count(lit(1)).as("n_tokens"))
 
-  /** Oracle-checkable twin of [[heavyTokenEstimates]]: the CMS point
+  /** Count-min point estimates for the heavy tokens, checked: one
+    * sketch pass over the token stream (a single 4×width long array
+    * crossing the wire per partition), then the estimate is a pure
+    * column expression over the broadcast sketch — the frequency-oracle
+    * pattern that answers "how often does X occur" at 100 TB without a
+    * per-key shuffle. The CMS point
     * estimates are engine-specific (xxhash64 buckets), but the
     * guarantees they carry are exact booleans over the EXACT counts —
     * `never_under` (a count-min estimate can only overestimate) and

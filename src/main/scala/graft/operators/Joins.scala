@@ -94,11 +94,6 @@ object Joins {
       .select(col("branch"), col("segment"), col("n"))
   }
 
-  /** Hybrid-source batch analog (S18/T13): bounded history unioned with
-    * a live update stream, materialized to latest-image-per-key via one
-    * keyed row_number — the Spark shape for "replay the file, then keep
-    * consuming the topic". Live updates are derived deterministically:
-    * every 10th order re-arrives with status 'X' and a higher lsn. */
   /** Referential-integrity audit over the FK edges a warehouse load
     * must hold: one anti-join per edge (child keys with no parent),
     * counted. Every branch is a left-anti equi-join — Spark plans the
@@ -150,6 +145,11 @@ object Joins {
           .otherwise("events_only").as("status"))
   }
 
+  /** Hybrid-source batch analog (S18/T13): bounded history unioned with
+    * a live update stream, materialized to latest-image-per-key via one
+    * keyed row_number — the Spark shape for "replay the file, then keep
+    * consuming the topic". Live updates are derived deterministically:
+    * every 10th order re-arrives with status 'X' and a higher lsn. */
   def hybridLatestImage(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
     val history = o.select(col("o_orderkey"), col("o_orderstatus"),

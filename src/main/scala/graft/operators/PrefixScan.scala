@@ -25,12 +25,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object PrefixScan {
 
-  /** Range-partition `df` by `sort`, pin the layout, and attach each
-    * partition's EXCLUSIVE prefix total of `weight` (a long expression;
-    * rows missing from a partition contribute nothing). Returns the
-    * pinned frame plus `pid` and `off` columns, broadcast-joined —
-    * callers add `sum(...) over (partition by pid order by sort)` and
-    * `off` to finish the global scan. */
   /** Both entry points inject `pid` and `off`; a caller whose frame
     * already carries either name would get an ambiguous reference (or a
     * silently wrong join), so the collision fails loudly here. */
@@ -41,6 +35,12 @@ object PrefixScan {
         s"${taken.mkString(", ")} — rename before the scan")
   }
 
+  /** Range-partition `df` by `sort`, pin the layout, and attach each
+    * partition's EXCLUSIVE prefix total of `weight` (a long expression;
+    * rows missing from a partition contribute nothing). Returns the
+    * pinned frame plus `pid` and `off` columns, broadcast-joined —
+    * callers add `sum(...) over (partition by pid order by sort)` and
+    * `off` to finish the global scan. */
   def withLongOffsets(df: DataFrame, sort: Seq[Column],
                       weight: Column): DataFrame = {
     requireFreeNames(df)

@@ -94,9 +94,8 @@ object Sq {
     }
 
   /** (vec_id, codes) — the encoded corpus, via [[encode]]: the
-    * [[Ann.encodedLayer]] that makes the online serving stream
-    * ([[graft.streaming.AnnServeStream]]) pay only the scan per
-    * micro-batch. The checkpoint holds 1 int/dim/row — the compressed
+    * [[Ann.encodedLayer]] that makes a repeated query set pay only the
+    * scan. The checkpoint holds 1 int/dim/row — the compressed
     * footprint the format exists to have. */
   def encoded(spark: SparkSession, sfDir: String): DataFrame = encodeLayer(spark, sfDir, 0)
 
@@ -112,16 +111,9 @@ object Sq {
     * reconstructed corpus, ranked by the 4dp-rounded inner product
     * with a vec_id tie-break (the q24/q135 serving shape). */
   def sqTopK(spark: SparkSession, sfDir: String): DataFrame =
-    sqTopKFor(spark, sfDir,
-      Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries, "embedding" -> "qemb"))
-
-  /** [[sqTopK]] over an ARBITRARY `(qid, qemb)` query frame — the one
-    * scoring definition both the q169 batch surface and the online
-    * serving stream ([[graft.streaming.AnnServeStream]]) execute, so
-    * the two cannot drift. The query side must stay bounded (it
-    * broadcasts); the corpus side streams through once per call. */
-  def sqTopKFor(spark: SparkSession, sfDir: String, q: DataFrame): DataFrame =
-    scan(spark, sfDir, encoded(spark, sfDir), q, Ann.TopK)
+    scan(spark, sfDir, encoded(spark, sfDir),
+      Ann.queryFrame(Tables.embeddings(spark, sfDir), Ann.NQueries, "embedding" -> "qemb"),
+      Ann.TopK)
 
   /** q170: recall\@k of the SQ8 scan against exact brute force — the
     * measured-not-assumed gate every quantization family in the engine

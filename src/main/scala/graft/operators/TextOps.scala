@@ -450,6 +450,12 @@ object TextOps {
         .cast("long").as("n_long_nums"))
       .withColumn("n_chars_clean", length(col("clean_text")).cast("long"))
 
+  /** The MATERIALIZED q94 entropy frame — one narrow row per doc,
+    * computed once per (session, sfDir): q94 and q164's percentile
+    * blend read the identical scores. */
+  def materializedEntropy(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Layers.frame(spark, "entropy_scores", sfDir)(tokenEntropy(spark, sfDir))
+
   /** Per-document token entropy — the information-density quality
     * signal (low entropy ⇒ repetitive/templated text, high ⇒ diverse).
     * Each -p·log2(p) term is rounded to 9dp and summed as DECIMAL, so
@@ -457,12 +463,6 @@ object TextOps {
     * double sum would vary with partial-aggregation order). Shape:
     * explode → one groupBy (doc, token) → one groupBy doc; both
     * shuffles are on doc-prefixed keys. */
-  /** The MATERIALIZED q94 entropy frame — one narrow row per doc,
-    * computed once per (session, sfDir): q94 and q164's percentile
-    * blend read the identical scores. */
-  def materializedEntropy(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Layers.frame(spark, "entropy_scores", sfDir)(tokenEntropy(spark, sfDir))
-
   def tokenEntropy(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Z-order (Morton) clustering for multi-dimensional data skipping —
-  * how a 100 TB table gets pruned on BOTH `user` and `time` predicates
-  * at once: interleave the bits of the two bucketed dimensions and
-  * range-partition/sort by the resulting z-value, so every output file
-  * covers a small rectangle of (user, hour) space and min/max file
-  * stats (parquet footers, Delta/Iceberg manifests) can skip it for
-  * either predicate. Same mechanism as Delta Lake's OPTIMIZE ZORDER BY;
-  * expressed here as a pure column expression + `repartitionByRange`,
-  * so Catalyst codegens the interleave and AQE sizes the ranges.
+/** Z-order (Morton) values for multi-dimensional data skipping — how a
+  * 100 TB table gets pruned on BOTH `user` and `time` predicates at
+  * once: interleave the bits of the two bucketed dimensions, so a
+  * layout range-partitioned and sorted by the z-value puts each file
+  * over a small rectangle of (user, hour) space and min/max file stats
+  * (parquet footers, Delta/Iceberg manifests) can skip it for either
+  * predicate. Same mechanism as Delta Lake's OPTIMIZE ZORDER BY;
+  * expressed here as a pure column expression, so Catalyst codegens
+  * the interleave.
   */
 object ZOrder {
 
@@ -38,10 +38,4 @@ object ZOrder {
         expr("user_id % 256").as("ub"),
         expr("(ts_us div 3600000000) % 256").as("hb"))
       .withColumn("z", graft.functions.zorder2(col("ub"), col("hb"), 8))
-
-  /** The clustered layout: range-partition by z into 16 partitions. Each partition then
-    * spans a bounded rectangle in (ub, hb) — the spec measures the
-    * shrinkage vs the unclustered layout. */
-  def clustered(spark: SparkSession, sfDir: String): DataFrame =
-    eventZValues(spark, sfDir).repartitionByRange(16, col("z"))
 }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * (`orders-avro-clients/src/main/avro/Order.avsc:5-11`) through a
   * Schema Registry. The spark-avro connector isn't on this classpath,
   * but avro-core is — so the engine carries the serde itself:
-  * per-partition datum reader/writer over binary Avro (the registry's
-  * 5-byte header is transport framing, stripped/added by the Kafka
-  * layer, not part of record encoding).
+  * per-partition datum reader/writer over binary Avro, behind the
+  * registry's 5-byte wire header.
   *
   * Shape note: `mapPartitions` with one reader per partition, not a
   * per-row UDF — reader construction amortizes across the batch, the
@@ -34,43 +33,6 @@ object AvroSerde {
 
   case class OrderRow(order_id: String, bid_time: String, price: Double,
                       item: String, supplier: String)
-
-  /** Encode typed rows to binary Avro payloads. */
-  def encodeOrders(ds: Dataset[OrderRow]): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(orderSchemaJson)
-      val writer = new GenericDatumWriter[GenericRecord](schema)
-      rows.map { r =>
-        val rec = new GenericData.Record(schema)
-        rec.put("order_id", r.order_id)
-        rec.put("bid_time", r.bid_time)
-        rec.put("price", r.price)
-        rec.put("item", r.item)
-        rec.put("supplier", r.supplier)
-        val bos = new ByteArrayOutputStream()
-        val enc = EncoderFactory.get().binaryEncoder(bos, null)
-        writer.write(rec, enc)
-        enc.flush()
-        (r.order_id, bos.toByteArray)
-      }
-    }.toDF("key", "value")
-  }
-
-  /** Decode binary Avro payloads in the `value` column back to typed
-    * rows (the from_avro analog). */
-  def decodeOrders(df: DataFrame): Dataset[OrderRow] = {
-    import df.sparkSession.implicits._
-    df.select(col("value")).as[Array[Byte]].mapPartitions { payloads =>
-      val schema = new Schema.Parser().parse(orderSchemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      payloads.map { bytes =>
-        val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-        val rec = reader.read(null, dec)
-        toRow(rec)
-      }
-    }
-  }
 
   private def toRow(rec: GenericRecord): OrderRow =
     OrderRow(
@@ -125,8 +87,8 @@ object AvroSerde {
     (id, java.util.Arrays.copyOfRange(payload, WireHeaderLen, payload.length))
   }
 
-  /** [[encodeOrders]] in the registry wire format: magic + schema id +
-    * binary Avro. */
+  /** Encode typed rows to (key, value) payloads in the registry wire
+    * format: magic + schema id + the binary Avro body. */
   def encodeOrdersFramed(ds: Dataset[OrderRow],
                          schemaId: Int = OrderSchemaId): DataFrame = {
     import ds.sparkSession.implicits._

@@ -31,27 +31,6 @@ object Sources {
       .option("mode", "DROPMALFORMED")
       .csv(path)
 
-  // --- Additional columnar/text formats ---
-  // The engine is format-agnostic past the DataFrameReader boundary:
-  // the same plans run over parquet (default), ORC (the other columnar
-  // format with predicate pushdown + column pruning), and JSON-lines
-  // (schema'd, PERMISSIVE/DROPMALFORMED like the CSV path). These two
-  // helpers pin that contract so a lake migration is a reader swap.
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, schema: StructType, path: String): DataFrame =
-    spark.read.schema(schema).orc(path)
-
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def readJsonl(spark: SparkSession, schema: StructType, path: String): DataFrame =
-    spark.read.schema(schema)
-      .option("mode", "DROPMALFORMED")
-      .json(path)
-
   /** The reference's supplier alternation, verbatim
     * (`orders-json-clients/.../ProducerApp.kt:51` `faker.regexify`). */
   val SupplierPattern =

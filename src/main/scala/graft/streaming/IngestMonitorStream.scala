@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Live corpus-ingestion monitor — the reference's windowed-stats
-  * shape (`SupplierStatsFunction.kt`, the q13/A5 family) applied to
-  * the LLM-ingest domain: per (tumbling window, source), how many
+/** Corpus-ingestion monitor — the reference's windowed-stats shape
+  * (`SupplierStatsFunction.kt`, the q13/A5 family) applied to the
+  * LLM-ingest domain: per (tumbling window, source), how many
   * documents arrived, how many tokens they carry, and what fraction
   * passes the C4-style quality gate. The dashboard a crawl-ingest
   * pipeline watches: a source whose pass_rate collapses mid-crawl is
@@ -17,11 +17,11 @@ import graft.Tables
   * One shared core ([[ingestCore]]) serves the batch query (q140, with
   * a deterministic synthetic event time — the q114 envelope's
   * discipline of making streaming semantics batch-checkable) and the
-  * watermarked streaming twin ([[monitorStream]]); the batch≡stream
-  * agreement is spec-asserted like the supplier-stats family. Per-doc
-  * metrics are STATELESS (the q27 gate columns), so the stream is one
-  * standard watermarked windowed aggregation — no custom state, state
-  * size bounded by open windows × sources regardless of corpus rate.
+  * curated monitor (q168, [[CurationStream.batchMonitor]]). Per-doc
+  * metrics are STATELESS (the q27 gate columns), so the monitor is one
+  * standard windowed aggregation — over a watermarked stream its state
+  * would be bounded by open windows × sources regardless of corpus
+  * rate.
   */
 object IngestMonitorStream {
 
@@ -29,8 +29,8 @@ object IngestMonitorStream {
     * (`source`, `ts`, `text`, `n_chars`): token count and the q27
     * composite gate — ONE definition, thresholds included
     * ([[graft.operators.TextOps.qualityGate]] over
-    * [[graft.operators.TextOps.stopHits]]), shared by the batch query
-    * and the live stream so the two gates cannot drift. */
+    * [[graft.operators.TextOps.stopHits]]), shared by q140 and q168 so
+    * the two gates cannot drift. */
   def docMetrics(docs: DataFrame): DataFrame =
     docs
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
@@ -38,15 +38,11 @@ object IngestMonitorStream {
       .withColumn("passes", graft.operators.TextOps.qualityGate)
       .select(col("source"), col("ts"), col("n_tokens"), col("passes"))
 
-  /** The monitors' tumbling window and the live monitors' watermark
-    * delay (the curation stream's dedup horizon too). */
+  /** The monitors' tumbling window. */
   val WindowInterval = "1 minute"
-  val WatermarkDelay = "1 minute"
 
   /** The shared windowed aggregation: (window, source) → doc count,
-    * token volume, gate pass count + rate. Works unchanged on a static
-    * frame (q140) and a watermarked stream (same physical aggregation
-    * Structured Streaming runs incrementally). */
+    * token volume, gate pass count + rate (q140 and q168). */
   def ingestCore(metrics: DataFrame): DataFrame =
     metrics
       .groupBy(window(col("ts"), WindowInterval).as("w"), col("source"))
@@ -71,15 +67,4 @@ object IngestMonitorStream {
       Tables.documents(spark, sfDir)
         .withColumn("ts", timestamp_seconds(lit(EpochBase) + col("doc_id")))
         .select(col("source"), col("ts"), col("text"), col("n_chars"))))
-
-  /** The streaming twin: watermarked append-mode aggregation over a
-    * live (source, ts, text, n_chars) stream. Late documents beyond
-    * the watermark drop (at-most-once per window emission — the
-    * supplier-stats Append discipline); spec asserts closed windows
-    * equal [[ingestCore]] on the same rows. */
-  def monitorStream(docs: DataFrame): DataFrame =
-    ingestCore(docMetrics(docs).withWatermark("ts", WatermarkDelay))
-
-  /** Convenience column for spec corpora that carry raw text only. */
-  def charCount(text: Column): Column = length(text).cast("long")
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[graft.ml.ModelStore]], the Redis-publish stand-in); this stream
   * closes the loop by scoring a micro-batched CONTEXT stream against
   * the LIVE store with the batch serving operator
-  * ([[graft.ml.LinUCB.topK]], q31) — the [[AnnServeStream]] pattern
-  * applied to the bandit: one scoring definition for the nightly job
-  * and the online service, so the two cannot drift
+  * ([[graft.ml.LinUCB.topK]], q31) in `foreachBatch`: one scoring
+  * definition for the nightly job and the online service, so the two
+  * cannot drift
   * (`recsys-engine/src/bandit_manager.py:109-132` serves per request
   * from the same scoring math its trainer fits).
   *

@@ -96,8 +96,8 @@ class LinUCBSpec extends SparkSpec {
   test("columnar seed path equals the typed Aggregator path") {
     val agg = seed(feedbackFromLineitem(spark, sf()), Dim)
       .collect().map(m => m.productId -> m).toMap
-    val col = seedColumnar(spark, sf())
-      .collect().map(m => m.productId -> m).toMap
+    val col = seedColumnarWithChol(spark, sf())
+      .collect().map { case (m, _) => m.productId -> m }.toMap
     assert(agg.keySet == col.keySet)
     agg.foreach { case (pid, am) =>
       val cm = col(pid)
@@ -113,12 +113,12 @@ class LinUCBSpec extends SparkSpec {
     // width and assert BIT-equal models (sameElements on the raw
     // doubles, not a tolerance) — this is the property that lets an
     // external engine replay A and b exactly.
-    val base = seedColumnar(spark, sf())
-      .collect().map(m => m.productId -> m).toMap
+    val base = seedColumnarWithChol(spark, sf())
+      .collect().map { case (m, _) => m.productId -> m }.toMap
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val again = try {
       spark.conf.set("spark.sql.shuffle.partitions", "3")
-      seedColumnar(spark, sf()).collect().map(m => m.productId -> m).toMap
+      seedColumnarWithChol(spark, sf()).collect().map { case (m, _) => m.productId -> m }.toMap
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
     assert(base.keySet == again.keySet)
     base.foreach { case (pid, m) =>

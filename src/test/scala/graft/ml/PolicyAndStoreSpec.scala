@@ -94,21 +94,20 @@ class PolicyAndStoreSpec extends SparkSpec {
           s"arm ${m.productId}: (L·Lᵀ)·A⁻¹ at ($i,$j) = $s, expected $expect")
       }
       xs.foreach { x =>
-        val row = Seq((x, m.b, l)).toDF("x", "b", "l").select(
-          graft.functions.linucbCholScore(col("x"), col("b"), col("l"), 0.1).as("s"),
-          graft.functions.linucbCholScore(col("x"), col("b"), col("l"), 0.0).as("g"))
-          .collect()(0)
-        val (sChol, gChol) = (row.getDouble(0), row.getDouble(1))
+        val pair = Seq((x, m.b, l)).toDF("x", "b", "l").select(
+          graft.functions.linucbCholScorePair(col("x"), col("b"), col("l"), 0.1))
+          .as[Seq[Double]].collect()(0)
+        val (gChol, sChol) = (pair(0), pair(1))
         assert(math.abs(sChol - LinUCB.score(x, m, 0.1)) < 1e-9,
           s"arm ${m.productId}: chol UCB $sChol vs serving ${LinUCB.score(x, m, 0.1)}")
         assert(math.abs(gChol - LinUCB.score(x, m, 0.0)) < 1e-9,
           s"arm ${m.productId}: chol greedy $gChol vs serving ${LinUCB.score(x, m, 0.0)}")
-        val direct = graft.functions.PolicyMath.linUcbCholScore(
+        val direct = graft.functions.PolicyMath.linUcbCholScorePair(
           ArrayData.toArrayData(x), ArrayData.toArrayData(m.b),
-          ArrayData.toArrayData(l), 0.1)
-        assert(java.lang.Double.doubleToLongBits(direct) ==
-          java.lang.Double.doubleToLongBits(sChol),
-          s"arm ${m.productId}: expression/driver bit mismatch $direct vs $sChol")
+          ArrayData.toArrayData(l), 0.1).toDoubleArray()
+        assert(direct.map(java.lang.Double.doubleToLongBits).toSeq ==
+          pair.map(java.lang.Double.doubleToLongBits),
+          s"arm ${m.productId}: expression/helper bit mismatch ${direct.toSeq} vs $pair")
       }
     }
   }
@@ -185,13 +184,15 @@ class PolicyAndStoreSpec extends SparkSpec {
       LinUCB.Model("p", graft.ml.LinAlg.invertRowMajor(a, 2), Array(1.0, 0.5), 2, 10L)
     }
     val x = Array(1.0, 0.4)
-    val s1 = LinUCB.scoreTS(x, m, nu = 0.1, seed = 42L)
-    val s2 = LinUCB.scoreTS(x, m, nu = 0.1, seed = 42L)
-    val s3 = LinUCB.scoreTS(x, m, nu = 0.1, seed = 43L)
+    val (theta, l) = (LinUCB.thetaOf(m), graft.ml.LinAlg.choleskyLower(m.aInv, m.d))
+    def scoreTS(nu: Double, seed: Long) = LinUCB.scoreTSPre(x, theta, l, m.d, nu, seed)
+    val s1 = scoreTS(nu = 0.1, seed = 42L)
+    val s2 = scoreTS(nu = 0.1, seed = 42L)
+    val s3 = scoreTS(nu = 0.1, seed = 43L)
     assert(s1 == s2, "same seed must reproduce the draw")
     assert(s1 != s3, "different seed must vary the draw")
     // ν=0 collapses to the posterior mean = greedy score
-    assert(math.abs(LinUCB.scoreTS(x, m, nu = 0.0, seed = 7L) -
+    assert(math.abs(scoreTS(nu = 0.0, seed = 7L) -
       LinUCB.score(x, m, alpha = 0.0)) < 1e-12)
   }
 

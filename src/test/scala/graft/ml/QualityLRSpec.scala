@@ -66,7 +66,7 @@ class QualityLRSpec extends SparkSpec {
 
   test("calibrated probabilities rank the heuristic gate well above random") {
     val scored = QualityLR.scoreDocs(spark, sf("0.01"))
-    val auc = PolicyEval.aucOf(scored,
+    val auc = PolicyEval.aucPerPolicy(scored, lit("_"),
         col("quality_prob"), col("heuristic_gate").cast("double"))
       .head().getAs[Double]("auc")
     assert(auc > 0.9, s"distilled scorer AUC $auc — not tracking the gate")

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.streaming.StreamingDedup
 
 class IvfAndStreamDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -113,55 +111,6 @@ class IvfAndStreamDedupSpec extends SparkSpec {
     assert(deriveNProbe(8193L, 16) == 4, "past the ceiling: scale path")
     assert(deriveNProbe(1_000_000L, 16) == 4)
     assert(deriveNProbe(1_000_000L, 2) == 2, "never probe more cells than fitted")
-  }
-
-  test("streaming dedup drops re-deliveries across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
-    val df = mem.toDF().toDF("order_id", "ts", "price")
-    val q = StreamingDedup.firstArrival(df, "ts", "10 seconds", "order_id")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      mem.addData(("o1", t("2024-01-01 00:00:01"), 5.0))
-      q.processAllAvailable()
-      // same key re-delivered in a later batch (inside the horizon) +
-      // one genuinely new record
-      mem.addData(("o1", t("2024-01-01 00:00:02"), 5.0),
-        ("o2", t("2024-01-01 00:00:03"), 7.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("order_id")
-        .as[String].collect().sorted.toSeq
-      assert(ids == Seq("o1", "o2"), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark dedupes inside the horizon, readmits after") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
-    val df = mem.toDF().toDF("order_id", "ts", "price")
-    val q = StreamingDedup.withinWatermark(df, "ts", "10 seconds", "order_id")
-      .writeStream.format("memory").queryName("dedup_ww_out")
-      .outputMode("append").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      mem.addData(("o1", t("2024-01-01 00:00:01"), 5.0))
-      q.processAllAvailable()
-      // re-delivery inside the horizon: dropped
-      mem.addData(("o1", t("2024-01-01 00:00:02"), 5.0))
-      q.processAllAvailable()
-      assert(spark.table("dedup_ww_out").count() == 1)
-      // push the watermark far past o1's state, then the SAME key again:
-      // state was evicted, so the key is readmitted (the documented
-      // difference from plain dropDuplicates)
-      mem.addData(("zz", t("2024-01-01 01:00:00"), 0.0))
-      q.processAllAvailable()
-      mem.addData(("o1", t("2024-01-01 01:00:01"), 5.0))
-      q.processAllAvailable()
-      val o1s = spark.table("dedup_ww_out").filter($"order_id" === "o1").count()
-      assert(o1s == 2, s"expected o1 readmitted after eviction, got $o1s rows")
-    } finally q.stop()
   }
 
   test("semanticKeep dominance on planted vectors with pinned cells") {

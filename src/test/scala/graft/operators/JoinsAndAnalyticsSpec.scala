@@ -41,6 +41,16 @@ class JoinsAndAnalyticsSpec extends SparkSpec {
     assert(out.filter($"n_views_1h" === 0 && $"view_value_1h" =!= 0.0).count() == 0)
   }
 
+  test("drift bins clamp values outside [lo, hi] into the end bins") {
+    import graft.functions.Drift
+    val bins = Seq((-5.0, 0.0, 1.0), (0.0, 0.0, 1.0), (0.5, 0.0, 1.0),
+        (1.0, 0.0, 1.0), (7.0, 0.0, 1.0), (3.0, 3.0, 3.0))
+      .toDF("v", "lo", "hi")
+      .select(Drift.binOf($"v", $"lo", $"hi")).as[Int].collect().toSeq
+    // below lo -> bin 0, at/above hi -> the top bin, constant column -> 0
+    assert(bins == Seq(0, 0, Drift.Bins / 2, Drift.Bins - 1, Drift.Bins - 1, 0), bins)
+  }
+
   test("semi + anti partition the customer set exactly") {
     val out = Joins.customerOrderPresence(spark, sf()).cache()
     val total = out.agg(sum($"n")).as[Long].collect()(0)

@@ -167,22 +167,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(sqlMismatches == 0)
   }
 
-  test("z-clustering bounds BOTH dimension spans per partition") {
-    val parts = ZOrder.clustered(spark, sf("0.01"))
-      .groupBy(spark_partition_id().as("p"))
-      .agg((max($"ub") - min($"ub")).as("ub_span"),
-        (max($"hb") - min($"hb")).as("hb_span"),
-        count(lit(1)).as("n"))
-      .collect()
-    assert(parts.length > 8)
-    val avgUb = parts.map(_.getLong(1)).sum.toDouble / parts.length
-    val avgHb = parts.map(_.getLong(2)).sum.toDouble / parts.length
-    // unclustered, every partition spans ~the full 0-255 of both dims;
-    // z-clustered ranges must shrink substantially on average for both
-    assert(avgUb < 160, s"avg ub span $avgUb")
-    assert(avgHb < 160, s"avg hb span $avgHb")
-  }
-
   test("group-sample pre-filter is invisible to the result") {
     for (sfTag <- Seq("0.001", "0.01")) {
       val withFilter = Analytics.groupSample(spark, sf(sfTag))
@@ -292,8 +276,14 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("count-min: never underestimates, bounded overestimate, merge-invariant") {
     val width = HeavyHitters.CmsWidth
-    val est = HeavyHitters.heavyTokenEstimates(spark, sf("0.01"))
-      .select("token", "exact_cnt", "cms_est")
+    // point estimates for the heavy tokens from one sketch over the
+    // token stream, next to their exact counts
+    val sketch = graft.Tables.documents(spark, sf("0.01"))
+      .select(explode(split($"text", " ")).as("t"))
+      .agg(graft.functions.Cms.sketchAgg($"t", width).as("sketch"))
+    val est = HeavyHitters.heavyTokens(spark, sf("0.01"))
+      .crossJoin(broadcast(sketch))
+      .select($"token", $"cnt", graft.functions.Cms.estimate($"sketch", $"token", width))
       .as[(String, Long, Long)].collect()
     assert(est.length >= 25)
     val n = spark.read.parquet(sf("0.01") + "/documents.parquet")
@@ -313,6 +303,37 @@ class PipelineOpsSpec extends SparkSpec {
         .as[Array[Long]].head().toSeq
     }
     assert(sketchOf(1) == sketchOf(13))
+  }
+
+  test("count-min sketch as streaming state equals the batch sketch") {
+    // Cms.sketchAgg is a plain Aggregator, so it runs unchanged as a
+    // streaming global aggregate (complete mode): the sketch IS the
+    // state, and elementwise-add merges make every micro-batch path
+    // produce the same array as one batch pass.
+    implicit val sqlCtx = spark.sqlContext
+    val words = Seq("a", "b", "a", "c", "a", "b", "d", "a", "e", "b")
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val q = mem.toDS().toDF("t")
+      .agg(graft.functions.Cms.sketchAgg($"t", 64).as("sketch"))
+      .writeStream.format("memory").queryName("cms_out")
+      .outputMode("complete").start()
+    try {
+      mem.addData(words.take(4): _*)
+      q.processAllAvailable()
+      mem.addData(words.drop(4): _*)
+      q.processAllAvailable()
+      val streamed = spark.table("cms_out")
+        .select("sketch").as[Array[Long]].head().toSeq
+      val batch = words.toDF("t")
+        .agg(graft.functions.Cms.sketchAgg($"t", 64).as("sketch"))
+        .as[Array[Long]].head().toSeq
+      assert(streamed == batch)
+      // and the estimate expression reads the streamed sketch correctly
+      val est = spark.table("cms_out")
+        .select(graft.functions.Cms.estimate($"sketch", lit("a"), 64))
+        .as[Long].head()
+      assert(est >= 4L && est <= words.size.toLong)
+    } finally q.stop()
   }
 
   test("SCD-2 current rows equal the materialized latest image") {

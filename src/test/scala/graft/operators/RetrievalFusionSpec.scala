@@ -11,6 +11,10 @@ import graft.SparkSpec
   * derivation. */
 class RetrievalFusionSpec extends SparkSpec {
 
+  /** Recall@k of the binary pipeline against exact brute force, per query. */
+  private def hammingRecall() =
+    Ann.recall(BinaryAnn.hammingTopK(spark, sf()), Similarity.bruteForceTopK(spark, sf()))
+
   test("recall grid covers the full (variant, n_probe, query) lattice, " +
     "each point agreeing with its single-point gate") {
     val rows = Pq.recallGrid(spark, sf()).collect()
@@ -82,7 +86,7 @@ class RetrievalFusionSpec extends SparkSpec {
     assert(!graft.PlanAudit.hasCartesian(df))
     // the code table is an index, built once per (session, sfDir): both
     // calls above must have resolved to the SAME checkpointed RDD — the
-    // contract that lets the serving stream pay only the scan per batch
+    // contract that lets a repeated query set pay only the scan
     val rdds = Seq(Sq.encoded(spark, sf()), Sq.encoded(spark, sf()))
       .map(_.queryExecution.analyzed.collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
@@ -210,7 +214,7 @@ class RetrievalFusionSpec extends SparkSpec {
     // and the recall gate counts the brute top-k it keeps
     val brute = Similarity.bruteForceTopK(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rec = BinaryAnn.hammingRecallVsBrute(spark, sf()).collect()
+    val rec = hammingRecall().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(rec.size == Ann.NQueries)
     rec.foreach { case (q, r) =>
@@ -221,7 +225,7 @@ class RetrievalFusionSpec extends SparkSpec {
   }
 
   test("bounded-candidate hamming recall is measured and sane on the fixture") {
-    val rec = BinaryAnn.hammingRecallVsBrute(spark, sf()).collect()
+    val rec = hammingRecall().collect()
     assert(rec.length == 10)
     rec.foreach(r => assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
     // 20 candidates from 64 sign bits must beat random-guessing recall

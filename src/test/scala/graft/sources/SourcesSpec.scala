@@ -25,36 +25,6 @@ class SourcesSpec extends SparkSpec {
     assert(df.schema == Sources.orderCsvSchema)
   }
 
-  test("ORC and JSON-lines round-trip the events table losslessly") {
-    val dir = Files.createTempDirectory("fmtsrc").toFile.getAbsolutePath
-    val src = graft.Tables.events(spark, sf())
-      .select($"event_id", $"user_id", $"event_type", $"value", $"ts_us")
-    val schema = src.schema
-    def sortedRows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("event_id").collect().map(_.toSeq).toSeq
-
-    Sources.writeOrc(src, s"$dir/orc")
-    assert(sortedRows(Sources.readOrc(spark, schema, s"$dir/orc")) == sortedRows(src))
-
-    Sources.writeJsonl(src, s"$dir/jsonl")
-    assert(sortedRows(Sources.readJsonl(spark, schema, s"$dir/jsonl")) == sortedRows(src))
-  }
-
-  test("ORC scan pushes predicates and prunes columns like parquet") {
-    val dir = Files.createTempDirectory("orcplan").toFile.getAbsolutePath
-    val src = graft.Tables.events(spark, sf())
-      .select($"event_id", $"user_id", $"event_type", $"value")
-    Sources.writeOrc(src, s"$dir/orc")
-    val plan = Sources.readOrc(spark, src.schema, s"$dir/orc")
-      .filter($"event_type" === "purchase")
-      .select($"event_id")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,purchase)]"),
-      s"predicate must reach the ORC reader:\n$plan")
-    assert(plan.contains("ReadSchema: struct<event_id:bigint,event_type:string>"),
-      s"column pruning must reach the ORC reader:\n$plan")
-  }
-
   test("csv parses into the streaming pipeline shape") {
     val dir = Files.createTempDirectory("csvsrc2").toFile
     val f = new java.io.File(dir, "orders.csv")

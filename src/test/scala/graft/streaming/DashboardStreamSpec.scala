@@ -44,21 +44,4 @@ class DashboardStreamSpec extends SparkSpec {
       assert(streamed.map(_(1)).toSet == Set("BUILDING", "MACHINERY", "UNKNOWN"))
     } finally q.stop()
   }
-
-  test("partitioned layout prunes directories on read") {
-    val out = java.nio.file.Files.createTempDirectory("layout").toString + "/events"
-    graft.sources.Layout.writePartitioned(
-      graft.Tables.events(spark, sf()), out, "event_type")
-    val pruned = graft.sources.Layout.readPartitioned(spark, out)
-      .filter($"event_type" === "purchase")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("event_type"), plan.take(800))
-    val want = graft.Tables.events(spark, sf())
-      .filter($"event_type" === "purchase").count()
-    assert(pruned.count() == want)
-    // directory layout is hive-style
-    val dirs = new java.io.File(out).list().filter(_.startsWith("event_type="))
-    assert(dirs.length == 5, dirs.toSeq.toString)
-  }
 }

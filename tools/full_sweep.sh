@@ -3,14 +3,15 @@
 # verdict asked that sf0.1 parity run every round (BASELINE.md cites a
 # mid-round 117/117 sf0.1 pass), so scale-sensitive rounding bugs can't
 # hide below the driver's sf0.01 gate. Runs graft.Verify + the DuckDB
-# oracle compare per SF and prints one summary line each. The parameter
-# census (tools/param_census.py) gates the sweep first.
+# oracle compare per SF and prints one summary line each. The census
+# (tools/param_census.py: parameters, defs, doc blocks) gates the sweep
+# first.
 #
 # Usage: tools/full_sweep.sh [sf...]   (default: 0.001 0.01 0.1)
 set -u
 cd "$(dirname "$0")/.."
 SFS=${@:-"0.001 0.01 0.1"}
-# a defaulted parameter only specs set (or none) is a constant, not an option
+# a default only specs set is a constant; a def only specs call is deleted
 python3 tools/param_census.py > /dev/null || exit 1
 sbt -batch compile || exit 1
 overall=0

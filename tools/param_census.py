@@ -1,29 +1,50 @@
 #!/usr/bin/env python3
-"""Census of the parameters of non-private `def`s in src/main.
+"""Census of the non-private `def`s in src/main: who calls each, and who sets
+each defaulted parameter.
 
-For every defaulted parameter it finds the calls that set it, by name or by
-position, in src/main, src/test and perfbench/harness/src, and sorts it into
-one of three classes: set by engine code (src/main or the perfbench
-harness), set only by specs (src/test), or set by no caller.
+Callers are the code in src/main, src/test and perfbench/harness/src; src/main
+and the perfbench harness count as engine, src/test as specs.
+
+Parameter pass: every defaulted parameter is sorted into one of three classes
+by the calls that pass it, by name or by position: set by engine code, set
+only by specs, or set by no caller.
+
+Def pass: every non-private member def (a def local to another def's body is
+not one) is sorted by its uses, with or without an argument list, outside its
+own body: used by engine code, used only by specs, or used by nothing. A
+`main` counts as engine (it is run by name).
 
     python3 tools/param_census.py            # counts per class and per file
-    python3 tools/param_census.py --list     # also each parameter and class
+    python3 tools/param_census.py --list     # also each parameter, and each
+                                             # spec-only or uncalled def
 
 The scan is lexical: comments and string literals are blanked (string
 interpolations `${...}` are kept, since they hold calls), defs are matched by
 `def name[...](...)...`, calls by `name[...](...)...` with their argument lists
 paired to the def's parameter lists. A call qualified by an object of
-src/main (`Ann.topK(`) is credited to that object's def only, and so is an
-unqualified call inside an object that defines the name itself (Scala's
-scoping: `topK(` inside `Ann` is `Ann.topK`); any other call to a name
-defined more than once is credited to every def of that name, so the scan
-errs toward "set". A defaulted parameter whose def name
-also appears without an argument list (passed as a function value) is listed
-with a `ref` mark for a look by hand.
+src/main (`Ann.topK(`), or named in an import selector from one
+(`import graft.functions.{seededUniform => su}`), is credited to that
+object's def only, and so is an unqualified call inside an object that
+defines the name itself (Scala's scoping: `topK(` inside `Ann` is `Ann.topK`);
+a use qualified by any other capitalized name (`Character.charCount`) is a
+JVM class member and credits no def; any other call to a name defined more
+than once is credited to every def of that name, so the scan errs toward
+"set" and "used". A defaulted parameter whose def name also appears without
+an argument list (passed as a function value) is listed with a `ref` mark
+for a look by hand.
 
-Exits 1 when a defaulted parameter is set by no caller, or only by specs and
-is not in ALLOWED below: a value every non-test caller leaves at its default
-is a constant, not an option.
+Exits 1 when
+  - a defaulted parameter is set by no caller, or only by specs and is not
+    in ALLOWED: a value every non-test caller leaves at its default is a
+    constant, not an option;
+  - a def is used only by specs or by nothing and is not in
+    SURFACE_ALLOWED: engine surface that no query, layer, stream or
+    benchmark runs is deleted, or kept for one of the reasons that table
+    names;
+  - an entry of either table no longer matches;
+  - a doc block in src/main is followed directly by another (`*/`, only
+    whitespace, `/**`): Scaladoc attaches only the second, so the first
+    documents nothing.
 """
 import os
 import re
@@ -46,6 +67,63 @@ ALLOWED = {
         "outside input: a frame written under another id must be rejected on decode",
     "AvroSerde.decodeOrdersFramed.registry":
         "outside input: a frame's id resolves only through a registry that holds it",
+}
+
+# Non-private defs only specs call (or nothing in this repo calls), as
+# `Object.def`, each with the rule that keeps it:
+#   (a) the engine form of a reference pipeline behaviour (SURVEY.md cites
+#       the reference file);
+#   (b) a spec reference: the named spec compares an engine path against it;
+#   (c) a test seam: it takes the planted frame the engine form reads from
+#       a lake;
+#   (d) the library facade, called from outside this repo.
+SURFACE_ALLOWED = {
+    "Sources.csvOrders":
+        "(a) S1/S17 CSV scan: header skip, malformed lines dropped "
+        "(cdc-local/src/utils.py:113-119, FileSourceFactory.kt:30-107)",
+    "AvroSerde.encodeOrdersFramed":
+        "(a) S9 Avro producer in the registry wire format (ProducerApp.kt:32-76)",
+    "SupplierStatsStream.parseAvroFramedOrders":
+        "(a) S12 Avro consumer feeding the stats stream (Connectors.kt:18-42)",
+    "SupplierStatsStream.forkBatch":
+        "(a) T6 late side output beside the stats sink (LateRecordProcessor.kt:24-79)",
+    "LinUCBStream.trainWithBootstrap":
+        "(a) S18/T13 bootstrap-then-live training (ParameterUpdateJob.kt:30-61)",
+    "LinUCBServeStream.serve":
+        "(a) J5/S20 per-request scoring against the live model store "
+        "(bandit_manager.py:109-132)",
+    "DashboardStream.revenueBySegment":
+        "(a) the polled dashboard's join + revenue by segment, maintained "
+        "incrementally (product-demos/producer/api.py:35-63)",
+    "Cdc.lineitemEnvelope":
+        "(a) S5 second captured table with delete rewrite "
+        "(cdc-local application.properties:22-26)",
+    "Features.textEmbeddingQuery":
+        "(a) F14 TF-IDF+SVD embedding values (preprocessor.py:88-104); "
+        "q35 checks only their envelope",
+    "Features.textEmbeddingHashed":
+        "(a) F14 TF-IDF+SVD embedding values over the hashed vocabulary "
+        "(preprocessor.py:88-104); q77 checks only their envelope",
+    "Dedup.embeddingPairs":
+        "(b) DedupSpec 'bucketed embedding pairs: subset of exact, recall floor, "
+        "no cartesian in plan' compares q23's embeddingPairsBucketed against it",
+    "PolicyEval.aucPerPolicyApprox":
+        "(b) PolicyAndStoreSpec 'wide-input bucketed AUC ≡ melted-input bucketed "
+        "AUC on the shared scores' compares q41's aucPerPolicyApproxWide against it",
+    "ZOrder.interleave":
+        "(b) PipelineOpsSpec 'native zorder2 matches the declarative fold on the "
+        "full grid' compares q92's zorder2 against it",
+    "LinUCB.scoreTSPre":
+        "(b) ExprParitySpec 'native policy scoring == the Scala helpers, "
+        "bit-for-bit' compares q41's lints_score against it",
+    "TextOps.lmScoreFrom":
+        "(c) lmScore over a planted corpus with degenerate documents",
+    "Dedup.stripDupSpansFrom":
+        "(c) stripDupSpans over a planted corpus",
+    "Graft.query":
+        "(d) facade: run an inventory query by name on an opened session",
+    "SparkEntry.entry":
+        "(d) facade: the flagship query an outside caller runs as a smoke check",
 }
 
 
@@ -270,6 +348,44 @@ def calls_of(name, text, def_starts):
     yield ("refs", refs)
 
 
+def body_end(text, start):
+    """Offset just past the def starting at `start`: the first later
+    non-blank line indented less than the def, or as much and not opening
+    with a closing bracket."""
+    ls = text.rfind("\n", 0, start) + 1
+    indent = len(text[ls:start]) - len(text[ls:start].lstrip())
+    j = text.find("\n", start)
+    while j >= 0:
+        nxt = text.find("\n", j + 1)
+        line = text[j + 1:nxt if nxt >= 0 else len(text)]
+        body = line.lstrip()
+        depth = len(line) - len(body)
+        if body and (depth < indent or (depth == indent and body[0] not in ")}")):
+            return j + 1
+        j = nxt
+    return len(text)
+
+
+IMPORT = re.compile(r"\s*import\s+(?:[\w.]+\.)?(\w+)\s*\.\s*\{[^}]*$")
+
+
+def uses_of(name, text):
+    """(qualifier or None, offset) of every use of `name` in text, with or
+    without an argument list, other than its own `def`. A name in an import
+    selector (`import a.B.{name => n}`) is qualified by the object imported
+    from."""
+    pat = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])")
+    for m in pat.finditer(text):
+        if re.search(r"\bdef\s+$", text[max(0, m.start() - 8):m.start()]):
+            continue
+        imp = IMPORT.match(text, text.rfind("\n", 0, m.start()) + 1, m.start())
+        q = imp or QUALIFIER.search(text, max(0, m.start() - 80), m.start())
+        yield (q.group(1) if q else None), m.start()
+
+
+ORPHAN_DOC = re.compile(r"\*/\s*/\*\*")
+
+
 def main(argv):
     listing = "--list" in argv
     sources = {}
@@ -294,7 +410,9 @@ def main(argv):
     def resolve(name, qual, f, at, objs):
         """The objects whose def of `name` a call may reach."""
         if qual is not None:
-            return {qual} & objs if qual in objects else objs
+            if qual in objects:
+                return {qual} & objs
+            return set() if qual[0].isupper() else objs  # `Character.charCount`
         for s in sorted((s for s in spans[f] if s[0] < at < s[1]), reverse=True):
             if name in scope[s[2]]:
                 return {s[2]} & objs
@@ -312,6 +430,8 @@ def main(argv):
         positional = defaultdict(set)
         refs = 0
         for f, (kind, text, _) in sources.items():
+            if name not in text:
+                continue
             starts = {d["start"] for d in ds if os.path.join(ROOT, d["file"]) == f}
             for call in calls_of(name, text, starts):
                 if call[0] == "refs":
@@ -356,7 +476,69 @@ def main(argv):
     stale = set(ALLOWED) - {f"{r[2]}.{r[3]}" for r in rows if r[5] == "spec"}
     for key in sorted(stale):
         print(f"FAIL allowlisted {key} is no longer a spec-only default", file=sys.stderr)
-    return 1 if bad or stale else 0
+    failed = bool(bad or stale)
+
+    # def pass: who uses each non-private member def (a `main` is run by
+    # name); a def local to another def's body is no member
+    used = {}  # "Object.def" -> {"engine", "spec"}
+    where = {}
+    bodies = defaultdict(list)  # file -> (start, end) of every def, any visibility
+    for f, (_, text, _) in sources.items():
+        if f.startswith(ENGINE[0]):
+            bodies[os.path.relpath(f, ROOT)] = [(m.start(), body_end(text, m.start()))
+                                                for m in DEF.finditer(text)]
+    for d in defs:
+        if any(s < d["start"] < e for s, e in bodies[d["file"]]):
+            continue
+        key = f"{d['obj']}.{d['name']}"
+        where.setdefault(key, (d["file"], d["line"]))
+        used.setdefault(key, set())
+        path = os.path.join(ROOT, d["file"])
+        own = next(b for b in bodies[d["file"]] if b[0] == d["start"])
+        for f, (kind, text, _) in sources.items():
+            if d["name"] not in text:
+                continue
+            for qual, at in uses_of(d["name"], text):
+                if f == path and own[0] <= at < own[1]:
+                    continue
+                if d["obj"] in resolve(d["name"], qual, f, at, {d["obj"]}):
+                    used[key].add(kind)
+    surface = {k: "engine" if "engine" in v or k.endswith(".main") else
+               "spec" if v else "uncalled" for k, v in used.items()}
+    tally = defaultdict(int)
+    for cls in surface.values():
+        tally[cls] += 1
+    if listing:
+        for key in sorted(surface, key=lambda k: where[k]):
+            if surface[key] != "engine":
+                f, line = where[key]
+                tag = SURFACE_ALLOWED.get(key, "")[:3]
+                print(f"{surface[key]:8} {f}:{line} {key} {tag}".rstrip())
+        print()
+    print(f"non-private defs by caller: engine {tally['engine']}, "
+          f"spec-only {tally['spec']}, uncalled {tally['uncalled']} "
+          f"({len(SURFACE_ALLOWED)} allowlisted)")
+    for key in sorted(surface, key=lambda k: where[k]):
+        if surface[key] != "engine" and key not in SURFACE_ALLOWED:
+            f, line = where[key]
+            print(f"FAIL {f}:{line} {key} is called by "
+                  f"{'specs only' if surface[key] == 'spec' else 'nothing'}", file=sys.stderr)
+            failed = True
+    for key in sorted(SURFACE_ALLOWED):
+        if surface.get(key, "engine") == "engine":
+            print(f"FAIL allowlisted {key} is no longer a spec-only or uncalled def",
+                  file=sys.stderr)
+            failed = True
+
+    # a doc block directly followed by another documents nothing
+    for f, (_, _, orig) in sorted(sources.items()):
+        if f.startswith(ENGINE[0]):
+            for m in ORPHAN_DOC.finditer(orig):
+                line = orig.count("\n", 0, m.start()) + 1
+                print(f"FAIL {os.path.relpath(f, ROOT)}:{line} doc block followed by "
+                      f"another doc block", file=sys.stderr)
+                failed = True
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
