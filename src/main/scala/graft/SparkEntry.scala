@@ -316,19 +316,10 @@ object SparkEntry {
     // corpus-ingestion monitor: per (1-min window, source) doc/token
     // volume + quality-gate pass rate — the q13 windowed-stats shape on
     // the documents lake
-    "q140_ingest_monitor" ->
-      ((s, d) => streaming.IngestMonitorStream.batchMonitor(s, d)),
+    "q140_ingest_monitor" -> ((s, d) => operators.IngestMonitor.monitor(s, d)),
     // the curation chain's monitor: q140's monitor over the DEDUPED
     // corpus (first arrival per sha2(text), the q112 fingerprint)
-    "q168_curated_ingest" ->
-      ((s, d) => {
-        import org.apache.spark.sql.functions._
-        val docs = Tables.documents(s, d)
-          .withColumn("ts", timestamp_seconds(
-            lit(streaming.IngestMonitorStream.EpochBase) + col("doc_id")))
-          .select(col("source"), col("ts"), col("text"), col("n_chars"))
-        streaming.CurationStream.batchMonitor(docs)
-      }),
+    "q168_curated_ingest" -> ((s, d) => operators.IngestMonitor.curatedMonitor(s, d)),
     // full IVFADC (residual encoding, the paper's §IV-A deployment):
     // PQ codebooks fit on float-cast cell residuals, score =
     // ⟨q,c_cell⟩ + residual ADC — hash-checked via the composed
@@ -603,12 +594,21 @@ object SparkEntry {
   private val rev = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
   private def revSum(alias: String) =
     s"ROUND(CAST(SUM($rev) AS DOUBLE), 2) AS $alias"
-  private val dashFrom =
+  private val dashJoin =
     """FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
-      |JOIN part ON l_partkey = p_partkey
-      |WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'""".stripMargin
+      |JOIN part ON l_partkey = p_partkey""".stripMargin
+  private val dashSince = "WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'"
+  private val dashFrom = s"$dashJoin\n$dashSince"
+  /** Revenue per (region, nation) over the dashboard join (q05, q45). */
+  private val nationRevenue =
+    s"""SELECT r_name AS region, n_name AS nation, ${revSum("revenue")},
+       |  COUNT(*) AS n_items
+       |$dashJoin
+       |JOIN nation ON c_nationkey = n_nationkey
+       |JOIN region ON n_regionkey = r_regionkey
+       |$dashSince""".stripMargin
   private val shingles =
     """SELECT doc_id, list_distinct(list_transform(
       |    range(1, len(string_split(text, ' ')) - 1),
@@ -624,6 +624,96 @@ object SparkEntry {
     s"""SELECT doc_id, s FROM (
        |  SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM tok)
        |WHERE df <= ${operators.Dedup.DefaultMaxDf}""".stripMargin
+  /** Shingle sets `sh` and their (doc_id, shingle) postings `tok`. */
+  private val shingleTok =
+    s"""sh AS ($shingles),
+       |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh)""".stripMargin
+  /** Candidate pairs `cand(doc_i < doc_j)`: a shared DF-capped shingle. */
+  private val cappedCand =
+    s"""ctok AS ($cappedTok),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
+       |  FROM ctok a JOIN ctok b ON a.s = b.s AND a.doc_id < b.doc_id)""".stripMargin
+  /** Exact verification `v` of `cand` on the full shingle sets (q20,
+    * q21, q166). */
+  private val shingleVerify =
+    """v AS (
+      |  SELECT doc_i, doc_j,
+      |    len(list_intersect(na.shingles, nb.shingles)) AS c,
+      |    len(na.shingles) AS ni, len(nb.shingles) AS nj
+      |  FROM cand JOIN sh na ON doc_i = na.doc_id JOIN sh nb ON doc_j = nb.doc_id)""".stripMargin
+  /** The verified pairs at Jaccard >= 0.5 (q20, q21). */
+  private val jaccardPairs =
+    """SELECT doc_i, doc_j,
+      |  ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) AS jaccard
+      |FROM v WHERE ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) >= 0.5""".stripMargin
+  /** MinHash replay (q21, q166): each posting's hex60(md5(s)) mod P as
+    * `$name(doc_id, x)`, and the 64 slots' (a, b) from md5("a"+i) and
+    * md5("b"+i), over P = 2^31−1 (PortableHash). */
+  private def minhashBase(name: String) =
+    s"""$name AS (SELECT doc_id,
+       |  CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) % 2147483647 AS x FROM tok)""".stripMargin
+  private val minhashSlots =
+    """slots AS (
+      |  SELECT i,
+      |    1 + CAST('0x' || substr(md5('a' || i), 1, 7) AS BIGINT) % 2147483646 AS a,
+      |    CAST('0x' || substr(md5('b' || i), 1, 7) AS BIGINT) % 2147483647 AS b
+      |  FROM range(0, 64) t(i))""".stripMargin
+
+  // Brute-force vector scaffolding: the per-vector L2 norm and the 4dp
+  // cosine, in the engine's ascending-dim double fold.
+  private val embNorm =
+    """sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
+      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))""".stripMargin
+  /** `e(vec_id, embedding, nrm)`: the corpus with its norms. */
+  private val normedE =
+    s"""e AS (
+       |  SELECT vec_id, embedding,
+       |    $embNorm AS nrm
+       |  FROM embeddings)""".stripMargin
+  /** 4dp cosine of the `emb` vector against `q`, `norms` its divisor. */
+  private def cosine(emb: String, q: String, norms: String) =
+    s"""ROUND(list_sum(list_transform(range(1, len($emb) + 1),
+       |      i -> CAST($emb[i] AS DOUBLE) * CAST($q[i] AS DOUBLE)))
+       |      / ($norms), 4)""".stripMargin
+  private val cosSim = s"${cosine("e.embedding", "qemb", "e.nrm * qnrm")} AS cos_sim"
+  /** Top 5 of `scored(qid, vec_id, cos_sim)` per query (q24, q25). */
+  private val cosTop5 =
+    """SELECT qid, vec_id AS nbr_id, rank, cos_sim FROM (
+      |  SELECT qid, vec_id, cos_sim,
+      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
+      |  FROM scored)
+      |WHERE rank <= 5""".stripMargin
+  /** The portable SRP signature over `planes` hyperplanes (integer-
+    * arithmetic weights — see PortableSrpSig) as column `name`, beside
+    * each vector's norm (q23, q25). */
+  private def srpNormed(planes: Int, name: String) =
+    s"""e AS (
+       |  SELECT vec_id, embedding,
+       |    $embNorm AS nrm,
+       |    CAST(list_sum(list_transform(range(0, $planes), p ->
+       |      CASE WHEN list_sum(list_transform(range(1, len(embedding) + 1),
+       |        i -> CAST(embedding[i] AS DOUBLE) *
+       |             (CAST(((p*1024 + (i-1)) * 2654435761) % 2000001 - 1000000 AS DOUBLE) / 1000000.0)))
+       |        >= 0 THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS $name
+       |  FROM embeddings)""".stripMargin
+  /** Semantic decontamination (q142, q155): each non-eval vector's
+    * cosines to the eval vectors (vec_id % 50 = 0) as `p(vec_id, eid,
+    * cos_eval)`; `ev` names the eval CTE. */
+  private def evalCosines(ev: String) = {
+    val pad = " " * (ev.length + 5) // FROM under the CTE's SELECT
+    s"""e AS (
+       |  SELECT vec_id, embedding,
+       |    $embNorm
+       |      AS nrm
+       |  FROM embeddings),
+       |$ev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
+       |${pad}FROM e WHERE vec_id % 50 = 0),
+       |p AS (
+       |  SELECT e.vec_id, $ev.eid,
+       |    ${cosine("e.embedding", s"$ev.eemb", s"e.nrm * $ev.enrm")} AS cos_eval
+       |  FROM e CROSS JOIN $ev WHERE e.vec_id % 50 <> 0)""".stripMargin
+  }
 
   // --- Unrolled-k-means IVF oracle scaffolding ---
   // The engine's IVF layer became externally recomputable when the
@@ -751,10 +841,13 @@ object SparkEntry {
        |${pqAssign("pc1", "pa2")},
        |${pqUpdate("pa2", "pc1", "pm2", "pc2")},
        |${pqAssign("pc2", "paf")}""".stripMargin
-  private val pqFit = s"$pqRawSv,\n$pqFitCore"
   private val pqKmeans =
     s"""e AS (SELECT vec_id, embedding FROM embeddings),
-       |$pqFit""".stripMargin
+       |$pqRawSv,
+       |$pqFitCore""".stripMargin
+  /** The flat codecs' queries: the first 10 vectors of `e`. */
+  private val eQueries =
+    "qv AS (SELECT vec_id AS qid, embedding AS qemb FROM e WHERE vec_id < 10)"
   /** qsv + lut: per-(query, subspace, code) ADC table from the exact
     * query subvectors. Expects `qv(qid, qemb, …)` and `pc2` in scope —
     * shared by q135/q136 (all-pairs tail) and q137 (cell-pruned tail). */
@@ -774,7 +867,7 @@ object SparkEntry {
     * s-ordered list, the exact fold order of the engine's aggregate()
     * expression, so the 4dp rounding cannot straddle. */
   private val pqAdc =
-    s"""qv AS (SELECT vec_id AS qid, embedding AS qemb FROM e WHERE vec_id < 10),
+    s"""$eQueries,
        |$pqLut,
        |terms AS (
        |  SELECT lut.qid, paf.vec_id, lut.s, lut.t
@@ -799,9 +892,7 @@ object SparkEntry {
        |       FROM af WHERE vec_id < 10),
        |bsc AS (
        |  SELECT bqid AS qid, af.vec_id,
-       |    ROUND(list_sum(list_transform(range(1, len(af.embedding) + 1),
-       |      i -> CAST(af.embedding[i] AS DOUBLE) * CAST(bqemb[i] AS DOUBLE)))
-       |      / (af.nrm * bqnrm), 4) AS cos_sim
+       |    ${cosine("af.embedding", "bqemb", "af.nrm * bqnrm")} AS cos_sim
        |  FROM af JOIN bq ON af.vec_id <> bqid),
        |bruk AS (
        |  SELECT qid, vec_id AS nbr_id FROM (
@@ -820,38 +911,92 @@ object SparkEntry {
        |  ROUND(CAST(n_hit AS DOUBLE) / brute_k, 4) AS recall
        |FROM hits JOIN bknt ON hits.qid = bknt.qid""".stripMargin
 
-  /** The q143 oracle as a FUNCTION of nProbe — q143 pins the
-    * deployment point (nProbe = 4); q167 sweeps the operating grid
-    * {1, 2, 4, 8} through the identical chain. */
-  private def ivfRecallSql(nProbe: Int): String =
-    s"""WITH $ivfKmeans,
-       |$pqFit,
-       |qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
-       |       FROM af WHERE vec_id < 10),
+  /** The probed cells' rows as candidates `cand(qid, vec_id)`, the query
+    * itself excluded. Expects `af` and `probes` in scope. */
+  private val probedCand =
+    """cand AS (
+      |  SELECT probes.qid, af.vec_id
+      |  FROM af JOIN probes ON af.cluster = probes.probe
+      |  WHERE af.vec_id <> probes.qid)""".stripMargin
+  /** The IVF queries: the first 10 vectors, with their norms. */
+  private val ivfQueries =
+    """qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
+      |       FROM af WHERE vec_id < 10)""".stripMargin
+  /** The IVF fit, a PQ fit over the subvector table `sv`, the queries,
+    * their probes and their ADC lookup table. */
+  private def ivfAdcHead(sv: String, nProbe: Int) =
+    s"""$ivfKmeans,
+       |$sv,
+       |$pqFitCore,
+       |$ivfQueries,
        |${ivfProbes(nProbe)},
-       |$pqLut,
-       |cand AS (
-       |  SELECT probes.qid, af.vec_id
-       |  FROM af JOIN probes ON af.cluster = probes.probe
-       |  WHERE af.vec_id <> probes.qid),
-       |terms AS (
-       |  SELECT cand.qid, cand.vec_id, paf.s, lut.t
+       |$pqLut""".stripMargin
+  /** ADC scoring over `cand`: the per-(qid, vec_id) `adc_ip` sums the 8
+    * looked-up terms in ascending-s order, plus `cand`'s `offset` column
+    * when one is named (the residual codec's query·centroid term). */
+  private def adcScore(offset: String) = {
+    val (carry, plus, key) =
+      if (offset.isEmpty) ("", "", "") else (s"cand.$offset, ", s"$offset + ", s", $offset")
+    s"""terms AS (
+       |  SELECT cand.qid, cand.vec_id, ${carry}paf.s, lut.t
        |  FROM cand
        |  JOIN paf ON paf.vec_id = cand.vec_id
        |  JOIN lut ON lut.qid = cand.qid
        |    AND lut.s = paf.s AND lut.code = paf.code),
        |sc AS (
        |  SELECT qid, vec_id,
-       |    ROUND(list_sum(list(t ORDER BY s)), 4) AS adc_ip
-       |  FROM terms GROUP BY qid, vec_id),
-       |annk AS (
+       |    ROUND(${plus}list_sum(list(t ORDER BY s)), 4) AS adc_ip
+       |  FROM terms GROUP BY qid, vec_id$key)""".stripMargin
+  }
+  // Codec chains: each ends with `sc(qid, vec_id, <score>)` over the
+  // vectors it scores, like operators.Ann's codecs; a serving tail
+  // (adcTop5, sqTop5) or the recall tail (annk + recallTail) follows.
+  /** IVF-PQ (q137, q143, q167): raw-vector codes in the probed cells. */
+  private def ivfPqChain(nProbe: Int) =
+    s"""${ivfAdcHead(pqRawSv, nProbe)},
+       |$probedCand,
+       |${adcScore("")}""".stripMargin
+  /** Residual IVFADC (q141, q144, q167): residual codes in the probed
+    * cells, scored as query·centroid + the residual ADC sum. */
+  private def residualChain(nProbe: Int) =
+    s"""${ivfAdcHead(pqResidualSv, nProbe)},
+       |celld AS (
+       |  SELECT probes.qid, probes.probe,
+       |    ${ivfDot("qv.qemb", "c2.c")} AS celldot
+       |  FROM probes
+       |  JOIN qv USING (qid)
+       |  JOIN c2 ON c2.cluster = probes.probe),
+       |cand AS (
+       |  SELECT celld.qid, af.vec_id, celld.celldot
+       |  FROM af JOIN celld ON af.cluster = celld.probe
+       |  WHERE af.vec_id <> celld.qid),
+       |${adcScore("celldot")}""".stripMargin
+  /** The serving list: top 5 of `sc` per query by `adc_ip`. */
+  private val adcTop5 =
+    """SELECT qid, vec_id AS nbr_id, rank, adc_ip FROM (
+      |  SELECT qid, vec_id, adc_ip,
+      |    CAST(row_number() OVER (PARTITION BY qid
+      |      ORDER BY adc_ip DESC, vec_id) AS BIGINT) AS rank
+      |  FROM sc)
+      |WHERE rank <= 5""".stripMargin
+  /** The ANN list under test for [[recallTail]]: top 5 of `sc` by `score`. */
+  private def annk(score: String) =
+    s"""annk AS (
        |  SELECT qid, vec_id AS nbr_id FROM (
        |    SELECT qid, vec_id,
        |      row_number() OVER (PARTITION BY qid
-       |        ORDER BY adc_ip DESC, vec_id) AS rank
+       |        ORDER BY $score DESC, vec_id) AS rank
        |    FROM sc)
-       |  WHERE rank <= 5),
-       |$recallTail""".stripMargin
+       |  WHERE rank <= 5)""".stripMargin
+
+  /** The recall tail over a codec chain's `sc`, ranked by `score`. */
+  private def recallOf(score: String) = s"${annk(score)},\n$recallTail"
+
+  /** The q143 oracle as a FUNCTION of nProbe — q143 pins the
+    * deployment point (nProbe = 4); q167 sweeps the operating grid
+    * {1, 2, 4, 8} through the identical chain. */
+  private def ivfRecallSql(nProbe: Int): String =
+    s"WITH ${ivfPqChain(nProbe)},\n${recallOf("adc_ip")}"
 
   /** SQ8 fit + encode + reconstruct core (b/enc/rec), expecting `e` in
     * scope — shared by the flat chain below (q169/q170) and the
@@ -885,7 +1030,7 @@ object SparkEntry {
   private val sqChain =
     s"""e AS (SELECT vec_id, embedding FROM embeddings),
       |$sqCore,
-      |qv AS (SELECT vec_id AS qid, embedding AS qemb FROM e WHERE vec_id < 10),
+      |$eQueries,
       |sc AS (
       |  SELECT qv.qid, rec.vec_id,
       |    ROUND(list_sum(list(rv * CAST(qemb[i] AS DOUBLE) ORDER BY i)), 4) AS sq_ip
@@ -899,12 +1044,9 @@ object SparkEntry {
   private val ivfSqChain =
     s"""$ivfKmeans,
        |$sqCore,
-       |qv AS (SELECT vec_id AS qid, embedding AS qemb FROM e WHERE vec_id < 10),
+       |$eQueries,
        |${ivfProbes(operators.Pq.DeployedNProbe)},
-       |cand AS (
-       |  SELECT probes.qid, af.vec_id
-       |  FROM af JOIN probes ON af.cluster = probes.probe
-       |  WHERE af.vec_id <> probes.qid),
+       |$probedCand,
        |sc AS (
        |  SELECT cand.qid, rec.vec_id,
        |    ROUND(list_sum(list(rv * CAST(qemb[i] AS DOUBLE) ORDER BY i)), 4) AS sq_ip
@@ -912,44 +1054,19 @@ object SparkEntry {
        |  JOIN rec ON rec.vec_id = cand.vec_id
        |  JOIN qv ON qv.qid = cand.qid
        |  GROUP BY cand.qid, rec.vec_id)""".stripMargin
+  /** The SQ8 serving list (q169, q173): top 5 of `sc` by `sq_ip`. */
+  private val sqTop5 =
+    """SELECT qid, vec_id AS nbr_id, CAST(rank AS BIGINT) AS rank, sq_ip
+      |FROM (
+      |  SELECT qid, vec_id, sq_ip,
+      |    row_number() OVER (PARTITION BY qid
+      |      ORDER BY sq_ip DESC, vec_id) AS rank
+      |  FROM sc)
+      |WHERE rank <= 5""".stripMargin
 
   /** The q144 (residual IVFADC) oracle as a function of nProbe. */
   private def residualRecallSql(nProbe: Int): String =
-    s"""WITH $ivfKmeans,
-       |$pqResidualSv,
-       |$pqFitCore,
-       |qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
-       |       FROM af WHERE vec_id < 10),
-       |${ivfProbes(nProbe)},
-       |$pqLut,
-       |celld AS (
-       |  SELECT probes.qid, probes.probe,
-       |    ${ivfDot("qv.qemb", "c2.c")} AS celldot
-       |  FROM probes
-       |  JOIN qv USING (qid)
-       |  JOIN c2 ON c2.cluster = probes.probe),
-       |cand AS (
-       |  SELECT celld.qid, af.vec_id, celld.celldot
-       |  FROM af JOIN celld ON af.cluster = celld.probe
-       |  WHERE af.vec_id <> celld.qid),
-       |terms AS (
-       |  SELECT cand.qid, cand.vec_id, cand.celldot, paf.s, lut.t
-       |  FROM cand
-       |  JOIN paf ON paf.vec_id = cand.vec_id
-       |  JOIN lut ON lut.qid = cand.qid
-       |    AND lut.s = paf.s AND lut.code = paf.code),
-       |sc AS (
-       |  SELECT qid, vec_id,
-       |    ROUND(celldot + list_sum(list(t ORDER BY s)), 4) AS adc_ip
-       |  FROM terms GROUP BY qid, vec_id, celldot),
-       |annk AS (
-       |  SELECT qid, vec_id AS nbr_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid
-       |        ORDER BY adc_ip DESC, vec_id) AS rank
-       |    FROM sc)
-       |  WHERE rank <= 5),
-       |$recallTail""".stripMargin
+    s"WITH ${residualChain(nProbe)},\n${recallOf("adc_ip")}"
 
   // --- Stupid-backoff LM scoring chain (q130/q139): train on the
   // doc_id%10<8 partition, per-bigram 9dp-decimal log terms, per-doc
@@ -986,6 +1103,25 @@ object SparkEntry {
       |  SELECT doc_id, COUNT(*) AS n_bigrams,
       |    ROUND(CAST(SUM(term) AS DOUBLE) / COUNT(*), 6) AS lm_score
       |  FROM lmsc GROUP BY doc_id)""".stripMargin
+
+  /** Per-source thirds of the per-doc LM score (q150, q153): `${p}ds`
+    * gives each scored doc its source, `${p}b` labels each distinct score
+    * by where its cumulative count falls, so ties share a bucket. */
+  private def pplBuckets(p: String) =
+    s"""${p}ds AS (
+       |  SELECT lmdoc.doc_id, documents.source, lmdoc.lm_score
+       |  FROM lmdoc JOIN documents USING (doc_id)),
+       |${p}f AS (SELECT source, lm_score, COUNT(*) AS c FROM ${p}ds GROUP BY 1, 2),
+       |${p}b AS (
+       |  SELECT source, lm_score,
+       |    CASE WHEN cum <= (n_src + 2) // 3 THEN 'head'
+       |         WHEN cum <= (2 * n_src + 2) // 3 THEN 'middle'
+       |         ELSE 'tail' END AS ppl_bucket
+       |  FROM (SELECT source, lm_score,
+       |          SUM(c) OVER (PARTITION BY source
+       |            ORDER BY lm_score DESC) AS cum,
+       |          SUM(c) OVER (PARTITION BY source) AS n_src
+       |        FROM ${p}f))""".stripMargin
 
   // --- BPE merge-loop replay (q131/q132): the greedy fit is fully
   // deterministic — top pair by (freq DESC, w1 asc, w2 asc), then
@@ -1028,16 +1164,44 @@ object SparkEntry {
     ctes.mkString(",\n")
   }
 
+  // --- Whitespace-token word lists: the quality gate's stop words and the
+  // lang-id scores' per-language lists (TextOps.qualityScore, langId).
+  private val stopWords = "'the', 'a', 'and', 'of', 'to', 'in', 'is'"
+  private val langWords = Seq(
+    "en" -> "'the', 'a', 'and', 'of', 'is'",
+    "es" -> "'el', 'la', 'los', 'de', 'es'",
+    "de" -> "'der', 'die', 'das', 'und', 'ist'",
+    "fr" -> "'le', 'la', 'les', 'de', 'est'")
+  /** How many of `col`'s whitespace tokens are in `words`. */
+  private def wordHits(col: String, words: String) =
+    s"""len(list_filter(string_split($col, ' '),
+       |      t -> t IN ($words)))""".stripMargin
+  /** One `score_<lang>` select item per line for each of `langs`. */
+  private def langScores(col: String, langs: Seq[(String, String)]) =
+    langs.map { case (lang, words) => s"    ${wordHits(col, words)} AS score_$lang" }
+      .mkString(",\n")
+  /** The q27 per-doc quality stats as CTE `name(doc_id, n_chars,
+    * n_tokens, n_stop, n_distinct)`. */
+  private def qualityStats(name: String) =
+    s"""$name AS (
+       |  SELECT doc_id, n_chars,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+       |    ${wordHits("text", stopWords)} AS n_stop,
+       |    len(list_distinct(string_split(text, ' '))) AS n_distinct
+       |  FROM documents)""".stripMargin
+  /** The Gopher repetition ratios over the token list `t` (q147, q153):
+    * distinct share and the most frequent token's share. */
+  private val gopherRatios =
+    """    CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS ttr,
+      |    CAST(list_max(list_transform(list_distinct(t),
+      |      w -> len(list_filter(t, x -> x = w)))) AS DOUBLE) / len(t) AS tfrac""".stripMargin
+
   // Near-dup pair graph → transitive closure → per-component min label,
   // as recursive SQL (DuckDB executes the UNION-dedup recursion to a
   // fixpoint — the oracle twin of the engine's label propagation).
   private val dupClusters =
-    s"""sh AS ($shingles),
-       |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-       |ctok AS ($cappedTok),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-       |  FROM ctok a JOIN ctok b ON a.s = b.s AND a.doc_id < b.doc_id),
+    s"""$shingleTok,
+       |$cappedCand,
        |pairs AS (
        |  SELECT doc_i, doc_j FROM (
        |    SELECT doc_i, doc_j,
@@ -1064,6 +1228,101 @@ object SparkEntry {
        |  SELECT d.doc_id, LEAST(d.doc_id, COALESCE(m.m, d.doc_id)) AS cluster_id
        |  FROM documents d LEFT JOIN minr m ON d.doc_id = m.doc_id)""".stripMargin
 
+  // --- Duplicate 8-gram spans (q133, q134, the curation chain): the
+  // positional 8-grams grouped by their raw text, then the overlap merge
+  // (gap <= 7 fuses). `z` prefixes every CTE name so the curation chain
+  // can compose the chain beside others; each FROM continuation line
+  // sits under its CTE's SELECT.
+  private def spanPad(z: String) = " " * (6 + z.length)
+  /** Through `${z}s(doc_id, pos, span_id)`: each duplicated 8-gram's
+    * start position with its merged span's id. */
+  private def dupSpanIds(z: String) =
+    s"""${z}t AS (
+       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+       |  WHERE len(string_split(text, ' ')) >= 8),
+       |${z}p0 AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM ${z}t),
+       |${z}p AS (SELECT doc_id, pos, array_to_string(t[pos:pos+7], ' ') AS g
+       |${spanPad(z)}FROM ${z}p0),
+       |${z}d AS (SELECT g FROM ${z}p GROUP BY g HAVING COUNT(*) >= 2),
+       |${z}dp AS (SELECT doc_id, pos FROM ${z}p JOIN ${z}d USING (g)),
+       |${z}f AS (SELECT doc_id, pos,
+       |        CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 7
+       |             THEN 0 ELSE 1 END AS new_span
+       |${spanPad(z)}FROM ${z}dp),
+       |${z}s AS (SELECT doc_id, pos,
+       |        SUM(new_span) OVER (PARTITION BY doc_id ORDER BY pos
+       |          ROWS UNBOUNDED PRECEDING) AS span_id
+       |${spanPad(z)}FROM ${z}f)""".stripMargin
+  /** Through `${z}agg(doc_id, n_kept, clean_text)`: each doc's tokens
+    * outside its spans, rebuilt in order (a fully stripped doc has no
+    * row). */
+  private def dupSpanStrip(z: String) =
+    s"""${dupSpanIds(z)},
+       |${z}spans AS (SELECT doc_id, MIN(pos) AS start_pos,
+       |        MAX(pos) + 7 AS end_pos
+       |${spanPad(z)}FROM ${z}s GROUP BY doc_id, span_id),
+       |${z}tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+       |${z}pt AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos FROM ${z}tok),
+       |${z}kept AS (
+       |  SELECT p.doc_id, p.pos, p.t[p.pos] AS tok FROM ${z}pt p
+       |  WHERE NOT EXISTS (SELECT 1 FROM ${z}spans sp
+       |    WHERE sp.doc_id = p.doc_id
+       |      AND p.pos BETWEEN sp.start_pos AND sp.end_pos)),
+       |${z}agg AS (
+       |  SELECT doc_id, COUNT(*) AS n_kept,
+       |    string_agg(tok, ' ' ORDER BY pos) AS clean_text
+       |  FROM ${z}kept GROUP BY doc_id)""".stripMargin
+
+  // --- Token-share mixture (q82, q97, the curation chain): per-language
+  // whitespace-token share, sqrt-tempered weights, and the keep rate
+  // that reaches them; `m` prefixes every CTE name.
+  /** Through `${m}w(w_sum)` beside `${m}s(lang, token_share, w_raw)`. */
+  private def mixtureShares(m: String) =
+    s"""${m}p AS (
+       |  SELECT lang,
+       |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens_ws
+       |  FROM documents GROUP BY 1),
+       |${m}t AS (SELECT CAST(SUM(n_tokens_ws) AS BIGINT) AS total_ws FROM ${m}p),
+       |${m}s AS (
+       |  SELECT lang,
+       |    ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6) AS token_share,
+       |    sqrt(ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6)) AS w_raw
+       |  FROM ${m}p, ${m}t),
+       |${m}w AS (SELECT SUM(w_raw) AS w_sum FROM ${m}s)""".stripMargin
+  /** Each doc's seeded uniform `u` (the Knuth multiplicative hash of
+    * doc_id, as in Analytics.splitAssign) as CTE `name(doc_id, lang, u)`. */
+  private def docUniform(name: String) =
+    s"""$name AS (
+       |  SELECT doc_id, lang,
+       |    CAST(((((doc_id % 1048576) + 1048576) % 1048576) * 2654435761)
+       |      % 1048576 AS DOUBLE) / 1048576.0 AS u
+       |  FROM documents)""".stripMargin
+  /** Through `${m}r(lang, rate)` and the docs' draws `${m}d`: a doc is
+    * kept when u < its language's rate. */
+  private def mixtureRates(m: String) =
+    s"""${mixtureShares(m)},
+       |${m}r AS (
+       |  SELECT lang,
+       |    LEAST(1.0, ROUND(w_raw / w_sum / token_share, 6)) AS rate
+       |  FROM ${m}s, ${m}w),
+       |${docUniform(s"${m}d")}""".stripMargin
+
+  /** `dom(vec_id)`: each vector dominated within its IVF cell by a
+    * lower vec_id at 4dp cosine >= 0.4 (q129, the curation chain). */
+  private val semDominated =
+    s"""dom AS (
+       |  SELECT DISTINCT b.vec_id
+       |  FROM af a JOIN af b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+       |  WHERE ROUND(${ivfDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 4) >= 0.4)""".stripMargin
+  /** The curated set's membership joins over the curation chain (q145,
+    * q146, q153): gated, canonical, semantically kept and sampled. */
+  private val curatedFrom =
+    """FROM keepg k
+      |JOIN clusters c ON c.doc_id = k.doc_id AND c.doc_id = c.cluster_id
+      |JOIN sem ON sem.doc_id = k.doc_id
+      |JOIN smp ON smp.doc_id = k.doc_id
+      |JOIN documents d2 ON d2.doc_id = k.doc_id""".stripMargin
+
   /** The q145 CTE chain — dup-span strip, quality+English gate
     * over the cleaned text, near-dup canonical labels, semantic keep,
     * and the mixture-rate membership — factored so q146 can append its
@@ -1072,43 +1331,11 @@ object SparkEntry {
   private val curationChain =
     s"""$dupClusters,
          |$ivfKmeans,
-         |dom AS (
-         |  SELECT DISTINCT b.vec_id
-         |  FROM af a JOIN af b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-         |  WHERE ROUND(${ivfDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 4) >= 0.4),
+         |$semDominated,
          |sem AS (
          |  SELECT af.vec_id AS doc_id, CAST(af.cluster AS INT) AS cell
          |  FROM af WHERE af.vec_id NOT IN (SELECT vec_id FROM dom)),
-         |zt AS (
-         |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-         |  WHERE len(string_split(text, ' ')) >= 8),
-         |zp0 AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM zt),
-         |zp AS (SELECT doc_id, pos, array_to_string(t[pos:pos+7], ' ') AS g
-         |       FROM zp0),
-         |zd AS (SELECT g FROM zp GROUP BY g HAVING COUNT(*) >= 2),
-         |zdp AS (SELECT doc_id, pos FROM zp JOIN zd USING (g)),
-         |zf AS (SELECT doc_id, pos,
-         |        CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 7
-         |             THEN 0 ELSE 1 END AS new_span
-         |       FROM zdp),
-         |zs AS (SELECT doc_id, pos,
-         |        SUM(new_span) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS UNBOUNDED PRECEDING) AS span_id
-         |       FROM zf),
-         |zspans AS (SELECT doc_id, MIN(pos) AS start_pos,
-         |        MAX(pos) + 7 AS end_pos
-         |       FROM zs GROUP BY doc_id, span_id),
-         |ztok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |zpt AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos FROM ztok),
-         |zkept AS (
-         |  SELECT p.doc_id, p.pos, p.t[p.pos] AS tok FROM zpt p
-         |  WHERE NOT EXISTS (SELECT 1 FROM zspans sp
-         |    WHERE sp.doc_id = p.doc_id
-         |      AND p.pos BETWEEN sp.start_pos AND sp.end_pos)),
-         |zagg AS (
-         |  SELECT doc_id, COUNT(*) AS n_kept,
-         |    string_agg(tok, ' ' ORDER BY pos) AS clean_text
-         |  FROM zkept GROUP BY doc_id),
+         |${dupSpanStrip("z")},
          |cleaned AS (
          |  SELECT d0.doc_id,
          |    CAST(len(string_split(d0.text, ' ')) - COALESCE(za.n_kept, 0)
@@ -1119,54 +1346,70 @@ object SparkEntry {
          |  SELECT doc_id, n_removed, clean_text,
          |    CAST(len(string_split(clean_text, ' ')) AS BIGINT) AS n_tokens_clean,
          |    len(clean_text) AS n_chars,
-         |    len(list_filter(string_split(clean_text, ' '),
-         |      t -> t IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS n_stop,
-         |    len(list_filter(string_split(clean_text, ' '),
-         |      t -> t IN ('the', 'a', 'and', 'of', 'is'))) AS score_en,
-         |    len(list_filter(string_split(clean_text, ' '),
-         |      t -> t IN ('el', 'la', 'los', 'de', 'es'))) AS score_es,
-         |    len(list_filter(string_split(clean_text, ' '),
-         |      t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS score_de,
-         |    len(list_filter(string_split(clean_text, ' '),
-         |      t -> t IN ('le', 'la', 'les', 'de', 'est'))) AS score_fr
+         |    ${wordHits("clean_text", stopWords)} AS n_stop,
+         |${langScores("clean_text", langWords)}
          |  FROM cleaned),
          |keepg AS (
          |  SELECT doc_id, n_tokens_clean, n_removed, clean_text FROM gq
          |  WHERE n_tokens_clean >= 10 AND n_chars >= 50 AND n_stop > 0
          |    AND score_en >= score_es AND score_en >= score_de
          |    AND score_en >= score_fr AND score_en > 0),
-         |mp AS (
-         |  SELECT lang,
-         |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens_ws
-         |  FROM documents GROUP BY 1),
-         |mt AS (SELECT CAST(SUM(n_tokens_ws) AS BIGINT) AS total_ws FROM mp),
-         |ms AS (
-         |  SELECT lang,
-         |    ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6) AS token_share,
-         |    sqrt(ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6)) AS w_raw
-         |  FROM mp, mt),
-         |mw AS (SELECT SUM(w_raw) AS w_sum FROM ms),
-         |mr AS (
-         |  SELECT lang,
-         |    LEAST(1.0, ROUND(w_raw / w_sum / token_share, 6)) AS rate
-         |  FROM ms, mw),
-         |md AS (
-         |  SELECT doc_id, lang,
-         |    CAST(((((doc_id % 1048576) + 1048576) % 1048576) * 2654435761)
-         |      % 1048576 AS DOUBLE) / 1048576.0 AS u
-         |  FROM documents),
+         |${mixtureRates("m")},
          |smp AS (
          |  SELECT doc_id, md.lang FROM md JOIN mr ON md.lang = mr.lang
          |  WHERE u < rate)""".stripMargin
 
+  /** The two decontamination gates over the curation chain (q146,
+    * q172): `ngc` (docs sharing a shingle with the eval docs, doc_id < 5)
+    * and `dvv` (each non-eval vector's best cosine to the eval vectors,
+    * vec_id % 50 = 0, over the chain's `af`). */
+  private val decontamGates =
+    s"""evg AS (SELECT DISTINCT s FROM tok WHERE doc_id < 5),
+       |ngc AS (SELECT DISTINCT tok.doc_id FROM tok JOIN evg USING (s)
+       |        WHERE tok.doc_id >= 5),
+       |dev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
+       |        FROM af WHERE vec_id % 50 = 0),
+       |dp AS (
+       |  SELECT af.vec_id, dev.eid,
+       |    ROUND(${ivfDot("af.embedding", "dev.eemb")}
+       |      / (af.nrm * dev.enrm), 4) AS cos_eval
+       |  FROM af CROSS JOIN dev WHERE af.vec_id % 50 <> 0),
+       |dvv AS (
+       |  SELECT vec_id, cos_eval AS max_eval_cos
+       |  FROM (SELECT vec_id, cos_eval, row_number() OVER (
+       |          PARTITION BY vec_id ORDER BY cos_eval DESC, eid) AS r
+       |        FROM dp)
+       |  WHERE r = 1)""".stripMargin
+
+  /** The per-minute ingest metrics of q140/q168 over `d(source,
+    * n_chars, t, es)`: docs, tokens and quality-gate passes per (minute
+    * of the synthetic event second `es`, source). */
+  private val ingestWindows =
+    s"""m AS (
+      |  SELECT source, es // 60 * 60 AS ws,
+      |    CAST(len(t) AS BIGINT) AS n_tokens,
+      |    (len(t) >= 10 AND n_chars >= 50 AND
+      |     len(list_filter(t, x -> x IN ($stopWords))) > 0)
+      |      AS passes
+      |  FROM d)
+      |SELECT
+      |  strftime(make_timestamp(ws * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start,
+      |  strftime(make_timestamp((ws + 60) * 1000000), '%Y-%m-%d %H:%M:%S') AS window_end,
+      |  source, COUNT(*) AS n_docs,
+      |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+      |  CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,
+      |  ROUND(CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
+      |    AS pass_rate
+      |FROM m GROUP BY 1, 2, 3""".stripMargin
+
   /** q171's replay SQL — also the `card` CTE of q175's. */
   private val cardSql =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT source, lang, n_chars, text,
       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
       |    (len(string_split(text, ' ')) >= 10 AND n_chars >= 50 AND
       |     len(list_filter(string_split(text, ' '),
-      |       x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) > 0)
+      |       x -> x IN ($stopWords))) > 0)
       |      AS passes,
       |    COUNT(*) OVER (PARTITION BY text) AS tc
       |  FROM documents)
@@ -1186,22 +1429,7 @@ object SparkEntry {
   /** q172's replay SQL — also the `fun` CTE of q175's. */
   private val funnelSql =
     s"""WITH RECURSIVE $curationChain,
-         |evg AS (SELECT DISTINCT s FROM tok WHERE doc_id < 5),
-         |ngc AS (SELECT DISTINCT tok.doc_id FROM tok JOIN evg USING (s)
-         |        WHERE tok.doc_id >= 5),
-         |dev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
-         |        FROM af WHERE vec_id % 50 = 0),
-         |dp AS (
-         |  SELECT af.vec_id, dev.eid,
-         |    ROUND(${ivfDot("af.embedding", "dev.eemb")}
-         |      / (af.nrm * dev.enrm), 4) AS cos_eval
-         |  FROM af CROSS JOIN dev WHERE af.vec_id % 50 <> 0),
-         |dvv AS (
-         |  SELECT vec_id, cos_eval AS max_eval_cos
-         |  FROM (SELECT vec_id, cos_eval, row_number() OVER (
-         |          PARTITION BY vec_id ORDER BY cos_eval DESC, eid) AS r
-         |        FROM dp)
-         |  WHERE r = 1),
+         |$decontamGates,
          |fl AS (
          |  SELECT d.doc_id, d.source,
          |    (k.doc_id IS NOT NULL) AS s1,
@@ -1251,36 +1479,50 @@ object SparkEntry {
   // scope, where they would shadow its lateral aliases — and the
   // per-iteration CTEs are MATERIALIZED so DuckDB doesn't inline the
   // alias chains into an exponentially growing expression tree.
+  /** Lateral-alias Cholesky of a symmetric `dim`×`dim` matrix whose
+    * upper-triangle entry (i, j) is the SQL `a(i, j)`: aliases `a_i_j`,
+    * then the lower factor `l_i_j` (shared by the IRLS and LinUCB
+    * replays). */
+  private def cholAliases(dim: Int, a: (Int, Int) => String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until dim; j <- i until dim) out += s"${a(i, j)} AS a_${i}_$j"
+    def at(i: Int, j: Int) = if (i <= j) s"a_${i}_$j" else s"a_${j}_$i"
+    for (j <- 0 until dim) {
+      val diag = (0 until j).map(k => s" - l_${j}_$k * l_${j}_$k").mkString
+      out += s"sqrt(${at(j, j)}$diag) AS l_${j}_$j"
+      for (i <- j + 1 until dim) {
+        val sub = (0 until j).map(k => s" - l_${i}_$k * l_${j}_$k").mkString
+        out += s"(${at(i, j)}$sub) / l_${j}_$j AS l_${i}_$j"
+      }
+    }
+    out.toSeq
+  }
+  /** Aliases solving `A w = rhs` through [[cholAliases]]' factors:
+    * forward `L z = rhs` into `${z}_i`, then back `Lᵀ w = z` into
+    * `${w}_i`; rhs(i) is an SQL expression. */
+  private def cholSolve(dim: Int, z: String, w: String, rhs: Int => String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until dim) {
+      val sub = (0 until i).map(k => s" - l_${i}_$k * ${z}_$k").mkString
+      out += s"(${rhs(i)}$sub) / l_${i}_$i AS ${z}_$i"
+    }
+    for (i <- (dim - 1) to 0 by -1) {
+      val sub = (i + 1 until dim).map(k => s" - l_${k}_$i * ${w}_$k").mkString
+      out += s"(${z}_$i$sub) / l_${i}_$i AS ${w}_$i"
+    }
+    out.toSeq
+  }
   private val lrDim = graft.ml.QualityLR.Dim
   /** SELECT list solving `H δ = g` (H SPD after the ridge) via unrolled
     * Cholesky with lateral aliases, then `cᵢ = βprevᵢ + δᵢ`. `s` is the
     * aggregate CTE alias (h_i_j upper-triangle + g_i), `b` the previous
     * beta CTE alias (c0..c4). */
   private def lrSolve(s: String, b: String): String = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (i <- 0 until lrDim; j <- i until lrDim) {
-      val ridge = if (i == j) " + 0.001" else "" // QualityLR.train ridge
-      out += s"$s.h_${i}_$j$ridge AS a_${i}_$j"
-    }
-    def a(i: Int, j: Int) = if (i <= j) s"a_${i}_$j" else s"a_${j}_$i"
-    for (j <- 0 until lrDim) {
-      val diag = (0 until j).map(k => s" - l_${j}_$k * l_${j}_$k").mkString
-      out += s"sqrt(${a(j, j)}$diag) AS l_${j}_$j"
-      for (i <- j + 1 until lrDim) {
-        val sub = (0 until j).map(k => s" - l_${i}_$k * l_${j}_$k").mkString
-        out += s"(${a(i, j)}$sub) / l_${j}_$j AS l_${i}_$j"
-      }
-    }
-    for (i <- 0 until lrDim) {
-      val sub = (0 until i).map(k => s" - l_${i}_$k * z_$k").mkString
-      out += s"($s.g_$i$sub) / l_${i}_$i AS z_$i"
-    }
-    for (i <- (lrDim - 1) to 0 by -1) {
-      val sub = (i + 1 until lrDim).map(k => s" - l_${k}_$i * d_$k").mkString
-      out += s"(z_$i$sub) / l_${i}_$i AS d_$i"
-    }
-    out ++= (0 until lrDim).map(i => s"$b.c$i + d_$i AS c$i")
-    out.mkString(",\n    ")
+    val h = (i: Int, j: Int) =>
+      if (i == j) s"$s.h_${i}_$j + 0.001" else s"$s.h_${i}_$j" // QualityLR.train ridge
+    (cholAliases(lrDim, h) ++
+      cholSolve(lrDim, "z", "d", i => s"$s.g_$i") ++
+      (0 until lrDim).map(i => s"$b.c$i + d_$i AS c$i")).mkString(",\n    ")
   }
   private def lrDot(b: String) =
     (0 until lrDim).map(i => s"x$i * $b.c$i").mkString(" + ")
@@ -1305,13 +1547,7 @@ object SparkEntry {
   /** Feature frame (the q27 stats mapped through QualityLR.features) +
     * β₀ = 0 + the 4 unrolled Newton iterations. */
   private val lrChain: String =
-    """lrt AS (
-      |  SELECT doc_id, n_chars,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    len(list_filter(string_split(text, ' '),
-      |      t -> t IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS n_stop,
-      |    len(list_distinct(string_split(text, ' '))) AS n_distinct
-      |  FROM documents),
+    s"""${qualityStats("lrt")},
       |lrf AS MATERIALIZED (
       |  SELECT doc_id, 1.0 AS x0,
       |    ln(CAST(n_chars AS DOUBLE) + 1.0) AS x1,
@@ -1322,6 +1558,34 @@ object SparkEntry {
       |  FROM lrt),
       |lrb0 AS (SELECT 0.0 AS c0, 0.0 AS c1, 0.0 AS c2, 0.0 AS c3, 0.0 AS c4)""".stripMargin +
       ",\n" + (1 to 4).map(lrIter).mkString(",\n")
+
+  // --- Logged feedback (q30/q31/q41 via `luf`, q40, q76, q99): one
+  // interaction per lineitem, its arm the part's brand, rewarded by the
+  // fixture's click rule (PolicyEval.interactions).
+  private val rewardRule = "l_quantity * 0.012 + l_discount * 4.0 > 0.5"
+  /** `fb(<keys>arm, y, rnd_score)` and the popularity policy's per-arm
+    * score `pop(arm, pop_score)`; `keys` leads fb's select list. */
+  private def feedback(keys: String) =
+    s"""fb AS (
+       |  SELECT ${keys}p_brand AS arm,
+       |    CASE WHEN $rewardRule THEN 1.0 ELSE 0.0 END AS y,
+       |    CAST((l_orderkey * 131 + l_linenumber) % 10007 AS DOUBLE) AS rnd_score
+       |  FROM lineitem JOIN part ON l_partkey = p_partkey),
+       |pop AS (SELECT arm, ROUND(AVG(y), 6) AS pop_score FROM fb GROUP BY 1)""".stripMargin
+  /** Both policies' per-order rankings (q76, q99): `ranked(policy,
+    * group_id, y, rn)`, ties broken by (arm, line_no, y DESC). */
+  private val rankedPolicies =
+    s"""${feedback("l_orderkey AS group_id, l_linenumber AS line_no, ")},
+       |j AS (SELECT fb.*, pop_score FROM fb JOIN pop USING (arm)),
+       |melted AS (
+       |  SELECT group_id, line_no, arm, y, 'popularity' AS policy, pop_score AS s FROM j
+       |  UNION ALL
+       |  SELECT group_id, line_no, arm, y, 'random', rnd_score FROM j),
+       |ranked AS (
+       |  SELECT policy, group_id, y,
+       |    ROW_NUMBER() OVER (PARTITION BY policy, group_id
+       |      ORDER BY s DESC, arm, line_no, y DESC) AS rn
+       |  FROM melted)""".stripMargin
 
   // --- LinUCB seed replay (q30/q31): since the model layer seeds
   // through LinUCB.seedColumnarWithChol (decimal-exact sufficient statistics —
@@ -1351,7 +1615,7 @@ object SparkEntry {
        |  SELECT p_brand AS arm,
        |    1.0 AS x0, l_quantity / 50.0 AS x1, l_extendedprice / 100000.0 AS x2,
        |    l_discount AS x3, l_tax AS x4,
-       |    CASE WHEN l_quantity * 0.012 + l_discount * 4.0 > 0.5
+       |    CASE WHEN $rewardRule
        |      THEN 1.0 ELSE 0.0 END AS reward
        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
        |lus AS MATERIALIZED (
@@ -1361,38 +1625,59 @@ object SparkEntry {
   }
   /** Lateral-alias Cholesky of A = I + Σxxᵀ over the per-arm stats
     * row: `a_i_j` (ridged with the +I), then `l_i_j`. */
-  private def luCholAliases: Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (i <- 0 until luDim; j <- i until luDim) {
-      val eye = if (i == j) " + 1.0" else "" // A = I + Σxxᵀ
-      out += s"s_${i}_$j$eye AS a_${i}_$j"
-    }
-    def a(i: Int, j: Int) = if (i <= j) s"a_${i}_$j" else s"a_${j}_$i"
-    for (j <- 0 until luDim) {
-      val diag = (0 until j).map(k => s" - l_${j}_$k * l_${j}_$k").mkString
-      out += s"sqrt(${a(j, j)}$diag) AS l_${j}_$j"
-      for (i <- j + 1 until luDim) {
-        val sub = (0 until j).map(k => s" - l_${i}_$k * l_${j}_$k").mkString
-        out += s"(${a(i, j)}$sub) / l_${j}_$j AS l_${i}_$j"
-      }
-    }
-    out.toSeq
-  }
-  /** Aliases solving `A w = rhs` through the factors: forward
-    * `L z = rhs` then back `Lᵀ w = z`; rhs(i) is an SQL expression.
-    * Produces `${tag}z_i` and `${tag}w_i`. */
-  private def luSolveAliases(tag: String, rhs: Int => String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (i <- 0 until luDim) {
-      val sub = (0 until i).map(k => s" - l_${i}_$k * ${tag}z_$k").mkString
-      out += s"(${rhs(i)}$sub) / l_${i}_$i AS ${tag}z_$i"
-    }
-    for (i <- (luDim - 1) to 0 by -1) {
-      val sub = (i + 1 until luDim).map(k => s" - l_${k}_$i * ${tag}w_$k").mkString
-      out += s"(${tag}z_$i$sub) / l_${i}_$i AS ${tag}w_$i"
-    }
-    out.toSeq
-  }
+  private def luCholAliases: Seq[String] =
+    cholAliases(luDim, (i, j) => if (i == j) s"s_${i}_$j + 1.0" else s"s_${i}_$j") // A = I + Σxxᵀ
+  /** [[cholSolve]] into `${tag}z_i` and `${tag}w_i`. */
+  private def luSolveAliases(tag: String, rhs: Int => String): Seq[String] =
+    cholSolve(luDim, s"${tag}z", s"${tag}w", rhs)
+
+  // --- TF-IDF over whitespace tokens (q34, q35/q77, q157, q161): the
+  // smoothed idf ln((N+1)/(df+1)) + 1 times the raw count, 6dp.
+  private val tfidfTerm = "ROUND(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf"
+  /** `scored(doc_id, term, tfidf)` with its token, tf, N and df CTEs. */
+  private val tfidfScored =
+    s"""tokens AS (
+       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2),
+       |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+       |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
+       |scored AS (
+       |  SELECT doc_id, tf.term,
+       |    $tfidfTerm
+       |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)""".stripMargin
+
+  // --- BM25 (q149, q158, q161): k1 = 1.2, b = 0.75, per-term scores
+  // 9dp-decimal before the per-doc sum.
+  /** `sc(doc_id, term_score)` for the query terms that `tfFrom` keeps:
+    * it is the FROM … of the (doc_id, t) postings behind `tf`. */
+  private def bm25(tfFrom: String) =
+    s"""d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+       |dl AS (SELECT doc_id, len(t) AS dl FROM d),
+       |tot AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
+       |               COUNT(*) AS n_docs FROM dl),
+       |tf AS (
+       |  SELECT doc_id, t, COUNT(*) AS tf
+       |  $tfFrom GROUP BY 1, 2),
+       |dft AS (SELECT t, COUNT(*) AS dft FROM tf GROUP BY 1),
+       |sc AS (
+       |  SELECT tf.doc_id,
+       |    CAST(ROUND(
+       |      ln(1.0 + (n_docs - dft + 0.5) / (dft + 0.5)) *
+       |      (tf * (1.2 + 1.0) / (tf + 1.2 * (1.0 - 0.75 +
+       |        0.75 * (CAST(dl AS DOUBLE) / (sum_dl / n_docs))))), 9)
+       |      AS DECIMAL(18, 9)) AS term_score
+       |  FROM tf JOIN dl USING (doc_id) JOIN dft USING (t) CROSS JOIN tot)""".stripMargin
+  /** The fixed 3-term probe of q149/q158. */
+  private val bm25Probe = bm25(
+    "FROM (SELECT doc_id, unnest(t) AS t FROM d)\n  WHERE t IN ('spark', 'merge', 'window')")
+  /** Per-doc scores and their rank (q149, q161); the caller cuts. */
+  private val bm25Ranked =
+    """agg AS (
+      |  SELECT doc_id, COUNT(*) AS n_terms_hit,
+      |    ROUND(CAST(SUM(term_score) AS DOUBLE), 6) AS score
+      |  FROM sc GROUP BY doc_id)
+      |SELECT doc_id, n_terms_hit, score,
+      |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank""".stripMargin
 
   // --- SVD-embedding envelope (q35/q77): the projected VALUES are
   // solver-bound (no SQL engine replays an SVD, and the fitted subspace
@@ -1405,21 +1690,44 @@ object SparkEntry {
   // same oracle text serves both queries: the two pipelines share the
   // TF-IDF input frame, and everything past it is flag-checked.
   private val svdEnvelopeOracle: String =
-    """WITH tokens AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2),
-      |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-      |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
-      |scored AS (
-      |  SELECT doc_id, tf.term,
-      |    ROUND(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
-      |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
+    s"""WITH $tfidfScored
       |SELECT doc_id,
       |  ROUND(CAST(SUM(CAST(ROUND(tfidf * tfidf, 12) AS DECIMAL(38,12))) AS DOUBLE), 6) AS tfidf_norm2,
       |  CAST(10 AS BIGINT) AS n_dims,
       |  TRUE AS finite, TRUE AS contractive,
       |  TRUE AS proj_orthonormal, TRUE AS capture_ok
       |FROM scored GROUP BY doc_id""".stripMargin
+
+  /** Each event's 5 s tumbling-window end beside the running max event
+    * time (stream time) in arrival order (q14, q15's late tag). */
+  private val lateTagged =
+    """  SELECT event_id,
+      |    epoch_us(ts) - (epoch_us(ts) % 5000000) + 5000000 AS window_end_us,
+      |    MAX(epoch_us(ts)) OVER (ORDER BY event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS stream_us
+      |  FROM events)""".stripMargin
+  /** The supplier-stats aggregate per window (q13, q42). */
+  private val supplierTotals =
+    """  event_type AS supplier,
+      |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price,
+      |  COUNT(*) AS cnt""".stripMargin
+  /** The synthesized changelog's keys (Cdc.versionedEnvelope): each
+    * lineitem duplicate's rank `r` within its key and the key's version
+    * hash `h`; `more` appends select items. */
+  private def cdcRanked(more: String) =
+    s"""ranked AS (
+       |  SELECT *, ((l_orderkey * 31 + l_linenumber) % 10) AS h,
+       |    row_number() OVER (PARTITION BY l_orderkey, l_linenumber
+       |      ORDER BY l_partkey, l_quantity, l_extendedprice) AS r$more
+       |  FROM lineitem)""".stripMargin
+  private val cdcKeyCount = ",\n    count(*) OVER (PARTITION BY l_orderkey, l_linenumber) AS cnt"
+  /** The kNN label vote over `nbrs(qid, true_label, label, cos_sim)`
+    * (q117, q127). */
+  private def knnVotes(nbrs: String) =
+    s"""votes AS (
+       |  SELECT qid, true_label, label, COUNT(*) AS votes,
+       |    CAST(SUM(CAST(cos_sim AS DECIMAL(18,4))) AS DOUBLE) AS sim_sum
+       |  FROM $nbrs GROUP BY qid, true_label, label)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
@@ -1473,17 +1781,7 @@ object SparkEntry {
          |  COUNT(DISTINCT o_orderkey) AS n_orders, COUNT(*) AS n_items
          |$dashFrom
          |GROUP BY c_mktsegment ORDER BY revenue DESC, segment""".stripMargin,
-    "q05_revenue_by_nation" ->
-      s"""SELECT r_name AS region, n_name AS nation, ${revSum("revenue")},
-         |  COUNT(*) AS n_items
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN part ON l_partkey = p_partkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'
-         |GROUP BY r_name, n_name""".stripMargin,
+    "q05_revenue_by_nation" -> s"$nationRevenue\nGROUP BY r_name, n_name",
     "q06_topk_products" ->
       s"""SELECT p_partkey AS product_id, p_name AS product_name, ${revSum("revenue")}
          |$dashFrom
@@ -1538,30 +1836,20 @@ object SparkEntry {
          |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
          |GROUP BY n_name""".stripMargin,
     "q13_supplier_stats" ->
-      """SELECT
+      s"""SELECT
         |  strftime(make_timestamp((epoch_us(ts) // 1000000 // 5 * 5) * 1000000),
         |    '%Y-%m-%d %H:%M:%S') AS window_start,
         |  strftime(make_timestamp((epoch_us(ts) // 1000000 // 5 * 5 + 5) * 1000000),
         |    '%Y-%m-%d %H:%M:%S') AS window_end,
-        |  event_type AS supplier,
-        |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price,
-        |  COUNT(*) AS cnt
+        |$supplierTotals
         |FROM events GROUP BY 1, 2, 3""".stripMargin,
     "q14_late_tag" ->
-      """SELECT event_id, window_end_us, stream_us > window_end_us + 5000000 AS late
+      s"""SELECT event_id, window_end_us, stream_us > window_end_us + 5000000 AS late
         |FROM (
-        |  SELECT event_id,
-        |    epoch_us(ts) - (epoch_us(ts) % 5000000) + 5000000 AS window_end_us,
-        |    MAX(epoch_us(ts)) OVER (ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS stream_us
-        |  FROM events)""".stripMargin,
+        |$lateTagged""".stripMargin,
     "q15_branch_counts" ->
-      """WITH tagged AS (
-        |  SELECT event_id,
-        |    epoch_us(ts) - (epoch_us(ts) % 5000000) + 5000000 AS window_end_us,
-        |    MAX(epoch_us(ts)) OVER (ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS stream_us
-        |  FROM events)
+      s"""WITH tagged AS (
+        |$lateTagged
         |SELECT 'valid' AS branch, COUNT(*) AS n FROM tagged WHERE NOT (stream_us > window_end_us + 5000000)
         |UNION ALL
         |SELECT 'late' AS branch, COUNT(*) AS n FROM tagged WHERE stream_us > window_end_us + 5000000""".stripMargin,
@@ -1596,20 +1884,7 @@ object SparkEntry {
       """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS dup_cnt
         |FROM documents GROUP BY text""".stripMargin,
     "q20_jaccard_pairs" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |ctok AS ($cappedTok),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |  FROM ctok a JOIN ctok b ON a.s = b.s AND a.doc_id < b.doc_id),
-         |v AS (
-         |  SELECT doc_i, doc_j,
-         |    len(list_intersect(na.shingles, nb.shingles)) AS c,
-         |    len(na.shingles) AS ni, len(nb.shingles) AS nj
-         |  FROM cand JOIN sh na ON doc_i = na.doc_id JOIN sh nb ON doc_j = nb.doc_id)
-         |SELECT doc_i, doc_j,
-         |  ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) AS jaccard
-         |FROM v WHERE ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) >= 0.5""".stripMargin,
+      s"WITH $shingleTok,\n$cappedCand,\n$shingleVerify\n$jaccardPairs",
     // Full-hash LSH oracle: DuckDB rebuilds the MinHash signatures from
     // md5 alone (PortableHash: x = hex60(md5(s)) mod P, slot i =
     // (a_i·x + b_i) mod P over P = 2^31−1, constants from md5("a"+i) /
@@ -1619,15 +1894,9 @@ object SparkEntry {
     // a collision adds a candidate only on the Spark side and would
     // fail this compare, so the oracle also guards the band hash).
     "q21_minhash_lsh" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |base AS (SELECT doc_id,
-         |  CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) % 2147483647 AS x FROM tok),
-         |slots AS (
-         |  SELECT i,
-         |    1 + CAST('0x' || substr(md5('a' || i), 1, 7) AS BIGINT) % 2147483646 AS a,
-         |    CAST('0x' || substr(md5('b' || i), 1, 7) AS BIGINT) % 2147483647 AS b
-         |  FROM range(0, 64) t(i)),
+      s"""WITH $shingleTok,
+         |${minhashBase("base")},
+         |$minhashSlots,
          |sig AS (
          |  SELECT doc_id, i // 4 AS band, list(minh ORDER BY i) AS bkey
          |  FROM (
@@ -1638,21 +1907,14 @@ object SparkEntry {
          |  SELECT DISTINCT x.doc_id AS doc_i, y.doc_id AS doc_j
          |  FROM sig x JOIN sig y
          |  ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-         |v AS (
-         |  SELECT doc_i, doc_j,
-         |    len(list_intersect(na.shingles, nb.shingles)) AS c,
-         |    len(na.shingles) AS ni, len(nb.shingles) AS nj
-         |  FROM cand JOIN sh na ON doc_i = na.doc_id JOIN sh nb ON doc_j = nb.doc_id)
-         |SELECT doc_i, doc_j,
-         |  ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) AS jaccard
-         |FROM v WHERE ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) >= 0.5""".stripMargin,
+         |$shingleVerify
+         |$jaccardPairs""".stripMargin,
     // Full-hash SimHash oracle: signatures rebuilt from the same md5
     // prefix (bit b = sign of Σ ±1 over hex60(md5(shingle)) bits),
     // 4×15-bit banding, hamming via bit_count — bit-for-bit the engine's
     // SimHash60 path.
     "q22_simhash_pairs" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+      s"""WITH $shingleTok,
          |h AS (SELECT doc_id, CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS hv FROM tok),
          |bits AS (
          |  SELECT doc_id, b,
@@ -1676,16 +1938,7 @@ object SparkEntry {
     // applies the identical band-bucket candidate restriction, so the
     // approximate result sets are exactly comparable.
     "q23_embedding_pairs" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-        |    CAST(list_sum(list_transform(range(0, 48), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, len(embedding) + 1),
-        |        i -> CAST(embedding[i] AS DOUBLE) *
-        |             (CAST(((p*1024 + (i-1)) * 2654435761) % 2000001 - 1000000 AS DOUBLE) / 1000000.0)))
-        |        >= 0 THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM embeddings),
+      s"""WITH ${srpNormed(48, "sig")},
         |bk AS (
         |  SELECT vec_id, b, (sig >> CAST(b*6 AS INT)) & 63 AS bkey
         |  FROM e CROSS JOIN range(0, 8) t(b)),
@@ -1705,36 +1958,20 @@ object SparkEntry {
     // whole-signature bucket equi-join, so the approximate top-k result
     // set is exactly comparable.
     "q25_ann_lsh_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-        |    CAST(list_sum(list_transform(range(0, 8), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, len(embedding) + 1),
-        |        i -> CAST(embedding[i] AS DOUBLE) *
-        |             (CAST(((p*1024 + (i-1)) * 2654435761) % 2000001 - 1000000 AS DOUBLE) / 1000000.0)))
-        |        >= 0 THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
+      s"""WITH ${srpNormed(8, "bucket")},
         |q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm, bucket AS qb
         |      FROM e WHERE vec_id < 10),
         |scored AS (
         |  SELECT qid, e.vec_id,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM e JOIN q ON e.bucket = q.qb AND e.vec_id <> qid)
-        |SELECT qid, vec_id AS nbr_id, rank, cos_sim FROM (
-        |  SELECT qid, vec_id, cos_sim,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 5""".stripMargin,
+        |$cosTop5""".stripMargin,
     // IVF-family oracles over the unrolled k-means (see ivfKmeans):
     // cell assignment, probe selection, cosine scoring, and vote/
     // dominance logic are all engine-exact once the centroid fit is.
     "q44_ann_ivf" ->
       s"""WITH $ivfKmeans,
-         |qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
-         |       FROM af WHERE vec_id < 10),
+         |$ivfQueries,
          |${ivfProbes(4)},
          |scored AS (
          |  SELECT qv.qid, af.vec_id,
@@ -1764,10 +2001,7 @@ object SparkEntry {
          |    SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
          |    FROM scored)
          |  WHERE rank <= 10),
-         |votes AS (
-         |  SELECT qid, true_label, label, COUNT(*) AS votes,
-         |    CAST(SUM(CAST(cos_sim AS DECIMAL(18,4))) AS DOUBLE) AS sim_sum
-         |  FROM nbr GROUP BY qid, true_label, label)
+         |${knnVotes("nbr")}
          |SELECT qid AS vec_id, label AS predicted_label, votes, sim_sum, true_label,
          |  (label = true_label) AS correct
          |FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS vr
@@ -1794,10 +2028,7 @@ object SparkEntry {
          |FROM pl GROUP BY cluster""".stripMargin,
     "q129_semantic_keep" ->
       s"""WITH $ivfKmeans,
-         |dom AS (
-         |  SELECT DISTINCT b.vec_id
-         |  FROM af a JOIN af b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-         |  WHERE ROUND(${ivfDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 4) >= 0.4)
+         |$semDominated
          |SELECT af.vec_id, CAST(af.cluster AS INT) AS cell
          |FROM af WHERE af.vec_id NOT IN (SELECT vec_id FROM dom)""".stripMargin,
     // MMR rerank oracle: the greedy argmax fold is bounded (pool 100,
@@ -1807,18 +2038,12 @@ object SparkEntry {
     // ROUND(λ·rel − (1−λ)·max-cos-to-picked, 9) with the same
     // (score DESC, vec_id ASC) tie-break the Scala fold applies.
     "q120_mmr_rerank" ->
-      """WITH RECURSIVE
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings),
+      s"""WITH RECURSIVE
+        |$normedE,
         |q AS (SELECT embedding AS qemb, nrm AS qnrm FROM e WHERE vec_id = 0),
         |pool AS (
         |  SELECT vec_id, embedding, nrm,
-        |    ROUND(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (nrm * qnrm), 4) AS rel
+        |    ${cosine("embedding", "qemb", "nrm * qnrm")} AS rel
         |  FROM e, q WHERE vec_id <> 0
         |  ORDER BY rel DESC, vec_id LIMIT 100),
         |sel(r, picked) AS (
@@ -1887,23 +2112,13 @@ object SparkEntry {
         |  TRUE AS fnv_respects_dups, TRUE AS xxh_respects_dups
         |FROM documents""".stripMargin,
     "q24_ann_brute_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings),
+      s"""WITH $normedE,
         |q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm FROM e WHERE vec_id < 10),
         |scored AS (
         |  SELECT qid, e.vec_id,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM e JOIN q ON e.vec_id <> qid)
-        |SELECT qid, vec_id AS nbr_id, rank, cos_sim FROM (
-        |  SELECT qid, vec_id, cos_sim,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 5""".stripMargin,
+        |$cosTop5""".stripMargin,
     "q26_token_stats" ->
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens_ws,
@@ -1912,46 +2127,34 @@ object SparkEntry {
         |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct_tokens
         |FROM documents""".stripMargin,
     "q27_quality_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS n_stop,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct
-        |  FROM documents)
+      s"""WITH ${qualityStats("t")}
         |SELECT doc_id, n_chars, n_tokens,
         |  ROUND(CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens, 4) AS mean_token_len,
         |  ROUND(CAST(n_stop AS DOUBLE) / n_tokens, 4) AS stopword_ratio,
         |  ROUND(CAST(n_distinct AS DOUBLE) / n_tokens, 4) AS type_token_ratio,
         |  (n_tokens >= 10 AND n_chars >= 50 AND n_stop > 0) AS passes_quality
         |FROM t""".stripMargin,
-    "q28_lang_id" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('the', 'a', 'and', 'of', 'is'))) AS BIGINT) AS score_en,
-        |    len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('el', 'la', 'los', 'de', 'es'))) AS score_es,
-        |    len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS score_de,
-        |    len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('le', 'la', 'les', 'de', 'est'))) AS score_fr
-        |  FROM documents)
-        |SELECT doc_id, lang AS lang_label,
-        |  CASE WHEN score_en >= score_es AND score_en >= score_de AND score_en >= score_fr
-        |         AND score_en > 0 THEN 'en'
-        |       WHEN score_es >= score_de AND score_es >= score_fr AND score_es > 0 THEN 'es'
-        |       WHEN score_de >= score_fr AND score_de > 0 THEN 'de'
-        |       WHEN score_fr > 0 THEN 'fr'
-        |       ELSE 'unknown' END AS lang_pred,
-        |  score_en,
-        |  (CASE WHEN score_en >= score_es AND score_en >= score_de AND score_en >= score_fr
-        |         AND score_en > 0 THEN 'en'
-        |       WHEN score_es >= score_de AND score_es >= score_fr AND score_es > 0 THEN 'es'
-        |       WHEN score_de >= score_fr AND score_de > 0 THEN 'de'
-        |       WHEN score_fr > 0 THEN 'fr'
-        |       ELSE 'unknown' END) = lang AS agrees
-        |FROM t""".stripMargin,
+    "q28_lang_id" -> {
+      // the first language with the top score wins; no hit at all is 'unknown'
+      val langPred =
+        """CASE WHEN score_en >= score_es AND score_en >= score_de AND score_en >= score_fr
+          |         AND score_en > 0 THEN 'en'
+          |       WHEN score_es >= score_de AND score_es >= score_fr AND score_es > 0 THEN 'es'
+          |       WHEN score_de >= score_fr AND score_de > 0 THEN 'de'
+          |       WHEN score_fr > 0 THEN 'fr'
+          |       ELSE 'unknown' END""".stripMargin
+      val (en, others) = (langWords.head._2, langWords.tail)
+      s"""WITH t AS (
+         |  SELECT doc_id, lang,
+         |    CAST(${wordHits("text", en)} AS BIGINT) AS score_en,
+         |${langScores("text", others)}
+         |  FROM documents)
+         |SELECT doc_id, lang AS lang_label,
+         |  $langPred AS lang_pred,
+         |  score_en,
+         |  ($langPred) = lang AS agrees
+         |FROM t""".stripMargin
+    },
     "q30_linucb_seed" ->
       s"""WITH $luStats
          |SELECT arm AS product_id, n,
@@ -2019,15 +2222,7 @@ object SparkEntry {
         |  CAST(strftime(ts, '%A') NOT IN ('Saturday', 'Sunday') AS BIGINT) AS is_weekday
         |FROM events""".stripMargin,
     "q34_tfidf_topterms" ->
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
-        |scored AS (
-        |  SELECT doc_id, tf.term,
-        |    ROUND(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
-        |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
+      s"""WITH $tfidfScored
         |SELECT doc_id, term, tfidf, rnk FROM (
         |  SELECT doc_id, term, tfidf,
         |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rnk
@@ -2073,31 +2268,27 @@ object SparkEntry {
     "q39_frame_sample" ->
       """SELECT doc_id AS media_id, unnest(range(0, CAST(doc_id % 30 + 1 AS BIGINT), 8)) AS frame_no
         |FROM documents""".stripMargin,
-    "q40_policy_eval" ->
-      """WITH fb AS (
-        |  SELECT p_brand AS arm,
-        |    CASE WHEN l_quantity * 0.012 + l_discount * 4.0 > 0.5 THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST((l_orderkey * 131 + l_linenumber) % 10007 AS DOUBLE) AS rnd_score
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |pop AS (SELECT arm, ROUND(AVG(y), 6) AS pop_score FROM fb GROUP BY 1),
-        |popranked AS (
-        |  SELECT y, MIN(rnk) OVER (PARTITION BY s) AS mn, MAX(rnk) OVER (PARTITION BY s) AS mx
-        |  FROM (SELECT fb.y, pop_score AS s, ROW_NUMBER() OVER (ORDER BY pop_score) AS rnk
-        |        FROM fb JOIN pop USING (arm))),
-        |rndranked AS (
-        |  SELECT y, MIN(rnk) OVER (PARTITION BY s) AS mn, MAX(rnk) OVER (PARTITION BY s) AS mx
-        |  FROM (SELECT y, rnd_score AS s, ROW_NUMBER() OVER (ORDER BY rnd_score) AS rnk FROM fb))
-        |SELECT 'popularity' AS policy,
-        |  ROUND((SUM(CASE WHEN y = 1.0 THEN mn + mx END) / 2.0 - SUM(y) * (SUM(y) + 1.0) / 2.0)
-        |    / (SUM(y) * (COUNT(*) - SUM(y))), 6) AS auc,
-        |  ROUND(SUM(y) / COUNT(*), 6) AS ctr, COUNT(*) AS n
-        |FROM popranked
-        |UNION ALL
-        |SELECT 'random' AS policy,
-        |  ROUND((SUM(CASE WHEN y = 1.0 THEN mn + mx END) / 2.0 - SUM(y) * (SUM(y) + 1.0) / 2.0)
-        |    / (SUM(y) * (COUNT(*) - SUM(y))), 6) AS auc,
-        |  ROUND(SUM(y) / COUNT(*), 6) AS ctr, COUNT(*) AS n
-        |FROM rndranked""".stripMargin,
+    "q40_policy_eval" -> {
+      // tie-averaged ranks (mn + mx) / 2 per score, and their Mann-Whitney AUC
+      val tieRanks = "SELECT y, MIN(rnk) OVER (PARTITION BY s) AS mn, MAX(rnk) OVER (PARTITION BY s) AS mx"
+      def auc(policy: String, ranked: String) =
+        s"""SELECT '$policy' AS policy,
+           |  ROUND((SUM(CASE WHEN y = 1.0 THEN mn + mx END) / 2.0 - SUM(y) * (SUM(y) + 1.0) / 2.0)
+           |    / (SUM(y) * (COUNT(*) - SUM(y))), 6) AS auc,
+           |  ROUND(SUM(y) / COUNT(*), 6) AS ctr, COUNT(*) AS n
+           |FROM $ranked""".stripMargin
+      s"""WITH ${feedback("")},
+         |popranked AS (
+         |  $tieRanks
+         |  FROM (SELECT fb.y, pop_score AS s, ROW_NUMBER() OVER (ORDER BY pop_score) AS rnk
+         |        FROM fb JOIN pop USING (arm))),
+         |rndranked AS (
+         |  $tieRanks
+         |  FROM (SELECT y, rnd_score AS s, ROW_NUMBER() OVER (ORDER BY rnd_score) AS rnk FROM fb))
+         |${auc("popularity", "popranked")}
+         |UNION ALL
+         |${auc("random", "rndranked")}""".stripMargin
+    },
     // q41: policy-benchmark envelope — n/ctr exact for all 5 policies;
     // the two DETERMINISTIC policies (linucb α=0.1, lin_greedy α=0)
     // replay end-to-end: decimal-exact per-arm sufficient statistics
@@ -2152,15 +2343,13 @@ object SparkEntry {
          |SELECT p.policy, CAST(NULL AS DOUBLE) AS auc_det, b.ctr, b.n, TRUE, TRUE
          |FROM (VALUES ('lin_ts'), ('lin_eps'), ('clusters_ts')) p(policy) CROSS JOIN base b""".stripMargin,
     "q42_sliding_window" ->
-      """WITH assigned AS (
+      s"""WITH assigned AS (
         |  SELECT event_type, value,
         |    unnest([epoch_us(ts) // 1000000 // 300 * 300,
         |            epoch_us(ts) // 1000000 // 300 * 300 - 300]) AS win_start
         |  FROM events)
         |SELECT strftime(make_timestamp(win_start * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type AS supplier,
-        |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price,
-        |  COUNT(*) AS cnt
+        |$supplierTotals
         |FROM assigned GROUP BY 1, 2""".stripMargin,
     "q43_resize_meta" ->
       """SELECT doc_id AS media_id,
@@ -2177,17 +2366,7 @@ object SparkEntry {
         |         THEN 360
         |       ELSE (doc_id % 8 * 90 + 180) * 640 // (doc_id % 8 * 160 + 320) END AS out_h
         |FROM documents""".stripMargin,
-    "q45_revenue_rollup" ->
-      s"""SELECT r_name AS region, n_name AS nation, ${revSum("revenue")},
-         |  COUNT(*) AS n_items
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN part ON l_partkey = p_partkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'
-         |GROUP BY ROLLUP (r_name, n_name)""".stripMargin,
+    "q45_revenue_rollup" -> s"$nationRevenue\nGROUP BY ROLLUP (r_name, n_name)",
     // Per-op summary of the synthesized multi-version changelog — the
     // same closed form as q67/q101/q123 (Cdc.versionedEnvelope rules):
     // every key emits 'c'; h >= 4 adds 'u' (lsn+1); h >= 8 adds a
@@ -2376,19 +2555,11 @@ object SparkEntry {
          |q AS (
          |  SELECT doc_id, n_chars,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         |    len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS n_stop
+         |    ${wordHits("text", stopWords)} AS n_stop
          |  FROM documents),
          |lt AS (
          |  SELECT doc_id,
-         |    len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('the', 'a', 'and', 'of', 'is'))) AS score_en,
-         |    len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('el', 'la', 'los', 'de', 'es'))) AS score_es,
-         |    len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS score_de,
-         |    len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('le', 'la', 'les', 'de', 'est'))) AS score_fr
+         |${langScores("text", langWords)}
          |  FROM documents),
          |l AS (
          |  SELECT doc_id,
@@ -2410,11 +2581,7 @@ object SparkEntry {
         |    (h, c) -> (h * 31 + c) % 1000000007) AS fp
         |FROM documents""".stripMargin,
     "q64_normalized_embedding" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings)
+      s"""WITH $normedE
         |SELECT vec_id,
         |  ROUND(CAST(embedding[1] AS DOUBLE) / nrm, 6) AS n0,
         |  ROUND(CAST(embedding[2] AS DOUBLE) / nrm, 6) AS n1,
@@ -2451,12 +2618,7 @@ object SparkEntry {
     // Closed-form expected final state of the synthesized multi-version
     // changelog (see Cdc.versionedEnvelope scaladoc for the rules).
     "q67_cdc_materialize" ->
-      """WITH ranked AS (
-        |  SELECT *, ((l_orderkey * 31 + l_linenumber) % 10) AS h,
-        |    row_number() OVER (PARTITION BY l_orderkey, l_linenumber
-        |      ORDER BY l_partkey, l_quantity, l_extendedprice) AS r,
-        |    count(*) OVER (PARTITION BY l_orderkey, l_linenumber) AS cnt
-        |  FROM lineitem)
+      s"""WITH ${cdcRanked(cdcKeyCount)}
         |SELECT l_orderkey AS order_id, l_linenumber AS line_no,
         |  l_partkey AS part_id,
         |  l_quantity + CASE WHEN h >= 4 THEN 1 ELSE 0 END AS quantity,
@@ -2539,22 +2701,7 @@ object SparkEntry {
          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
          |GROUP BY s_name""".stripMargin,
     "q76_policy_ranking" ->
-      """WITH fb AS (
-        |  SELECT l_orderkey AS group_id, l_linenumber AS line_no, p_brand AS arm,
-        |    CASE WHEN l_quantity * 0.012 + l_discount * 4.0 > 0.5 THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST((l_orderkey * 131 + l_linenumber) % 10007 AS DOUBLE) AS rnd_score
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |pop AS (SELECT arm, ROUND(AVG(y), 6) AS pop_score FROM fb GROUP BY 1),
-        |j AS (SELECT fb.*, pop_score FROM fb JOIN pop USING (arm)),
-        |melted AS (
-        |  SELECT group_id, line_no, arm, y, 'popularity' AS policy, pop_score AS s FROM j
-        |  UNION ALL
-        |  SELECT group_id, line_no, arm, y, 'random', rnd_score FROM j),
-        |ranked AS (
-        |  SELECT policy, group_id, y,
-        |    ROW_NUMBER() OVER (PARTITION BY policy, group_id
-        |      ORDER BY s DESC, arm, line_no, y DESC) AS rn
-        |  FROM melted),
+      s"""WITH $rankedPolicies,
         |pg AS (
         |  SELECT policy, group_id,
         |    SUM(CASE WHEN rn <= 3 THEN y ELSE 0 END) AS hits, SUM(y) AS tot
@@ -2606,28 +2753,14 @@ object SparkEntry {
         |  ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6) AS token_share
         |FROM p, t""".stripMargin,
     "q81_split_assign" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang,
-        |    CAST(((((doc_id % 1048576) + 1048576) % 1048576) * 2654435761)
-        |      % 1048576 AS DOUBLE) / 1048576.0 AS u
-        |  FROM documents)
+      s"""WITH ${docUniform("u")}
         |SELECT doc_id, lang, ROUND(u, 6) AS u,
         |  CASE WHEN u < 0.8 THEN 'train'
         |       WHEN u < 0.9 THEN 'val'
         |       ELSE 'test' END AS split
         |FROM u""".stripMargin,
     "q82_mixture_weights" ->
-      """WITH p AS (
-        |  SELECT lang,
-        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens_ws
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_tokens_ws) AS BIGINT) AS total_ws FROM p),
-        |s AS (
-        |  SELECT lang,
-        |    ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6) AS token_share,
-        |    sqrt(ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6)) AS w_raw
-        |  FROM p, t),
-        |w AS (SELECT SUM(w_raw) AS w_sum FROM s)
+      s"""WITH ${mixtureShares("")}
         |SELECT lang, token_share,
         |  ROUND(w_raw / w_sum, 6) AS weight,
         |  ROUND(w_raw / w_sum / token_share, 6) AS oversample
@@ -2636,12 +2769,8 @@ object SparkEntry {
     // the full shingle sets via list_intersect — mirrors the engine's
     // capped containment join; reported containments stay exact.
     "q83_containment" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |ctok AS ($cappedTok),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |  FROM ctok a JOIN ctok b ON a.s = b.s AND a.doc_id < b.doc_id),
+      s"""WITH $shingleTok,
+         |$cappedCand,
          |inter AS (
          |  SELECT doc_i, doc_j,
          |    len(list_intersect(na.shingles, nb.shingles)) AS c,
@@ -2798,26 +2927,7 @@ object SparkEntry {
         |  ROUND(MAX(err), 6) AS max_abs_err
         |FROM q GROUP BY vec_id""".stripMargin,
     "q97_mixture_sample" ->
-      """WITH p AS (
-        |  SELECT lang,
-        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens_ws
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_tokens_ws) AS BIGINT) AS total_ws FROM p),
-        |s AS (
-        |  SELECT lang,
-        |    ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6) AS token_share,
-        |    sqrt(ROUND(CAST(n_tokens_ws AS DOUBLE) / total_ws, 6)) AS w_raw
-        |  FROM p, t),
-        |w AS (SELECT SUM(w_raw) AS w_sum FROM s),
-        |r AS (
-        |  SELECT lang,
-        |    LEAST(1.0, ROUND(w_raw / w_sum / token_share, 6)) AS rate
-        |  FROM s, w),
-        |d AS (
-        |  SELECT doc_id, lang,
-        |    CAST(((((doc_id % 1048576) + 1048576) % 1048576) * 2654435761)
-        |      % 1048576 AS DOUBLE) / 1048576.0 AS u
-        |  FROM documents)
+      s"""WITH ${mixtureRates("")}
         |SELECT doc_id, d.lang, ROUND(u, 6) AS u, rate
         |FROM d JOIN r ON d.lang = r.lang
         |WHERE u < rate""".stripMargin,
@@ -2832,22 +2942,7 @@ object SparkEntry {
         |FROM tok JOIN tf USING (t), n
         |GROUP BY doc_id""".stripMargin,
     "q99_policy_ndcg" ->
-      """WITH fb AS (
-        |  SELECT l_orderkey AS group_id, l_linenumber AS line_no, p_brand AS arm,
-        |    CASE WHEN l_quantity * 0.012 + l_discount * 4.0 > 0.5 THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST((l_orderkey * 131 + l_linenumber) % 10007 AS DOUBLE) AS rnd_score
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |pop AS (SELECT arm, ROUND(AVG(y), 6) AS pop_score FROM fb GROUP BY 1),
-        |j AS (SELECT fb.*, pop_score FROM fb JOIN pop USING (arm)),
-        |melted AS (
-        |  SELECT group_id, line_no, arm, y, 'popularity' AS policy, pop_score AS s FROM j
-        |  UNION ALL
-        |  SELECT group_id, line_no, arm, y, 'random', rnd_score FROM j),
-        |ranked AS (
-        |  SELECT policy, group_id, y,
-        |    ROW_NUMBER() OVER (PARTITION BY policy, group_id
-        |      ORDER BY s DESC, arm, line_no, y DESC) AS rn
-        |  FROM melted),
+      s"""WITH $rankedPolicies,
         |pg AS (
         |  SELECT policy, group_id,
         |    SUM(CASE WHEN rn <= 3
@@ -2868,11 +2963,7 @@ object SparkEntry {
         |  COUNT(*) AS n_groups_judged
         |FROM ng GROUP BY policy""".stripMargin,
     "q101_scd2_history" ->
-      """WITH ranked AS (
-        |  SELECT *, ((l_orderkey * 31 + l_linenumber) % 10) AS h,
-        |    row_number() OVER (PARTITION BY l_orderkey, l_linenumber
-        |      ORDER BY l_partkey, l_quantity, l_extendedprice) AS r
-        |  FROM lineitem),
+      s"""WITH ${cdcRanked("")},
         |base AS (
         |  SELECT *, (l_orderkey * 10 + l_linenumber) * 1000 + (r - 1) * 4 AS key_lsn
         |  FROM ranked),
@@ -3001,8 +3092,7 @@ object SparkEntry {
          |  CAST(y AS BOOLEAN) AS heuristic_gate
          |FROM lrf CROSS JOIN lrb4 b""".stripMargin,
     "q112_incremental_dedup" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+      s"""WITH $shingleTok,
          |ctok AS ($cappedTok),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_e, b.doc_id AS doc_i
@@ -3095,22 +3185,7 @@ object SparkEntry {
     // same overlap-merge (gap ≤ 7 fuses; LAG NULL on the first row
     // falls to the ELSE branch exactly like Spark's when/otherwise).
     "q133_dup_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 8),
-        |p0 AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM t),
-        |p AS (SELECT doc_id, pos, array_to_string(t[pos:pos+7], ' ') AS g
-        |      FROM p0),
-        |d AS (SELECT g FROM p GROUP BY g HAVING COUNT(*) >= 2),
-        |dp AS (SELECT doc_id, pos FROM p JOIN d USING (g)),
-        |f AS (SELECT doc_id, pos,
-        |        CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 7
-        |             THEN 0 ELSE 1 END AS new_span
-        |      FROM dp),
-        |s AS (SELECT doc_id, pos,
-        |        SUM(new_span) OVER (PARTITION BY doc_id ORDER BY pos
-        |          ROWS UNBOUNDED PRECEDING) AS span_id
-        |      FROM f),
+      s"""WITH ${dupSpanIds("")},
         |i AS (SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS start_pos,
         |        CAST(MAX(pos) + 7 AS BIGINT) AS end_pos
         |      FROM s GROUP BY doc_id, span_id)
@@ -3124,36 +3199,7 @@ object SparkEntry {
     // token-for-token; fully-stripped docs survive via the left join
     // with an empty-string rebuild on both sides.
     "q134_dup_span_strip" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 8),
-        |p0 AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS pos FROM t),
-        |p AS (SELECT doc_id, pos, array_to_string(t[pos:pos+7], ' ') AS g
-        |      FROM p0),
-        |d AS (SELECT g FROM p GROUP BY g HAVING COUNT(*) >= 2),
-        |dp AS (SELECT doc_id, pos FROM p JOIN d USING (g)),
-        |f AS (SELECT doc_id, pos,
-        |        CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 7
-        |             THEN 0 ELSE 1 END AS new_span
-        |      FROM dp),
-        |s AS (SELECT doc_id, pos,
-        |        SUM(new_span) OVER (PARTITION BY doc_id ORDER BY pos
-        |          ROWS UNBOUNDED PRECEDING) AS span_id
-        |      FROM f),
-        |spans AS (SELECT doc_id, MIN(pos) AS start_pos,
-        |        MAX(pos) + 7 AS end_pos
-        |      FROM s GROUP BY doc_id, span_id),
-        |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pt AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos FROM tok),
-        |kept AS (
-        |  SELECT p.doc_id, p.pos, p.t[p.pos] AS tok FROM pt p
-        |  WHERE NOT EXISTS (SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = p.doc_id
-        |      AND p.pos BETWEEN sp.start_pos AND sp.end_pos)),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n_kept,
-        |    string_agg(tok, ' ' ORDER BY pos) AS clean_text
-        |  FROM kept GROUP BY doc_id)
+      s"""WITH ${dupSpanStrip("")}
         |SELECT d.doc_id,
         |  CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
         |  CAST(len(string_split(d.text, ' ')) - COALESCE(a.n_kept, 0) AS BIGINT)
@@ -3171,17 +3217,14 @@ object SparkEntry {
          |pqk AS (SELECT qid, vec_id AS nbr_id FROM pqtop WHERE rank <= 5),
          |en AS (
          |  SELECT vec_id, embedding,
-         |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
+         |    $embNorm
          |      AS nrm
          |  FROM e),
          |bq AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
          |       FROM en WHERE vec_id < 10),
          |bsc AS (
          |  SELECT qid, en.vec_id,
-         |    ROUND(list_sum(list_transform(range(1, len(en.embedding) + 1),
-         |      i -> CAST(en.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-         |      / (en.nrm * qnrm), 4) AS cos_sim
+         |    ${cosine("en.embedding", "qemb", "en.nrm * qnrm")} AS cos_sim
          |  FROM en JOIN bq ON en.vec_id <> qid),
          |bruk AS (
          |  SELECT qid, vec_id AS nbr_id FROM (
@@ -3199,33 +3242,7 @@ object SparkEntry {
          |SELECT hits.qid,
          |  ROUND(CAST(n_hit AS DOUBLE) / brute_k, 4) AS recall
          |FROM hits JOIN bknt ON hits.qid = bknt.qid""".stripMargin,
-    "q137_ann_ivf_pq" ->
-      s"""WITH $ivfKmeans,
-         |$pqFit,
-         |qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
-         |       FROM af WHERE vec_id < 10),
-         |${ivfProbes(4)},
-         |$pqLut,
-         |cand AS (
-         |  SELECT probes.qid, af.vec_id
-         |  FROM af JOIN probes ON af.cluster = probes.probe
-         |  WHERE af.vec_id <> probes.qid),
-         |terms AS (
-         |  SELECT cand.qid, cand.vec_id, paf.s, lut.t
-         |  FROM cand
-         |  JOIN paf ON paf.vec_id = cand.vec_id
-         |  JOIN lut ON lut.qid = cand.qid
-         |    AND lut.s = paf.s AND lut.code = paf.code),
-         |sc AS (
-         |  SELECT qid, vec_id,
-         |    ROUND(list_sum(list(t ORDER BY s)), 4) AS adc_ip
-         |  FROM terms GROUP BY qid, vec_id)
-         |SELECT qid, vec_id AS nbr_id, rank, adc_ip FROM (
-         |  SELECT qid, vec_id, adc_ip,
-         |    CAST(row_number() OVER (PARTITION BY qid
-         |      ORDER BY adc_ip DESC, vec_id) AS BIGINT) AS rank
-         |  FROM sc)
-         |WHERE rank <= 5""".stripMargin,
+    "q137_ann_ivf_pq" -> s"WITH ${ivfPqChain(4)}\n$adcTop5",
     "q138_dsir_weights" ->
       """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS t
         |           FROM documents),
@@ -3266,102 +3283,26 @@ object SparkEntry {
          |  FROM lmdoc JOIN af ON lmdoc.doc_id = af.vec_id)
          |WHERE cell_rank <= 8""".stripMargin,
     "q140_ingest_monitor" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT source, n_chars, string_split(text, ' ') AS t,
         |    1704067200 + doc_id AS es
         |  FROM documents),
-        |m AS (
-        |  SELECT source, es // 60 * 60 AS ws,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    (len(t) >= 10 AND n_chars >= 50 AND
-        |     len(list_filter(t, x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) > 0)
-        |      AS passes
-        |  FROM d)
-        |SELECT
-        |  strftime(make_timestamp(ws * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  strftime(make_timestamp((ws + 60) * 1000000), '%Y-%m-%d %H:%M:%S') AS window_end,
-        |  source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,
-        |  ROUND(CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
-        |    AS pass_rate
-        |FROM m GROUP BY 1, 2, 3""".stripMargin,
+        |$ingestWindows""".stripMargin,
     // q168: q140's chain with the first-arrival dedup stage in front —
     // first arrival per text ≡ per sha2(text) (the synthetic ts is
     // strictly monotone in doc_id, so min-ts = min-doc_id)
     "q168_curated_ingest" ->
-      """WITH d0 AS (
+      s"""WITH d0 AS (
         |  SELECT source, n_chars, text, 1704067200 + doc_id AS es,
         |    row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
         |  FROM documents),
         |d AS (
         |  SELECT source, n_chars, string_split(text, ' ') AS t, es
         |  FROM d0 WHERE rn = 1),
-        |m AS (
-        |  SELECT source, es // 60 * 60 AS ws,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    (len(t) >= 10 AND n_chars >= 50 AND
-        |     len(list_filter(t, x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) > 0)
-        |      AS passes
-        |  FROM d)
-        |SELECT
-        |  strftime(make_timestamp(ws * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  strftime(make_timestamp((ws + 60) * 1000000), '%Y-%m-%d %H:%M:%S') AS window_end,
-        |  source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,
-        |  ROUND(CAST(SUM(CASE WHEN passes THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4)
-        |    AS pass_rate
-        |FROM m GROUP BY 1, 2, 3""".stripMargin,
-    "q141_ann_ivfadc_residual" ->
-      s"""WITH $ivfKmeans,
-         |$pqResidualSv,
-         |$pqFitCore,
-         |qv AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm
-         |       FROM af WHERE vec_id < 10),
-         |${ivfProbes(4)},
-         |$pqLut,
-         |celld AS (
-         |  SELECT probes.qid, probes.probe,
-         |    ${ivfDot("qv.qemb", "c2.c")} AS celldot
-         |  FROM probes
-         |  JOIN qv USING (qid)
-         |  JOIN c2 ON c2.cluster = probes.probe),
-         |cand AS (
-         |  SELECT celld.qid, af.vec_id, celld.celldot
-         |  FROM af JOIN celld ON af.cluster = celld.probe
-         |  WHERE af.vec_id <> celld.qid),
-         |terms AS (
-         |  SELECT cand.qid, cand.vec_id, cand.celldot, paf.s, lut.t
-         |  FROM cand
-         |  JOIN paf ON paf.vec_id = cand.vec_id
-         |  JOIN lut ON lut.qid = cand.qid
-         |    AND lut.s = paf.s AND lut.code = paf.code),
-         |sc AS (
-         |  SELECT qid, vec_id,
-         |    ROUND(celldot + list_sum(list(t ORDER BY s)), 4) AS adc_ip
-         |  FROM terms GROUP BY qid, vec_id, celldot)
-         |SELECT qid, vec_id AS nbr_id, rank, adc_ip FROM (
-         |  SELECT qid, vec_id, adc_ip,
-         |    CAST(row_number() OVER (PARTITION BY qid
-         |      ORDER BY adc_ip DESC, vec_id) AS BIGINT) AS rank
-         |  FROM sc)
-         |WHERE rank <= 5""".stripMargin,
+        |$ingestWindows""".stripMargin,
+    "q141_ann_ivfadc_residual" -> s"WITH ${residualChain(4)}\n$adcTop5",
     "q142_embedding_decontam" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
-        |      AS nrm
-        |  FROM embeddings),
-        |ev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
-        |       FROM e WHERE vec_id % 50 = 0),
-        |p AS (
-        |  SELECT e.vec_id, ev.eid,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(ev.eemb[i] AS DOUBLE)))
-        |      / (e.nrm * ev.enrm), 4) AS cos_eval
-        |  FROM e CROSS JOIN ev WHERE e.vec_id % 50 <> 0)
+      s"""WITH ${evalCosines("ev")}
         |SELECT vec_id, eid AS nearest_eval_id, cos_eval AS max_eval_cos,
         |  cos_eval >= 0.6 AS contaminated
         |FROM (
@@ -3382,15 +3323,7 @@ object SparkEntry {
            |SELECT 'residual' AS variant, $np AS n_probe, qid, recall FROM (
            |${residualRecallSql(np)})""".stripMargin
       }.mkString("\nUNION ALL\n"),
-    "q169_ann_sq8" ->
-      s"""WITH $sqChain
-         |SELECT qid, vec_id AS nbr_id, CAST(rank AS BIGINT) AS rank, sq_ip
-         |FROM (
-         |  SELECT qid, vec_id, sq_ip,
-         |    row_number() OVER (PARTITION BY qid
-         |      ORDER BY sq_ip DESC, vec_id) AS rank
-         |  FROM sc)
-         |WHERE rank <= 5""".stripMargin,
+    "q169_ann_sq8" -> s"WITH $sqChain\n$sqTop5",
     "q171_dataset_card" -> cardSql,
     // q175: the one-frame datasheet — card × funnel joined on the
     // sources-bounded key; both sides the q171/q172 replay SQL verbatim
@@ -3404,38 +3337,16 @@ object SparkEntry {
          |FROM card JOIN fun ON fun.source = card.source""".stripMargin,
     "q170_sq8_recall" ->
       s"""WITH $sqChain,
-         |annk AS (
-         |  SELECT qid, vec_id AS nbr_id FROM (
-         |    SELECT qid, vec_id,
-         |      row_number() OVER (PARTITION BY qid
-         |        ORDER BY sq_ip DESC, vec_id) AS rank
-         |    FROM sc)
-         |  WHERE rank <= 5),
+         |${annk("sq_ip")},
          |af AS (SELECT vec_id, embedding, $ivfNrm AS nrm FROM e),
          |$recallTail""".stripMargin,
     // q173: the SQ8 chain restricted to the IVF-probed cells — the
     // k-means fragment supplies e/af/c2, the probe CTE replays the
     // partial-selection order, and the score is q169's fold verbatim
-    "q173_ann_ivf_sq8" ->
-      s"""WITH $ivfSqChain
-         |SELECT qid, vec_id AS nbr_id, CAST(rank AS BIGINT) AS rank, sq_ip
-         |FROM (
-         |  SELECT qid, vec_id, sq_ip,
-         |    row_number() OVER (PARTITION BY qid
-         |      ORDER BY sq_ip DESC, vec_id) AS rank
-         |  FROM sc)
-         |WHERE rank <= 5""".stripMargin,
+    "q173_ann_ivf_sq8" -> s"WITH $ivfSqChain\n$sqTop5",
     // q174: the q173 chain + the shared brute-force recall tail
     "q174_ivf_sq8_recall" ->
-      s"""WITH $ivfSqChain,
-         |annk AS (
-         |  SELECT qid, vec_id AS nbr_id FROM (
-         |    SELECT qid, vec_id,
-         |      row_number() OVER (PARTITION BY qid
-         |        ORDER BY sq_ip DESC, vec_id) AS rank
-         |    FROM sc)
-         |  WHERE rank <= 5),
-         |$recallTail""".stripMargin,
+      s"WITH $ivfSqChain,\n${recallOf("sq_ip")}",
     // q145: the component oracle chains composed — dup-span strip
     // (q134, z-prefixed to avoid CTE collisions), quality+English gate
     // over the CLEANED text (q27/q28 predicates), near-dup canonical
@@ -3446,11 +3357,7 @@ object SparkEntry {
       s"""WITH RECURSIVE $curationChain
          |SELECT k.doc_id, smp.lang, d2.source, sem.cell,
          |  k.n_tokens_clean, k.n_removed, k.clean_text
-         |FROM keepg k
-         |JOIN clusters c ON c.doc_id = k.doc_id AND c.doc_id = c.cluster_id
-         |JOIN sem ON sem.doc_id = k.doc_id
-         |JOIN smp ON smp.doc_id = k.doc_id
-         |JOIN documents d2 ON d2.doc_id = k.doc_id""".stripMargin,
+         |$curatedFrom""".stripMargin,
     // q146: the q145 chain + the two decontamination gates. The
     // lexical gate reuses the chain's own shingle CTEs (`sh`/`tok` from
     // the dup-cluster fragment — q79's arithmetic verbatim); the
@@ -3460,29 +3367,10 @@ object SparkEntry {
     // the corpus-side verdict table) leave the pool.
     "q146_curation_decontam" ->
       s"""WITH RECURSIVE $curationChain,
-         |evg AS (SELECT DISTINCT s FROM tok WHERE doc_id < 5),
-         |ngc AS (SELECT DISTINCT tok.doc_id FROM tok JOIN evg USING (s)
-         |        WHERE tok.doc_id >= 5),
-         |dev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
-         |        FROM af WHERE vec_id % 50 = 0),
-         |dp AS (
-         |  SELECT af.vec_id, dev.eid,
-         |    ROUND(${ivfDot("af.embedding", "dev.eemb")}
-         |      / (af.nrm * dev.enrm), 4) AS cos_eval
-         |  FROM af CROSS JOIN dev WHERE af.vec_id % 50 <> 0),
-         |dvv AS (
-         |  SELECT vec_id, cos_eval AS max_eval_cos
-         |  FROM (SELECT vec_id, cos_eval, row_number() OVER (
-         |          PARTITION BY vec_id ORDER BY cos_eval DESC, eid) AS r
-         |        FROM dp)
-         |  WHERE r = 1)
+         |$decontamGates
          |SELECT k.doc_id, smp.lang, d2.source, sem.cell,
          |  k.n_tokens_clean, k.n_removed, dvv.max_eval_cos, k.clean_text
-         |FROM keepg k
-         |JOIN clusters c ON c.doc_id = k.doc_id AND c.doc_id = c.cluster_id
-         |JOIN sem ON sem.doc_id = k.doc_id
-         |JOIN smp ON smp.doc_id = k.doc_id
-         |JOIN documents d2 ON d2.doc_id = k.doc_id
+         |$curatedFrom
          |JOIN dvv ON dvv.vec_id = k.doc_id
          |WHERE k.doc_id >= 5 AND dvv.max_eval_cos < 0.6
          |  AND k.doc_id NOT IN (SELECT doc_id FROM ngc)""".stripMargin,
@@ -3493,17 +3381,15 @@ object SparkEntry {
     // q147: every metric is a per-document list fold; rule comparisons
     // run on the unrounded doubles exactly as the engine's
     "q147_gopher_rules" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, n_chars, string_split(text, ' ') AS t FROM documents),
         |m AS (
         |  SELECT doc_id,
         |    len(t) AS n_words,
         |    CAST(n_chars - (len(t) - 1) AS DOUBLE) / len(t) AS mw,
         |    len(list_filter(t,
-        |      x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS n_stop,
-        |    CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS ttr,
-        |    CAST(list_max(list_transform(list_distinct(t),
-        |      w -> len(list_filter(t, x -> x = w)))) AS DOUBLE) / len(t) AS tfrac
+        |      x -> x IN ($stopWords))) AS n_stop,
+        |$gopherRatios
         |  FROM t)
         |SELECT doc_id, n_words, ROUND(mw, 6) AS mean_wlen, n_stop,
         |  ROUND(ttr, 6) AS ttr, ROUND(tfrac, 6) AS top_frac,
@@ -3555,50 +3441,14 @@ object SparkEntry {
     // per-term scores 9dp-decimal before the per-doc sum, full ranking
     // then the same 10-row cut the engine's take-ordered applies
     "q149_bm25_topk" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |dl AS (SELECT doc_id, len(t) AS dl FROM d),
-        |tot AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-        |               COUNT(*) AS n_docs FROM dl),
-        |tf AS (
-        |  SELECT doc_id, t, COUNT(*) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS t FROM d)
-        |  WHERE t IN ('spark', 'merge', 'window') GROUP BY 1, 2),
-        |dft AS (SELECT t, COUNT(*) AS dft FROM tf GROUP BY 1),
-        |sc AS (
-        |  SELECT tf.doc_id,
-        |    CAST(ROUND(
-        |      ln(1.0 + (n_docs - dft + 0.5) / (dft + 0.5)) *
-        |      (tf * (1.2 + 1.0) / (tf + 1.2 * (1.0 - 0.75 +
-        |        0.75 * (CAST(dl AS DOUBLE) / (sum_dl / n_docs))))), 9)
-        |      AS DECIMAL(18, 9)) AS term_score
-        |  FROM tf JOIN dl USING (doc_id) JOIN dft USING (t) CROSS JOIN tot),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n_terms_hit,
-        |    ROUND(CAST(SUM(term_score) AS DOUBLE), 6) AS score
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, score,
-        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-        |FROM agg ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
+      s"WITH $bm25Probe,\n$bm25Ranked\nFROM agg ORDER BY score DESC, doc_id LIMIT 10",
     // q150: the shared LM chain scores every doc, then score-VALUE
     // thresholds split each source into thirds — cum runs over the
     // distinct-score frequency frame, ties share a bucket by
     // construction
     "q150_ppl_buckets" ->
       s"""WITH $lmScoreChain,
-         |ds AS (
-         |  SELECT lmdoc.doc_id, documents.source, lmdoc.lm_score
-         |  FROM lmdoc JOIN documents USING (doc_id)),
-         |f AS (SELECT source, lm_score, COUNT(*) AS c FROM ds GROUP BY 1, 2),
-         |b AS (
-         |  SELECT source, lm_score,
-         |    CASE WHEN cum <= (n_src + 2) // 3 THEN 'head'
-         |         WHEN cum <= (2 * n_src + 2) // 3 THEN 'middle'
-         |         ELSE 'tail' END AS ppl_bucket
-         |  FROM (SELECT source, lm_score,
-         |          SUM(c) OVER (PARTITION BY source
-         |            ORDER BY lm_score DESC) AS cum,
-         |          SUM(c) OVER (PARTITION BY source) AS n_src
-         |        FROM f))
+         |${pplBuckets("")}
          |SELECT ds.doc_id, ds.source, ds.lm_score, b.ppl_bucket,
          |  b.ppl_bucket <> 'tail' AS keep
          |FROM ds JOIN b
@@ -3626,20 +3476,7 @@ object SparkEntry {
     "q153_curation_v2" ->
       s"""WITH RECURSIVE $curationChain,
          |$lmScoreChain,
-         |vds AS (
-         |  SELECT lmdoc.doc_id, documents.source, lmdoc.lm_score
-         |  FROM lmdoc JOIN documents USING (doc_id)),
-         |vf AS (SELECT source, lm_score, COUNT(*) AS c FROM vds GROUP BY 1, 2),
-         |vb AS (
-         |  SELECT source, lm_score,
-         |    CASE WHEN cum <= (n_src + 2) // 3 THEN 'head'
-         |         WHEN cum <= (2 * n_src + 2) // 3 THEN 'middle'
-         |         ELSE 'tail' END AS ppl_bucket
-         |  FROM (SELECT source, lm_score,
-         |          SUM(c) OVER (PARTITION BY source
-         |            ORDER BY lm_score DESC) AS cum,
-         |          SUM(c) OVER (PARTITION BY source) AS n_src
-         |        FROM vf)),
+         |${pplBuckets("v")},
          |vk AS (
          |  SELECT vds.doc_id, vb.ppl_bucket
          |  FROM vds JOIN vb
@@ -3654,10 +3491,8 @@ object SparkEntry {
          |    len(t) AS nw,
          |    CAST(nc - (len(t) - 1) AS DOUBLE) / len(t) AS mw,
          |    len(list_filter(t,
-         |      x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS ns,
-         |    CAST(len(list_distinct(t)) AS DOUBLE) / len(t) AS ttr,
-         |    CAST(list_max(list_transform(list_distinct(t),
-         |      w -> len(list_filter(t, x -> x = w)))) AS DOUBLE) / len(t) AS tfrac
+         |      x -> x IN ($stopWords))) AS ns,
+         |$gopherRatios
          |  FROM gw),
          |gpass AS (
          |  SELECT doc_id FROM gm
@@ -3665,11 +3500,7 @@ object SparkEntry {
          |    AND ns >= 2 AND ttr >= 0.35 AND tfrac <= 0.14)
          |SELECT k.doc_id, smp.lang, d2.source, sem.cell,
          |  k.n_tokens_clean, k.n_removed, vk.ppl_bucket, k.clean_text
-         |FROM keepg k
-         |JOIN clusters c ON c.doc_id = k.doc_id AND c.doc_id = c.cluster_id
-         |JOIN sem ON sem.doc_id = k.doc_id
-         |JOIN smp ON smp.doc_id = k.doc_id
-         |JOIN documents d2 ON d2.doc_id = k.doc_id
+         |$curatedFrom
          |JOIN gpass ON gpass.doc_id = k.doc_id
          |JOIN vk ON vk.doc_id = k.doc_id""".stripMargin,
     // q155: the q79 shingle gate + the q142 cosine verdicts joined to
@@ -3681,20 +3512,7 @@ object SparkEntry {
          |evg AS (SELECT DISTINCT g FROM g WHERE doc_id < 5),
          |lex AS (SELECT DISTINCT g.doc_id FROM g JOIN evg USING (g)
          |        WHERE g.doc_id >= 5),
-         |e AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
-         |      AS nrm
-         |  FROM embeddings),
-         |vev AS (SELECT vec_id AS eid, embedding AS eemb, nrm AS enrm
-         |        FROM e WHERE vec_id % 50 = 0),
-         |p AS (
-         |  SELECT e.vec_id, vev.eid,
-         |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-         |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(vev.eemb[i] AS DOUBLE)))
-         |      / (e.nrm * vev.enrm), 4) AS cos_eval
-         |  FROM e CROSS JOIN vev WHERE e.vec_id % 50 <> 0),
+         |${evalCosines("vev")},
          |verd AS (
          |  SELECT vec_id, cos_eval >= 0.6 AS contaminated
          |  FROM (SELECT vec_id, cos_eval, row_number() OVER (
@@ -3757,7 +3575,7 @@ object SparkEntry {
          |        FROM ttok GROUP BY 1),
          |tsc AS (
          |  SELECT doc_id, ttf.term,
-         |    ROUND(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
+         |    $tfidfTerm
          |  FROM ttf JOIN tdf ON ttf.term = tdf.term CROSS JOIN tn),
          |cellsq AS (SELECT vec_id AS doc_id, CAST(cluster AS INT) AS cell
          |           FROM af),
@@ -3851,12 +3669,7 @@ object SparkEntry {
         |    - ROUND(ln(1.0 + 1.0 / digit) / ln(10.0), 6)), 6) AS abs_dev
         |FROM g CROSS JOIN t""".stripMargin,
     "q123_snapshot_diff" ->
-      """WITH ranked AS (
-        |  SELECT *, ((l_orderkey * 31 + l_linenumber) % 10) AS h,
-        |    row_number() OVER (PARTITION BY l_orderkey, l_linenumber
-        |      ORDER BY l_partkey, l_quantity, l_extendedprice) AS r,
-        |    count(*) OVER (PARTITION BY l_orderkey, l_linenumber) AS cnt
-        |  FROM lineitem),
+      s"""WITH ${cdcRanked(cdcKeyCount)},
         |base AS (
         |  SELECT l_orderkey AS order_id, l_linenumber AS line_no,
         |    l_partkey AS part_id, l_quantity AS quantity,
@@ -3927,10 +3740,9 @@ object SparkEntry {
         |  mean_chars, top_lang, lang_entropy
         |FROM src JOIN mix ON src.source = mix.source""".stripMargin,
     "q117_knn_classify" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id, embedding, label,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
+        |    $embNorm AS nrm
         |  FROM embeddings),
         |q AS (
         |  SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm,
@@ -3938,9 +3750,7 @@ object SparkEntry {
         |  FROM e WHERE vec_id % 5 = 0),
         |scored AS (
         |  SELECT qid, true_label, e.vec_id, e.label,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM e JOIN q ON e.vec_id % 5 <> 0),
         |nbrs AS (
         |  SELECT qid, true_label, label, cos_sim FROM (
@@ -3948,10 +3758,7 @@ object SparkEntry {
         |      ROW_NUMBER() OVER (PARTITION BY qid
         |        ORDER BY cos_sim DESC, vec_id) AS rank
         |    FROM scored) WHERE rank <= 10),
-        |votes AS (
-        |  SELECT qid, true_label, label, COUNT(*) AS votes,
-        |    CAST(SUM(CAST(cos_sim AS DECIMAL(18,4))) AS DOUBLE) AS sim_sum
-        |  FROM nbrs GROUP BY qid, true_label, label)
+        |${knnVotes("nbrs")}
         |SELECT qid AS vec_id, label AS predicted_label, votes, sim_sum,
         |  true_label, label = true_label AS correct
         |FROM (
@@ -4058,23 +3865,7 @@ object SparkEntry {
     // qid 0 cut at 20, fused by 1/(60+rank) with absent sides at 0 —
     // Cormack 2009 verbatim on both engines
     "q158_hybrid_rrf" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |dl AS (SELECT doc_id, len(t) AS dl FROM d),
-        |tot AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-        |               COUNT(*) AS n_docs FROM dl),
-        |tf AS (
-        |  SELECT doc_id, t, COUNT(*) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS t FROM d)
-        |  WHERE t IN ('spark', 'merge', 'window') GROUP BY 1, 2),
-        |dft AS (SELECT t, COUNT(*) AS dft FROM tf GROUP BY 1),
-        |sc AS (
-        |  SELECT tf.doc_id,
-        |    CAST(ROUND(
-        |      ln(1.0 + (n_docs - dft + 0.5) / (dft + 0.5)) *
-        |      (tf * (1.2 + 1.0) / (tf + 1.2 * (1.0 - 0.75 +
-        |        0.75 * (CAST(dl AS DOUBLE) / (sum_dl / n_docs))))), 9)
-        |      AS DECIMAL(18, 9)) AS term_score
-        |  FROM tf JOIN dl USING (doc_id) JOIN dft USING (t) CROSS JOIN tot),
+      s"""WITH $bm25Probe,
         |agg AS (
         |  SELECT doc_id, ROUND(CAST(SUM(term_score) AS DOUBLE), 6) AS score
         |  FROM sc GROUP BY doc_id),
@@ -4083,18 +3874,12 @@ object SparkEntry {
         |    CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
         |      AS lex_rank
         |  FROM agg ORDER BY score DESC, doc_id LIMIT 20),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings),
+        |$normedE,
         |q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm FROM e
         |      WHERE vec_id < 1),
         |cosed AS (
         |  SELECT e.vec_id,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM e JOIN q ON e.vec_id <> qid),
         |sem AS (
         |  SELECT vec_id AS doc_id, sem_rank FROM (
@@ -4117,7 +3902,7 @@ object SparkEntry {
     // popcounts of the XORs, top-20 candidates per query, then the
     // exact q24 cosine re-rank over candidates only
     "q159_hamming_topk" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT vec_id,
         |    CAST(list_sum(list_transform(range(1, 33),
         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (i - 1))
@@ -4139,18 +3924,12 @@ object SparkEntry {
         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS rk
         |    FROM h)
         |  WHERE rk <= 20),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings),
+        |$normedE,
         |q AS (SELECT vec_id AS qid, embedding AS qemb, nrm AS qnrm FROM e
         |      WHERE vec_id < 10),
         |r AS (
         |  SELECT cand.qid, cand.vec_id, cand.hamming,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM cand JOIN e ON cand.vec_id = e.vec_id JOIN q ON cand.qid = q.qid)
         |SELECT qid, vec_id AS nbr_id, rank, hamming, cos_sim FROM (
         |  SELECT qid, vec_id, hamming, cos_sim,
@@ -4163,40 +3942,19 @@ object SparkEntry {
     // core; the probe doc is excluded from the ranking only — corpus
     // statistics keep every document
     "q161_more_like_this" ->
-      """WITH tokens AS (
+      s"""WITH tokens AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |tfq AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2),
         |n AS (SELECT COUNT(*) AS n_docs FROM documents),
         |dfv AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
         |tsc AS (
         |  SELECT doc_id, tfq.term,
-        |    ROUND(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
+        |    $tfidfTerm
         |  FROM tfq JOIN dfv USING (term) CROSS JOIN n),
         |qterms AS (SELECT term AS t FROM tsc WHERE doc_id = 0
         |           ORDER BY tfidf DESC, term LIMIT 3),
-        |d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |dl AS (SELECT doc_id, len(t) AS dl FROM d),
-        |tot AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-        |               COUNT(*) AS n_docs FROM dl),
-        |tf AS (
-        |  SELECT doc_id, t, COUNT(*) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS t FROM d) u
-        |  JOIN qterms USING (t) GROUP BY 1, 2),
-        |dft AS (SELECT t, COUNT(*) AS dft FROM tf GROUP BY 1),
-        |sc AS (
-        |  SELECT tf.doc_id,
-        |    CAST(ROUND(
-        |      ln(1.0 + (n_docs - dft + 0.5) / (dft + 0.5)) *
-        |      (tf * (1.2 + 1.0) / (tf + 1.2 * (1.0 - 0.75 +
-        |        0.75 * (CAST(dl AS DOUBLE) / (sum_dl / n_docs))))), 9)
-        |      AS DECIMAL(18, 9)) AS term_score
-        |  FROM tf JOIN dl USING (doc_id) JOIN dft USING (t) CROSS JOIN tot),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS n_terms_hit,
-        |    ROUND(CAST(SUM(term_score) AS DOUBLE), 6) AS score
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, score,
-        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
+        |${bm25("FROM (SELECT doc_id, unnest(t) AS t FROM d) u\n  JOIN qterms USING (t)")},
+        |$bm25Ranked
         |FROM agg WHERE doc_id <> 0
         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
     // q160: the q132 BPE-apply chain rolled up per language — integer
@@ -4323,19 +4081,16 @@ object SparkEntry {
     // q165: the q24 brute chain with the wrong-label filter fused into
     // the pair condition
     "q165_hard_negatives" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id, label, embedding,
-        |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
+        |    $embNorm AS nrm
         |  FROM embeddings),
         |q AS (SELECT vec_id AS qid, label AS q_label, embedding AS qemb,
         |             nrm AS qnrm
         |      FROM e WHERE vec_id < 10),
         |scored AS (
         |  SELECT qid, q_label, e.vec_id, e.label,
-        |    ROUND(list_sum(list_transform(range(1, len(e.embedding) + 1),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE)))
-        |      / (e.nrm * qnrm), 4) AS cos_sim
+        |    $cosSim
         |  FROM e JOIN q ON e.vec_id <> qid AND e.label <> q_label)
         |SELECT qid, q_label, vec_id AS neg_id, label AS neg_label, rank, cos_sim
         |FROM (
@@ -4347,28 +4102,15 @@ object SparkEntry {
     // q166: the q20 verified-pair chain + the q21 md5-replayed MinHash
     // signatures; agreement counted per (doc, slot) equi-join
     "q166_minhash_estimate" ->
-      s"""WITH sh AS ($shingles),
-         |tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-         |ctok AS ($cappedTok),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |  FROM ctok a JOIN ctok b ON a.s = b.s AND a.doc_id < b.doc_id),
-         |v AS (
-         |  SELECT doc_i, doc_j,
-         |    len(list_intersect(na.shingles, nb.shingles)) AS c,
-         |    len(na.shingles) AS ni, len(nb.shingles) AS nj
-         |  FROM cand JOIN sh na ON doc_i = na.doc_id JOIN sh nb ON doc_j = nb.doc_id),
+      s"""WITH $shingleTok,
+         |$cappedCand,
+         |$shingleVerify,
          |pairs AS (
          |  SELECT doc_i, doc_j,
          |    ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) AS jaccard
          |  FROM v WHERE ROUND(CAST(c AS DOUBLE) / (ni + nj - c), 4) >= 0.5),
-         |pbase AS (SELECT doc_id,
-         |  CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) % 2147483647 AS x FROM tok),
-         |slots AS (
-         |  SELECT i,
-         |    1 + CAST('0x' || substr(md5('a' || i), 1, 7) AS BIGINT) % 2147483646 AS a,
-         |    CAST('0x' || substr(md5('b' || i), 1, 7) AS BIGINT) % 2147483647 AS b
-         |  FROM range(0, 64) t(i)),
+         |${minhashBase("pbase")},
+         |$minhashSlots,
          |slotsig AS (
          |  SELECT doc_id, i, MIN((a * x + b) % 2147483647) AS minh
          |  FROM pbase CROSS JOIN slots GROUP BY doc_id, i),

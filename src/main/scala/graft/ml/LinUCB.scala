@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -265,10 +265,15 @@ object LinUCB {
           col("l_extendedprice") / lit(100000.0),
           col("l_discount"),
           col("l_tax")).as("x"),
-        when(col("l_quantity") * 0.012 + col("l_discount") * 4.0 > 0.5, 1.0)
-          .otherwise(0.0).as("reward"))
+        clickReward.as("reward"))
       .as[Feedback]
   }
+
+  /** The fixture's reward rule over a lineitem row (the bandit feedback
+    * here and PolicyEval's interaction log): 1.0 when
+    * `l_quantity·0.012 + l_discount·4 > 0.5`, else 0.0. */
+  def clickReward: Column =
+    when(col("l_quantity") * 0.012 + col("l_discount") * 4.0 > 0.5, 1.0).otherwise(0.0)
 
   val Dim = 5
 

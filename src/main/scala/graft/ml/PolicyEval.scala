@@ -146,17 +146,21 @@ object PolicyEval {
 
   /** The interaction log with engine-portable keys: arm = p_brand,
     * label = "was returned", plus a deterministic pseudo-random score
-    * every engine can recompute (no hash builtin needed). */
-  private def interactions(spark: SparkSession, sfDir: String): DataFrame =
+    * every engine can recompute (no hash builtin needed); `keys` lead
+    * the columns. */
+  private def interactions(spark: SparkSession, sfDir: String, keys: Column*): DataFrame =
     graft.Tables.lineitem(spark, sfDir)
       .join(broadcast(graft.Tables.part(spark, sfDir)),
         col("l_partkey") === col("p_partkey"))
-      .select(
+      .select(keys ++ Seq(
         col("p_brand").as("arm"),
-        when(col("l_quantity") * 0.012 + col("l_discount") * 4.0 > 0.5, 1.0)
-          .otherwise(0.0).as("y"),
+        LinUCB.clickReward.as("y"),
         pmod(col("l_orderkey") * 131 + col("l_linenumber"), lit(10007))
-          .cast("double").as("rnd_score"))
+          .cast("double").as("rnd_score")): _*)
+
+  /** `fb` with the popularity policy's score: its arm's mean reward, 6dp. */
+  private def withPopularity(fb: DataFrame): DataFrame =
+    fb.join(broadcast(fb.groupBy("arm").agg(round(avg("y"), 6).as("pop_score"))), "arm")
 
   /** SQL-expressible policies: popularity (arm mean reward) and the
     * pseudo-random baseline, melted into ONE pass over the joined frame
@@ -168,14 +172,10 @@ object PolicyEval {
   /** The melted `(policy, s, y)` frame behind [[evalSqlPolicies]] —
     * package-visible so specs can run both AUC estimators over the
     * identical input. */
-  private[ml] def meltedSqlPolicies(spark: SparkSession, sfDir: String): DataFrame = {
-    val fb = interactions(spark, sfDir)
-    val scored = fb.join(
-      broadcast(fb.groupBy("arm").agg(round(avg("y"), 6).as("pop_score"))), "arm")
-    scored.selectExpr(
+  private[ml] def meltedSqlPolicies(spark: SparkSession, sfDir: String): DataFrame =
+    withPopularity(interactions(spark, sfDir)).selectExpr(
       "stack(2, 'popularity', pop_score, 'random', rnd_score) AS (policy, s)",
       "y")
-  }
 
   /** Model-based policy eval (rows-only: scoring needs A⁻¹): score each
     * interaction's own (arm, context) with the seeded models, AUC over
@@ -358,19 +358,8 @@ object PolicyEval {
     graft.Layers.frame(spark, "policy_ranked", sfDir)(rankedScoresUncached(spark, sfDir))
 
   private def rankedScoresUncached(spark: SparkSession, sfDir: String): DataFrame = {
-    val fb = graft.Tables.lineitem(spark, sfDir)
-      .join(broadcast(graft.Tables.part(spark, sfDir)),
-        col("l_partkey") === col("p_partkey"))
-      .select(
-        col("l_orderkey").as("group_id"),
-        col("l_linenumber").as("line_no"),
-        col("p_brand").as("arm"),
-        when(col("l_quantity") * 0.012 + col("l_discount") * 4.0 > 0.5, 1.0)
-          .otherwise(0.0).as("y"),
-        pmod(col("l_orderkey") * 131 + col("l_linenumber"), lit(10007))
-          .cast("double").as("rnd_score"))
-    val scored = fb.join(
-      broadcast(fb.groupBy("arm").agg(round(avg("y"), 6).as("pop_score"))), "arm")
+    val scored = withPopularity(interactions(spark, sfDir,
+      col("l_orderkey").as("group_id"), col("l_linenumber").as("line_no")))
     // Rank BOTH policies off one group_id shuffle (two partition-local
     // sorts share the exchange), melting to (policy, rn) only AFTER
     // ranking — the pre-rank melt shuffled 2x the rows with the policy

@@ -58,4 +58,29 @@ class SparkEntrySpec extends AnyFunSuite {
       assert(!inStr, s"$name: unterminated string literal")
     }
   }
+
+  /** The oracle text ledger: one `name<TAB>sha256` line per oracle
+    * (the UTF-8 bytes of `SparkEntry.oracleSql(name)`). A refactor of
+    * the shared fragments must leave every line as it is; a change to
+    * an oracle's SQL must replace its line in the same diff, so each
+    * changed oracle string is named by the diff itself. */
+  test("every oracle string matches the text ledger byte for byte") {
+    def sha256(s: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    val src = scala.io.Source.fromResource("oracle_sha256.tsv", getClass.getClassLoader)
+    val ledger = try src.getLines().filter(_.nonEmpty).map { l =>
+      val Array(name, hash) = l.split('\t'); name -> hash
+    }.toMap finally src.close()
+    val live = SparkEntry.oracleSql.map { case (n, sql) => n -> sha256(sql) }
+    val changed = (live.keySet & ledger.keySet).filter(n => live(n) != ledger(n))
+    val added = live.keySet -- ledger.keySet
+    val missing = ledger.keySet -- live.keySet
+    val report = Seq("changed" -> changed, "added" -> added, "missing" -> missing)
+      .filter(_._2.nonEmpty)
+      .map { case (what, names) => s"$what: ${names.toSeq.sorted.mkString(", ")}" }
+    val replacement = (changed ++ added).toSeq.sorted.map(n => s"$n\t${live(n)}")
+    assert(report.isEmpty,
+      report.mkString("; ") + "\nreplacement lines for oracle_sha256.tsv:\n" +
+        replacement.mkString("\n"))
+  }
 }

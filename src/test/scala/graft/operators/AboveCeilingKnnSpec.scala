@@ -76,7 +76,7 @@ class AboveCeilingKnnSpec extends SparkSpec {
     val d = corpusDir
     val approx = preds(Similarity.knnClassify(spark, d))
     // probe-all (= exact brute force regardless of centroid placement;
-    // the IvfAndStreamDedupSpec pins that equivalence against a
+    // the IvfSpec pins that equivalence against a
     // driver-side fold) on the same above-ceiling corpus
     val exact = preds(Similarity.knnClassify(spark, d, nProbe = 16))
     assert(exact.size == N / 5, s"holdout query count ${exact.size}")

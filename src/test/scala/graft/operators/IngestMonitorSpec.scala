@@ -1,4 +1,4 @@
-package graft.streaming
+package graft.operators
 
 import org.apache.spark.sql.functions._
 
@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** The curation chain's monitor (q168): its dedup stage bites on the
   * corpus's planted exact duplicates. */
-class CurationStreamSpec extends SparkSpec {
+class IngestMonitorSpec extends SparkSpec {
 
   test("q168 batch surface: dedup removes exactly the corpus's exact-duplicate " +
     "rows vs the undeduped monitor (sf0.1, the SF that plants them)") {

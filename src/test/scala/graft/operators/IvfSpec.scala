@@ -4,7 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-class IvfAndStreamDedupSpec extends SparkSpec {
+/** The IVF family: probe selection, the centroid fit, semantic keep,
+  * cluster profiles, kNN classify, embedding decontamination and the
+  * cell-balanced keep, each against a driver-side replay. */
+class IvfSpec extends SparkSpec {
   import spark.implicits._
 
   /** Shared driver-side oracle arithmetic — ONE definition of the

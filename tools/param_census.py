@@ -27,9 +27,11 @@ src/main (`Ann.topK(`), or named in an import selector from one
 object's def only, and so is an unqualified call inside an object that
 defines the name itself (Scala's scoping: `topK(` inside `Ann` is `Ann.topK`);
 a use qualified by any other capitalized name (`Character.charCount`) is a
-JVM class member and credits no def; any other call to a name defined more
-than once is credited to every def of that name, so the scan errs toward
-"set" and "used". A defaulted parameter whose def name also appears without
+JVM class member and credits no def; a use qualified by a lowercase name (a
+variable: `store.read(`, `delegate.open(`) credits only the class and trait
+members of that name; any other call to a name defined more than once is
+credited to every def of that name, so the scan errs toward "set" and
+"used". A defaulted parameter whose def name also appears without
 an argument list (passed as a function value) is listed with a `ref` mark
 for a look by hand.
 
@@ -44,7 +46,12 @@ Exits 1 when
   - an entry of either table no longer matches;
   - a doc block in src/main is followed directly by another (`*/`, only
     whitespace, `/**`): Scaladoc attaches only the second, so the first
-    documents nothing.
+    documents nothing;
+  - a run of ORACLE_RUN or more lines of the DuckDB oracle section of
+    SparkEntry.scala (from its `// Shared SQL fragments` line to the end),
+    compared verbatim after trimming and on the raw text (string literals
+    kept), repeats a run earlier in the section: a definition the oracles
+    share is stated once, as a fragment they interpolate.
 """
 import os
 import re
@@ -120,6 +127,8 @@ SURFACE_ALLOWED = {
         "(c) lmScore over a planted corpus with degenerate documents",
     "Dedup.stripDupSpansFrom":
         "(c) stripDupSpans over a planted corpus",
+    "Graft.open":
+        "(d) facade: register the lake's tables and the SQL functions on a session",
     "Graft.query":
         "(d) facade: run an inventory query by name on an opened session",
     "SparkEntry.entry":
@@ -265,9 +274,29 @@ def object_spans(text):
     return spans
 
 
+TEMPLATE = re.compile(r"\b(object|class|trait)\s+[A-Za-z_]\w*[^{};]*$")
+
+
+def owner_kinds(text):
+    """(start, end, kind) of every brace body; kind is `object`, `class` or
+    `trait` for a template body (its header, back to the previous brace or
+    `;`, declares one), else None."""
+    out, stack = [], []
+    for k, c in enumerate(text):
+        if c == "{":
+            stack.append(k)
+        elif c == "}" and stack:
+            j = stack.pop()
+            lo = max(text.rfind(ch, 0, j) for ch in "{};") + 1
+            m = TEMPLATE.search(text, lo, j)
+            out.append((j, k + 1, m.group(1) if m else None))
+    return out
+
+
 def defs_of(path, text, orig):
     out = []
     spans = object_spans(text)
+    bodies = owner_kinds(text)
     for m in DEF.finditer(text):
         line_start = text.rfind("\n", 0, m.start()) + 1
         head = text[line_start:m.start()]
@@ -301,8 +330,11 @@ def defs_of(path, text, orig):
         line = text.count("\n", 0, m.start()) + 1
         inner = [s for s in spans if s[0] < m.start() < s[1]]
         obj = max(inner)[2] if inner else None  # the innermost body
+        owner = [b for b in bodies if b[0] < m.start() < b[1]]
+        member = bool(owner) and max(owner)[2] in ("class", "trait")
         out.append({"name": m.group(1), "file": os.path.relpath(path, ROOT),
-                    "line": line, "params": params, "start": m.start(), "obj": obj})
+                    "line": line, "params": params, "start": m.start(), "obj": obj,
+                    "member": member})
     return out
 
 
@@ -385,6 +417,37 @@ def uses_of(name, text):
 
 ORPHAN_DOC = re.compile(r"\*/\s*/\*\*")
 
+ORACLE_FILE = os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")
+ORACLE_MARK = "// Shared SQL fragments"
+# Runs shorter than this are mostly one-line SQL closers (`FROM t)`,
+# `WHERE rank <= 5`) that a fragment would not make clearer.
+ORACLE_RUN = 8
+
+
+def oracle_repeats(text):
+    """Maximal runs of equal trimmed lines in the oracle section, as
+    (length, first line of the earlier run, first line of the later run),
+    and the number of section lines that repeat an earlier run of three or
+    more lines."""
+    lines = text.split("\n")
+    start = next((k for k, l in enumerate(lines) if ORACLE_MARK in l), len(lines))
+    sec = [l.strip() for l in lines[start:]]
+    at = defaultdict(list)
+    runs, repeated = [], set()
+    for j, t in enumerate(sec):
+        for i in at[t]:
+            if i > 0 and sec[i - 1] == sec[j - 1]:
+                continue  # not maximal: the run starts earlier
+            k = 0
+            while j + k < len(sec) and sec[i + k] == sec[j + k]:
+                k += 1
+            if k >= 3:
+                repeated.update(range(j, j + k))
+            if k >= ORACLE_RUN:
+                runs.append((k, start + i + 1, start + j + 1))
+        at[t].append(j)
+    return runs, len(repeated)
+
 
 def main(argv):
     listing = "--list" in argv
@@ -407,12 +470,15 @@ def main(argv):
                 if inner:
                     scope[max(inner)[2]].add(m.group(1))
 
-    def resolve(name, qual, f, at, objs):
-        """The objects whose def of `name` a call may reach."""
+    def resolve(name, qual, f, at, objs, members):
+        """The objects whose def of `name` a call may reach; `members` are
+        those whose def of it is a class or trait member."""
         if qual is not None:
             if qual in objects:
                 return {qual} & objs
-            return set() if qual[0].isupper() else objs  # `Character.charCount`
+            if qual[0].isupper():
+                return set()  # a JVM class member: `Character.charCount`
+            return members & objs  # through a variable: `store.read`
         for s in sorted((s for s in spans[f] if s[0] < at < s[1]), reverse=True):
             if name in scope[s[2]]:
                 return {s[2]} & objs
@@ -425,6 +491,7 @@ def main(argv):
     rows = []
     for name, ds in sorted(by_name.items()):
         objs = {d["obj"] for d in ds}
+        members = {d["obj"] for d in ds if d["member"]}
         # (obj, li, pname) and (obj, li, pi) -> {"engine", "spec"}
         setters = defaultdict(set)
         positional = defaultdict(set)
@@ -438,7 +505,7 @@ def main(argv):
                     refs += call[1]
                     continue
                 qual, at, groups_ = call
-                for obj in resolve(name, qual, f, at, objs):
+                for obj in resolve(name, qual, f, at, objs, members):
                     for li, (pos, named) in enumerate(groups_):
                         for pi in range(pos):
                             positional[(obj, li, pi)].add(kind)
@@ -501,7 +568,8 @@ def main(argv):
             for qual, at in uses_of(d["name"], text):
                 if f == path and own[0] <= at < own[1]:
                     continue
-                if d["obj"] in resolve(d["name"], qual, f, at, {d["obj"]}):
+                if d["obj"] in resolve(d["name"], qual, f, at, {d["obj"]},
+                                       {d["obj"]} if d["member"] else set()):
                     used[key].add(kind)
     surface = {k: "engine" if "engine" in v or k.endswith(".main") else
                "spec" if v else "uncalled" for k, v in used.items()}
@@ -538,6 +606,15 @@ def main(argv):
                 print(f"FAIL {os.path.relpath(f, ROOT)}:{line} doc block followed by "
                       f"another doc block", file=sys.stderr)
                 failed = True
+
+    # oracle pass: each shared oracle definition is written once
+    runs, repeated = oracle_repeats(open(ORACLE_FILE, encoding="utf-8").read())
+    print(f"oracle section: {repeated} lines repeat an earlier run of 3+, "
+          f"{len(runs)} runs of {ORACLE_RUN}+")
+    rel = os.path.relpath(ORACLE_FILE, ROOT)
+    for k, first, again in runs:
+        print(f"FAIL {rel}:{again} repeats {k} lines of {rel}:{first}", file=sys.stderr)
+        failed = True
     return 1 if failed else 0
 
 
