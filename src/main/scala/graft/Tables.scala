@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -15,9 +20,13 @@ import graft.streaming.LocalCheckpointFileManager
   * played by parquet scans whose column pruning + predicate pushdown come
   * from Catalyst for free.
   *
-  * Scale note: each table is a single parquet file locally, but every
-  * reader goes through `spark.read.parquet` so a directory of thousands
-  * of files on a real cluster binds identically.
+  * Scale note: every engine parquet read goes through [[parquet]],
+  * which takes the schema from ONE footer read on the driver and hands
+  * it to `spark.read.schema(..).parquet(path)`. A bare
+  * `spark.read.parquet` would infer it with a whole Spark job per read,
+  * even for one file. A directory of thousands of files binds the same
+  * way: through the file Spark's own non-merging inference would open
+  * (a summary file if present, else the first data file).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,7 +34,49 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from one footer, converted by Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter` under the session's
+    * parquet confs, so the Spark row-metadata key, `nanosAsLong`, NTZ
+    * inference and binary-as-string resolve exactly as inference
+    * resolves them. `path` is a file or a directory of part files. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = schemaFile(leafFiles(fs, fs.getFileStatus(root)).sortBy(_.getPath.toString))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The files under `status` that Spark's file index lists: names
+    * starting with `_` or `.` are skipped, except the parquet summary
+    * files. */
+  private def leafFiles(fs: FileSystem, status: FileStatus): Seq[FileStatus] =
+    if (status.isFile) Seq(status)
+    else fs.listStatus(status.getPath).toSeq.filterNot(s => hidden(s.getPath.getName))
+      .flatMap(leafFiles(fs, _))
+
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** The file non-merging inference reads (`ParquetUtils.inferSchema`):
+    * `_common_metadata`, else `_metadata`, else the first data file. */
+  private def schemaFile(sorted: Seq[FileStatus]): Option[FileStatus] = {
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    summaries.flatMap(n => sorted.find(_.getPath.getName == n)).headOption
+      .orElse(sorted.find(f => !summaries.contains(f.getPath.getName)))
+  }
 
   /** Session-cached row count of a fixture table. Corpus-derived layer
     * parameters (SimHash banding scheme, SRP band width, IVF k, kNN

@@ -41,7 +41,7 @@ class ModelStore(path: String) extends Serializable {
     val incoming = batch.toDF().withColumn("batch_id", lit(batchId))
     val merged =
       if (new java.io.File(path).exists()) {
-        val existing = spark.read.parquet(path)
+        val existing = graft.Tables.parquet(spark, path)
         // existing rows from this same batch id are a replay — replaced
         existing.filter(col("batch_id") =!= batchId).unionByName(incoming)
       } else incoming
@@ -73,7 +73,7 @@ class ModelStore(path: String) extends Serializable {
   def read(spark: SparkSession): Dataset[Model] = {
     import spark.implicits._
     recoverIfNeeded()
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .select(col("productId"), col("aInv"), col("b"), col("d"), col("n"))
       .as[Model]
   }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Contract spec for [[Tables.events]] across every physical shape the
@@ -26,23 +26,7 @@ import org.apache.spark.sql.types._
   */
 class EventsReaderSpec extends SparkSpec {
 
-  // One event at 2024-03-01T12:34:56.789012Z (µs precision — the portable grain).
-  private val epochUs = 1709296496789012L
-
-  private def writeEvents(dir: String, tsType: DataType, tsValue: Any): Unit = {
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val rows = java.util.Arrays.asList(
-      Row(1L, tsValue, 7L, "click", 1.5, "{}"))
-    spark.createDataFrame(rows, schema)
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-  }
+  import EventsReaderSpec._
 
   private def readBack(dir: String): (Long, Long) = {
     val df = Tables.events(spark, dir)
@@ -55,17 +39,9 @@ class EventsReaderSpec extends SparkSpec {
   test("ns-long, µs-NTZ and µs-UTC shapes normalize to the same ts_us/ts") {
     val base = Files.createTempDirectory("events-shapes").toString
 
-    // Shape 1: epoch-ns long (TIMESTAMP(NANOS) under nanosAsLong).
-    writeEvents(s"$base/ns", LongType, epochUs * 1000L)
-    // Shape 2: timestamp[us] isAdjustedToUTC=false → TimestampNTZType.
-    // Session tz is UTC, so the NTZ wall-clock equals the UTC instant.
-    writeEvents(s"$base/ntz", TimestampNTZType,
-      LocalDateTime.ofEpochSecond(epochUs / 1000000L, (epochUs % 1000000L).toInt * 1000,
-        java.time.ZoneOffset.UTC))
-    // Shape 3: UTC-adjusted timestamp[us] → TimestampType.
-    val tsInstant = new Timestamp(epochUs / 1000L)
-    tsInstant.setNanos((epochUs % 1000000L).toInt * 1000)
-    writeEvents(s"$base/utc", TimestampType, tsInstant)
+    shapes.foreach { case (name, tsType, tsValue) =>
+      writeEvents(spark, s"$base/$name", tsType, tsValue)
+    }
 
     val (nsUs, nsMs) = readBack(s"$base/ns")
     val (ntzUs, ntzMs) = readBack(s"$base/ntz")
@@ -87,8 +63,45 @@ class EventsReaderSpec extends SparkSpec {
 
   test("an unsupported ts dtype fails loudly, not downstream") {
     val base = Files.createTempDirectory("events-bad").toString
-    writeEvents(s"$base/bad", StringType, "2024-03-01")
+    writeEvents(spark, s"$base/bad", StringType, "2024-03-01")
     val e = intercept[IllegalStateException](Tables.events(spark, s"$base/bad"))
     assert(e.getMessage.contains("events.ts"))
+  }
+}
+
+object EventsReaderSpec {
+  // One event at 2024-03-01T12:34:56.789012Z (µs precision — the portable grain).
+  val epochUs = 1709296496789012L
+
+  /** The three shapes as (directory name, `ts` type, `ts` value). */
+  val shapes: Seq[(String, DataType, Any)] = {
+    val tsInstant = new Timestamp(epochUs / 1000L)
+    tsInstant.setNanos((epochUs % 1000000L).toInt * 1000)
+    Seq(
+      // Shape 1: epoch-ns long (TIMESTAMP(NANOS) under nanosAsLong).
+      ("ns", LongType, epochUs * 1000L),
+      // Shape 2: timestamp[us] isAdjustedToUTC=false → TimestampNTZType.
+      // Session tz is UTC, so the NTZ wall-clock equals the UTC instant.
+      ("ntz", TimestampNTZType,
+        LocalDateTime.ofEpochSecond(epochUs / 1000000L, (epochUs % 1000000L).toInt * 1000,
+          java.time.ZoneOffset.UTC)),
+      // Shape 3: UTC-adjusted timestamp[us] → TimestampType.
+      ("utc", TimestampType, tsInstant))
+  }
+
+  /** One event row with `ts` of `tsType`, as `dir/events.parquet`. */
+  def writeEvents(spark: SparkSession, dir: String, tsType: DataType, tsValue: Any): Unit = {
+    val schema = StructType(Seq(
+      StructField("event_id", LongType),
+      StructField("ts", tsType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType),
+      StructField("props", StringType)))
+    val rows = java.util.Arrays.asList(
+      Row(1L, tsValue, 7L, "click", 1.5, "{}"))
+    spark.createDataFrame(rows, schema)
+      .repartition(1)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 }

@@ -4,8 +4,8 @@
 # mid-round 117/117 sf0.1 pass), so scale-sensitive rounding bugs can't
 # hide below the driver's sf0.01 gate. Runs graft.Verify + the DuckDB
 # oracle compare per SF and prints one summary line each. The census
-# (tools/param_census.py: parameters, defs, doc blocks) gates the sweep
-# first.
+# (tools/param_census.py: parameters, defs, doc blocks, oracle repeats,
+# schemaless parquet reads) gates the sweep first.
 #
 # Usage: tools/full_sweep.sh [sf...]   (default: 0.001 0.01 0.1)
 set -u

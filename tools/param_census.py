@@ -51,7 +51,12 @@ Exits 1 when
     SparkEntry.scala (from its `// Shared SQL fragments` line to the end),
     compared verbatim after trimming and on the raw text (string literals
     kept), repeats a run earlier in the section: a definition the oracles
-    share is stated once, as a fragment they interpolate.
+    share is stated once, as a fragment they interpolate;
+  - src/main reads parquet without a schema: a `.read` chain that reaches
+    `.parquet(` (or `.format("parquet")` and `.load(`) with no `.schema(`
+    in it. Spark infers such a schema with a whole job per read; the engine
+    reads through `Tables.parquet`, which takes it from one footer on the
+    driver.
 """
 import os
 import re
@@ -424,6 +429,26 @@ ORACLE_MARK = "// Shared SQL fragments"
 ORACLE_RUN = 8
 
 
+# `spark.read` as a value: not `store.read(...)` and not `readStream`
+READ = re.compile(r"\.\s*read\b(?!\s*[\w(\[])")
+CHAINED = re.compile(r"\s*\.\s*(\w+)")
+
+
+def bare_parquet_reads(text, orig):
+    """Line numbers of the `.read` chains in `text` (stripped; `orig` keeps
+    the string literals at the same offsets) that read parquet with no
+    `.schema(...)`."""
+    for m in READ.finditer(text):
+        names, fmt, i = [], False, m.end()
+        while (c := CHAINED.match(text, i)):
+            args, i = groups(text, c.end(), False)
+            names.append(c.group(1))
+            fmt |= c.group(1) == "format" and any(
+                "parquet" in orig[at:at + len(body)] for _, body, at in args)
+        if ("parquet" in names or (fmt and "load" in names)) and "schema" not in names:
+            yield text.count("\n", 0, m.start()) + 1
+
+
 def oracle_repeats(text):
     """Maximal runs of equal trimmed lines in the oracle section, as
     (length, first line of the earlier run, first line of the later run),
@@ -605,6 +630,15 @@ def main(argv):
                 line = orig.count("\n", 0, m.start()) + 1
                 print(f"FAIL {os.path.relpath(f, ROOT)}:{line} doc block followed by "
                       f"another doc block", file=sys.stderr)
+                failed = True
+
+    # parquet pass: an engine read states its schema, so it starts no
+    # inference job
+    for f, (_, text, orig) in sorted(sources.items()):
+        if f.startswith(ENGINE[0]):
+            for line in bare_parquet_reads(text, orig):
+                print(f"FAIL {os.path.relpath(f, ROOT)}:{line} reads parquet without a "
+                      f"schema; read through Tables.parquet", file=sys.stderr)
                 failed = True
 
     # oracle pass: each shared oracle definition is written once
