@@ -67,12 +67,17 @@ object Bench {
     // numbers order-dependent (r9: q117 carried the k-means fit, q44
     // "improved" 4x by riding its cache). Layer failures surface in the
     // errors list like query failures.
-    val (layerTimes, layerFailed) = layerPhase(spark, sfDir, layerNames)
+    val (layerBuilds, layerFailed) = layerPhase(spark, sfDir, layerNames)
     var failed = layerFailed.map(n => s"layer:$n").toList
+    // Janino compiles per timed query: 0 once the warmup compiled its code
+    val queryCompiles = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val results = selected.flatMap { case (name, fn) =>
       try {
+        val c0 = Layers.compiles()
         val dt = time(fn(spark, sfDir))
-        System.err.println(f"[bench] $name%-28s $dt%8.2f s")
+        val compiled = Layers.compiles() - c0
+        System.err.println(f"[bench] $name%-28s $dt%8.2f s $compiled%4d compiles")
+        queryCompiles += name -> compiled
         Some(name -> dt)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -84,23 +89,26 @@ object Bench {
     // is not a query duration, and including it (positive or negative)
     // would make totals incomparable across runs with different failure
     // sets and confuse consumers of the queries map.
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ls = layerTimes.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results)
+    val ls = obj(layerBuilds.map(b => b.name -> b.ownS))
     val errs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // "value" stays query-only so totals remain comparable with prior
     // rounds' semantics; layer cost is its own headline field.
     val total = results.map(_._2).sum
-    val layerTotal = layerTimes.map(_._2).sum
+    val layerTotal = layerBuilds.map(_.ownS).sum
     // steal_sec/steal_pct/contended + load1 bounds — the machine-
     // checkable provenance block every timing artifact now carries
     val provJson = HostMeter.provenanceJson(meterStart, HostMeter.mark())
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","layers_sec":$layerTotal,""" +
-        s"""$provJson,"queries":$qs,"layers":$ls,"errors":$errs,"sf":"$sfDir"}"""
-    // The FULL artifact (full query names, full precision, layer map)
-    // goes to a stable file — a consumer that only captures a
+        s"""$provJson,"queries":$qs,"layers":$ls,""" +
+        s""""query_compiles":${obj(queryCompiles.toSeq)},""" +
+        s""""layer_compiles":${obj(layerBuilds.map(b => b.name -> b.compiles))},""" +
+        s""""errors":$errs,"sf":"$sfDir"}"""
+    // The FULL artifact (full query names, full precision, layer map,
+    // compile counts) goes to a stable file — a consumer that only captures a
     // truncated log tail would otherwise lose the early queries'
     // timings (rounds 5 and 11 recorded "parsed": null).
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
@@ -161,7 +169,10 @@ object Bench {
     * timed, in the layer phase; and returns, sorted, the
     * [[SparkEntry.layers]] their builders recorded
     * ([[Layers.recording]]). With no query named it runs the first
-    * query only and returns every layer. */
+    * query only and returns every layer. The classes it compiles serve
+    * the timed queries on the main session too: every session shares
+    * one executor class loader, so one codegen cache
+    * ([[GraftSession.builder]]; `GraftSessionSpec` pins it). */
   def warmQueries(scratch: SparkSession, sfDir: String, names: Seq[String]): Seq[String] = {
     val all = wanted(names).isEmpty
     val run = if (all) Seq(SparkEntry.queries.head) else select(names)
@@ -175,32 +186,40 @@ object Bench {
 
   /** The layer phase: builds the `names` entries of
     * [[SparkEntry.layers]] in order and returns each built layer's OWN
-    * seconds, sorted by name, with the names that failed. A store build
-    * under another listed name, nested inside an entry's call, is
-    * charged to that name ([[Layers.recording]]); the entry keeps the
-    * rest of its call's wall time. So every layer reports its own cost
-    * in any build order (`near_pairs` built under `dedup_clusters`, or
-    * alone), and the values sum to the phase's wall time. */
+    * seconds and compiles, sorted by name, with the names that failed. A
+    * store build under another listed name, nested inside an entry's
+    * call, is charged to that name ([[Layers.recording]]); the entry
+    * keeps the rest of its call's wall time and compiles. So every layer
+    * reports its own cost in any build order (`near_pairs` built under
+    * `dedup_clusters`, or alone), and the values sum to the phase's. */
   def layerPhase(spark: SparkSession, sfDir: String,
                  names: Seq[String] = SparkEntry.layers.keys.toSeq.sorted)
-      : (Seq[(String, Double)], Seq[String]) = {
+      : (Seq[Layers.Build], Seq[String]) = {
     val listed = names.toSet
-    val own = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
+    val own = scala.collection.mutable.Map.empty[String, Layers.Build]
+    def charge(name: String, s: Double, compiles: Long): Unit = {
+      val b = own.getOrElse(name, Layers.Build(name, 0.0, 0L))
+      own(name) = Layers.Build(name, b.ownS + s, b.compiles + compiles)
+    }
     val phase0 = System.nanoTime()
     val failed = names.filterNot { name =>
       val t0 = System.nanoTime()
+      val c0 = Layers.compiles()
       val (built, builds) = Layers.recording(SparkEntry.layers(name)(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiled = Layers.compiles() - c0
       val others = builds.filter(b => b.name != name && listed(b.name))
-      others.foreach(b => own(b.name) += b.ownS)
+      others.foreach(b => charge(b.name, b.ownS, b.compiles))
       built.failed.foreach(e => System.err.println(s"[bench] layer $name FAILED: ${e.getMessage}"))
-      if (built.isSuccess) own(name) += wall - others.map(_.ownS).sum
+      if (built.isSuccess)
+        charge(name, wall - others.map(_.ownS).sum, compiled - others.map(_.compiles).sum)
       built.isSuccess
     }
     val phase = (System.nanoTime() - phase0) / 1e9
-    val times = own.toSeq.sortBy(_._1)
-    times.foreach { case (n, dt) => System.err.println(f"[bench] layer $n%-28s $dt%8.2f s") }
-    System.err.println(f"[bench] layer phase $phase%.2f s wall, ${times.map(_._2).sum}%.2f s summed" +
+    val times = own.values.toSeq.sortBy(_.name)
+    times.foreach(b =>
+      System.err.println(f"[bench] layer ${b.name}%-28s ${b.ownS}%8.2f s ${b.compiles}%4d compiles"))
+    System.err.println(f"[bench] layer phase $phase%.2f s wall, ${times.map(_.ownS).sum}%.2f s summed" +
       names.mkString(" (", ", ", ")"))
     (times, failed)
   }

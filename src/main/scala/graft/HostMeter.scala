@@ -28,13 +28,15 @@ package graft
   *
   * Units: the `cpu` line aggregates over all CPUs at USER_HZ = 100
   * (fixed kernel ABI for /proc/stat regardless of CONFIG_HZ), so the
-  * delta is stolen CPU-seconds across the whole machine. `stealPct`
-  * normalizes by wall × nCpu — the fraction of total machine capacity
+  * delta is stolen CPU-seconds across the whole machine. `steal_pct`
+  * normalizes by wall × nCpu — the percent of total machine capacity
   * the hypervisor took during the run; nCpu comes from counting
   * `/proc/stat`'s per-cpu lines so numerator and denominator cover the
   * same capacity even when a cgroup quota makes the JVM's
-  * availableProcessors smaller than the machine. PSI normalizes by
-  * wall alone (it is already a "some task" wall-clock measure). Flag,
+  * availableProcessors smaller than the machine. `psi_some_pct`
+  * normalizes by wall alone (it is already a "some task" wall-clock
+  * measure). Both are percentages, as perfbench's `host.steal_pct` and
+  * `host.psi_some_pct` are. Flag,
   * don't refuse: the driver's per-round run must still produce its
   * artifact, so a contaminated run is marked `"contended":true` (and
   * warned on stderr) for the judge to discount mechanically. */
@@ -127,21 +129,21 @@ object HostMeter {
     val steal =
       if (start.steal < 0 || end.steal < 0) -1.0 else end.steal - start.steal
     val pct =
-      if (steal < 0 || wall <= 0) -1.0 else steal / (wall * nCpu)
+      if (steal < 0 || wall <= 0) -1.0 else 100 * steal / (wall * nCpu)
     val psi =
       if (start.psiSome < 0 || end.psiSome < 0) -1.0
       else end.psiSome - start.psiSome
     val psiPct =
-      if (psi < 0 || wall <= 0) -1.0 else psi / wall
-    val contended = pct > ContendedStealFrac || psiPct > ContendedPsiFrac
+      if (psi < 0 || wall <= 0) -1.0 else 100 * psi / wall
+    val contended = pct > 100 * ContendedStealFrac || psiPct > 100 * ContendedPsiFrac
     if (contended)
       System.err.println(
         f"[bench] CONTENDED RUN over $wall%.1f s wall: " +
-          f"$steal%.1f stolen CPU-seconds (${pct * 100}%.1f%% of $nCpu cores), " +
-          f"$psi%.1f CPU-stall seconds (${psiPct * 100}%.1f%% of wall) — " +
+          f"$steal%.1f stolen CPU-seconds ($pct%.1f%% of $nCpu cores), " +
+          f"$psi%.1f CPU-stall seconds ($psiPct%.1f%% of wall) — " +
           "timings are not comparable; re-measure on a quiet host")
-    s""""steal_sec":${r3(steal)},"steal_pct":${r4(pct)},""" +
-      s""""psi_some_sec":${r3(psi)},"psi_some_pct":${r4(psiPct)},""" +
+    s""""steal_sec":${r3(steal)},"steal_pct":${r2(pct)},""" +
+      s""""psi_some_sec":${r3(psi)},"psi_some_pct":${r2(psiPct)},""" +
       s""""ncpu":$nCpu,""" +
       s""""load1_start":${start.load1},"load1_end":${end.load1},""" +
       s""""contended":$contended"""
@@ -149,6 +151,6 @@ object HostMeter {
 
   private def r3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-  private def r4(v: Double): String =
-    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+  private def r2(v: Double): String =
+    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -56,14 +57,22 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * Timing: each build records its OWN time — its wall time minus the
   * wall time of the store builds nested inside it on the same thread —
   * so a layer built on the side of another (near pairs under the
-  * cluster labels) still reports its own cost ([[recording]]). */
+  * cluster labels) still reports its own cost ([[recording]]). Its own
+  * Janino compiles ([[compiles]]) are netted the same way. */
 object Layers {
 
   /** Resident keys per layer name per session. */
   val PerName = 16
 
-  /** One finished build of layer `name` and its own seconds. */
-  final case class Build(name: String, ownS: Double)
+  /** One finished build of layer `name`, its own seconds and its own
+    * codegen compiles. */
+  final case class Build(name: String, ownS: Double, compiles: Long)
+
+  /** Janino compiles so far in this JVM (Spark's `CodegenMetrics`, one
+    * count for all threads of a local context). Spark counts every class it
+    * compiles here and none its codegen cache serves, so a delta across
+    * a warm query or layer build reads 0. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The layer `name` at `key`, built once per session as the
     * localCheckpoint of `build`. */
@@ -154,19 +163,22 @@ object Layers {
   }
 
   private val recorder = new ThreadLocal[ArrayBuffer[Build]]
-  /** The wall nanos of builds nested in the current build, per thread. */
-  private val nestedNanos = new ThreadLocal[Array[Long]]
+  /** The wall nanos and the compiles of builds nested in the current
+    * build, per thread. */
+  private val nestedCost = new ThreadLocal[Array[Long]]
 
   private def timed[V](name: String)(build: => V): V = {
-    val outer = nestedNanos.get()
-    val nested = Array(0L)
-    nestedNanos.set(nested)
+    val outer = nestedCost.get()
+    val nested = Array(0L, 0L)
+    nestedCost.set(nested)
     val t0 = System.nanoTime()
-    val v = try build finally nestedNanos.set(outer)
+    val c0 = compiles()
+    val v = try build finally nestedCost.set(outer)
     val wall = System.nanoTime() - t0
-    if (outer != null) outer(0) += wall
+    val compiled = compiles() - c0
+    if (outer != null) { outer(0) += wall; outer(1) += compiled }
     val rec = recorder.get()
-    if (rec != null) rec += Build(name, (wall - nested(0)) / 1e9)
+    if (rec != null) rec += Build(name, (wall - nested(0)) / 1e9, compiled - nested(1))
     v
   }
 

@@ -44,6 +44,7 @@ class HostMeterSpec extends AnyFunSuite {
     val noisy = HostMeter.Mark(steal = 100.0 + stolen, load1 = 9.0,
       wallNanos = quiet.wallNanos)
     val nj = HostMeter.provenanceJson(start, noisy)
+    assert(nj.contains("\"steal_pct\":4.00"), nj)
     assert(nj.contains("\"contended\":true"), nj)
     // unreadable counter -> -1 markers, never a contended verdict
     val blind = HostMeter.provenanceJson(
@@ -63,14 +64,14 @@ class HostMeterSpec extends AnyFunSuite {
     val lj = HostMeter.provenanceJson(start, loaded)
     assert(lj.contains("\"steal_sec\":0.000"), lj)
     assert(lj.contains("\"psi_some_sec\":1.460"), lj)
-    assert(lj.contains("\"psi_some_pct\":0.1460"), lj)
+    assert(lj.contains("\"psi_some_pct\":14.60"), lj)
     assert(lj.contains("\"contended\":true"), lj)
     // a healthy battery's own over-subscription bursts (r16 idle
     // measurements: 0.3% full battery, 1.2% warmup burst) stay clean
     val busy = HostMeter.Mark(steal = 100.0, load1 = 30.0,
       wallNanos = tenSec, psiSome = 50.0 + 0.12)
     val bj = HostMeter.provenanceJson(start, busy)
-    assert(bj.contains("\"psi_some_pct\":0.0120"), bj)
+    assert(bj.contains("\"psi_some_pct\":1.20"), bj)
     assert(bj.contains("\"contended\":false"), bj)
     // unreadable PSI -> -1 markers, no verdict from that signal
     val blind = HostMeter.provenanceJson(

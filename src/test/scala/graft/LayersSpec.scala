@@ -115,7 +115,7 @@ class LayersSpec extends SparkSpec {
     val Seq(forward, backward) = Seq(family, family.reverse).map { order =>
       val (times, failed) = Bench.layerPhase(spark.newSession(), sf(), order)
       assert(failed.isEmpty)
-      times.toMap
+      times.map(b => b.name -> b.ownS).toMap
     }
     Seq(forward, backward).foreach { t =>
       assert(t.keySet == family.toSet)

@@ -5,7 +5,8 @@
 # hide below the driver's sf0.01 gate. Runs graft.Verify + the DuckDB
 # oracle compare per SF and prints one summary line each. The census
 # (tools/param_census.py: parameters, defs, doc blocks, oracle repeats,
-# schemaless parquet reads) gates the sweep first.
+# schemaless parquet reads, sessions built outside GraftSession) gates
+# the sweep first.
 #
 # Usage: tools/full_sweep.sh [sf...]   (default: 0.001 0.01 0.1)
 set -u

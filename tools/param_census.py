@@ -56,7 +56,11 @@ Exits 1 when
     `.parquet(` (or `.format("parquet")` and `.load(`) with no `.schema(`
     in it. Spark infers such a schema with a whole job per read; the engine
     reads through `Tables.parquet`, which takes it from one footer on the
-    driver.
+    driver;
+  - src/main builds a session outside the `GraftSession` object (a
+    `SparkSession.builder` or `new SparkSession.Builder(`): every engine
+    session carries the factory's shared configs, among them the one
+    executor class loader that lets a fresh session reuse compiled code.
 """
 import os
 import re
@@ -449,6 +453,11 @@ def bare_parquet_reads(text, orig):
             yield text.count("\n", 0, m.start()) + 1
 
 
+# a session builder, as a call or a constructor (not the `Builder` type)
+BUILDER = re.compile(r"\bSparkSession\s*\.\s*(?:builder\b|Builder\s*\()")
+FACTORY = "GraftSession"
+
+
 def oracle_repeats(text):
     """Maximal runs of equal trimmed lines in the oracle section, as
     (length, first line of the earlier run, first line of the later run),
@@ -640,6 +649,17 @@ def main(argv):
                 print(f"FAIL {os.path.relpath(f, ROOT)}:{line} reads parquet without a "
                       f"schema; read through Tables.parquet", file=sys.stderr)
                 failed = True
+
+    # session pass: every engine session comes from the one factory
+    for f, (_, text, _) in sorted(sources.items()):
+        if f.startswith(ENGINE[0]):
+            for m in BUILDER.finditer(text):
+                inner = [s for s in spans[f] if s[0] < m.start() < s[1]]
+                if not inner or max(inner)[2] != FACTORY:
+                    line = text.count("\n", 0, m.start()) + 1
+                    print(f"FAIL {os.path.relpath(f, ROOT)}:{line} builds a session outside "
+                          f"{FACTORY}; start from {FACTORY}.builder", file=sys.stderr)
+                    failed = True
 
     # oracle pass: each shared oracle definition is written once
     runs, repeated = oracle_repeats(open(ORACLE_FILE, encoding="utf-8").read())
