@@ -140,8 +140,8 @@ object HostMeter {
       System.err.println(
         f"[bench] CONTENDED RUN over $wall%.1f s wall: " +
           f"$steal%.1f stolen CPU-seconds ($pct%.1f%% of $nCpu cores), " +
-          f"$psi%.1f CPU-stall seconds ($psiPct%.1f%% of wall) — " +
-          "timings are not comparable; re-measure on a quiet host")
+          f"$psi%.1f CPU-stall seconds ($psiPct%.1f%% of wall). " +
+          "Timings are not comparable; re-measure on a quiet host")
     s""""steal_sec":${r3(steal)},"steal_pct":${r2(pct)},""" +
       s""""psi_some_sec":${r3(psi)},"psi_some_pct":${r2(psiPct)},""" +
       s""""ncpu":$nCpu,""" +

@@ -53,7 +53,7 @@ object SparkEntry {
     // --- dedup family ---
     "q19_dedup_exact" -> ((s, d) => Dedup.exact(s, d)),
     "q20_jaccard_pairs" -> ((s, d) => Dedup.materializedNearPairs(s, d)),
-    "q21_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d, 0.5)),
+    "q21_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d)),
     "q22_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(s, d)),
     "q23_embedding_pairs" -> ((s, d) => Dedup.embeddingPairsBucketed(s, d, 0.4)),
     // --- similarity search ---
@@ -168,7 +168,7 @@ object SparkEntry {
     "q81_split_assign" -> ((s, d) => Analytics.splitAssign(s, d)),
     // --- mixture weighting + containment (asymmetric Jaccard) ---
     "q82_mixture_weights" -> ((s, d) => TextOps.mixtureWeights(s, d)),
-    "q83_containment" -> ((s, d) => TextOps.containmentPairs(s, d, 0.8)),
+    "q83_containment" -> ((s, d) => TextOps.containmentPairs(s, d)),
     // HLL sketch estimates are engine-specific, but their error
     // envelope vs the exact counts is an exact boolean — hash-checked
     "q84_approx_distinct" -> ((s, d) => Relational.dashboardMetricsChecked(s, d)),

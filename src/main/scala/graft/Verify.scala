@@ -89,7 +89,7 @@ object Verify {
       Pin("PQ fixture", Set("q135_ann_pq", "q136_pq_recall", "q137_ann_ivf_pq",
         "q141_ann_ivfadc_residual"), () =>
         unless(dim.get == 64,
-          s"dim=${dim.get} expected 64: the oracle's 8×8 subvector slicing no longer matches")),
+          s"dim=${dim.get} expected 64: the oracle's 8x8 subvector slicing no longer matches")),
       // The LinUCB seed replay (q30/q31, and q41's deterministic-policy
       // AUC replay) assumes the lineitem money columns are 2dp rationals
       // and quantities integral — that is what keeps every scaled
@@ -120,7 +120,7 @@ object Verify {
         case Failure(e) => Some(s"${pin.name} pin check failed (${e.getMessage})")
       }
       cause.toSeq.flatMap { c =>
-        System.err.println(s"[verify] $c — dropping pinned oracles: ${pinned.toSeq.sorted.mkString(", ")}")
+        System.err.println(s"[verify] $c; dropping pinned oracles: ${pinned.toSeq.sorted.mkString(", ")}")
         pinned
       }
     }.toSet

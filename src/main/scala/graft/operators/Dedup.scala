@@ -59,9 +59,7 @@ object Dedup {
     * df-count + semi-join chain. */
   def materializedCappedPostings(spark: SparkSession, sfDir: String): DataFrame =
     graft.Layers.frame(spark, "capped_postings", sfDir) {
-      cappedPostings(
-        materializedShingled(spark, sfDir)
-          .select(col("doc_id"), explode(col("shingles")).as("s")), DefaultMaxDf)
+      cappedPostings(materializedShingled(spark, sfDir), DefaultMaxDf)
     }
 
   /** [[shingled]] over an arbitrary documents frame (`doc_id`, `text`) —
@@ -75,25 +73,24 @@ object Dedup {
     * feed candidate generation. A shingle shared by k documents fans out
     * k² candidate rows in the inverted-index join, so one boilerplate
     * phrase ("all rights reserved") is a shuffle-key skew bomb at corpus
-    * scale while contributing ~0 Jaccard evidence. Shingles with
-    * df > cap are dropped from CANDIDATE GENERATION ONLY — verification
-    * still scores the full shingle sets, so every reported Jaccard is
-    * exact. The real miss mode: a pair whose EVERY shared shingle has
-    * df > cap generates no candidate at all — i.e. a duplicate cluster
-    * with more than cap members becomes invisible to SIMILARITY
-    * candidate generation, which is precisely the mass-replicated
-    * boilerplate a crawl dedup must catch. [[exactEdgesFrom]] closes
-    * the identical-copy half of that hole (exact-duplicate groups are
-    * clustered regardless of df); the residual miss is NEAR-identical
-    * (not byte-identical) all-boilerplate documents, accepted and
-    * documented here. On the test fixtures max df = 25 (sf0.1), so 64
+    * scale while contributing ~0 similarity evidence. Shingles with
+    * df > cap are dropped from CANDIDATE GENERATION ONLY; what that can
+    * miss, and why no reported score moves, is stated once on
+    * [[similarPairsOver]]. On the test fixtures max df = 25 (sf0.1), so 64
     * is a semantic no-op there while bounding fan-out at 100 TB. The
     * DuckDB oracles apply the identical cap. */
   val DefaultMaxDf = 64L
 
-  /** The Jaccard threshold of the near-dup pair layer and every report
-    * and cluster build over it. */
+  /** The Jaccard threshold of the near-dup pair layer, q21's LSH verify,
+    * q112's incremental dedup, and every report and cluster build over
+    * them. */
   val NearDupThreshold = 0.5
+
+  /** Round cap of [[propagateLabels]]: pointer jumping halves every
+    * path per round, so 20 rounds cover chains far longer than any
+    * near-dup component; a graph that needs more fails loudly instead of
+    * returning half-propagated labels. */
+  val MaxLabelRounds = 20
 
   /** Expected per-band bucket occupancy ceiling the derived SRP band
     * width targets: one more plane per band whenever doubling the
@@ -125,89 +122,165 @@ object Dedup {
     pp
   }
 
-  /** Posting list with the document-frequency cap applied: df per
-    * shingle as a groupBy-count (map-side partial aggregation collapses
-    * the hot shingle to one row per mapper — never k rows spilling in
-    * one window partition), then a semi-join keeps postings of
-    * surviving shingles. Linear in postings; the hot shingle costs one
-    * combined count row per task, never k² join output. */
-  private[graft] def cappedPostings(tok: DataFrame, maxDf: Long): DataFrame = {
+  // --- the set-similarity join ---
+
+  /** THE set-similarity join over DF-capped shingle postings, one path
+    * for the Jaccard pair build ([[jaccardPairs]]), containment
+    * ([[TextOps.containmentPairs]]) and incremental dedup
+    * ([[incrementalNew]]); q21's LSH path ([[minhashLsh]]) enters at the
+    * verify step. Over a `(doc_id, shingles)` frame `sh` and its capped
+    * postings `capped` ([[cappedPostings]]):
+    *
+    *  1. Candidates: self-join `capped` on the shingle, keeping the pairs
+    *     `side(a, b)` admits (`a < b` for self pairs, `a < splitId ≤ b`
+    *     for existing × incoming; Catalyst pushes a one-sided conjunct
+    *     below the join), and count each pair's shared KEPT shingles `cc`
+    *     in one map-side-combined groupBy (the shuffle a DISTINCT would
+    *     pay, with the count kept). Fan-in is bounded by the co-occurrence
+    *     of non-stop shingles, so a boilerplate shingle never blows up
+    *     the shuffle.
+    *  2. Prefilter: the true intersection obeys
+    *     `c ≤ cmax = cc + min(ncap_a, ncap_b)` ([[docStats]]), because
+    *     every shared capped-out shingle is a capped shingle of BOTH docs.
+    *     `bound(cmax, n_a, n_b)` is the caller's score at `c = cmax`, and
+    *     each score is monotone in c, so a pair whose bound is below
+    *     `threshold - RoundSlack` cannot pass the caller's 4dp-rounded
+    *     filter: the prefilter drops no pair the score keeps, and is
+    *     exact when no shingle was capped. Survivors ≈ true near-dups, so
+    *     the array-carrying joins touch near-dup-density rows, not
+    *     candidate volume.
+    *  3. Verify ([[verified]]): the exact intersection on the FULL
+    *     shingle sets, so the cap never changes a reported score.
+    *
+    * The cap's one miss mode: a pair whose EVERY shared shingle has
+    * df > cap yields no candidate, so a duplicate cluster of more than
+    * [[DefaultMaxDf]] members is invisible to similarity candidate
+    * generation, and that is precisely the mass-replicated boilerplate a
+    * crawl dedup must catch. [[exactEdgesFrom]] closes the byte-identical
+    * half of that hole (the cluster build and q112 read its edges); the
+    * residual miss, NEAR-identical all-boilerplate documents, is
+    * accepted. The steps never branch on their caller. */
+  private def similarPairsOver(sh: DataFrame, capped: DataFrame,
+                               side: (Column, Column) => Column,
+                               bound: (Column, Column, Column) => Column,
+                               threshold: Double): DataFrame = {
+    val cand = capped.as("a").join(capped.as("b"),
+        col("a.s") === col("b.s") && side(col("a.doc_id"), col("b.doc_id")))
+      .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
+      .agg(count(lit(1)).as("cc"))
+    val stats = docStats(sh, capped)
+    val pruned = cand
+      .join(stats.as("sa"), col("doc_i") === col("sa.doc_id"))
+      .join(stats.as("sb"), col("doc_j") === col("sb.doc_id"))
+      .withColumn("cmax", col("cc") + least(col("sa.ncap"), col("sb.ncap")))
+      .filter(bound(col("cmax"), col("sa.n"), col("sb.n")) >= threshold - RoundSlack)
+      .select(col("doc_i"), col("doc_j"))
+    verified(pruned, sh)
+  }
+
+  /** [[similarPairsOver]] on the lake: the session's `shingled_docs` and
+    * `capped_postings` layers. */
+  private[operators] def similarPairs(spark: SparkSession, sfDir: String,
+                                      side: (Column, Column) => Column,
+                                      bound: (Column, Column, Column) => Column,
+                                      threshold: Double): DataFrame =
+    similarPairsOver(materializedShingled(spark, sfDir),
+      materializedCappedPostings(spark, sfDir), side, bound, threshold)
+
+  /** [[similarPairsOver]] on a planted `(doc_id, shingles)` frame, its
+    * postings capped at `maxDf` inline (`Long.MaxValue` is the uncapped
+    * reference the specs compare against). */
+  private[operators] def similarPairsFrom(sh: DataFrame, maxDf: Long,
+                                          side: (Column, Column) => Column,
+                                          bound: (Column, Column, Column) => Column,
+                                          threshold: Double): DataFrame =
+    similarPairsOver(sh, cappedPostings(sh, maxDf), side, bound, threshold)
+
+  /** The `(doc_id, s)` postings of a `(doc_id, shingles)` frame with the
+    * document-frequency cap applied: df per shingle as a groupBy-count
+    * (map-side partial aggregation collapses the hot shingle to one row
+    * per mapper — never k rows spilling in one window partition), then
+    * a semi-join keeps postings of surviving shingles. Linear in
+    * postings; the hot shingle costs one combined count row per task,
+    * never k² join output. */
+  private def cappedPostings(sh: DataFrame, maxDf: Long): DataFrame = {
+    val tok = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
     val keep = tok.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select(col("s"))
     tok.join(keep, Seq("s"), "left_semi")
   }
 
-  /** 4dp HALF_UP rounding can lift a ratio by just under 5e-5, so any
-    * pre-verification bound compares against `threshold - RoundSlack`
-    * to stay provably recall-neutral w.r.t. the rounded filter. */
-  private[operators] val RoundSlack = 5e-5
+  /** 4dp HALF_UP rounding can lift a ratio by just under 5e-5, so the
+    * prefilter compares its bound against `threshold - RoundSlack`. */
+  private val RoundSlack = 5e-5
 
   /** Per-doc shingle-count stats for the prefilter: total shingles `n`
     * and the number of CAPPED-OUT (df > cap) shingles `ncap`. Narrow
     * (three longs per doc); derived from frames the plan already
     * computes. */
-  private[operators] def docStats(sh: DataFrame, capped: DataFrame): DataFrame =
+  private def docStats(sh: DataFrame, capped: DataFrame): DataFrame =
     sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n"))
       .join(capped.groupBy(col("doc_id")).agg(count(lit(1)).as("nk")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("n"),
         (col("n") - coalesce(col("nk"), lit(0L))).as("ncap"))
 
-  /** Upper-bound prefilter between candidate generation and exact
-    * verification. The candidate aggregation already yields
-    * `cc = |A∩B ∩ kept|` (shared shingles that survived the cap); the
-    * true intersection obeys `c ≤ cc + min(ncap_A, ncap_B)` because
-    * every shared capped-out shingle is a capped shingle of BOTH docs.
-    * Jaccard is monotone in c, so a pair whose bound cannot reach the
-    * (rounding-slackened) threshold is dropped BEFORE the verification
-    * join that carries full shingle arrays — provably recall-neutral,
-    * and the bound is EXACT (= the true Jaccard) whenever no shingle
-    * was capped. Survivor volume ≈ true near-dup pairs, so the
-    * array-carrying joins touch near-dup-density rows, not candidate
-    * volume. */
-  private def jaccardPrefilter(cand: DataFrame, stats: DataFrame,
-                               threshold: Double): DataFrame =
-    cand
-      .join(stats.as("sa"), col("doc_i") === col("sa.doc_id"))
-      .join(stats.as("sb"), col("doc_j") === col("sb.doc_id"))
-      .withColumn("cmax", col("cc") + least(col("sa.ncap"), col("sb.ncap")))
-      .filter(col("cmax").cast("double") /
-        (col("sa.n") + col("sb.n") - col("cmax")) >= threshold - RoundSlack)
-      .select(col("doc_i"), col("doc_j"))
+  /** The verify step: pairs `(doc_i, doc_j)` joined to both docs' FULL
+    * shingle sets, with the exact intersection size `c`
+    * (`array_intersect`) and the two set sizes, as
+    * `(doc_i, doc_j, c, ni, nj)`. Each caller applies its own score and
+    * output shape. */
+  private def verified(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val full = sh.select(col("doc_id"), col("shingles"))
+    pairs
+      .join(full.as("na"), col("doc_i") === col("na.doc_id"))
+      .join(full.as("nb"), col("doc_j") === col("nb.doc_id"))
+      .select(col("doc_i"), col("doc_j"),
+        size(array_intersect(col("na.shingles"), col("nb.shingles"))).as("c"),
+        size(col("na.shingles")).as("ni"), size(col("nb.shingles")).as("nj"))
+  }
 
-  /** Exact n-gram Jaccard similarity join via inverted index: explode
-    * shingles → DF-cap the postings ([[cappedPostings]]) → self-join on
-    * shingle → per-pair co-occurrence count (one groupBy, map-side
-    * combined — the same shuffle a DISTINCT would pay, but the count is
-    * kept) → [[jaccardPrefilter]] upper-bound prune → exact verification
-    * on the full shingle sets (|A∩B| / (|A|+|B|-|A∩B|) via
-    * `array_intersect`) for the few survivors. This is the standard
-    * scalable exact algorithm (shuffle on shingle, then on the pair);
-    * candidate fan-in is bounded by true co-occurrence of NON-stop
-    * shingles, so a high-df boilerplate shingle can never blow up the
-    * shuffle, and the array-carrying verification join is bounded by
-    * near-dup density, not candidate volume.
-    */
-  def jaccardPairs(spark: SparkSession, sfDir: String, threshold: Double): DataFrame =
-    jaccardPairsCore(materializedShingled(spark, sfDir),
-      materializedCappedPostings(spark, sfDir), threshold)
+  /** `c / (na + nb - c)`, the Jaccard of two sets of sizes `na`, `nb`
+    * that share `c` elements: the near-dup prefilter's bound at `cmax`
+    * and, rounded to 4dp, the verified score at `c`. */
+  private val jaccardRatio: (Column, Column, Column) => Column =
+    (c, na, nb) => c.cast("double") / (na + nb - c)
+
+  /** Verified pairs scored by 4dp Jaccard and kept at
+    * [[NearDupThreshold]]: `(doc_i, doc_j, jaccard)`. */
+  private def jaccardKept(pairs: DataFrame): DataFrame =
+    pairs.withColumn("jaccard", round(jaccardRatio(col("c"), col("ni"), col("nj")), 4))
+      .filter(col("jaccard") >= NearDupThreshold)
+      .select(col("doc_i"), col("doc_j"), col("jaccard"))
+
+  /** Exact n-gram Jaccard near-dup pairs at [[NearDupThreshold]]: the
+    * set-similarity join ([[similarPairsOver]]) over self pairs, bounded
+    * and scored by |A∩B| / (|A|+|B|-|A∩B|). Read through the `near_pairs`
+    * layer ([[materializedNearPairs]]). */
+  def jaccardPairs(spark: SparkSession, sfDir: String): DataFrame =
+    jaccardKept(similarPairs(spark, sfDir, _ < _, jaccardRatio, NearDupThreshold))
+
+  /** [[jaccardPairs]] over a planted `(doc_id, shingles)` frame at cap
+    * `maxDf` — spec-visible so the stop-shingle guard is testable. */
+  private[graft] def jaccardPairsFrom(sh: DataFrame, maxDf: Long): DataFrame =
+    jaccardKept(similarPairsFrom(sh, maxDf, _ < _, jaccardRatio, NearDupThreshold))
 
   /** The MATERIALIZED verified near-dup pair layer (`near_pairs`):
-    * [[jaccardPairs]] at [[NearDupThreshold]] computed once per
-    * (session, sfDir) and re-entered as a checkpointed frame. Three
-    * consumers read the identical pair set — the q20 report, the
-    * q156 flow matrix, and the cluster-label build — and before this
+    * [[jaccardPairs]] computed once per (session, sfDir) and re-entered
+    * as a checkpointed frame. Three consumers read the identical pair
+    * set — the q20 report, the q156 flow matrix, and the cluster-label
+    * build — and before this
     * layer each re-ran the full shingle-join + verification pass
     * (q156 alone paid ~3 s of the ~4 s the bench charged it). The
     * pair frame is near-dup-density-bounded, so the checkpoint is
     * tiny relative to the corpus at any scale. */
   def materializedNearPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Layers.frame(spark, "near_pairs", sfDir)(jaccardPairs(spark, sfDir, NearDupThreshold))
+    graft.Layers.frame(spark, "near_pairs", sfDir)(jaccardPairs(spark, sfDir))
 
   /** q156: the cross-source duplicate-flow matrix — for every
     * unordered source pair, how many verified near-dup pairs
-    * ([[jaccardPairs]] at [[NearDupThreshold]]) and exact-duplicate star edges
+    * ([[jaccardPairs]]) and exact-duplicate star edges
     * ([[exactEdgesFrom]], group-min → member) connect them. The
     * provenance diagnostic a curation team reads before dropping or
     * reweighting a source: a hot off-diagonal cell means one source
@@ -306,37 +379,6 @@ object Dedup {
         round(abs(est - col("jaccard")), 4).as("abs_err"))
   }
 
-  /** [[jaccardPairs]] over an arbitrary `(doc_id, shingles)` frame —
-    * spec-visible so the stop-shingle guard is testable on planted
-    * corpora. */
-  private[graft] def jaccardPairsFrom(sh: DataFrame, threshold: Double,
-                                      maxDf: Long): DataFrame = {
-    val tok = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-    jaccardPairsCore(sh, cappedPostings(tok, maxDf), threshold)
-  }
-
-  /** The shared candidate → prefilter → verify pipeline over
-    * caller-supplied shingle and capped-posting frames (the prod path
-    * hands in the materialized layers; the spec path computes them
-    * inline on planted corpora). */
-  private def jaccardPairsCore(sh: DataFrame, capped: DataFrame,
-                               threshold: Double): DataFrame = {
-    val cand = capped.as("a").join(capped.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
-      .agg(count(lit(1)).as("cc"))
-    val pruned = jaccardPrefilter(cand, docStats(sh, capped), threshold)
-    val full = sh.select(col("doc_id"), col("shingles"))
-    pruned
-      .join(full.as("na"), col("doc_i") === col("na.doc_id"))
-      .join(full.as("nb"), col("doc_j") === col("nb.doc_id"))
-      .withColumn("c", size(array_intersect(col("na.shingles"), col("nb.shingles"))))
-      .withColumn("jaccard", round(col("c").cast("double") /
-        (size(col("na.shingles")) + size(col("nb.shingles")) - col("c")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_i"), col("doc_j"), col("jaccard"))
-  }
-
   // --- MinHash + LSH ---
   // 64 hash functions realized as the engine-portable affine family
   // over P = 2^31-1 with an md5-derived base ([[graft.functions
@@ -367,8 +409,9 @@ object Dedup {
         .select(col("doc_id"), col("shingles"), col("sig"))
     }
 
-  /** LSH banding → candidate pairs → exact-Jaccard verification. */
-  def minhashLsh(spark: SparkSession, sfDir: String, threshold: Double): DataFrame = {
+  /** LSH banding → candidate pairs → the set-similarity join's exact
+    * verify ([[verified]]), kept at [[NearDupThreshold]]. */
+  def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val sigs = minhashSignatures(spark, sfDir)
     val bands = sigs.select(col("doc_id"), explode(expr(
         s"transform(sequence(0, ${Bands - 1}), j -> " +
@@ -380,15 +423,7 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_i"), col("y.doc_id").as("doc_j"))
       .distinct()
-    val sh = sigs.select(col("doc_id"), col("shingles"))
-    cand
-      .join(sh.as("na"), col("doc_i") === col("na.doc_id"))
-      .join(sh.as("nb"), col("doc_j") === col("nb.doc_id"))
-      .withColumn("inter", size(array_intersect(col("na.shingles"), col("nb.shingles"))))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("na.shingles")) + size(col("nb.shingles")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_i"), col("doc_j"), col("jaccard"))
+    jaccardKept(verified(cand, sigs))
   }
 
   // --- SimHash ---
@@ -482,25 +517,26 @@ object Dedup {
     * their own cluster. `cluster_id` = min doc_id of the component —
     * the canonical representative, which is what a keep-one dedup pass
     * keys on. */
-  def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // the lake path reads the near_pairs layer (one pair build per
-    // session, shared with q20/q156); the spec-generic planted-corpus
-    // path below keeps building its own pairs
-    val docs = Tables.documents(spark, sfDir)
-    val edges = materializedNearPairs(spark, sfDir)
-      .select(col("doc_i"), col("doc_j"))
-      .unionByName(materializedExactEdges(spark, sfDir))
-    docs.select(col("doc_id"))
-      .join(propagateLabels(edges), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-  }
+  def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame =
+    clustersOf(Tables.documents(spark, sfDir), materializedNearPairs(spark, sfDir),
+      materializedExactEdges(spark, sfDir))
 
-  /** [[nearDupClusters]] over an arbitrary documents frame — spec-visible
-    * so the DF-cap ∪ exact-edge interplay is testable on planted
-    * mass-duplicated corpora. */
-  private[graft] def nearDupClustersFrom(docs: DataFrame, threshold: Double): DataFrame =
+  /** [[nearDupClusters]] over an arbitrary documents frame, building its
+    * own pairs and edges — spec-visible so the DF-cap ∪ exact-edge
+    * interplay is testable on planted mass-duplicated corpora. */
+  private[graft] def nearDupClustersFrom(docs: DataFrame): DataFrame =
+    clustersOf(docs, jaccardPairsFrom(shingledFrom(docs), DefaultMaxDf), exactEdgesFrom(docs))
+
+  /** `(doc_id, cluster_id)` for every doc of `docs`: the components of
+    * the near-dup `pairs` UNION the exact-duplicate star edges
+    * ([[exactEdgesFrom]]), so mass-replicated identical docs cluster even
+    * when every shingle is DF-capped. Labels propagate over edge
+    * endpoints only; every other doc is attached as its own cluster by
+    * one left join. */
+  private def clustersOf(docs: DataFrame, pairs: DataFrame, exactEdges: DataFrame): DataFrame =
     docs.select(col("doc_id"))
-      .join(edgeLabelsFrom(docs, threshold), Seq("doc_id"), "left")
+      .join(propagateLabels(pairs.select(col("doc_i"), col("doc_j")).unionByName(exactEdges)),
+        Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
 
   /** The MATERIALIZED exact-duplicate star edges — duplicate-group-
@@ -522,7 +558,7 @@ object Dedup {
     * the near-dup graph closes the identical-copy half of the
     * stop-shingle recall hole; the residual miss (near-identical but
     * not byte-identical all-boilerplate docs) is documented on
-    * [[DefaultMaxDf]]. One groupBy over the corpus, keyed on
+    * [[similarPairsOver]]. One groupBy over the corpus, keyed on
     * `sha2(text, 256)` — both the aggregation and the member join
     * shuffle fixed-width hex digests, never document payloads, so the
     * edge pass stays narrow at 100 TB. */
@@ -548,28 +584,15 @@ object Dedup {
   def materializedClusters(spark: SparkSession, sfDir: String): DataFrame =
     graft.Layers.frame(spark, "dedup_clusters", sfDir)(nearDupClusters(spark, sfDir))
 
-  /** Component labels for the edge-endpoint set only (every doc that
-    * appears in some near-dup pair or exact-duplicate group); singletons
-    * are absent — the caller decides whether to attach them
-    * ([[nearDupClusters]]) or skip them ([[clusterKeep]], where they can
-    * never reach n >= 2). The edge set is the Jaccard similarity graph
-    * UNION the exact-duplicate star edges ([[exactEdgesFrom]]) so
-    * mass-replicated identical docs cluster even when every shingle is
-    * DF-capped. */
-  private def edgeLabelsFrom(docs: DataFrame, threshold: Double): DataFrame =
-    propagateLabels(
-      jaccardPairsFrom(shingledFrom(docs), threshold, DefaultMaxDf)
-        .select(col("doc_i"), col("doc_j"))
-        .unionByName(exactEdgesFrom(docs)))
-
   /** Connected-component labels for an arbitrary undirected edge list
     * `(doc_i, doc_j)`: per round, each node takes the min label among
     * itself and its neighbors, then POINTER-JUMPS (adopts its label's
     * label) — the path-halving trick that turns diameter-bound
     * convergence into O(log diameter), so a pathological duplicate
     * CHAIN converges just as fast as a clique. One keyed join per step,
-    * label state only for edge endpoints. */
-  private[graft] def propagateLabels(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
+    * label state only for edge endpoints; at most [[MaxLabelRounds]]
+    * rounds. */
+  private[graft] def propagateLabels(edges: DataFrame): DataFrame = {
     // undirected: propagate both ways
     val bidir = edges.unionByName(
         edges.select(col("doc_j").as("doc_i"), col("doc_i").as("doc_j")))
@@ -581,7 +604,7 @@ object Dedup {
       .withColumn("lbl", col("doc_id"))
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxLabelRounds) {
       val neighborMin = bidir
         .join(labels.withColumnRenamed("doc_id", "nbr"), col("doc_j") === col("nbr"))
         .groupBy(col("doc_i")).agg(min(col("lbl")).as("nlbl"))
@@ -605,7 +628,7 @@ object Dedup {
       converged = changed == 0
       round += 1
     }
-    require(converged, s"label propagation did not converge in $maxRounds rounds")
+    require(converged, s"label propagation did not converge in $MaxLabelRounds rounds")
     labels
   }
 
@@ -613,87 +636,59 @@ object Dedup {
     * arrives and must be deduplicated against the EXISTING corpus, not
     * against itself (intra-batch dups are a separate [[clusterKeep]]
     * pass). Keeps each incoming document unless it near-dups (Jaccard ≥
-    * threshold) some existing document.
+    * [[NearDupThreshold]]) some existing document.
     *
-    * Scale shape: the same DF-capped shingle inverted index as
-    * [[jaccardPairs]], but the self-join is REPLACED by an
-    * existing×incoming cross join on the shingle key — candidate fan-in
-    * still bounded by true co-occurrence of non-stop shingles, and the
-    * incoming side is batch-sized, not corpus-sized. Verification scores
-    * the FULL shingle sets, so the cap never changes a reported Jaccard.
-    * Documents too short to shingle cannot collide and pass straight
-    * through (the left-anti keeps them — no explode for them at all).
-    * At 100 TB the existing side's postings (and their df counts) come
-    * from the materialized shingle index a production pipeline
-    * maintains; here both sides derive from the same table split on
-    * doc_id, so df is counted over the combined corpus.
+    * Scale shape: the set-similarity join ([[similarPairsOver]]) with the
+    * cross-split side rule `existing < splitId ≤ incoming` in place of
+    * the self-pair rule, so the candidate join is existing × incoming on
+    * the shingle key and the incoming side is batch-sized, not
+    * corpus-sized. Documents too short to shingle cannot collide and
+    * pass straight through (the left-anti keeps them — no explode for
+    * them at all). At 100 TB the existing side's postings (and their df
+    * counts) come from the materialized shingle index a production
+    * pipeline maintains; here both sides derive from the same table
+    * split on doc_id, so df is counted over the combined corpus.
     *
     * BYTE-IDENTICAL incoming copies are rejected via the exact-
-    * duplicate star edges ([[exactEdgesFrom]]): an incoming doc
-    * duplicates an existing one exactly when it appears as a `doc_j`
-    * whose group representative `doc_i` (the group's MIN doc_id) is on
-    * the existing side — `doc_i < splitId ≤ doc_j` — since any group
-    * containing an existing member has an existing minimum. This is
-    * set-identical to the former `sha2(text, 256)` semi-join against
-    * the existing side (spec-pinned on a planted corpus), but the prod
-    * path now reads the session's `exact_edges` LAYER instead of
-    * re-hashing the text column twice per invocation — two fewer
-    * corpus-payload scans per run. Without the bypass, an incoming
-    * copy of a boilerplate group with more than [[DefaultMaxDf]] members shares
-    * only capped shingles, generates no similarity candidate, and
-    * would survive as "new" — and the mass-replicated identical page
-    * is exactly what a nightly crawl dedup must reject. The residual
-    * miss stays the NEAR-identical all-boilerplate document
-    * ([[DefaultMaxDf]]). */
-  def incrementalNew(spark: SparkSession, sfDir: String): DataFrame =
+    * duplicate star edges ([[exactEdgesFrom]], the session's
+    * `exact_edges` layer): an incoming doc duplicates an existing one
+    * exactly when it appears as a `doc_j` whose group representative
+    * `doc_i` (the group's MIN doc_id) is on the existing side — the same
+    * cross-split rule — since any group containing an existing member
+    * has an existing minimum (set-identical to a `sha2(text, 256)`
+    * semi-join against the existing side, spec-pinned). Without the
+    * bypass, an incoming copy of a boilerplate group with more than
+    * [[DefaultMaxDf]] members shares only capped shingles, generates no
+    * similarity candidate, and would survive as "new". */
+  def incrementalNew(spark: SparkSession, sfDir: String): DataFrame = {
+    val splitId = 250L
     incrementalNewCore(Tables.documents(spark, sfDir),
-      materializedShingled(spark, sfDir),
-      materializedCappedPostings(spark, sfDir),
-      materializedExactEdges(spark, sfDir), 250L, NearDupThreshold)
+      similarPairs(spark, sfDir, crossSplit(splitId), jaccardRatio, NearDupThreshold),
+      materializedExactEdges(spark, sfDir), splitId)
+  }
 
   /** [[incrementalNew]] over an arbitrary `(doc_id, text, n_chars)`
     * frame — spec-visible so the exact-dup bypass and the DF-cap
     * interplay are testable on planted mass-duplicated corpora. */
-  private[graft] def incrementalNewFrom(docs: DataFrame, splitId: Long,
-                                        threshold: Double): DataFrame = {
-    val sh = shingledFrom(docs)
-    val tok = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-    incrementalNewCore(docs, sh, cappedPostings(tok, DefaultMaxDf),
-      exactEdgesFrom(docs), splitId, threshold)
-  }
+  private[graft] def incrementalNewFrom(docs: DataFrame, splitId: Long): DataFrame =
+    incrementalNewCore(docs,
+      similarPairsFrom(shingledFrom(docs), DefaultMaxDf, crossSplit(splitId), jaccardRatio,
+        NearDupThreshold),
+      exactEdgesFrom(docs), splitId)
 
-  /** The shared incremental pipeline over caller-supplied shingle and
-    * capped-posting frames (prod hands in the materialized layers —
-    * the q112 plan evaluated `word_shingles` 34 times before that). */
-  private def incrementalNewCore(docs: DataFrame, sh: DataFrame,
-                                 capped: DataFrame, exactEdges: DataFrame,
-                                 splitId: Long,
-                                 threshold: Double): DataFrame = {
-    // doc_i = existing-corpus side, doc_j = incoming side; the pair
-    // aggregation keeps the capped co-occurrence count for the same
-    // upper-bound prefilter as [[jaccardPairsFrom]]
-    val cand = capped.as("e").filter(col("e.doc_id") < splitId)
-      .join(capped.as("i").filter(col("i.doc_id") >= splitId),
-        col("e.s") === col("i.s"))
-      .groupBy(col("e.doc_id").as("doc_i"), col("i.doc_id").as("doc_j"))
-      .agg(count(lit(1)).as("cc"))
-    val pruned = jaccardPrefilter(cand, docStats(sh, capped), threshold)
-    val full = sh.select(col("doc_id"), col("shingles"))
-    val dupIncoming = pruned
-      .join(full.as("ne"), col("doc_i") === col("ne.doc_id"))
-      .join(full.as("ni"), col("doc_j") === col("ni.doc_id"))
-      .withColumn("c", size(array_intersect(col("ne.shingles"), col("ni.shingles"))))
-      .filter(round(col("c").cast("double") /
-        (size(col("ne.shingles")) + size(col("ni.shingles")) - col("c")), 4) >= threshold)
-      .select(col("doc_j").as("doc_id")).distinct()
-    // exact-dup bypass: a byte-identical incoming copy is a duplicate
-    // regardless of shingle DF. Derived from the star edges — doc_j is
-    // an incoming exact copy of an existing doc iff its group
-    // representative doc_i (the group MIN) is existing-side; each
-    // member appears at most once as doc_j, matching the former
-    // semi-join's one-row-per-doc output (equivalence spec-pinned)
+  /** The pair-side rule of incremental dedup: `a` existing, `b` incoming. */
+  private def crossSplit(splitId: Long): (Column, Column) => Column =
+    (a, b) => a < splitId && b >= splitId
+
+  /** Incoming docs (`doc_id >= splitId`) that are neither in a verified
+    * near-dup pair nor an exact copy of an existing doc. */
+  private def incrementalNewCore(docs: DataFrame, pairs: DataFrame, exactEdges: DataFrame,
+                                 splitId: Long): DataFrame = {
+    val dupIncoming = jaccardKept(pairs).select(col("doc_j").as("doc_id")).distinct()
+    // each member appears at most once as doc_j, matching a semi-join's
+    // one-row-per-doc output (equivalence spec-pinned)
     val exactDupIncoming = exactEdges
-      .filter(col("doc_i") < splitId && col("doc_j") >= splitId)
+      .filter(crossSplit(splitId)(col("doc_i"), col("doc_j")))
       .select(col("doc_j").as("doc_id"))
     // no distinct over the union: left_anti ignores right-side
     // multiplicity, and a doc on both lists (exact copy that also

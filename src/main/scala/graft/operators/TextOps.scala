@@ -360,64 +360,43 @@ object TextOps {
   def materializedSurprisal(spark: SparkSession, sfDir: String): DataFrame =
     graft.Layers.frame(spark, "surprisal_scores", sfDir)(unigramSurprisal(spark, sfDir))
 
+  /** The containment threshold of q83. */
+  val ContainmentThreshold = 0.8
+
   /** CONTAINMENT (asymmetric Jaccard) near-dup join: `|A∩B| / |A|` —
     * the direction-sensitive overlap that catches a document EMBEDDED
     * in a longer one, which symmetric Jaccard dilutes below threshold.
-    * Same DF-capped inverted-index shape as [[Dedup.jaccardPairs]]
-    * (shuffle keyed on the shingle, fan-in bounded by co-occurrence of
-    * non-stop shingles — boilerplate-heavy short docs are containment's
-    * target case, so the hot-shingle cap matters MORE here, not less):
-    * capped candidate generation → upper-bound prefilter
-    * (`c ≤ cc + min(ncap)`, containment monotone in c, max over both
-    * directions is c/min(|A|,|B|) — recall-neutral by the same argument
-    * as [[Dedup.jaccardPairs]]) → exact verification on the full
-    * shingle sets, each undirected intersection emitting BOTH directed
-    * containments — no second pair pass. A pair whose every shared
-    * shingle is capped is missed (see [[Dedup.DefaultMaxDf]] for the
-    * documented miss mode; the exact-duplicate case is covered by
-    * [[Dedup.exact]]). */
-  def containmentPairs(spark: SparkSession, sfDir: String, threshold: Double): DataFrame =
-    containmentPairsCore(Dedup.materializedShingled(spark, sfDir),
-      Dedup.materializedCappedPostings(spark, sfDir), threshold)
+    * Runs the set-similarity join ([[Dedup.similarPairsOver]]: DF-capped
+    * candidates, upper-bound prefilter, exact verify) over self pairs;
+    * boilerplate-heavy short docs are containment's target case, so the
+    * hot-shingle cap matters MORE here, not less. Its bound is
+    * `cmax / min(|A|, |B|)`, the larger of the two directed containments,
+    * and each verified pair emits BOTH directed containments — no second
+    * pair pass. */
+  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame =
+    directedContainment(Dedup.similarPairs(spark, sfDir, _ < _, containmentBound,
+      ContainmentThreshold))
 
-  /** [[containmentPairs]] over an arbitrary `(doc_id, shingles)` frame —
-    * spec-visible so the DF-cap + direction-aware prefilter are
-    * testable on planted boilerplate corpora. */
-  private[graft] def containmentPairsFrom(sh: DataFrame, threshold: Double,
-                                          maxDf: Long): DataFrame = {
-    val tok = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-    containmentPairsCore(sh, Dedup.cappedPostings(tok, maxDf), threshold)
-  }
+  /** [[containmentPairs]] over an arbitrary `(doc_id, shingles)` frame at
+    * cap `maxDf` — spec-visible so the DF-cap + direction-aware prefilter
+    * are testable on planted boilerplate corpora. */
+  private[graft] def containmentPairsFrom(sh: DataFrame, maxDf: Long): DataFrame =
+    directedContainment(Dedup.similarPairsFrom(sh, maxDf, _ < _, containmentBound,
+      ContainmentThreshold))
 
-  /** The shared containment pipeline over caller-supplied shingle and
-    * capped-posting frames (prod hands in the materialized layers). */
-  private def containmentPairsCore(sh: DataFrame, capped: DataFrame,
-                                   threshold: Double): DataFrame = {
-    val cand = capped.as("a").join(capped.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
-      .agg(count(lit(1)).as("cc"))
-    val stats = Dedup.docStats(sh, capped)
-    val pruned = cand
-      .join(stats.as("sa"), col("doc_i") === col("sa.doc_id"))
-      .join(stats.as("sb"), col("doc_j") === col("sb.doc_id"))
-      .withColumn("cmax", col("cc") + least(col("sa.ncap"), col("sb.ncap")))
-      .filter(col("cmax").cast("double") / least(col("sa.n"), col("sb.n"))
-        >= threshold - Dedup.RoundSlack)
-      .select(col("doc_i"), col("doc_j"))
-    val full = sh.select(col("doc_id"), col("shingles"))
-    pruned
-      .join(full.as("na"), col("doc_i") === col("na.doc_id"))
-      .join(full.as("nb"), col("doc_j") === col("nb.doc_id"))
-      .withColumn("c", size(array_intersect(col("na.shingles"), col("nb.shingles"))))
-      .withColumn("ni", size(col("na.shingles")).cast("long"))
-      .withColumn("nj", size(col("nb.shingles")).cast("long"))
+  /** The prefilter bound: the larger directed containment at `cmax`. */
+  private val containmentBound: (Column, Column, Column) => Column =
+    (cmax, na, nb) => cmax.cast("double") / least(na, nb)
+
+  /** Verified pairs `(doc_i, doc_j, c, ni, nj)` as both directed
+    * containments, 4dp, kept at [[ContainmentThreshold]]. */
+  private def directedContainment(pairs: DataFrame): DataFrame =
+    pairs
       .selectExpr(
         "stack(2, doc_i, doc_j, round(CAST(c AS DOUBLE) / ni, 4), " +
           "doc_j, doc_i, round(CAST(c AS DOUBLE) / nj, 4)) " +
           "AS (src_doc, dst_doc, containment)")
-      .filter(col("containment") >= threshold)
-  }
+      .filter(col("containment") >= ContainmentThreshold)
 
   /** Email-address pattern shared by count + replace (Java regex and
     * RE2 agree on this subset — no backrefs, no lookaround). */

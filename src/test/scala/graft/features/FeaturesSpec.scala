@@ -51,7 +51,8 @@ class FeaturesSpec extends SparkSpec {
     // embeddings must be closer than a random pair's on average.
     val emb = Features.textEmbedding(spark, sf("0.01"))
       .as[(Long, Array[Double])].collect().toMap
-    val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"), 0.9)
+    val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"))
+      .filter($"jaccard" >= 0.9)
       .select("doc_i", "doc_j").as[(Long, Long)].collect()
     assert(dups.nonEmpty)
     def dist(a: Array[Double], b: Array[Double]) =
@@ -137,7 +138,8 @@ class FeaturesSpec extends SparkSpec {
     val emb = Features.textEmbeddingHashed(spark, sf("0.01"))
       .as[(Long, Array[Double])].collect().toMap
     // high-Jaccard near-dups: mean distance well under the random background
-    val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"), 0.9)
+    val dups = graft.operators.Dedup.jaccardPairs(spark, sf("0.01"))
+      .filter($"jaccard" >= 0.9)
       .select("doc_i", "doc_j").as[(Long, Long)].collect()
     assert(dups.nonEmpty)
     def dist(a: Array[Double], b: Array[Double]) =

@@ -8,9 +8,9 @@ class DedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("minhash LSH candidates recover the exact Jaccard pairs (recall)") {
-    val exact = Dedup.jaccardPairs(spark, sf("0.01"), 0.5)
+    val exact = Dedup.jaccardPairs(spark, sf("0.01"))
       .select("doc_i", "doc_j").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashLsh(spark, sf("0.01"), 0.5)
+    val lsh = Dedup.minhashLsh(spark, sf("0.01"))
       .select("doc_i", "doc_j").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, "fixture should contain planted near-dups")
     // LSH verifies candidates with exact Jaccard → subset; at 16 bands × 4
@@ -36,7 +36,7 @@ class DedupSpec extends SparkSpec {
   test("near-dup clusters equal union-find over the exact pair graph") {
     val labels = Dedup.nearDupClusters(spark, sf())
       .as[(Long, Long)].collect().toMap
-    val pairs = Dedup.jaccardPairs(spark, sf(), 0.5)
+    val pairs = Dedup.jaccardPairs(spark, sf())
       .select($"doc_i", $"doc_j").as[(Long, Long)].collect()
     assert(pairs.nonEmpty, "fixture must contain near-dup pairs")
     // driver-side union-find ground truth
@@ -73,9 +73,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("DF cap: high-df shingles leave candidate generation; low-df survivors report exact Jaccard") {
-    val sh = Dedup.shingledFrom(plantedDocs)
-    val tok = sh.select($"doc_id", explode($"shingles").as("s"))
-    val kept = Dedup.cappedPostings(tok, Dedup.DefaultMaxDf)
+    // the capped_postings layer, built over the planted corpus written
+    // as a one-table lake
+    val lake = java.nio.file.Files.createTempDirectory("dfcap_lake").toString
+    plantedDocs.write.parquet(s"$lake/documents.parquet")
+    val kept = Dedup.materializedCappedPostings(spark, lake)
       .select("s").distinct().as[String].collect().toSet
     // every purely-boilerplate shingle (df >= 100) must be capped out
     val boilerOnly = "rights reserved by"
@@ -83,9 +85,10 @@ class DedupSpec extends SparkSpec {
     // the unique-prefix shingles (df = 2) must survive
     assert(kept.contains("unique snippet alpha"), "low-df shingle was capped")
 
-    val capped = Dedup.jaccardPairsFrom(sh, 0.5, Dedup.DefaultMaxDf)
+    val sh = Dedup.shingledFrom(plantedDocs)
+    val capped = Dedup.jaccardPairsFrom(sh, Dedup.DefaultMaxDf)
       .as[(Long, Long, Double)].collect().toSet
-    val uncapped = Dedup.jaccardPairsFrom(sh, 0.5, Long.MaxValue)
+    val uncapped = Dedup.jaccardPairsFrom(sh, Long.MaxValue)
       .as[(Long, Long, Double)].collect().toSet
     // the (1,2) pair survives via its low-df shingles and its Jaccard is
     // scored on the FULL shingle sets — identical to the uncapped run
@@ -100,7 +103,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exact-dup edges close the identical-copy hole: capped boilerplate copies still cluster") {
-    val labels = Dedup.nearDupClustersFrom(plantedDocs, 0.5)
+    val labels = Dedup.nearDupClustersFrom(plantedDocs)
       .as[(Long, Long)].collect().toMap
     // ...but the exact-edge union still clusters the identical copies
     (1000L until 1100L).foreach(d =>
@@ -128,7 +131,7 @@ class DedupSpec extends SparkSpec {
       (1050L, "completely fresh content sharing no phrases whatsoever"))
     val docs = (existing ++ incoming).toDF("doc_id", "text")
       .withColumn("n_chars", length($"text").cast("long"))
-    val kept = Dedup.incrementalNewFrom(docs, splitId = 1000L, threshold = 0.5)
+    val kept = Dedup.incrementalNewFrom(docs, splitId = 1000L)
       .select("doc_id").as[Long].collect().toSet
     (1000L until 1030L).foreach(d =>
       assert(!kept.contains(d), s"byte-identical boilerplate copy $d kept as new"))
@@ -173,9 +176,9 @@ class DedupSpec extends SparkSpec {
       (500L, "unique snippet alpha beta gamma"),
       (501L, s"unique snippet alpha beta gamma $boiler"))).toDF("doc_id", "text")
     val sh = Dedup.shingledFrom(docs)
-    val capped = TextOps.containmentPairsFrom(sh, 0.9, Dedup.DefaultMaxDf)
+    val capped = TextOps.containmentPairsFrom(sh, Dedup.DefaultMaxDf)
       .as[(Long, Long, Double)].collect().toSet
-    val uncapped = TextOps.containmentPairsFrom(sh, 0.9, Long.MaxValue)
+    val uncapped = TextOps.containmentPairsFrom(sh, Long.MaxValue)
       .as[(Long, Long, Double)].collect().toSet
     // 500's every shingle is a shingle of 501 → containment(500→501) = 1.0,
     // found via the df=2 "unique snippet ..." shingles, scored on the
@@ -192,13 +195,47 @@ class DedupSpec extends SparkSpec {
       "uncapped baseline sanity")
   }
 
+  test("prefilter rounding slack keeps pairs whose 4dp score rounds up to the threshold") {
+    // Nothing here is capped (every df <= 2), so the prefilter's bound is
+    // the exact score itself; a true score just under the threshold that
+    // rounds up to it at 4dp must survive the prefilter to be kept.
+    def words(tag: String, n: Int) = (0 until n).map(k => s"$tag$k")
+    def doc(run: Seq[String], tag: String, n: Int) = (run ++ words(tag, n)).mkString(" ")
+    // Jaccard: two 15,001-word docs sharing a 10,001-word run have 14,999
+    // shingles each and share the run's 9,999 (the bridging shingles
+    // differ): J = 9,999 / 19,999 = 0.4999750 -> 0.5000
+    val jrun = words("j", 10001)
+    val (a, b) = (doc(jrun, "a", 5000), doc(jrun, "b", 5000))
+    val jac = Dedup.jaccardPairsFrom(
+        Dedup.shingledFrom(Seq((1L, a), (2L, b)).toDF("doc_id", "text")), Dedup.DefaultMaxDf)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(jac == Seq((1L, 2L, 0.5)), s"rounds-up pair lost: $jac")
+    // the same pair across the split: the incoming copy is rejected
+    val docs = Seq((1L, a), (1000L, b), (1001L, "fresh incoming text"))
+      .toDF("doc_id", "text").withColumn("n_chars", length($"text").cast("long"))
+    val kept = Dedup.incrementalNewFrom(docs, splitId = 1000L)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(1001L), s"rounds-up incoming copy kept as new: $kept")
+    // containment: two 20,003-word docs sharing a 16,002-word run have
+    // 20,001 shingles each and share 16,000: 16,000 / 20,001 = 0.7999600
+    // -> 0.8000 in both directions
+    val crun = words("c", 16002)
+    val sh = Dedup.shingledFrom(
+      Seq((1L, doc(crun, "s", 4001)), (2L, doc(crun, "l", 4001))).toDF("doc_id", "text"))
+    val cont = TextOps.containmentPairsFrom(sh, Dedup.DefaultMaxDf)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(cont == Set((1L, 2L, 0.8), (2L, 1L, 0.8)), s"rounds-up containment lost: $cont")
+  }
+
   test("cluster operators degrade gracefully when no pairs exist") {
-    // threshold above 1.0 → empty pair graph → every doc its own cluster
-    val labels = Dedup.nearDupClustersFrom(graft.Tables.documents(spark, sf()), 1.1)
-      .as[(Long, Long)].collect()
-    assert(labels.nonEmpty && labels.forall { case (d, c) => d == c })
-    // clusterKeep is its labels' non-singleton clusters: none at 1.1
-    // (above), exactly the grouped labels at the deployed threshold
+    // no two docs share a word, so no shingle and no text: an empty pair
+    // graph and no exact edge → every doc its own cluster
+    val disjoint = (0L until 50L).map(i =>
+      (i, (0 until 6).map(k => s"w${i}_$k").mkString(" "))).toDF("doc_id", "text")
+    val labels = Dedup.nearDupClustersFrom(disjoint).as[(Long, Long)].collect()
+    assert(labels.length == 50 && labels.forall { case (d, c) => d == c })
+    // clusterKeep is its labels' non-singleton clusters: none on the
+    // disjoint corpus (above), exactly the grouped labels on the fixture
     val grouped = Dedup.nearDupClusters(spark, sf()).as[(Long, Long)].collect()
       .groupBy(_._2).map { case (c, m) => (c, m.length.toLong) }.filter(_._2 >= 2).toSet
     assert(grouped.nonEmpty)
@@ -209,7 +246,7 @@ class DedupSpec extends SparkSpec {
     // A pure chain 0-1-2-...-199 has diameter 199: plain neighbor-min
     // propagation would need ~199 rounds; path halving needs O(log n).
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
-    val labels = Dedup.propagateLabels(chain, maxRounds = 20)
+    val labels = Dedup.propagateLabels(chain)
       .as[(Long, Long)].collect()
     assert(labels.length == 200)
     assert(labels.forall(_._2 == 0L), "every chain node must label to the min")
@@ -369,16 +406,16 @@ class DedupSpec extends SparkSpec {
   }
 
   test("containment dominates symmetric Jaccard on the shared pair graph") {
-    val jac = Dedup.jaccardPairs(spark, sf("0.01"), 0.5)
+    val jac = Dedup.jaccardPairs(spark, sf("0.01"))
       .select("doc_i", "doc_j").as[(Long, Long)].collect().toSet
-    val cont = TextOps.containmentPairs(spark, sf("0.01"), 0.8)
+    val cont = TextOps.containmentPairs(spark, sf("0.01"))
       .as[(Long, Long, Double)].collect()
     assert(cont.nonEmpty)
     // containment = |A inter B| / |A| >= jaccard for the same pair, so every
     // jaccard>=0.8 pair must appear in some direction here; and the planted
     // near-identical pairs (j >= 0.9) must be mutual containments
     val dirs = cont.map(c => (c._1, c._2)).toSet
-    val mutual = Dedup.jaccardPairs(spark, sf("0.01"), 0.9)
+    val mutual = Dedup.jaccardPairs(spark, sf("0.01")).filter($"jaccard" >= 0.9)
       .select("doc_i", "doc_j").as[(Long, Long)].collect()
     assert(mutual.nonEmpty)
     mutual.foreach { case (i, j) =>

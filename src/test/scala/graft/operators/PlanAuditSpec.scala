@@ -58,7 +58,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("jaccard inverted-index join: keyed equi-join, never nested-loop") {
-    val p = plan(Dedup.jaccardPairs(spark, sf(), 0.5))
+    val p = plan(Dedup.jaccardPairs(spark, sf()))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"pair join degenerated to a quadratic strategy:\n$p")
   }
@@ -69,7 +69,7 @@ class PlanAuditSpec extends SparkSpec {
     // the cost model relies on AQE exchange reuse to avoid recomputing
     // the df aggregation per reference. Assert the reuse actually
     // happens in the adaptive final plan.
-    val df = Dedup.jaccardPairs(spark, sf(), 0.5)
+    val df = Dedup.jaccardPairs(spark, sf())
     df.collect()
     val p = plan(df)
     assert(p.contains("ReusedExchange"),

@@ -43,7 +43,7 @@ class PropagateLabelsPropSpec extends SparkSpec {
       if (edges.nonEmpty) {
         checked += 1
         val df = edges.toDF("doc_i", "doc_j")
-        val got = Dedup.propagateLabels(df, maxRounds = 20)
+        val got = Dedup.propagateLabels(df)
           .as[(Long, Long)].collect().toMap
         val expect = unionFind(edges)
         assert(got.keySet == expect.keySet,

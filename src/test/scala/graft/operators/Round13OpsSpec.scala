@@ -167,7 +167,7 @@ class Round13OpsSpec extends SparkSpec {
       "matrix keys must be unordered (source_a <= source_b)"))
     val nearTotal = rep.map(_.getLong(2)).sum
     val exactTotal = rep.map(_.getLong(3)).sum
-    assert(nearTotal == Dedup.jaccardPairs(spark, sf(), 0.5).count(),
+    assert(nearTotal == Dedup.jaccardPairs(spark, sf()).count(),
       "near channel total != q20 pair count at the same threshold")
     val docs = graft.Tables.documents(spark, sf())
     assert(exactTotal == Dedup.exactEdgesFrom(docs).count(),

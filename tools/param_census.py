@@ -5,9 +5,12 @@ each defaulted parameter.
 Callers are the code in src/main, src/test and perfbench/harness/src; src/main
 and the perfbench harness count as engine, src/test as specs.
 
-Parameter pass: every defaulted parameter is sorted into one of three classes
-by the calls that pass it, by name or by position: set by engine code, set
-only by specs, or set by no caller.
+Parameter pass: every defaulted parameter of a non-private or
+package-private (`private[pkg]`) def is sorted into one of three classes by
+the calls that pass it, by name or by position: set by engine code, set only
+by specs, or set by no caller. A package-private def is engine surface to
+every caller in its package, specs included, so a default only specs turn
+there is the same knob as on a public def.
 
 Def pass: every non-private member def (a def local to another def's body is
 not one) is sorted by its uses, with or without an argument list, outside its
@@ -302,14 +305,19 @@ def owner_kinds(text):
     return out
 
 
+PKG = re.compile(r"\bprivate\s*\[\s*\w+\s*\]")
+
+
 def defs_of(path, text, orig):
+    """Every non-private and package-private def; `pkg` marks the latter."""
     out = []
     spans = object_spans(text)
     bodies = owner_kinds(text)
     for m in DEF.finditer(text):
         line_start = text.rfind("\n", 0, m.start()) + 1
         head = text[line_start:m.start()]
-        if re.search(r"\b(private|protected)\b", head) or "override" in head:
+        pkg = bool(PKG.search(head))
+        if (re.search(r"\b(private|protected)\b", head) and not pkg) or "override" in head:
             continue
         i = m.end()
         j = skip_ws(text, i)
@@ -343,7 +351,7 @@ def defs_of(path, text, orig):
         member = bool(owner) and max(owner)[2] in ("class", "trait")
         out.append({"name": m.group(1), "file": os.path.relpath(path, ROOT),
                     "line": line, "params": params, "start": m.start(), "obj": obj,
-                    "member": member})
+                    "member": member, "pkg": pkg})
     return out
 
 
@@ -521,7 +529,9 @@ def main(argv):
     for d in defs:
         by_name[d["name"]].append(d)
 
-    total = sum(len(d["params"]) for d in defs)
+    public = [d for d in defs if not d["pkg"]]
+    total = sum(len(d["params"]) for d in public)
+    pkg_total = sum(len(d["params"]) for d in defs if d["pkg"])
     rows = []
     for name, ds in sorted(by_name.items()):
         objs = {d["obj"] for d in ds}
@@ -567,7 +577,8 @@ def main(argv):
     for f in sorted(per_file):
         c = per_file[f]
         print(f"{f}: unset {c['unset']}, spec-only {c['spec']}, engine {c['engine']}")
-    print(f"non-private defs {len(defs)}, parameters {total}, defaulted {len(rows)}: "
+    print(f"non-private defs {len(public)}, parameters {total}; package-private defs "
+          f"{len(defs) - len(public)}, parameters {pkg_total}; defaulted {len(rows)}: "
           f"unset {counts['unset']}, spec-only {counts['spec']}, engine {counts['engine']}")
     bad = [r for r in rows if r[5] == "unset" or
            (r[5] == "spec" and f"{r[2]}.{r[3]}" not in ALLOWED)]
@@ -588,7 +599,7 @@ def main(argv):
         if f.startswith(ENGINE[0]):
             bodies[os.path.relpath(f, ROOT)] = [(m.start(), body_end(text, m.start()))
                                                 for m in DEF.finditer(text)]
-    for d in defs:
+    for d in public:
         if any(s < d["start"] < e for s, e in bodies[d["file"]]):
             continue
         key = f"{d['obj']}.{d['name']}"
