@@ -166,12 +166,13 @@ object Bench {
     * the layers the layer phase builds. It runs the named queries (a
     * name may be a comma-separated list) once each in `scratch`, a
     * throwaway session, so any layer they build is built again, and
-    * timed, in the layer phase; and returns, sorted, the
-    * [[SparkEntry.layers]] their builders recorded
-    * ([[Layers.recording]]). With no query named it runs the first
-    * query only and returns every layer. The classes it compiles serve
-    * the timed queries on the main session too: every session shares
-    * one executor class loader, so one codegen cache
+    * timed, in the layer phase; and returns, sorted, the store names
+    * their builders recorded ([[Layers.recording]]). Every store name is
+    * a [[SparkEntry.layers]] key, so a name that is not fails in the
+    * layer phase and lands in the bench's errors. With no query named
+    * it runs the first query only and returns every layer. The classes
+    * it compiles serve the timed queries on the main session too: every
+    * session shares one executor class loader, so one codegen cache
     * ([[GraftSession.builder]]; `GraftSessionSpec` pins it). */
   def warmQueries(scratch: SparkSession, sfDir: String, names: Seq[String]): Seq[String] = {
     val all = wanted(names).isEmpty
@@ -181,7 +182,7 @@ object Bench {
       catch { case NonFatal(_) => () }
     })
     if (all) SparkEntry.layers.keys.toSeq.sorted
-    else builds.map(_.name).filter(SparkEntry.layers.contains).distinct.sorted
+    else builds.map(_.name).distinct.sorted
   }
 
   /** The layer phase: builds the `names` entries of

@@ -12,9 +12,13 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** THE session layer store: every materialized layer the engine shares
   * across queries (dedup labels, LinUCB models, IVF centroids, PQ code
-  * tables, quality-model weights, prefix-scan frames) is built, kept,
-  * evicted and timed here, keyed by (layer name, key).
+  * tables, prefix-scan frames) is built, kept, evicted and timed here,
+  * keyed by (layer name, key).
   *
+  *  - ONE-TO-ONE: the layer names passed to [[frame]] and [[value]] are
+  *    exactly the keys of [[SparkEntry.layers]], so the bench builds and
+  *    times every store build apart from the queries. A frame only one
+  *    query reads is not a layer: it stays that query's own frame.
   *  - [[frame]] localCheckpoints the frame its build returns;
   *    [[value]] keeps anything else (arrays, models, counts, frames that
   *    pin their own checkpoints).

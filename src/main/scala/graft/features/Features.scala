@@ -459,26 +459,10 @@ object Features {
     worst
   }
 
-  /** Shared envelope build: per-doc exact TF-IDF energy (decimal —
-    * DuckDB replays it bit-for-bit) + the projection contract flags.
-    * `vecs` is the projected input space (vocab-indexed or hashed);
-    * contraction is asserted against ITS per-doc energy, capture as the
-    * decimal-summed global ratio (partitioning-independent by
-    * construction — double sums across docs would inherit partial-agg
-    * order). */
-  private def embeddingEnvelope(spark: SparkSession, sfDir: String,
-                                vecs: DataFrame, v: Int, k: Int,
-                                captureFloor: Double,
-                                space: String): DataFrame =
-    graft.Layers.value(spark, s"svd_envelope_$space", sfDir) {
-      buildEnvelope(spark, sfDir, vecs, v, k, captureFloor)
-    }
-
-  /** The lazy per-doc projection plan the envelope materializes —
+  /** The lazy per-doc projection plan the envelope checkpoints —
     * exposed separately so the plan audit can assert on the BUILD
-    * pipeline (native `mat_vec_project`, zero UDFs) now that the
-    * query-facing envelope frame is a checkpointed layer whose plan is
-    * just the `LogicalRDD` face. */
+    * pipeline (native `mat_vec_project`, zero UDFs), which the
+    * query-facing frame reads as a `LogicalRDD` face. */
   private[graft] def envelopeProjection(vecs: DataFrame, proj: Array[Double],
                                         v: Int, k: Int): DataFrame =
     vecs.select(col("doc_id"),
@@ -492,9 +476,16 @@ object Features {
       .withColumn("contractive",
         col("emb_n2") <= col("vec_n2") * (1.0 + 1e-6) + 1e-9)
 
-  private def buildEnvelope(spark: SparkSession, sfDir: String,
-                            vecs: DataFrame, v: Int, k: Int,
-                            captureFloor: Double): DataFrame = {
+  /** Shared envelope build: per-doc exact TF-IDF energy (decimal —
+    * DuckDB replays it bit-for-bit) + the projection contract flags.
+    * `vecs` is the projected input space (vocab-indexed or hashed);
+    * contraction is asserted against ITS per-doc energy, capture as the
+    * decimal-summed global ratio (partitioning-independent by
+    * construction — double sums across docs would inherit partial-agg
+    * order). */
+  private def embeddingEnvelope(spark: SparkSession, sfDir: String,
+                                vecs: DataFrame, v: Int, k: Int,
+                                captureFloor: Double): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val proj = svdBasis(spark, vecs, v, k)
     // residual measured ~5e-15 across the three SFs for both spaces;
@@ -505,8 +496,7 @@ object Features {
     // frame, and the final per-doc select reads it again — without the
     // materialization the whole vector pipeline + projection would run
     // twice. The frame is tiny (one row per doc: two norms + the k-dim
-    // embedding), and its blocks are released explicitly below once the
-    // final envelope frame is materialized.
+    // embedding).
     val scored = envelopeProjection(vecs, proj, v, k).localCheckpoint()
 
     // Captured energy Σ‖Px‖²/Σ‖x‖² — both sums in fixed-scale decimal so
@@ -528,7 +518,7 @@ object Features {
       .agg(round(sum(round(col("tfidf") * col("tfidf"), 12)
         .cast(DecimalType(38, 12))).cast("double"), 6).as("tfidf_norm2"))
 
-    val out = scored.join(frameN2, "doc_id").select(
+    scored.join(frameN2, "doc_id").select(
       col("doc_id"),
       col("tfidf_norm2"),
       lit(k.toLong).as("n_dims"),
@@ -536,12 +526,6 @@ object Features {
       col("contractive"),
       lit(orthoOk).as("proj_orthonormal"),
       lit(captureOk).as("capture_ok"))
-      .localCheckpoint()
-    // the envelope frame is materialized above; the intermediate scored
-    // checkpoint's blocks can be released now instead of at layer
-    // eviction (only `out` lives in the envelope layer)
-    graft.Layers.release(scored)
-    out
   }
 
   /** q35's checked form: the dense-vocabulary SVD embedding's envelope.
@@ -551,8 +535,7 @@ object Features {
     * ~k/V ≈ 0.32 of the energy at best). */
   def textEmbeddingCheckedQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val (vecs, v) = tfidfVectors(spark, sfDir)
-    embeddingEnvelope(spark, sfDir, vecs, v, EmbeddingDims, captureFloor = 0.50,
-      space = "dense")
+    embeddingEnvelope(spark, sfDir, vecs, v, EmbeddingDims, captureFloor = 0.50)
   }
 
   /** q77's checked form: the feature-hashed SVD embedding's envelope
@@ -561,7 +544,7 @@ object Features {
     * captures ~0.04). */
   def textEmbeddingHashedCheckedQuery(spark: SparkSession, sfDir: String): DataFrame =
     embeddingEnvelope(spark, sfDir, tfidfHashedVectors(spark, sfDir),
-      HashDim, EmbeddingDims, captureFloor = 0.50, space = "hashed")
+      HashDim, EmbeddingDims, captureFloor = 0.50)
 
   /** F15: context assembly — fixed-order feature vector from the joined
     * feature frames (user one-hots + time context), the exact shape the

@@ -83,16 +83,11 @@ object PolicyEval {
     // localCheckpoint the narrow (policy, s, y) projection once: the
     // range pass and the bin pass then both scan ~17 bytes/row instead
     // of re-scoring (guide §1.2/§5 — don't compute things twice; cut
-    // the lineage where an intermediate is reused). The checkpoint is
-    // keyed on the projection's canonicalized plan in the bounded
-    // layer store: repeat invocations in a long-lived session reuse
-    // one persisted copy, and LRU eviction releases the blocks eagerly
-    // instead of leaving them to the ContextCleaner. NOTE the method
-    // is therefore EAGER at plan-construction time (the checkpoint
-    // runs the scoring subtree once, here).
-    val proj = df.select(policy.as("policy"), score.as("s"), label.as("y"))
-    val base = graft.Layers.frame(df.sparkSession, "policy_auc_base",
-      proj.queryExecution.analyzed.canonicalized)(proj)
+    // the lineage where an intermediate is reused). NOTE the method is
+    // therefore EAGER at plan-construction time (the checkpoint runs
+    // the scoring subtree once, here).
+    val base = df.select(policy.as("policy"), score.as("s"), label.as("y"))
+      .localCheckpoint()
     val rng = base.groupBy(col("policy"))
       .agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
     histAuc(base.join(broadcast(rng), "policy"))
@@ -110,9 +105,7 @@ object PolicyEval {
   def aucPerPolicyApproxWide(df: DataFrame, scores: Seq[(String, Column)],
                              label: Column): DataFrame = {
     val sCols = scores.zipWithIndex.map { case ((_, c), i) => c.as(s"s_$i") }
-    val proj = df.select(sCols :+ label.as("y"): _*)
-    val base = graft.Layers.frame(df.sparkSession, "policy_auc_base",
-      proj.queryExecution.analyzed.canonicalized)(proj)
+    val base = df.select(sCols :+ label.as("y"): _*).localCheckpoint()
     val rangeAggs = scores.indices.flatMap(i =>
       Seq(min(col(s"s_$i")).as(s"lo_$i"), max(col(s"s_$i")).as(s"hi_$i")))
     // one row per policy: stack(P, name_0, c_0.., name_1, c_1.., ...),

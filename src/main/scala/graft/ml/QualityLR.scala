@@ -24,9 +24,6 @@ import graft.operators.TextOps
   * ([[LinAlg.invertRowMajor]]) — constant-size work, like the LinUCB
   * finalize. Scoring is a pure column expression (weights enter as
   * literals): map-only, codegen'd, no UDF.
-  *
-  * The weight vector is materialized once per (session, sfDir) — the
-  * same layer discipline as [[LinUCB.seededModels]].
   */
 object QualityLR {
 
@@ -49,18 +46,6 @@ object QualityLR {
       col("stopword_ratio").as("x3"),
       col("type_token_ratio").as("x4"),
       col("passes_quality").cast("double").as("y"))
-
-  /** The feature frame, materialized once per (session, sfDir) — the
-    * [[graft.operators.Dedup.materializedClusters]] layer discipline.
-    * The tokenization pass behind [[features]] (split + filter +
-    * array_distinct over every document) is the dominant cost of both
-    * training AND scoring; without this layer the q111 query surface
-    * re-ran it end-to-end after the fit had already paid for it (the
-    * 10× audit's worst ratio, 4.4×). The checkpoint holds the narrow
-    * (d+2)-column design matrix only — doc_id, five doubles, y — so
-    * the resident layer is O(n·d) doubles, not the corpus text. */
-  def materializedFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Layers.frame(spark, "quality_features", sfDir)(features(spark, sfDir))
 
   private def xCols = (0 until Dim).map(i => col(s"x$i"))
 
@@ -139,20 +124,17 @@ object QualityLR {
     new java.math.BigDecimal(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Fitted weights, materialized once per (session, sfDir). Trains
-    * over the checkpointed feature layer so the fit and the q111
-    * scoring surface share one tokenization pass per session. */
-  def fittedWeights(spark: SparkSession, sfDir: String): Array[Double] =
-    graft.Layers.value(spark, "quality_lr_weights", sfDir) {
-      train(materializedFeatures(spark, sfDir))
-    }
-
   /** q111 surface: every document scored with the calibrated quality
     * probability — map-only column math over the broadcast weights (the
-    * heuristic gate rides along for threshold calibration readouts). */
+    * heuristic gate rides along for threshold calibration readouts).
+    * The IRLS fit and the scoring both read the design matrix, so it is
+    * checkpointed once: the tokenization pass behind [[features]] runs
+    * once, and the checkpoint holds the narrow (d+2)-column frame only
+    * (doc_id, five doubles, y), not the corpus text. */
   def scoreDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val beta = fittedWeights(spark, sfDir)
-    materializedFeatures(spark, sfDir).select(
+    val feats = features(spark, sfDir).localCheckpoint()
+    val beta = train(feats)
+    feats.select(
       col("doc_id"),
       round(lit(1.0) / (lit(1.0) + exp(-dot(beta))), 6).as("quality_prob"),
       col("y").cast("boolean").as("heuristic_gate"))

@@ -458,18 +458,6 @@ object Analytics {
     *      window — every sort is bounded by catalog/numPartitions rows,
     *      no SinglePartition exchange anywhere (plan-audited). */
   def revenueAbc(spark: SparkSession, sfDir: String): DataFrame = {
-    // construction runs eager jobs (per-partition totals + the pinned
-    // checkpoint), so the finished frame is memoized per (sfDir,
-    // partition count) — repeat callers reuse one checkpoint instead of
-    // re-materializing the pipeline each time
-    val nParts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    graft.Layers.value(spark, "revenue_abc", (sfDir, nParts)) {
-      buildRevenueAbc(spark, sfDir, nParts)
-    }
-  }
-
-  private def buildRevenueAbc(spark: SparkSession, sfDir: String,
-                              nParts: Int): DataFrame = {
     import graft.functions.ExactNum._
     import org.apache.spark.sql.types.DecimalType
     // round to cents with ROUND in DECIMAL space: double-then-round
@@ -529,12 +517,11 @@ object Analytics {
         min(col(c)).cast("double").as(s"${c}_min"),
         max(col(c)).cast("double").as(s"${c}_max"))
     }
-    val wide = Tables.customer(spark, sfDir).agg(aggs.head, aggs.tail: _*)
-    val stacked = cols.map(c =>
-      s"'$c', ${c}_nulls, ${c}_distinct, ${c}_min, ${c}_max").mkString(", ")
-    wide.selectExpr(
-      s"stack(${cols.length}, $stacked) " +
-        "AS (column_name, n_nulls, n_distinct, min_val, max_val)")
+    val stacked = cols.flatMap(c =>
+      lit(c) +: Seq("nulls", "distinct", "min", "max").map(m => col(s"${c}_$m")))
+    Tables.customer(spark, sfDir).agg(aggs.head, aggs.tail: _*)
+      .select(call_function("stack", lit(cols.length) +: stacked: _*)
+        .as(Seq("column_name", "n_nulls", "n_distinct", "min_val", "max_val")))
   }
 
   /** UNPIVOT/melt — the inverse of [[hourlyTypePivot]]: wide per-entity

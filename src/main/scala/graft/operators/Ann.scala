@@ -40,8 +40,8 @@ object Ann {
   val NQueries = 10
   val TopK = 5
 
-  /** Cells of the fixed-k IVF layer (`ivf_centroids_k16`) that the
-    * probing, profiling and IVF-PQ/SQ8 families share. */
+  /** Cells of the fixed-k IVF fit (the `ivf_centroids` layer at k = 16)
+    * that the probing, profiling and IVF-PQ/SQ8 families share. */
   val Cells = 16
 
   /** The `(vec_id, embedding)` corpus every fit and encode reads,
@@ -99,23 +99,13 @@ object Ann {
     books
   }
 
-  /** The `SparkEntry.layers` name of a codec layer: `codec` is a family
-    * (`pq`, `sq8`) with an optional `_variant` (`pq_residual`), `kind`
-    * is `codebooks` or `encoded`, and a cell-assigned layer
-    * (`kClusters > 0`) adds `_ivf` — e.g. `pq_codebooks_residual`,
-    * `pq_ivf_encoded_residual`. */
-  private def layerName(codec: String, kind: String, kClusters: Int): String = {
-    val (family, variant) = codec.span(_ != '_')
-    s"$family${if (kClusters > 0) "_ivf" else ""}_$kind$variant"
-  }
-
-  /** A fitted model memoized per (session, codec, sfDir, k, iters); the
-    * IVF fit's layer is named by its k (`ivf_centroids_k16`). */
-  private[operators] def fitted(spark: SparkSession, codec: String, sfDir: String,
-                                k: Int, iters: Int)(fit: => Books): Books = {
-    val name = if (codec == "ivf") s"ivf_centroids_k$k" else layerName(codec, "codebooks", 0)
+  /** A fitted model, kept in the store under the layer `name` and the
+    * key (sfDir, k, iters): one name per model family, k in the key, so
+    * the fixed-k IVF fit and the corpus-derived-k fit share
+    * `ivf_centroids`. */
+  private[operators] def fitted(spark: SparkSession, name: String, sfDir: String,
+                                k: Int, iters: Int)(fit: => Books): Books =
     graft.Layers.value(spark, name, (sfDir, k, iters))(fit)
-  }
 
   /** Per-row code assignment: one argmin per subspace over the sliced
     * `embedding` (squared-L2, ties → lowest code: the oracle's
@@ -130,14 +120,14 @@ object Ann {
     * assigns each vector its coarse cell (`kClusters > 0`: the session
     * IVF fit at that k) and hands the frame to the codec's `encode`,
     * which adds `codes`; the `(vec_id, [cluster,] codes)` result is
-    * checkpointed per (session, codec, sfDir, kClusters), so serving
+    * checkpointed per (session, layer `name`, sfDir, kClusters), so serving
     * pays probes only — FAISS builds its code table once too. `spread`
     * keeps each codec's input partitioning (and with it the layer's
     * exchange count). */
-  private[operators] def encodedLayer(spark: SparkSession, sfDir: String, codec: String,
+  private[operators] def encodedLayer(spark: SparkSession, sfDir: String, name: String,
                                       kClusters: Int = 0, spread: Boolean = true)(
       encode: DataFrame => DataFrame): DataFrame =
-    graft.Layers.frame(spark, layerName(codec, "encoded", kClusters), (sfDir, kClusters)) {
+    graft.Layers.frame(spark, name, (sfDir, kClusters)) {
       val e =
         if (spread) corpus(spark, sfDir)
         else Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))

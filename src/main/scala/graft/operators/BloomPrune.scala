@@ -39,30 +39,13 @@ object BloomPrune {
     * the already-filtered dim side — at a 1% false-positive rate. A
     * fixed capacity would silently saturate at larger scale factors
     * (fpp degrades toward 1 and the pruning claim evaporates, even
-    * though the exact join keeps the RESULT correct).
-    *
-    * The built sketch (count pass + aggregation pass) is memoized per
-    * (session, canonicalized dim plan, key) — repeat callers
-    * of the same pruned join (dashboard refresh, bench iterations)
-    * reuse the serialized bitmap instead of re-scanning the dim twice
-    * per call. Keying on the CANONICALIZED logical plan makes cache
-    * identity semantic equality, so two different dims can never
-    * collide into each other's bitmap (a false sharing there would
-    * wrongly drop fact rows — the exact join only repairs false
-    * POSITIVES, never false negatives). Like every session layer
-    * ([[graft.Layers]]), the memo assumes the data under a plan
-    * is immutable for the session — an in-place refresh of the dim's
-    * files mid-session requires a new session to avoid a stale
-    * bitmap, the standard warehouse snapshot assumption. */
+    * though the exact join keeps the RESULT correct). */
   def prunedFact(fact: DataFrame, factKey: String,
                  dim: DataFrame, dimKey: String): DataFrame = {
-    val cacheKey = (dim.queryExecution.analyzed.canonicalized, dimKey)
-    val bytes = graft.Layers.value(dim.sparkSession, "bloom_filter", cacheKey) {
-      val bf = dim.stat.bloomFilter(dimKey, math.max(dim.count(), 1L), 0.01)
-      val bos = new ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
+    val bf = dim.stat.bloomFilter(dimKey, math.max(dim.count(), 1L), 0.01)
+    val bos = new ByteArrayOutputStream()
+    bf.writeTo(bos)
+    val bytes = bos.toByteArray
     val mightContain: Column = GraftShims.column(BloomFilterMightContain(
       Literal(bytes, BinaryType),
       GraftShims.expression(col(factKey).cast("long"))))

@@ -413,9 +413,9 @@ object Dedup {
     * verify ([[verified]]), kept at [[NearDupThreshold]]. */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val sigs = minhashSignatures(spark, sfDir)
-    val bands = sigs.select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, ${Bands - 1}), j -> " +
-          s"struct(j AS band, xxhash64(slice(sig, j*$RowsPerBand + 1, $RowsPerBand)) AS bh))"))
+    val bands = sigs.select(col("doc_id"), explode(transform(sequence(lit(0), lit(Bands - 1)),
+        j => struct(j.as("band"),
+          xxhash64(slice(col("sig"), j * RowsPerBand + 1, lit(RowsPerBand))).as("bh"))))
         .as("b"))
       .select(col("doc_id"), col("b.band"), col("b.bh"))
     val cand = bands.as("x").join(bands.as("y"),
@@ -805,14 +805,8 @@ object Dedup {
     // sides re-run the full SRP encode + the corpus scan (the plan had
     // two identical encode subtrees). Checkpoint the narrow
     // (vec_id, band, bkey) frame once: the LSH index is built once and
-    // probed from both sides, the aucPerPolicyApprox precedent. Keyed
-    // by canonicalized plan in the bounded layer store so repeat
-    // invocations reuse one persisted index and eviction releases the
-    // blocks eagerly (previously each call checkpointed anew with no
-    // unpersist hook).
-    val bkRaw = srpBandKeys(e, pp, 8)
-    val bk = graft.Layers.frame(spark, "srp_index",
-      bkRaw.queryExecution.analyzed.canonicalized)(bkRaw)
+    // probed from both sides, the aucPerPolicyApprox precedent.
+    val bk = srpBandKeys(e, pp, 8).localCheckpoint()
     val cand = bk.as("x").join(bk.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.vec_id") < col("y.vec_id"))
@@ -897,10 +891,10 @@ object Dedup {
     val pos = docs
       .filter(size(split(col("text"), " ")) >= k)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(t) - ${k - 1}), " +
-          s"i -> struct(i AS pos, " +
-          s"substring(unhex(sha2(array_join(slice(t, i, $k), ' '), 256)), 1, 16) AS g))")).as("w"))
+      .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
+        i => struct(i.as("pos"),
+          substring(unhex(sha2(array_join(slice(col("t"), i, lit(k)), " "), 256)), 1, 16)
+            .as("g")))).as("w"))
       .select(col("doc_id"), col("w.pos").as("pos"), col("w.g").as("g"))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     pos

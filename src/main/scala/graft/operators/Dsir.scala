@@ -52,34 +52,26 @@ object Dsir {
   /** q138: importance weight of every raw-pool document against the
     * target source. Output: (doc_id, n_feats, weight).
     *
-    * Routed through the [[materializedGramCounts]] layer: the gram
-    * explode (the expensive text pass — ~2 rows per token before the
-    * per-doc collapse) runs ONCE per (session, sfDir) and
-    * both consumers — the λ-table distribution collect and the scoring
-    * join — read the collapsed (doc_id, source, b, cnt) frame. Before
-    * the layer, the explode executed twice (once under the collect,
-    * once under the returned plan) and the scoring shuffle carried one
-    * row per gram INSTANCE; now it carries one row per distinct
-    * (doc, bucket) pair, which the fixed bucket space caps at
-    * min(doc_grams, buckets) per document. */
+    * The gram explode (the expensive text pass — ~2 rows per token
+    * before the per-doc collapse) runs ONCE: the collapsed
+    * (doc_id, source, b, cnt) frame is checkpointed, and both of its
+    * readers — the λ-table distribution collect and the scoring join —
+    * scan the checkpoint. Without the cut the explode executed twice
+    * (once under the collect, once under the returned plan). The
+    * scoring shuffle carries one row per distinct (doc, bucket) pair,
+    * which the fixed bucket space caps at min(doc_grams, buckets) per
+    * document. */
   def importanceWeights(spark: SparkSession, sfDir: String): DataFrame =
-    weightsFromCounts(materializedGramCounts(spark, sfDir), DefaultTarget, DefaultBuckets)
-
-  /** The shared gram-count layer: hashed unigram+bigram features
-    * collapsed to per-(doc_id, source, bucket) counts. One text
-    * explode, one (doc_id, b)-keyed aggregation whose map-side combine
-    * collapses repeated grams before the shuffle; localCheckpointed
-    * under the [[graft.Layers]] discipline (a narrow
-    * 4-column frame, corpus-sized like the dedup-label and TF-IDF
-    * posting layers). */
-  def materializedGramCounts(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Layers.frame(spark, "dsir_gram_counts", sfDir) {
+    weightsFromCounts(
       docBucketCounts(
-        Tables.documents(spark, sfDir)
-          .select(col("doc_id"), col("source"), col("text")),
-        DefaultBuckets)
-    }
+        Tables.documents(spark, sfDir).select(col("doc_id"), col("source"), col("text")),
+        DefaultBuckets).localCheckpoint(),
+      DefaultTarget, DefaultBuckets)
 
+  /** Hashed unigram+bigram features collapsed to per-(doc_id, source,
+    * bucket) counts: one text explode, one (doc_id, b)-keyed
+    * aggregation whose map-side combine collapses repeated grams
+    * before the shuffle. */
   private def docBucketCounts(docs: DataFrame, buckets: Int): DataFrame =
     hashedGrams(docs, buckets)
       .groupBy(col("doc_id"), col("source"), col("b"))

@@ -51,7 +51,7 @@ object Ivf {
     * [[graft.ml.LinUCB.seededModels]]. */
   def fittedCentroids(spark: SparkSession, sfDir: String, k: Int,
                       iters: Int): Array[Array[Double]] =
-    Ann.fitted(spark, "ivf", sfDir, k, iters)(
+    Ann.fitted(spark, "ivf_centroids", sfDir, k, iters)(
       Array(fitCentroids(spark, sfDir, k, iters)))(0)
 
   /** The fitted centroids as a broadcastable `(key, centroid, cnrm)`

@@ -129,11 +129,12 @@ object Multimodal {
       col("width").cast("long").as("src_w"),
       col("height").cast("long").as("src_h"),
       when(col("width") <= maxW && col("height") <= maxH, col("width").cast("long"))
-        .when(fitW, expr(s"CAST(width AS BIGINT) * $maxH div height"))
+        .when(fitW, call_function("div", col("width").cast("long") * maxH, col("height")))
         .otherwise(maxW.toLong).as("out_w"),
       when(col("width") <= maxW && col("height") <= maxH, col("height").cast("long"))
         .when(fitW, lit(maxH.toLong))
-        .otherwise(expr(s"CAST(height AS BIGINT) * $maxW div width")).as("out_h"))
+        .otherwise(call_function("div", col("height").cast("long") * maxW, col("width")))
+        .as("out_h"))
   }
 
   /** Frame sampling: fan one video row out to ceil(n_frames/8) frame

@@ -70,13 +70,13 @@ object Pq {
     * once per (session, sfDir); every ADC consumer probes the same
     * m·k·(d/m) matrix. */
   def fittedCodebooks(spark: SparkSession, sfDir: String): Books =
-    Ann.fitted(spark, "pq", sfDir, DefaultCodes, Ann.DefaultIters)(
+    Ann.fitted(spark, "pq_codebooks", sfDir, DefaultCodes, Ann.DefaultIters)(
       Ann.fit(Ann.corpus(spark, sfDir), DefaultSubspaces, DefaultCodes, Ann.DefaultIters))
 
   /** The residual-codebook layer: fitted once per (session, sfDir)
     * over the residuals of the SAME session IVF fit q44/q137 probe. */
   def fittedResidualCodebooks(spark: SparkSession, sfDir: String): Books =
-    Ann.fitted(spark, "pq_residual", sfDir, Ann.Cells, Ann.DefaultIters) {
+    Ann.fitted(spark, "pq_codebooks_residual", sfDir, Ann.Cells, Ann.DefaultIters) {
       val centroids = Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)
       Ann.fit(residuals(Ann.corpus(spark, sfDir)
           .withColumn("cluster", Ivf.assignExpr(centroids)(col("embedding"))), centroids),
@@ -99,19 +99,19 @@ object Pq {
   /** (vec_id, codes) — the PQ-encoded corpus (q135/q136): m ints/row,
     * the compressed footprint the format exists to have. */
   def encodedCodes(spark: SparkSession, sfDir: String): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "pq")(Ann.withCodes(_, fittedCodebooks(spark, sfDir)))
+    Ann.encodedLayer(spark, sfDir, "pq_encoded")(Ann.withCodes(_, fittedCodebooks(spark, sfDir)))
 
   /** (vec_id, cluster, codes) — the IVF-PQ index over RAW-vector codes
     * (the q137/q143 deployment shape and the q167 grid's `raw`
     * variant): coarse cell + fine codes assigned in ONE corpus pass. */
   def ivfEncodedRaw(spark: SparkSession, sfDir: String): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "pq", Ann.Cells)(
+    Ann.encodedLayer(spark, sfDir, "pq_ivf_encoded", Ann.Cells)(
       Ann.withCodes(_, fittedCodebooks(spark, sfDir)))
 
   /** (vec_id, cluster, codes) — the FULL-IVFADC index over CELL-RESIDUAL
     * codes (q141/q144 and the grid's `residual` variant). */
   def ivfEncodedResidual(spark: SparkSession, sfDir: String): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "pq_residual", Ann.Cells) { cells =>
+    Ann.encodedLayer(spark, sfDir, "pq_ivf_encoded_residual", Ann.Cells) { cells =>
       Ann.withCodes(
         residuals(cells, Ivf.fittedCentroids(spark, sfDir, Ann.Cells, Ann.DefaultIters)),
         fittedResidualCodebooks(spark, sfDir))

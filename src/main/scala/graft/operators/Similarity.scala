@@ -231,7 +231,7 @@ object Similarity {
   def knnClassify(spark: SparkSession, sfDir: String, nProbe: Int = -1): DataFrame = {
     // every driver SF sits at deriveK's 16-cell floor, so the derived
     // default is bit-identical to the old fixed 16 below the ceiling
-    // (and shares the ivf_centroids_semantic layer's cache entry above)
+    // (and reads the derived-k entry of the ivf_centroids layer above)
     val centroids = Ivf.fittedCentroids(spark, sfDir, Ivf.semanticK(spark, sfDir),
       Ann.DefaultIters)
     // default derives from corpus size ([[deriveNProbe]], the

@@ -87,8 +87,9 @@ object Sq {
       "sq_ip", k)
   }
 
-  private def encodeLayer(spark: SparkSession, sfDir: String, kClusters: Int): DataFrame =
-    Ann.encodedLayer(spark, sfDir, "sq8", kClusters, spread = false) { e =>
+  private def encodeLayer(spark: SparkSession, sfDir: String, name: String,
+                          kClusters: Int): DataFrame =
+    Ann.encodedLayer(spark, sfDir, name, kClusters, spread = false) { e =>
       val (mn, mx) = fittedBounds(spark, sfDir)
       e.withColumn("codes", encode(mn, mx)(col("embedding")))
     }
@@ -97,7 +98,8 @@ object Sq {
     * [[Ann.encodedLayer]] that makes a repeated query set pay only the
     * scan. The checkpoint holds 1 int/dim/row — the compressed
     * footprint the format exists to have. */
-  def encoded(spark: SparkSession, sfDir: String): DataFrame = encodeLayer(spark, sfDir, 0)
+  def encoded(spark: SparkSession, sfDir: String): DataFrame =
+    encodeLayer(spark, sfDir, "sq8_encoded", 0)
 
   /** (vec_id, cluster, codes) — the IVF-SQ8 index: the encoded corpus
     * plus its coarse-quantizer cell, the FAISS `IVF…,SQ8` on-disk
@@ -105,7 +107,7 @@ object Sq {
     * assignment frame would shuffle the corpus) so the warm serving
     * path (q173, repeated probes) pays ONLY the probed cells' scan. */
   def ivfEncoded(spark: SparkSession, sfDir: String): DataFrame =
-    encodeLayer(spark, sfDir, Ann.Cells)
+    encodeLayer(spark, sfDir, "sq8_ivf_encoded", Ann.Cells)
 
   /** q169: asymmetric SQ8 top-k — exact query vectors against the
     * reconstructed corpus, ranked by the 4dp-rounded inner product

@@ -142,7 +142,7 @@ object SupplierStats {
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val width = maxId / 256 + 1
     val bucketed = ev.select(col("event_id"), col("ts_us"))
-      .withColumn("bkt", expr(s"event_id div $width"))
+      .withColumn("bkt", call_function("div", col("event_id"), lit(width)))
     val bucketMax = bucketed.groupBy(col("bkt")).agg(max(col("ts_us")).as("m"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     // exclusive prefix max: offset(b) = max over all buckets < b

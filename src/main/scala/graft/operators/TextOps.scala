@@ -24,10 +24,7 @@ object TextOps {
 
   /** Stop-word hit count over the raw `text` column — the `n_stop`
     * metric every gate consumer derives the same way. */
-  private[graft] def stopHits: Column = {
-    val stopList = StopWords.map(s => s"'$s'").mkString(", ")
-    expr(s"size(filter(split(text, ' '), t -> t IN ($stopList)))")
-  }
+  private[graft] def stopHits: Column = markerHits(StopWords)
 
   /** q27 composite gate thresholds + the gate itself, over the
     * pre-computed metric columns (`n_tokens`, `n_chars`, `n_stop`) —
@@ -51,10 +48,8 @@ object TextOps {
   private[graft] val EsMarkers = Seq("el", "la", "los", "de", "es")
   private[graft] val DeMarkers = Seq("der", "die", "das", "und", "ist")
   private[graft] val FrMarkers = Seq("le", "la", "les", "de", "est")
-  private[graft] def markerHits(words: Seq[String]): Column = {
-    val list = words.map(w => s"'$w'").mkString(", ")
-    expr(s"size(filter(split(text, ' '), t -> t IN ($list)))")
-  }
+  private[graft] def markerHits(words: Seq[String]): Column =
+    size(filter(split(col("text"), " "), _.isin(words: _*)))
 
   /** The q28 argmax's English branch as a predicate over the four
     * pre-computed `score_*` columns — shared by [[corpusFilter]] and
@@ -166,9 +161,9 @@ object TextOps {
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 1) // sequence(0,-1) would run DESCENDING
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, CAST(ceil(size(t) / $chunkTokens.0) AS INT) - 1), " +
-          s"i -> concat_ws(' ', slice(t, i * $chunkTokens + 1, $chunkTokens)))")))
+      .select(col("doc_id"), posexplode(transform(
+        sequence(lit(0), ceil(size(col("t")) / lit(BigDecimal(chunkTokens).setScale(1))).cast("int") - 1),
+        i => concat_ws(" ", slice(col("t"), i * chunkTokens + 1, lit(chunkTokens))))))
       .select(col("doc_id"), col("pos").cast("long").as("chunk_no"),
         size(split(col("col"), " ")).cast("long").as("n_chunk_tokens"),
         graft.functions.polyHash64(col("col")).as("chunk_fp"))

@@ -166,6 +166,21 @@ class PolicyAndStoreSpec extends SparkSpec {
     assert(wide == melted, s"wide $wide vs melted $melted")
   }
 
+  test("a wide AUC frame outlives Layers.PerName later AUC builds") {
+    import org.apache.spark.sql.functions._
+    // q41's checkpointed projection is its query's own frame: PerName
+    // more AUC frames over other inputs in the same session must not
+    // release its blocks (a store entry under one name would evict it,
+    // and the first frame would then fail on its truncated lineage)
+    def auc(i: Int) = PolicyEval.aucPerPolicyApproxWide(
+      spark.range(300 + i).select(((col("id") * 37) % 101 / 101.0).as("a"),
+        (col("id") % 3 === 0).cast("int").as("y")),
+      Seq("p" -> col("a")), col("y"))
+    val first = auc(0)
+    (1 to graft.Layers.PerName).foreach(auc)
+    assert(first.collect().toSeq == auc(0).collect().toSeq)
+  }
+
   test("lin_eps explores with frequency ε under its own seeding") {
     import org.apache.spark.sql.functions._
     // The exact seed expression + generator the ε-greedy scorer uses:

@@ -547,4 +547,23 @@ class DedupSpec extends SparkSpec {
     val meanErr = out.map(_.getDouble(5)).sum / out.length
     assert(meanErr < 0.1, s"estimator mean error $meanErr - signatures broken?")
   }
+
+  test("a bucketed-pairs frame outlives Layers.PerName later builds") {
+    // q23's SRP index is its query's own checkpoint: PerName more
+    // bucketed-pair frames over other corpora in the same session must
+    // not release the first frame's blocks (a store entry under one
+    // name would evict it, and the first frame would then fail on its
+    // truncated lineage). Planted corpus: five orthogonal directions,
+    // so exactly the same-direction pairs reach cosine 1.
+    def lake(i: Int): String = {
+      val d = s"target/test-srp-evict/$i"
+      (0 until 40 + i).map(v => (v.toLong, Seq.tabulate(8)(j => if (j == v % 5) 1f else 0f)))
+        .toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      d
+    }
+    val first = Dedup.embeddingPairsBucketed(spark, lake(0), 0.9)
+    (1 to graft.Layers.PerName).foreach(i => Dedup.embeddingPairsBucketed(spark, lake(i), 0.9))
+    val expected = for (a <- 0L until 40L; b <- a + 1 until 40L if a % 5 == b % 5) yield (a, b)
+    assert(first.select("vec_i", "vec_j").as[(Long, Long)].collect().toSet == expected.toSet)
+  }
 }

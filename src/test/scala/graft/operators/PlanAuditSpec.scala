@@ -170,13 +170,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("DSIR scoring: λ table broadcast, no UDF, no nested loop") {
-    // the serving plan reads the gram-count LAYER (checkpoint scan) and
-    // broadcasts the λ table — the text explode must NOT re-run here
+    // the serving plan reads the gram-count CHECKPOINT and broadcasts
+    // the λ table — the text explode must NOT re-run here
     val p = plan(Dsir.importanceWeights(spark, sf()))
     assert(p.contains("Scan ExistingRDD"),
-      s"gram counts should come from the materialized layer:\n$p")
+      s"gram counts should come from the checkpoint:\n$p")
     assert(!p.contains("poly_hash64"),
-      s"serving plan re-runs the feature hash the layer already paid:\n$p")
+      s"serving plan re-runs the feature hash the checkpoint already paid:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"λ table should broadcast:\n$p")
     assert(!p.contains("ScalaUDF"), s"UDF in the path:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
@@ -184,8 +184,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("DSIR gram-count layer build: one scan, hash map-side, partial combine") {
-    // audit the BUILD plan via the uncached spec entry point — the
-    // layer path localCheckpoints the same frame
+    // audit the BUILD plan via the uncached spec entry point — q138
+    // localCheckpoints the same frame
     val df = Dsir.importanceWeightsFrom(
       graft.Tables.documents(spark, sf())
         .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -315,7 +315,7 @@ class PlanAuditSpec extends SparkSpec {
     // the scoring subtree is audited PRE-checkpoint (the approx-AUC
     // finisher materializes the melted frame once so its range and bin
     // passes don't re-execute the scoring — the q41 plan face is the
-    // checkpointed LogicalRDD, like the envelope layers')
+    // checkpointed LogicalRDD, like the envelope queries')
     val q41 = plan(graft.ml.PolicyEval.meltedLinPolicies(spark, sf()))
     assert(!q41.contains("ScalaUDF"), s"UDF in the q41 scoring path:\n$q41")
     assert(q41.contains("linucb_chol_score") && q41.contains("lints_score"),
@@ -355,7 +355,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("quality-model scoring is map-only: broadcast weights, zero exchanges") {
-    // q111's training happens once at layer-build; the SCORING plan the
+    // q111's training runs eagerly, once; the SCORING plan the
     // corpus actually runs must be a pure projection — any Exchange
     // here would mean the classifier re-shuffles 100 TB to apply five
     // multiplications per row.
@@ -414,11 +414,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("envelope queries: native projection, no UDF, q41's only window is policy-bounded") {
-    // r12 checked forms. q35/q77 now read a MATERIALIZED envelope
-    // layer (the Layers discipline), so their query-facing plan
-    // is the checkpointed LogicalRDD face; the BUILD pipeline is
-    // audited directly through Features.envelopeProjection — still
-    // zero UDFs, still mat_vec_project.
+    // r12 checked forms. q35/q77 read their per-doc projection from a
+    // checkpoint (the capture action and the final select both read
+    // it), so their query-facing plan scans a LogicalRDD; the BUILD
+    // pipeline is audited directly through Features.envelopeProjection
+    // — still zero UDFs, still mat_vec_project.
     val vecs = graft.features.Features.tfidfHashedVectors(spark, sf())
     val build = graft.features.Features.envelopeProjection(
       vecs, new Array[Double](256 * 10), 256, 10)
@@ -430,10 +430,11 @@ class PlanAuditSpec extends SparkSpec {
                    graft.features.Features.textEmbeddingHashedCheckedQuery(spark, sf()))) {
       val p = plan(df)
       assert(!p.contains("ScalaUDF"), s"UDF in the envelope path:\n$p")
-      // the query face must BE the materialized layer — a full rebuild
-      // plan here means the layer discipline regressed
-      assert(df.queryExecution.analyzed.toString.contains("LogicalRDD"),
-        s"envelope query no longer reads the materialized layer:\n${df.queryExecution.analyzed}")
+      // the query face must read the checkpointed projection — a
+      // projection in this plan means it runs twice
+      val analyzed = df.queryExecution.analyzed.toString
+      assert(analyzed.contains("LogicalRDD") && !analyzed.contains("mat_vec_project"),
+        s"envelope query no longer reads the checkpointed projection:\n$analyzed")
     }
     // q41: the greedy-AUC broadcast window must sit ABOVE the finished
     // per-policy aggregate (5 rows — policy-cardinality-bounded), never

@@ -63,7 +63,15 @@ Exits 1 when
   - src/main builds a session outside the `GraftSession` object (a
     `SparkSession.builder` or `new SparkSession.Builder(`): every engine
     session carries the factory's shared configs, among them the one
-    executor class loader that lets a fresh session reuse compiled code.
+    executor class loader that lets a fresh session reuse compiled code;
+  - the layer registry and the layer store disagree: a layer name passed
+    to `Layers.frame`/`Layers.value` in src/main is not a key of
+    `SparkEntry.layers`, a key names no store build, or a store name is
+    not a string literal. A def that passes one of its own parameters as
+    the name (`Ann.encodedLayer`) is a store call too, and its callers'
+    literal at that position is the name. The bench builds and times
+    every registered layer apart from the queries, so a build outside
+    the registry is charged to whichever query runs first.
 """
 import os
 import re
@@ -466,6 +474,71 @@ BUILDER = re.compile(r"\bSparkSession\s*\.\s*(?:builder\b|Builder\s*\()")
 FACTORY = "GraftSession"
 
 
+STORE = re.compile(r"\bLayers\s*\.\s*(frame|value)\s*\(")
+LITERAL = re.compile(r'^"(\w+)"$')
+IDENT = re.compile(r"^[A-Za-z_]\w*$")
+
+
+def enclosing_params(text, at):
+    """Name and first-list parameter names of the innermost def around
+    offset `at`, or (None, [])."""
+    best = None
+    for m in DEF.finditer(text, 0, at):
+        if body_end(text, m.start()) > at:
+            best = m
+    if best is None:
+        return None, []
+    i = skip_ws(text, best.end())
+    if i < len(text) and text[i] == "[":
+        i = balanced(text, i)
+    lists, _ = groups(text, i, with_braces=False)
+    names = [PARAM.match(p).group(1) for p, _ in split_top(lists[0][1])
+             if PARAM.match(p)] if lists else []
+    return best.group(1), names
+
+
+def store_names(files):
+    """Every literal layer name the engine passes to the store, as
+    (name, file, line), and the (file, line) of each name that is not a
+    literal. `files` maps a path to its (stripped, original) text."""
+    found, unreadable = [], []
+    todo = [(STORE, 1)]
+    seen = set()
+    while todo:
+        pat, idx = todo.pop()
+        for f, (text, orig) in files.items():
+            for m in pat.finditer(text):
+                if re.search(r"\bdef\s+$", text[max(0, m.start() - 8):m.start()]):
+                    continue
+                j = m.end()  # just past the call's `(`
+                args = split_top(text[j:balanced(text, j - 1) - 1])
+                line = text.count("\n", 0, m.start()) + 1
+                arg = ""
+                if len(args) > idx:
+                    part, off = args[idx]
+                    arg = orig[j + off:j + off + len(part)].strip()
+                lit = LITERAL.match(arg)
+                if lit:
+                    found.append((lit.group(1), f, line))
+                    continue
+                owner, params = enclosing_params(text, m.start())
+                if IDENT.match(arg) and arg in params:
+                    if owner not in seen:
+                        seen.add(owner)
+                        todo.append((re.compile(r"(?<![\w$])" + owner + r"\s*\("),
+                                     params.index(arg)))
+                else:
+                    unreadable.append((f, line))
+    return found, unreadable
+
+
+def registry_keys(text, orig):
+    """The literal keys of `SparkEntry.layers`, with their line numbers."""
+    j = text.find("Map(", text.find("def layers")) + 3
+    return [(m.group(1), orig.count("\n", 0, j + m.start()) + 1)
+            for m in re.finditer(r'^\s*"(\w+)"\s*->', orig[j:balanced(text, j)], re.M)]
+
+
 def oracle_repeats(text):
     """Maximal runs of equal trimmed lines in the oracle section, as
     (length, first line of the earlier run, first line of the later run),
@@ -671,6 +744,31 @@ def main(argv):
                     print(f"FAIL {os.path.relpath(f, ROOT)}:{line} builds a session outside "
                           f"{FACTORY}; start from {FACTORY}.builder", file=sys.stderr)
                     failed = True
+
+    # layer pass: the registry and the store name the same set
+    engine = {f: (text, orig) for f, (_, text, orig) in sources.items()
+              if f.startswith(ENGINE[0])}
+    found, unreadable = store_names(engine)
+    stored = {n for n, _, _ in found}
+    keys = registry_keys(*engine[ORACLE_FILE])
+    keyset = {k for k, _ in keys}
+    rel = os.path.relpath(ORACLE_FILE, ROOT)
+    print(f"layers: {len(keys)} registry keys, {len(stored)} store names "
+          f"({len(found)} literal store calls)")
+    for n, f, line in sorted(found, key=lambda r: (r[1], r[2])):
+        if n not in keyset:
+            print(f"FAIL {os.path.relpath(f, ROOT)}:{line} stores layer {n}, which is not "
+                  f"a SparkEntry.layers key", file=sys.stderr)
+            failed = True
+    for k, line in keys:
+        if k not in stored:
+            print(f"FAIL {rel}:{line} SparkEntry.layers key {k} names no store build",
+                  file=sys.stderr)
+            failed = True
+    for f, line in unreadable:
+        print(f"FAIL {os.path.relpath(f, ROOT)}:{line} passes the store a layer name that "
+              f"is not a string literal", file=sys.stderr)
+        failed = True
 
     # oracle pass: each shared oracle definition is written once
     runs, repeated = oracle_repeats(open(ORACLE_FILE, encoding="utf-8").read())
